@@ -137,15 +137,8 @@ def _cmd_spec_report(args: argparse.Namespace) -> int:
     wh = ParquetWarehouse(None, args.warehouse)
     sp = wh.partition_spec(args.schema_name, args.table)
     # partitions_report is the single per-(spec, partition) aggregation
-    # (it also refuses dir-mode tables honestly — zeros here would read
-    # as "converged" for a table that simply has no manifest)
     agg: dict[int, dict] = {}
-    try:
-        report = wh.partitions_report(args.schema_name, args.table)
-    except ValueError as e:
-        print(e)
-        return 1
-    for row in report:
+    for row in wh.partitions_report(args.schema_name, args.table):
         a = agg.setdefault(
             row["spec_id"], {"files": 0, "rows": 0, "bytes": 0}
         )

@@ -147,8 +147,8 @@ def q_ngram_jaccard_topk(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", "sh")
         # r20: materialize the filtered shingles before the self-join — the
         # executed plan's self-join is a BroadcastHashJoin whose build side
-        # REBUILT the whole explode+window subtree (plans/r19 dump, ops
-        # 12-17); the checkpoint runs the window ONCE and both join sides
+        # REBUILT the whole explode+window subtree (its executed plan,
+        # ops 12-17); the checkpoint runs the window ONCE and both join sides
         # read (doc_id, sh) longs.  Interleaved A/B at sf0.1: 1.816 ->
         # 1.569 s (-14%), top-50 identical.  (localCheckpoint is executor-
         # local/non-reliable — on a lossy cluster swap for persist(DISK).)

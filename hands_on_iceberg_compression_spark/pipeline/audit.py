@@ -149,15 +149,16 @@ def audit_table(
     The read is PINNED to the head version resolved up front
     (``read_snapshot``), so the result describes one specific snapshot
     even if commits race in mid-audit — ``publish_if_green`` publishes
-    exactly that version (VERDICT r18 #1).  Dir-mode tables have no
-    versions; they audit the live read with ``version=None``."""
+    exactly that version (VERDICT r18 #1)."""
     _validate_checks(checks)
     version = wh.current_version(schema, table, branch)
-    df = (
-        wh.read_snapshot(schema, table, version, branch=branch)
-        if version is not None
-        else wh.read(schema, table, branch)
-    )
+    if version is None:
+        raise ValueError(
+            f"table {schema}.{table} has no committed snapshot"
+            if branch == "main"
+            else f"no branch {branch!r} on {schema}.{table}"
+        )
+    df = wh.read_snapshot(schema, table, version, branch=branch)
     missing = [
         c
         for ch in checks

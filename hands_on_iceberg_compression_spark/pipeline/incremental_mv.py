@@ -63,7 +63,7 @@ keep-latest -> top-N, join MV -> anything.  The contract
   crash/redelivery reasoning stays per-edge (the per-maintainer crash
   nets carry over unchanged).
 - MODE GUIDANCE FOR FEEDER MVs depends on the DOWNSTREAM consumer
-  type (measured: throughput_probe ``--mv-chain``, PERF.md r17).
+  type (measured: PERF.md r17).
   KEYED downstream consumers (keep-latest/top-N/join MV, the batched
   MERGE apply) need a MERGE-ON-READ feeder: a CoW tick rewrites every
   file, so ``touched_keys`` over its commit is EVERY key — each
@@ -208,7 +208,7 @@ def _evolve_mv_schema(
     gracefully without DDL — refresh batches omit them and merge
     conformance NULL-fills, so they fade to NULL per refreshed key;
     type changes are NOT propagated (widening the MV is a deliberate
-    operator DDL).  Dir-mode/legacy MVs without a recorded schema are
+    operator DDL).  Legacy MVs without a recorded schema are
     skipped (their reads project the union anyway)."""
     mschema, mtable = mv
     try:
@@ -217,7 +217,7 @@ def _evolve_mv_schema(
             for f in wh.table_schema(mschema, mtable, branch=mv_branch)
         }
     except (ValueError, KeyError):
-        # legacy pre-schema / dir-mode MV: nothing recorded to evolve —
+        # legacy pre-schema MV: nothing recorded to evolve —
         # only these specific errors skip; transient IO must PROPAGATE,
         # or the silent-drop this helper exists to prevent comes back
         return
@@ -269,7 +269,7 @@ def _evolve_mv_schema(
 
 def _src_types(wh, schema: str, table: str, branch: str) -> dict:
     """name -> recorded type of a source's CURRENT schema (empty for
-    dir-mode/legacy tables — evolution needs a recorded schema; a new
+    legacy pre-schema tables — evolution needs a recorded schema; a new
     column with no recorded type then refuses in _evolve_mv_schema
     rather than silently dropping)."""
     try:
@@ -440,20 +440,14 @@ def maintain_keep_latest_mv(
             out["keys_refreshed"] = n_keys
         if n_keys == 0:
             return
-        cur = None
         if prune_source and n_keys <= _MV_PRUNE_KEYS_MAX:
-            try:
-                # conjunctive per-column membership spec — a SUPERSET of
-                # the exact tuple set for composite keys, so pruning is
-                # conservative; files are skipped via bounds AND bloom
-                # sidecars, and the semi-join below stays the exact filter
-                spec = {c: list({r[c] for r in kv}) for c in key_cols}
-                cur = wh.read_pruned(
-                    sschema, stable, spec, branch=src_branch
-                )
-            except Exception:
-                cur = None  # dir-mode/legacy table: full read below
-        if cur is None:
+            # conjunctive per-column membership spec — a SUPERSET of the
+            # exact tuple set for composite keys, so pruning is
+            # conservative; files are skipped via bounds AND bloom
+            # sidecars, and the semi-join below stays the exact filter
+            spec = {c: list({r[c] for r in kv}) for c in key_cols}
+            cur = wh.read_pruned(sschema, stable, spec, branch=src_branch)
+        else:
             cur = wh.read(sschema, stable, src_branch)
         # no broadcast hint: a backfill or re-delivered window can touch
         # millions of keys, and forcing a broadcast would OOM the driver
@@ -708,16 +702,10 @@ def maintain_topn_mv(
             out["groups_refreshed"] = n_keys
         if n_keys == 0:
             return
-        cur = None
         if prune_source and n_keys <= _MV_PRUNE_KEYS_MAX:
-            try:
-                spec = {c: list({r[c] for r in kv}) for c in group_cols}
-                cur = wh.read_pruned(
-                    sschema, stable, spec, branch=src_branch
-                )
-            except Exception:
-                cur = None  # dir-mode/legacy table: full read below
-        if cur is None:
+            spec = {c: list({r[c] for r in kv}) for c in group_cols}
+            cur = wh.read_pruned(sschema, stable, spec, branch=src_branch)
+        else:
             cur = wh.read(sschema, stable, src_branch)
         images = _project(top_images(cur.join(keys, group_cols, "leftsemi")))
         try:
@@ -987,33 +975,27 @@ def maintain_join_mv(
         )
         if n_keys == 0:
             return 0
-        scoped = None
         if prune_source and n_keys <= _MV_PRUNE_KEYS_MAX:
-            try:
-                spec = {c: list({r[c] for r in kv}) for c in key_cols}
-                # the right side's pruning spec uses ITS physical names
-                r_spec = {
-                    rc: list({r[kc] for r in kv})
-                    for rc, kc in zip(rkeys, key_cols)
-                }
-                l_df = wh.read_pruned(
-                    lschema, ltable, spec, branch=left_branch
-                ).join(keys, key_cols, "leftsemi")
-                r_df = _r(
-                    wh.read_pruned(
-                        rschema, rtable, r_spec, branch=right_branch
-                    )
-                ).join(keys, key_cols, "leftsemi")
-                l_latest = keep_latest(
-                    l_df, key_cols, ts_col, tie_col
-                ).select(*key_cols, *l_val)
-                r_latest = keep_latest(
-                    r_df, key_cols, ts_col, tie_col
-                ).select(*key_cols, *r_val)
-                scoped = l_latest.join(r_latest, key_cols, how)
-            except Exception:
-                scoped = None  # dir-mode/legacy: unpruned path below
-        if scoped is None:
+            spec = {c: list({r[c] for r in kv}) for c in key_cols}
+            # the right side's pruning spec uses ITS physical names
+            r_spec = {
+                rc: list({r[kc] for r in kv})
+                for rc, kc in zip(rkeys, key_cols)
+            }
+            l_df = wh.read_pruned(
+                lschema, ltable, spec, branch=left_branch
+            ).join(keys, key_cols, "leftsemi")
+            r_df = _r(
+                wh.read_pruned(rschema, rtable, r_spec, branch=right_branch)
+            ).join(keys, key_cols, "leftsemi")
+            l_latest = keep_latest(
+                l_df, key_cols, ts_col, tie_col
+            ).select(*key_cols, *l_val)
+            r_latest = keep_latest(
+                r_df, key_cols, ts_col, tie_col
+            ).select(*key_cols, *r_val)
+            scoped = l_latest.join(r_latest, key_cols, how)
+        else:
             scoped = joined_for(keys)
         try:
             # the delta-join subtree feeds both the batch and the gone

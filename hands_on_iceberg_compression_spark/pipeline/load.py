@@ -110,13 +110,6 @@ def load_table(
     done = ckpt.completed()
     todo = [b for b in batches if b.index not in done]
 
-    concurrency = plan.concurrency
-    if warehouse.table_meta(config.schema, table).partitioning and concurrency > 1:
-        # partitioned parquet tables append into a shared data/ root — the
-        # hadoop committer's _temporary dir is per-path, so concurrent batch
-        # jobs would clobber each other.  Iceberg backend lifts this.
-        concurrency = 1
-
     t0 = time.time()
     loaded = 0
 
@@ -133,10 +126,12 @@ def load_table(
         ckpt.mark(b.index)
         return b.rows
 
-    if concurrency > 1 and len(todo) > 1:
+    if plan.concurrency > 1 and len(todo) > 1:
         # C4 Limiter: cap in-flight batches; Spark's scheduler interleaves
         # their tasks (fair enough for local; on a cluster this pipelines
-        # write commits against generation)
+        # write commits against generation).  Each append writes its own
+        # generation dir and CAS-commits, so batches never share a
+        # committer dir, partitioned or not.
         with ThreadPoolExecutor(max_workers=plan.concurrency) as pool:
             for i, rows in enumerate(pool.map(run_batch, todo)):
                 loaded += rows

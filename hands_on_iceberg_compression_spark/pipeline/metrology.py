@@ -25,15 +25,9 @@ class SizeRow:
     row_count: int
     bytes_per_row: float | None
     file_count: int
-    # C8 manifest bytes.  On the Iceberg backend this is SUM over $manifests;
-    # on the parquet backend we report the summed serialized footer sizes —
-    # the footer carries the same stats index (schema, per-column min/max/
-    # null counts, offsets) Iceberg lifts into manifests, so it is the
-    # honest metadata-overhead equivalent rather than a constant 0.
-    # data_bytes EXCLUDES the footer bytes on the parquet backend (they live
-    # inside the same files), so total_bytes = data + manifest stays additive
-    # exactly as it is on Iceberg, where manifests are separate files
-    # (ADVICE r2: the old all-inclusive data_bytes double-counted footers).
+    # C8 manifest bytes: the table's snapshot-log metadata (heads, segments,
+    # delete segments) — Iceberg's SUM over $manifests.  Manifests are
+    # separate files, so total_bytes = data + manifest is the on-disk size.
     manifest_bytes: int = 0
 
     @property
@@ -67,20 +61,7 @@ def measure_sizes(
     """SUM(file_size_in_bytes), SUM(record_count), bytes/row with NULLIF
     semantics (bench.ts:131-140)."""
     stats = warehouse.files(schema, table)
-    footer_bytes = sum(s.footer_bytes for s in stats)
-    # C8: REAL manifest bytes when the table opted into the snapshot log
-    # (warehouse.commit_snapshot); otherwise the parquet-footer stats index
-    # is the manifest-equivalent.  Footers are *inside* the data files, so
-    # on the footer path they are carved out of data_bytes to keep
-    # data + manifest additive (= on-disk bytes), matching Iceberg where
-    # manifests are separate files; real snapshot manifests ARE separate
-    # files, so data_bytes stays whole on that path.
-    snap_bytes = warehouse.snapshot_manifest_bytes(schema, table)
-    if snap_bytes:
-        footer_bytes = snap_bytes
-        data_bytes = sum(s.file_size_in_bytes for s in stats)
-    else:
-        data_bytes = sum(s.file_size_in_bytes for s in stats) - footer_bytes
+    data_bytes = sum(s.file_size_in_bytes for s in stats)
     rows = sum(s.record_count for s in stats)
     return SizeRow(
         table=table,
@@ -90,7 +71,7 @@ def measure_sizes(
         row_count=rows,
         bytes_per_row=round(data_bytes / rows, 2) if rows else None,  # NULLIF(rows,0)
         file_count=len(stats),
-        manifest_bytes=footer_bytes,
+        manifest_bytes=warehouse.snapshot_manifest_bytes(schema, table),
     )
 
 
@@ -177,7 +158,7 @@ def measure_log_table(
     table: str,
     prune_ranges: dict | None = None,
 ) -> LogStatsRow:
-    """Manifest-cost + prune-effectiveness metrology for a log-mode table.
+    """Manifest-cost + prune-effectiveness metrology for a table.
     Reads the head (one head parse + its merge-bounded segments) and the
     snapshots dir listing — never a data-file footer."""
     head = warehouse.head_snapshot(schema, table)

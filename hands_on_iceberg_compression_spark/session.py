@@ -2,9 +2,9 @@
 
 The reference ran all SQL through a remote Trino coordinator backed by a
 Nessie Iceberg catalog on MinIO (reference compose/docker-compose.yaml:1-121,
-src/TrinoClient.ts:29-86).  Here the engine is an in-process SparkSession; the
-catalog is Iceberg-Spark when the runtime jar is on the classpath, otherwise a
-plain-Parquet warehouse (sources/warehouse.py) with identical surface.
+src/TrinoClient.ts:29-86).  Here the engine is an in-process SparkSession and
+the catalog is a Parquet warehouse with an Iceberg-style snapshot log
+(sources/warehouse.py).
 
 Scale posture: these defaults are tuned so the same code runs on local[N] for
 tests and on a many-executor cluster unchanged — AQE on (runtime shuffle
@@ -17,24 +17,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-# Iceberg-Spark runtime coordinates; only used when the jar is already present
-# (no network access in the build environment — we never download).
-_ICEBERG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
-
-
-def iceberg_available(spark: SparkSession | None = None) -> bool:
-    """True when the Iceberg Spark runtime is on the JVM classpath."""
-    if spark is None:
-        active = SparkSession.getActiveSession()
-        if active is None:
-            return False
-        spark = active
-    try:
-        spark._jvm.java.lang.Class.forName(_ICEBERG_CLASS)  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
 
 
 def make_session(

@@ -5,16 +5,13 @@ createBaseTableSQL, createVariantTableSQLs with per-variant compression
 properties — operators B1-B7) and the ``$files``/``$manifests`` metrology
 (``src/commands/bench.ts:124-168``, C6-C10).
 
-Two backends behind one surface:
-- **Iceberg** (when the Spark runtime jar is on the classpath): real
-  ``CREATE TABLE ... USING iceberg`` with ``write.parquet.compression-codec``
-  / ``-level`` TBLPROPERTIES, ``rewrite_data_files`` compaction, and the
-  ``.files`` metadata table.  This is the 100 TB deployment shape.
-- **Parquet directory** (this container — no Iceberg jar, verified): a
-  warehouse dir of parquet tables + a JSON table descriptor; metrology reads
-  parquet footers (the same numbers Iceberg's ``$files`` carries:
-  file_size_in_bytes, record_count); compaction rewrites to a target file
-  size.  Same method surface, so swapping backends is a constructor flag.
+One table format, modelled on Iceberg: a warehouse dir of parquet data
+files, a JSON table descriptor, and a snapshot log per table.  Every write
+commits a snapshot whose manifest records each live file's bytes, rows,
+column bounds and partition values, so metrology reads the numbers Iceberg's
+``$files``/``$manifests`` carry (file_size_in_bytes, record_count, manifest
+bytes) without opening a data file.  Compaction rewrites toward a target
+file size and commits a new snapshot (``rewrite_data_files``).
 
 The reference needed two ALTER TABLE statements to set compression props
 because Trino could not set extra_properties at CREATE time
@@ -45,8 +42,8 @@ SUPPORTED_CODECS = ("zstd", "gzip", "snappy", "lz4", "uncompressed")
 # Iceberg-style partition transforms (README.md:85-86 shows the reference's
 # intended month()/bucket()/identity syntax; its partitioning config was dead
 # — FIXME at sqlHelpers.ts:127).  Here they work: transform columns are
-# derived at write time, hive-layout on the parquet backend, native hidden
-# partitioning on Iceberg.
+# derived at write time and laid out hive-style inside each generation dir,
+# with per-file partition values recorded in the manifest.
 _TRANSFORM_RE = re.compile(
     r"^(?:(days|months|years|hours)\((\w+)\)|bucket\((\d+),\s*(\w+)\)|(\w+))$"
 )
@@ -375,17 +372,11 @@ class BranchMovedError(RuntimeError):
 @dataclass
 class FileStat:
     """One data file — mirrors Iceberg ``$files`` columns we consume
-    (bench.ts:131-140).
-
-    ``footer_bytes`` is the serialized parquet footer (schema + per-column
-    chunk min/max/null stats + offsets) — the same metadata Iceberg lifts
-    into manifests, so it serves as the parquet backend's manifest-
-    equivalent for C8 instead of a constant 0."""
+    (bench.ts:131-140)."""
 
     file_path: str
     file_size_in_bytes: int
     record_count: int
-    footer_bytes: int = 0
 
 
 @dataclass
@@ -487,8 +478,18 @@ class ParquetWarehouse:
         partitioning: list[str] | None = None,
         sort_order: list[str] | None = None,
     ) -> TableMeta:
+        """Create a table; every table keeps a snapshot log.  The
+        ``snapshots`` property may be absent or ``"true"``; any other
+        value names the removed directory format and is refused."""
         if codec not in SUPPORTED_CODECS:
             raise ValueError(f"codec {codec!r} not in {SUPPORTED_CODECS}")
+        snapshots = (properties or {}).get("snapshots", "true")
+        if str(snapshots).lower() != "true":
+            raise ValueError(
+                f"snapshots={snapshots!r}: directory tables were removed — "
+                "every table keeps a snapshot log (omit the property or "
+                "pass 'true')"
+            )
         self.create_schema(schema)
         os.makedirs(self._tdir(schema, table), exist_ok=True)
         meta = TableMeta(
@@ -501,25 +502,6 @@ class ParquetWarehouse:
     def table_meta(self, schema: str, table: str) -> TableMeta:
         with open(self._meta_path(schema, table)) as f:
             return TableMeta(**json.load(f))
-
-    def create_variant_tables(
-        self, config: TableConfig, codec_levels: list[tuple[str, int | None]]
-    ) -> list[str]:
-        """B7: the codec x level variant matrix (bench.ts:201-212,
-        codecs.ts:3-12)."""
-        names = []
-        for codec, level in codec_levels:
-            name = variant_table_name(config.table_base, codec, level)
-            self.create_table(
-                config.schema,
-                name,
-                codec,
-                level,
-                config.table_properties,
-                partitioning=config.partitioning,
-            )
-            names.append(name)
-        return names
 
     def drop_table(self, schema: str, table: str) -> None:
         shutil.rmtree(self._tdir(schema, table), ignore_errors=True)
@@ -543,153 +525,104 @@ class ParquetWarehouse:
         branch: str = "main",
         extra_meta: dict | None = None,
     ) -> None:
-        """Append one batch.  ``branch`` (log mode only) commits onto a
-        named writable ref created by ``create_branch`` — the staging leg
-        of write-audit-publish; main never sees the rows until
+        """Append one batch.  ``branch`` commits onto a named writable
+        ref created by ``create_branch`` — the staging leg of
+        write-audit-publish; main never sees the rows until
         ``fast_forward``.
 
-        Unpartitioned: each batch gets its own subdirectory under data/ —
-        (a) committer isolation: concurrent batch writes share no
-        ``_temporary`` dir (the failure mode of concurrent appends to one
-        parquet path), and (b) idempotent restart: re-writing a batch id
-        overwrites, never duplicates (Iceberg-snapshot analogue,
-        bench.ts:69-74).
-
-        Partitioned dir mode (Iceberg hidden-partitioning fallback):
-        partition transform columns are derived and written hive-style
-        (``<col>_day=...``); appends go to the shared data/ root, so they
-        must be sequential on this backend — the Iceberg backend gets
-        snapshot-isolated concurrency instead.
-
-        Log mode (snapshots=true): every append writes a UNIQUE generation
-        dir ``data/<batch_id>/g_<uuid>/`` — a path is never reused, so a
-        replayed batch id (streaming epoch restart) cannot delete files an
-        earlier snapshot references.  The commit is a DELTA against the
+        Every append writes a UNIQUE generation dir
+        ``data/<batch_id>/g_<uuid>/`` — concurrent batch writes share no
+        ``_temporary`` dir, and a path is never reused, so a replayed
+        batch id (streaming epoch restart) cannot delete files an earlier
+        snapshot references.  The commit is a DELTA against the
         parent manifest with the replayed batch's prior generation dropped
         (``drop_prefix``), making replay idempotent: the new snapshot holds
         exactly one generation per batch id.  Concurrent appends are safe —
         ``commit_snapshot`` CASes the version file and recomputes the union
-        against the winner's manifest on retry.  Partitioned log tables
-        write hive-style partition dirs INSIDE the generation dir, and the
+        against the winner's manifest on retry.  Partitioned tables write
+        hive-style partition dirs INSIDE the generation dir, and the
         manifest records each file's partition values (Iceberg-manifest
         parity)."""
         meta = self.table_meta(schema, table)
-        data_root = self._live_data_dir(schema, table)
-        if self._log_mode(meta):
-            # derive partition columns under the CURRENT spec (partition-
-            # spec evolution: the head, not the create-time meta, names
-            # the transforms new files are laid out by)
-            head0 = self._head_light(schema, table, branch)
-            part_spec = self._head_partitioning(meta, head0)
-            writer_df, part_cols = apply_partition_transforms(df, part_spec)
-            # validate/conform against the recorded schema (schema
-            # evolution): unknown columns error, omitted columns NULL-fill,
-            # the first commit adopts this write's schema as schema 0
-            writer_df, schema_fields = self._conform_log_schema(
-                schema, table, writer_df, branch=branch, head=head0
-            )
-            if batch_id is None:
-                batch_id = f"batch_{uuid.uuid4().hex[:12]}"
-            batch_dir = os.path.join(data_root, batch_id)
-            target = os.path.join(batch_dir, f"g_{uuid.uuid4().hex[:8]}")
-            writer = writer_df.write.mode("error")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            for k, v in self._write_options(meta).items():
-                writer = writer.option(k, v)
-            writer.parquet(target)
-            new = sorted(
-                os.path.join(base, fn)
-                for base, _d, fns in os.walk(target)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-            self.commit_snapshot(
-                schema,
-                table,
-                "append",
-                add_files=new,
-                drop_prefix=batch_dir + os.sep,
-                schema_fields=schema_fields,
-                spec_transforms=part_spec,
-                branch=branch,
-                extra_meta=extra_meta,
-            )
-            return
-        if branch != "main":
-            raise ValueError(
-                "branch writes require a log-mode (snapshots=true) table"
-            )
-        if extra_meta is not None:
-            # a caller-provided commit marker (e.g. the aggregate MV's
-            # applied-watermark) must land ATOMICALLY with the data —
-            # dir mode has no commit to carry it, and silently dropping
-            # a correctness marker is worse than refusing
-            raise ValueError(
-                "extra_meta requires a log-mode (snapshots=true) table"
-            )
-        writer_df, part_cols = apply_partition_transforms(df, meta.partitioning)
+        # derive partition columns under the CURRENT spec (partition-spec
+        # evolution: the head, not the create-time meta, names the
+        # transforms new files are laid out by)
+        head0 = self._head_light(schema, table, branch)
+        part_spec = self._head_partitioning(meta, head0)
+        writer_df, part_cols = apply_partition_transforms(df, part_spec)
+        # validate/conform against the recorded schema (schema evolution):
+        # unknown columns error, omitted columns NULL-fill, the first
+        # commit adopts this write's schema as schema 0
+        writer_df, schema_fields = self._conform_log_schema(
+            schema, table, writer_df, branch=branch, head=head0
+        )
+        if batch_id is None:
+            batch_id = f"batch_{uuid.uuid4().hex[:12]}"
+        batch_dir = os.path.join(self._live_data_dir(schema, table), batch_id)
+        target = os.path.join(batch_dir, f"g_{uuid.uuid4().hex[:8]}")
+        writer = writer_df.write.mode("error")
         if part_cols:
-            writer = writer_df.write.mode("append").partitionBy(*part_cols)
-            target = data_root
-        else:
-            if batch_id is None:
-                batch_id = f"batch_{uuid.uuid4().hex[:12]}"
-            writer = writer_df.write.mode("overwrite")
-            target = os.path.join(data_root, batch_id)
+            writer = writer.partitionBy(*part_cols)
         for k, v in self._write_options(meta).items():
             writer = writer.option(k, v)
         writer.parquet(target)
+        new = sorted(
+            os.path.join(base, fn)
+            for base, _d, fns in os.walk(target)
+            for fn in fns
+            if fn.endswith(".parquet")
+        )
+        self.commit_snapshot(
+            schema,
+            table,
+            "append",
+            add_files=new,
+            drop_prefix=batch_dir + os.sep,
+            schema_fields=schema_fields,
+            spec_transforms=part_spec,
+            branch=branch,
+            extra_meta=extra_meta,
+        )
 
     def read(
         self, schema: str, table: str, branch: str = "main"
     ) -> DataFrame:
         meta = self.table_meta(schema, table)
-        if branch != "main" and not self._log_mode(meta):
+        head = self.head_snapshot(schema, table, branch)
+        if head is None:
+            # also what a data dir without a snapshot log (written by the
+            # removed directory format) reports: its files are not a table
             raise ValueError(
-                "branch reads require a log-mode (snapshots=true) table"
+                f"table {schema}.{table} has no committed snapshot yet "
+                "(append() commits the first one)"
+                if branch == "main"
+                else f"no branch {branch!r} on {schema}.{table}"
             )
-        if self._log_mode(meta):
-            head = self.head_snapshot(schema, table, branch)
-            if head is None:
-                raise ValueError(
-                    f"log-mode table {schema}.{table} has no committed "
-                    "snapshot yet (append() commits the first one)"
-                    if branch == "main"
-                    else f"no branch {branch!r} on {schema}.{table}"
+        if not head["files"]:
+            if "schemas" in head:
+                # fully-emptied table (delete_where of everything):
+                # schema-stable empty frame off the recorded schema
+                return self._empty_frame(
+                    head["schemas"][str(head["schema_id"])]
                 )
-            if not head["files"]:
-                if "schemas" in head:
-                    # fully-emptied table (delete_where of everything):
-                    # schema-stable empty frame off the recorded schema
-                    return self._empty_frame(
-                        head["schemas"][str(head["schema_id"])]
-                    )
-                raise ValueError(
-                    f"log-mode table {schema}.{table} has no live files "
-                    "and no recorded schema"
-                )
-            return self._read_entries(schema, table, meta, head, head["files"])
-        data_root = self._live_data_dir(schema, table)
-        if meta.partitioning:
-            # hive partition discovery (enables partition pruning on the
-            # derived transform columns)
-            return self.spark.read.option("basePath", data_root).parquet(data_root)
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(data_root)
+            raise ValueError(
+                f"table {schema}.{table} has no live files and no "
+                "recorded schema"
+            )
+        return self._read_entries(schema, table, meta, head, head["files"])
 
     def is_empty(self, schema: str, table: str, branch: str = "main") -> bool:
-        if branch != "main":
-            # branch emptiness is a MANIFEST question (the shared data
-            # dir also holds other refs' generations).  Legacy inline-
-            # files heads record no total_rows — fall back to the file
-            # list (entries with 0 rows are never written).
-            head = self._head_light(schema, table, branch)
-            if head is None:
-                return True
-            if "total_rows" in head:
-                return head["total_rows"] == 0
-            return not head.get("files") and not head.get("segments")
-        return not self._data_files(schema, table)
+        """True when the ref's head holds no rows — a MANIFEST question
+        (the shared data dir also holds other refs' generations), answered
+        off the head's totals.  Legacy inline-files heads record no
+        total_rows — fall back to the file list (entries with 0 rows are
+        never written)."""
+        head = self._head_light(schema, table, branch)
+        if head is None:
+            return True
+        if "total_rows" in head:
+            return head["total_rows"] == 0
+        return not head.get("files") and not head.get("segments")
 
     def count_rows(
         self, schema: str, table: str, branch: str = "main",
@@ -716,9 +649,6 @@ class ParquetWarehouse:
           subtraction would double-count, so a broken chain falls back),
         - a legacy pos entry predating ``target_counts``.
 
-        Dir-mode tables fall back too (no manifest totals; the parquet
-        footer-count scan there is already metadata-cheap).
-
         ``fallback=False`` returns None instead of reading when the
         arithmetic cannot be proven — the metadata-only contract
         ``log-report`` needs (it promises to never touch a data file)."""
@@ -730,13 +660,10 @@ class ParquetWarehouse:
                 if fallback else None
             )
 
-        meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            return self.read(schema, table).count() if fallback else None
         head = self._head_light(schema, table, branch)
         if head is None:
             raise ValueError(
-                f"log-mode table {schema}.{table} has no committed snapshot"
+                f"table {schema}.{table} has no committed snapshot"
                 if branch == "main"
                 else f"no branch {branch!r} on {schema}.{table}"
             )
@@ -791,37 +718,11 @@ class ParquetWarehouse:
 
     # --- C7/C8: metrology ($files-equivalent) ----------------------------
     def _live_data_dir(self, schema: str, table: str) -> str:
-        """data/, healing first: if a crash during optimize()'s swap left only
-        the pre-compaction data_old/, promote it back to data/ so every later
-        operation (read/append/optimize) sees one consistent directory.
-        Likewise for partitioned merge_upsert leftovers: a partition dir
-        stranded in _merge_old/ (crash between its two renames) is restored
-        if its data/ counterpart is missing, discarded if the swap finished."""
-        data = os.path.join(self._tdir(schema, table), "data")
-        old = os.path.join(self._tdir(schema, table), "data_old")
-        if not os.path.isdir(data) and os.path.isdir(old):
-            os.rename(old, data)
-        merge_old = os.path.join(self._tdir(schema, table), "_merge_old")
-        if os.path.isdir(merge_old):
-            stranded = [
-                base
-                for base, _dirs, files in os.walk(merge_old)
-                if any(fn.endswith(".parquet") for fn in files)
-            ]
-            for base in stranded:
-                dst = os.path.join(data, os.path.relpath(base, merge_old))
-                if not os.path.isdir(dst):
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(base, dst)
-            shutil.rmtree(merge_old, ignore_errors=True)
-        return data
-
-    def _log_mode(self, meta: TableMeta) -> bool:
-        """snapshots=true tables are MANIFEST-driven (lakehouse log mode):
-        the live file set is the newest snapshot's list, never a directory
-        walk; writers add generations and commit, superseded files stay on
-        disk for time travel until expire_snapshots GCs them."""
-        return str(meta.properties.get("snapshots", "")).lower() == "true"
+        """data/ — the root every writer creates its unique generation dir
+        under.  The live file set is the head snapshot's manifest, never a
+        walk of this dir; superseded files stay on disk for time travel
+        until expire_snapshots GCs them."""
+        return os.path.join(self._tdir(schema, table), "data")
 
     # --- partition-spec evolution (Iceberg spec-id model) ---------------
     # Heads carry ALL partition specs the table has ever had
@@ -894,7 +795,7 @@ class ParquetWarehouse:
     @staticmethod
     def _generation_root(path: str) -> str:
         """Longest path prefix before the first hive ``k=v`` segment — the
-        generation dir a partitioned log-mode file was written under."""
+        generation dir a partitioned file was written under."""
         parts = path.split(os.sep)
         for i, seg in enumerate(parts[:-1]):
             if "=" in seg:
@@ -1067,10 +968,11 @@ class ParquetWarehouse:
         branch, all-values sampling collapsed.
 
         Bounded plan width: past ``MAX_BASEPATH_BRANCHES`` generation roots
-        the union is collapsed to ONE scan (``recursiveFileLookup`` disables
-        hive discovery) and the partition columns are re-attached by parsing
-        ``input_file_name()`` — constant plan size however many un-compacted
-        generations exist.  The trade: Spark-side PartitionFilters pruning
+        the union is collapsed to ONE scan of the explicit file list (Spark
+        infers no partition columns from leaf-file paths: each file's base
+        path is its own dir) and the partition columns are re-attached by
+        parsing ``input_file_name()`` — constant plan size however many
+        un-compacted generations exist.  The trade: Spark-side PartitionFilters pruning
         doesn't fire in the collapsed shape, so high-generation-count reads
         should prune via the manifest (``read_pruned``, which skips files
         before Spark ever sees them) or compact; partition VALUES, names,
@@ -1137,7 +1039,7 @@ class ParquetWarehouse:
                     m = _re.search(f"/{_re.escape(name)}=([^/]+)/", p)
                     if m:
                         vals.add(unquote(m.group(1)))
-        df = self.spark.read.option("recursiveFileLookup", "true").parquet(*files)
+        df = self.spark.read.parquet(*files)
         if with_pos:
             df = self._with_pos_cols(df)
         path = F.input_file_name()
@@ -1170,52 +1072,24 @@ class ParquetWarehouse:
         return df
 
     def _data_files(self, schema: str, table: str) -> list[str]:
-        meta = self.table_meta(schema, table)
-        if self._log_mode(meta):
-            head = self.head_snapshot(schema, table)
-            if head is None:
-                return []
-            tdir = self._tdir(schema, table)
-            return sorted(os.path.join(tdir, f["path"]) for f in head["files"])
-        data_dir = self._live_data_dir(schema, table)
-        if not os.path.isdir(data_dir):
-            return []
-        out = []
-        for base, _dirs, files in os.walk(data_dir):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    out.append(os.path.join(base, fn))
-        return sorted(out)
+        """Absolute paths of the head snapshot's live data files."""
+        return sorted(s.file_path for s in self.files(schema, table))
 
     def files(self, schema: str, table: str) -> list[FileStat]:
         """Per-file stats — the columns the reference aggregated from
-        Iceberg's ``$files`` (bench.ts:131-140).  LOG-MODE tables serve
-        them straight from the head manifest (it records bytes/rows per
-        file at commit time), opening ZERO parquet footers — Iceberg's
-        posture, and the difference between O(1) and O(files) footer IO
-        per metrology call on a 100k-file table.  ``footer_bytes`` is 0 on
-        that path; its only consumer (measure_sizes' manifest-equivalent
-        fallback) uses REAL snapshot-manifest bytes for log tables anyway.
-        Dir-mode tables keep the footer walk."""
-        import pyarrow.parquet as pq
-
-        meta = self.table_meta(schema, table)
-        if self._log_mode(meta):
-            head = self.head_snapshot(schema, table)
-            if head is None:
-                return []
-            tdir = self._tdir(schema, table)
-            return [
-                FileStat(os.path.join(tdir, e["path"]), e["bytes"], e["rows"])
-                for e in head["files"]
-            ]
-        stats = []
-        for path in self._data_files(schema, table):
-            md = pq.ParquetFile(path).metadata
-            stats.append(
-                FileStat(path, os.path.getsize(path), md.num_rows, md.serialized_size)
-            )
-        return stats
+        Iceberg's ``$files`` (bench.ts:131-140) — served straight from the
+        head manifest (it records bytes/rows per file at commit time),
+        opening ZERO parquet footers: Iceberg's posture, and the
+        difference between O(1) and O(files) footer IO per metrology call
+        on a 100k-file table."""
+        head = self.head_snapshot(schema, table)
+        if head is None:
+            return []
+        tdir = self._tdir(schema, table)
+        return [
+            FileStat(os.path.join(tdir, e["path"]), e["bytes"], e["rows"])
+            for e in head["files"]
+        ]
 
     def _zorder_key(self, df: DataFrame, cols: list[str]):
         """Morton (Z-curve) interleave of 16-bit normalized ranks of up
@@ -1344,7 +1218,7 @@ class ParquetWarehouse:
         resulting file count.  Iceberg twin: CALL system.rewrite_data_files
         (bench.ts:112-122).
 
-        ``partition_filter`` (log-mode only) scopes the rewrite to files
+        ``partition_filter`` scopes the rewrite to files
         whose recorded partition values intersect the given ranges OR
         discrete value sets (same shapes as ``prune_files``) — Iceberg's
         ``rewrite_data_files(where)``.
@@ -1370,12 +1244,6 @@ class ParquetWarehouse:
                 "partition-scoped compaction first, then zorder"
             )
         if partition_filter:
-            if not self._log_mode(meta):
-                raise ValueError(
-                    "partition-scoped optimize requires a log-mode "
-                    "(snapshots=true) table — dir mode has no manifest to "
-                    "select victims from"
-                )
             return self._optimize_scoped(
                 schema, table, meta, partition_filter,
                 target_file_size_bytes, branch,
@@ -1383,102 +1251,57 @@ class ParquetWarehouse:
         # head capture BEFORE resolving the file list: if a concurrent
         # append commits after this point, the replace-commit below detects
         # the moved head and aborts instead of erasing the append's rows
-        head_version = None
-        if self._log_mode(meta):
-            head = self.head_snapshot(schema, table, branch=branch)
-            head_version = head["version"] if head else None
-        elif branch != "main":
-            raise ValueError(
-                "branch writes require a log-mode (snapshots=true) table"
-            )
-        if branch != "main":
-            # branch sizing comes from the BRANCH head, not the shared
-            # data dir (which also holds other refs' generations)
-            if head is None:
-                return 0
-            total = sum(e["bytes"] for e in head["files"])
-            if total == 0:
-                return 0
-        else:
-            stats = self.files(schema, table)
-            if not stats:
-                return 0
-            total = sum(s.file_size_in_bytes for s in stats)
+        head = self.head_snapshot(schema, table, branch=branch)
+        if head is None:
+            return 0
+        total = sum(e["bytes"] for e in head["files"])
+        if total == 0:
+            return 0
         n_files = max(1, math.ceil(total / target_file_size_bytes))
         df = self.read(schema, table, branch=branch)
-        data_dir = self._live_data_dir(schema, table)
-        if self._log_mode(meta):
-            # log mode: compaction is a NEW generation + a commit — the
-            # superseded generation stays on disk, so earlier snapshots keep
-            # time-traveling until expire_snapshots garbage-collects them.
-            # The gen dir name is a uuid, not a version: the version is
-            # allocated at commit time (CAS), so a concurrent writer can't
-            # collide on the path either.
-            gen_dir = os.path.join(data_dir, f"compact_{uuid.uuid4().hex[:8]}")
-            if zorder:
-                df = self._zorder_cluster(df, zorder, n_files)
-                writer = df.write.mode("error")
-            elif meta.sort_order:
-                # same WRITE ORDERED BY contract as dir mode: disjoint
-                # per-file [min,max] on the sort keys for file skipping
-                sort_cols = [F.col(c) for c in meta.sort_order]
-                df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-                    *sort_cols
-                )
-                writer = df.write.mode("error")
-            else:
-                writer = df.coalesce(n_files).write.mode("error")
-            # compaction rewrites under the CURRENT spec (Iceberg
-            # rewrite_data_files posture): spec-evolved tables converge
-            # to one layout as maintenance touches their files
-            cur_part = self._head_partitioning(meta, head)
-            if cur_part:
-                part_names = [n for n, _ in partition_transform_exprs(cur_part)]
-                writer = writer.partitionBy(*part_names)
-            for k, v in self._write_options(meta).items():
-                writer = writer.option(k, v)
-            writer.parquet(gen_dir)
-            new = sorted(
-                os.path.join(base, fn)
-                for base, _d, fns in os.walk(gen_dir)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-            self.commit_snapshot(
-                schema, table, "optimize", file_paths=new,
-                expected_parent=head_version, branch=branch,
-            )
-            return len(new)
-        tmp_dir = os.path.join(self._tdir(schema, table), "_optimize_tmp")
+        # compaction is a NEW generation + a commit — the superseded
+        # generation stays on disk, so earlier snapshots keep
+        # time-traveling until expire_snapshots garbage-collects them.  The
+        # gen dir name is a uuid, not a version: the version is allocated
+        # at commit time (CAS), so a concurrent writer can't collide on
+        # the path either.
+        gen_dir = os.path.join(
+            self._live_data_dir(schema, table), f"compact_{uuid.uuid4().hex[:8]}"
+        )
         if zorder:
             df = self._zorder_cluster(df, zorder, n_files)
-            writer = df.write.mode("overwrite")
         elif meta.sort_order:
-            # range-partition + in-partition sort: files get disjoint
-            # [min,max] on the sort keys, so range predicates skip whole
-            # files/row-groups via parquet stats
+            # WRITE ORDERED BY: range-partition + in-partition sort gives
+            # disjoint per-file [min,max] on the sort keys, so range
+            # predicates skip whole files/row-groups
             sort_cols = [F.col(c) for c in meta.sort_order]
-            df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(*sort_cols)
-            writer = df.write.mode("overwrite")
+            df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
+                *sort_cols
+            )
         else:
-            writer = df.coalesce(n_files).write.mode("overwrite")
-        if meta.partitioning:
-            # read() already materialized the derived partition columns
-            part_names = [n for n, _ in partition_transform_exprs(meta.partitioning)]
+            df = df.coalesce(n_files)
+        writer = df.write.mode("error")
+        # compaction rewrites under the CURRENT spec (Iceberg
+        # rewrite_data_files posture): spec-evolved tables converge to one
+        # layout as maintenance touches their files
+        cur_part = self._head_partitioning(meta, head)
+        if cur_part:
+            part_names = [n for n, _ in partition_transform_exprs(cur_part)]
             writer = writer.partitionBy(*part_names)
         for k, v in self._write_options(meta).items():
             writer = writer.option(k, v)
-        writer.parquet(tmp_dir)
-        # crash-safe swap: data is live at every instant.  rename(data ->
-        # data_old) then rename(tmp -> data); a crash between the renames
-        # leaves data_old, which _live_data_dir serves until the next
-        # optimize.  (Iceberg backend: snapshot commit, no swap at all.)
-        old_dir = os.path.join(self._tdir(schema, table), "data_old")
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
-        return len(self._data_files(schema, table))
+        writer.parquet(gen_dir)
+        new = sorted(
+            os.path.join(base, fn)
+            for base, _d, fns in os.walk(gen_dir)
+            for fn in fns
+            if fn.endswith(".parquet")
+        )
+        self.commit_snapshot(
+            schema, table, "optimize", file_paths=new,
+            expected_parent=head["version"], branch=branch,
+        )
+        return len(new)
 
     def _optimize_scoped(
         self,
@@ -1633,11 +1456,6 @@ class ParquetWarehouse:
         Returns {"files": new files written, "victims": files
         rewritten, "retired": delete entries retired}."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "fold_pending_deletes requires a log-mode "
-                "(snapshots=true) table — deletes are manifest entries"
-            )
         version = self._latest_version(schema, table, branch)
         if version is None:
             return {"files": 0, "victims": 0, "retired": 0}
@@ -1721,11 +1539,6 @@ class ParquetWarehouse:
         files.  Fewer than TWO victims is a no-op (rewriting one small
         file alone gains nothing).  Returns {"files", "victims"}."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "compact_small_files requires a log-mode "
-                "(snapshots=true) table — victims come from the manifest"
-            )
         version = self._latest_version(schema, table, branch)
         if version is None:
             return {"files": 0, "victims": 0}
@@ -2225,12 +2038,6 @@ class ParquetWarehouse:
         Returns ``rows_deleted: None`` — the point of an equality delete
         is NOT knowing (not reading) how many rows matched; use
         ``delete_where(mode='merge-on-read')`` when the count matters."""
-        meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "delete_by_keys requires a log-mode (snapshots=true) "
-                "table — equality deletes are manifest entries"
-            )
         version = self._latest_version(schema, table, branch)
         no_op = {
             "rows_deleted": 0,
@@ -2491,11 +2298,6 @@ class ParquetWarehouse:
         Merge-on-read SCANNED victims are exact (tuples come from a
         delete-applied read)."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "delete_where requires a log-mode (snapshots=true) table — "
-                "copy-on-write deletes are snapshot commits"
-            )
         if mode is None:
             mode = str(meta.properties.get("delete_mode", "copy-on-write"))
         if mode not in ("copy-on-write", "merge-on-read"):
@@ -2722,11 +2524,6 @@ class ParquetWarehouse:
         via the same anti-join as MoR deletes, and a partition-source
         update still moves rows (the new images re-derive transforms)."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "update_where requires a log-mode (snapshots=true) table — "
-                "copy-on-write updates are snapshot commits"
-            )
         if not assignments:
             raise ValueError("no assignments")
         if mode is None:
@@ -3085,7 +2882,7 @@ class ParquetWarehouse:
         out = {c: s for c, s in derived.items() if safe(c, s)}
         return out or None
 
-    # --- schema evolution on log-mode tables (VERDICT r6 #1) -------------
+    # --- schema evolution (VERDICT r6 #1) ----------------------------------
     # Iceberg's field-id model, applied to the snapshot log: every head
     # carries ALL schemas the table has ever had ({schema_id: [{id, name,
     # type}, ...]}) plus the current ``schema_id``; every manifest entry
@@ -3111,7 +2908,7 @@ class ParquetWarehouse:
         self, schema: str, table: str, df: DataFrame, branch: str = "main",
         head: dict | None = ...,
     ) -> tuple[DataFrame, list[dict]]:
-        """Validate + conform a log-mode write against the table's CURRENT
+        """Validate + conform a write against the table's CURRENT
         schema (Iceberg write posture): unknown columns are an error
         (``add_column`` first), type changes are an error (no implicit
         type evolution), columns the write omits are NULL-filled at their
@@ -3873,12 +3670,6 @@ class ParquetWarehouse:
         or ``merge_branch``'s commuting schema adoption after main
         moved)."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "schema evolution requires a log-mode (snapshots=true) "
-                "table — dir-mode parquet has no metadata log to version "
-                "schemas in"
-            )
         snap_dir = self._ref_dir(schema, table, branch)
         import time as _time
 
@@ -4335,12 +4126,6 @@ class ParquetWarehouse:
         live files written under them resolve forever.  The same commit
         loop and head-carry discipline as ``_commit_schema_change``."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "partition-spec evolution requires a log-mode "
-                "(snapshots=true) table — dir-mode reads walk one hive "
-                "layout and cannot mix specs"
-            )
         snap_dir = self._ref_dir(schema, table, branch)
         import time as _time
 
@@ -4416,11 +4201,7 @@ class ParquetWarehouse:
         ``{"spec_id", "transforms", "specs"}`` (Iceberg ``$partitions``
         spec metadata / ``table.spec()``)."""
         meta = self.table_meta(schema, table)
-        head = (
-            self._head_light(schema, table, branch)
-            if self._log_mode(meta)
-            else None
-        )
+        head = self._head_light(schema, table, branch)
         cur = self._head_partitioning(meta, head)
         specs = (
             {k: list(v) for k, v in head["specs"].items()}
@@ -4435,7 +4216,7 @@ class ParquetWarehouse:
             "specs": specs,
         }
 
-    # --- snapshot/manifest log (opt-in; Iceberg-manifest analogue) -------
+    # --- snapshot/manifest log (Iceberg-manifest analogue) ----------------
     def _snap_dir(self, schema: str, table: str) -> str:
         return os.path.join(self._tdir(schema, table), "snapshots")
 
@@ -5243,16 +5024,11 @@ class ParquetWarehouse:
         what schema-aware readers need (each entry's ``sid`` picks its
         projection group)."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                f"{schema}.{table} is not a log-mode table (snapshots=true); "
-                "dir-mode reads already rely on parquet footer stats"
-            )
         if version is None:
             version = self._latest_version(schema, table, branch)
             if version is None:
                 raise ValueError(
-                    f"log-mode table {schema}.{table} has no committed snapshot"
+                    f"table {schema}.{table} has no committed snapshot"
                 )
         head = self._load_head_light(schema, table, version, branch)
         norm = self._norm_filter(ranges)
@@ -5402,7 +5178,7 @@ class ParquetWarehouse:
         version: int | None = None,
         branch: str = "main",
     ) -> DataFrame:
-        """Read a log-mode table through manifest bounds pruning.  Pruning
+        """Read a table through manifest bounds pruning.  Pruning
         is an OPTIMIZATION, not a filter: the caller still applies the real
         predicate, and because files lacking bounds are kept, the result of
         ``read_pruned(...).filter(p)`` always equals ``read(...).filter(p)``."""
@@ -5424,16 +5200,13 @@ class ParquetWarehouse:
         skipping, and the FULL condition is applied as the real filter —
         so the result always equals ``read(...).filter(condition)``, with
         qualifying files the only ones Spark ever schedules.  Conditions
-        outside the safe subset (or dir-mode tables) fall back to the
-        plain filtered read."""
-        meta = self.table_meta(schema, table)
-        if self._log_mode(meta):
-            head = self._head_light(schema, table)
-            ranges = self._auto_ranges(condition, head) if head else None
-            if ranges:
-                return self.read_pruned(schema, table, ranges).filter(
-                    F.expr(condition)
-                )
+        outside the safe subset fall back to the plain filtered read."""
+        head = self._head_light(schema, table)
+        ranges = self._auto_ranges(condition, head) if head else None
+        if ranges:
+            return self.read_pruned(schema, table, ranges).filter(
+                F.expr(condition)
+            )
         return self.read(schema, table).filter(F.expr(condition))
 
     # --- manifest-list layer (VERDICT r5 #1) -----------------------------
@@ -5851,8 +5624,10 @@ class ParquetWarehouse:
         """Record a snapshot v{N} — a small HEAD file listing immutable
         segment files that together hold the per-file entries (paths,
         rows/bytes, partition values, column bounds), the Iceberg
-        snapshot -> manifest-list -> manifest chain C8 wants.  Opt-in and
-        additive: callers commit after each write they want replayable.
+        snapshot -> manifest-list -> manifest chain C8 wants.  Every write
+        commits through here: a replace (``file_paths``) or a delta
+        (``add_files``/``drop_files``/``add_deletes``/``retire_deletes``),
+        exactly one of the two.
 
         Each entry carries per-column ``[lower, upper]`` bounds lifted from
         the parquet footer (Iceberg lower_bounds/upper_bounds; see
@@ -5943,15 +5718,10 @@ class ParquetWarehouse:
         writes unique generation dirs), so segments never hold duplicate
         paths; materialization still de-duplicates by path defensively.
 
-        Retention: on a LOG-MODE table (snapshots=true) writers commit
-        automatically, superseded generations stay on disk, and time
-        travel survives optimize()/merge_upsert() until expire_snapshots
-        garbage-collects (data files AND unreferenced segments).  On a
-        dir-mode table this is a manual opt-in record: append-only
-        histories time-travel exactly, but a rewrite leaves older
-        snapshots dangling — read_snapshot detects the missing files and
-        raises (the moral equivalent of reading an expired Iceberg
-        snapshot)."""
+        Retention: writers commit automatically, superseded generations
+        stay on disk, and time travel survives optimize()/merge_upsert()
+        until expire_snapshots garbage-collects (data files AND
+        unreferenced segments)."""
         import pyarrow.parquet as pq
 
         is_delta = (
@@ -5960,7 +5730,7 @@ class ParquetWarehouse:
             or add_deletes is not None
             or retire_deletes is not None
         )
-        if file_paths is not None and is_delta:
+        if (file_paths is not None) == is_delta:
             raise ValueError(
                 "pass file_paths (replace) OR add_files/drop_files (delta)"
             )
@@ -6123,10 +5893,9 @@ class ParquetWarehouse:
                         fresh_list.append(e)
                         entries.append(e)
             else:
-                # replace (optimize/merge/rewrite) or dir-mode manual
-                # record: the new live set IS the new segment; parent
-                # entries are reused by size+mtime so only changed files
-                # open a footer
+                # replace (optimize/merge/rewrite): the new live set IS the
+                # new segment; parent entries are reused by size+mtime so
+                # only changed files open a footer
                 head0 = (
                     self._materialize(schema, table, head)
                     if head is not None
@@ -6135,15 +5904,9 @@ class ParquetWarehouse:
                 parent_by_path = {
                     e["path"]: e for e in (head0["files"] if head0 else [])
                 }
-                if file_paths is not None:
-                    paths = sorted(file_paths)
-                else:
-                    # dir-mode manual record: walk the live directory
-                    # (log-mode callers always pass explicit lists —
-                    # _data_files would circularly consult the manifest
-                    # being built)
-                    paths = self._data_files(schema, table)
-                entries = [fresh_entry(p, parent_by_path) for p in paths]
+                entries = [
+                    fresh_entry(p, parent_by_path) for p in sorted(file_paths)
+                ]
 
             # one batched (Spark-distributed) blob build for every fresh
             # entry this commit touches — entry dicts are mutated in
@@ -6699,7 +6462,7 @@ class ParquetWarehouse:
         self, schema: str, table: str, branch: str = "main"
     ) -> int | None:
         """PUBLIC head-version probe: the ref's newest committed
-        snapshot version, or None for a dir-mode/never-committed table.
+        snapshot version, or None for a never-committed table.
         This is what version-pinned workflows capture — the WAP gate
         audits this version and publishes exactly it (pipeline/audit.py,
         VERDICT r18 #1) — and what external monitoring should read
@@ -6962,9 +6725,6 @@ class ParquetWarehouse:
                     # as absent, not crash
                     continue
         return out
-
-    def _tag_path(self, schema: str, table: str, name: str) -> str:
-        return self._tag_store_path(self._snap_dir(schema, table), name)
 
     def create_tag(
         self, schema: str, table: str, name: str, version: int | None = None
@@ -7682,12 +7442,6 @@ class ParquetWarehouse:
         parent is the previous head), so any retained version below the
         head IS an ancestor — ``set_current_snapshot`` is the same
         operation under Iceberg's other procedure name."""
-        meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                f"{schema}.{table} does not keep snapshots "
-                "(snapshots=true) — nothing to roll back to"
-            )
         if isinstance(version, str):
             if branch != "main":
                 raise ValueError(
@@ -8453,10 +8207,6 @@ class ParquetWarehouse:
         pattern is frequent small pulls with a checkpointed version,
         same as ``read_incremental``."""
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "read_changes requires a log-mode (snapshots=true) table"
-            )
         if branch != "main" and (
             isinstance(from_version, str) or isinstance(to_version, str)
         ):
@@ -8767,10 +8517,6 @@ class ParquetWarehouse:
         if not key_cols:
             raise ValueError("key_cols is required")
         meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "touched_keys requires a log-mode (snapshots=true) table"
-            )
         fv = self._resolve_version(schema, table, from_version)
         if to_version is None:
             tv = self._latest_version(schema, table, branch)
@@ -9200,12 +8946,6 @@ class ParquetWarehouse:
         """Iceberg ``$partitions`` metadata table: per-partition-tuple
         file/row/byte counts served ENTIRELY from the head manifest —
         zero data IO, zero footer opens, however large the table."""
-        meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
-            raise ValueError(
-                "partitions_report requires a log-mode (snapshots=true) "
-                "table — dir mode has no manifest to serve from"
-            )
         head = self.head_snapshot(schema, table)
         if head is None:
             return []
@@ -9406,19 +9146,19 @@ class ParquetWarehouse:
         ``expire_plan``: (victim manifests oldest-first, checkpoint
         floor or None, checkpoints parsed).  Applies every retention
         kind — keep_last suffix, age gate, tags, catalog pins, the
-        consumer-checkpoint floor — and the keep_last>=1 log-mode
-        guard, so a dry-run plan can never disagree with the act."""
+        consumer-checkpoint floor — and the keep_last>=1 guard, so a
+        dry-run plan can never disagree with the act."""
         import time
 
-        if keep_last < 1 and self._log_mode(self.table_meta(schema, table)):
+        if keep_last < 1:
             raise ValueError(
-                "expire_snapshots(keep_last=0) on a log-mode table would "
-                "delete every manifest AND garbage-collect every data file "
-                "(permanent truncation); keep_last must be >= 1 — use "
-                "drop_table() to remove the table"
+                "expire_snapshots(keep_last=0) would delete every manifest "
+                "AND garbage-collect every data file (permanent "
+                "truncation); keep_last must be >= 1 — use drop_table() "
+                "to remove the table"
             )
         snaps = self.snapshots(schema, table)
-        victims = snaps[:-keep_last] if keep_last > 0 else snaps
+        victims = snaps[:-keep_last]
         if older_than_s is not None:
             cutoff = time.time() - older_than_s
             victims = [
@@ -9457,7 +9197,7 @@ class ParquetWarehouse:
         "ckpt_floor": version | None, "checkpoints": parsed count}.
         Same victim selection code path as the act, so the plan cannot
         drift from it; refusals (empty checkpoint dir, unparsable
-        checkpoint, keep_last=0 on log mode) surface here too."""
+        checkpoint, keep_last=0) surface here too."""
         victims, floor, n = self._expire_victims(
             schema, table, keep_last, older_than_s, retain_checkpoints,
             strict_checkpoints,
@@ -9484,11 +9224,9 @@ class ParquetWarehouse:
         (Iceberg's ``expire_snapshots(older_than)`` — the newest
         ``keep_last`` are always retained regardless of age, and legacy
         heads without a recorded commit time are conservatively kept).
-        Log-mode tables require ``keep_last >= 1`` — expiring every
-        manifest would also GC every data file (manifest-driven reads
-        would then see an empty, unrecoverable table).  Dir-mode tables
-        share files with the live directory listing, so expiry only
-        removes manifests there and keep_last=0 is allowed.
+        ``keep_last`` must be >= 1 — expiring every manifest would also
+        GC every data file (manifest-driven reads would then see an
+        empty, unrecoverable table).
 
         ``retain_checkpoints`` (r17) registers consumer checkpoint files
         (or directories of them): every version >= the OLDEST registered
@@ -9525,17 +9263,15 @@ class ParquetWarehouse:
             # forward probe below a gap — see _write_hint_file (monotone:
             # a concurrent commit's newer hint is never overwritten)
             self._write_version_hint(schema, table, snaps[-1]["version"])
-        if victims and self._log_mode(self.table_meta(schema, table)):
-            # log mode owns its data files: garbage-collect files the
-            # EXPIRED manifests referenced that no kept manifest still
+        if victims:
+            # the snapshot log owns its data files: garbage-collect files
+            # the EXPIRED manifests referenced that no kept manifest still
             # references.  Scoped to the victims' lists — never a blind
             # directory sweep, which would also delete a concurrent
             # in-flight append's not-yet-committed generation (files exist
             # on disk before their CAS commit).  Files from crashed,
             # never-committed writes are orphans, as in Iceberg
-            # (remove_orphan_files territory, out of scope here).  Dir mode
-            # shares files with the live directory listing, so expiry never
-            # touches data there.
+            # (remove_orphan_files territory).
             tdir = self._tdir(schema, table)
             survivors = self.snapshots(schema, table)
             # BRANCH-referenced files are live until drop_branch (the
@@ -9604,15 +9340,17 @@ class ParquetWarehouse:
         on disk BEFORE its CAS commit — exactly the reason expire_snapshots
         GCs only expired-manifest files and leaves orphan cleanup to this
         explicit, age-gated op.  Iceberg twin: CALL system.remove_orphan_files
-        (same default 'older than' semantics).  Log-mode only: dir mode's
-        live set IS the directory walk, so nothing can be orphaned there."""
+        (same default 'older than' semantics).
+
+        A table whose main ref has no committed snapshot raises instead of
+        walking data/: with no manifest there is nothing to prove a file
+        unreferenced (a data dir left by the removed directory format would
+        otherwise be deleted wholesale)."""
         import time
 
-        meta = self.table_meta(schema, table)
-        if not self._log_mode(meta):
+        if self.current_version(schema, table) is None:
             raise ValueError(
-                "remove_orphan_files applies to log-mode (snapshots=true) "
-                "tables; dir-mode tables treat every data file as live"
+                f"table {schema}.{table} has no committed snapshot"
             )
         tdir = self._tdir(schema, table)
         snaps = self.snapshots(schema, table)
@@ -9748,42 +9486,31 @@ class ParquetWarehouse:
         branch: str = "main",
         extra_meta: dict | None = None,
     ) -> dict:
-        """Upsert ``updates`` into the table by key (MERGE INTO analogue —
-        parquet has no transaction log, so this is copy-on-write).
+        """Upsert ``updates`` into the table by key (MERGE INTO analogue).
 
-        ``mode`` selects the Iceberg ``write.merge.mode`` strategy on
-        log-mode tables (falls back to the ``merge_mode`` table property,
-        then copy-on-write).  ``"merge-on-read"`` is the streaming-CDC
+        ``mode`` selects the Iceberg ``write.merge.mode`` strategy (falls
+        back to the ``merge_mode`` table property, then copy-on-write).  ``"merge-on-read"`` is the streaming-CDC
         shape (Flink->Iceberg upsert commits): append ONLY the batch's
         new row images plus ONE EQUALITY DELETE of the batch's keys
         (scoped to the files live before the commit), so commit cost is
         O(batch) however large the table — the copy-on-write path below
-        reads and rewrites the whole table per batch.  Reads anti-join
+        reads the whole table per batch.  Reads anti-join
         the keys; ``optimize()`` folds.  Stacked batches linearize
         because each batch's delete targets the previous batches' image
         files but never its own.
 
-        Partitioned tables rewrite ONLY partitions containing changed keys —
-        in BOTH positions: the partitions the updates land in AND the
-        partitions currently holding those keys (an update may move a row
-        across partitions; scoping only by the new values would leave the
-        stale row behind).  The current positions come from a key+partition
-        column discovery scan over the table — column-pruned, but a full
-        partition sweep, exactly the touched-file discovery every
-        transaction-log MERGE (Delta/Iceberg) performs absent a key index.
-        Untouched partitions' FILES are never rewritten; dir swaps use the
-        filesystem's own (Spark-encoded) partition dir names, never
-        reconstructed strings, so NULL/escaped partition values swap
-        correctly.  Unpartitioned tables rewrite fully via the same
-        crash-safe tmp+swap as optimize().
+        Copy-on-write writes the merged rows as one new generation: an
+        unpartitioned table is rewritten whole and committed as a replace,
+        like optimize(); a partitioned table rewrites only the files that
+        hold a changed key and commits a delta, so files of untouched
+        partitions stay in the manifest.  No file is deleted, and time
+        travel to the pre-merge snapshot works until expiry.
 
         Semantics: an update row replaces the current row with its key;
         unmatched update rows insert.  ``delete_col`` (boolean) marks
         tombstones: matching current rows disappear and the tombstone row is
         not written.  Duplicate keys within ``updates`` are an error
         (ambiguous MERGE), enforced with one aggregate."""
-        from urllib.parse import unquote, urlparse
-
         meta = self.table_meta(schema, table)
         if mode is None:
             mode = str(meta.properties.get("merge_mode", "copy-on-write"))
@@ -9792,31 +9519,13 @@ class ParquetWarehouse:
                 f"unknown merge mode {mode!r}: expected 'copy-on-write' "
                 "or 'merge-on-read'"
             )
-        if mode == "merge-on-read" and not self._log_mode(meta):
-            raise ValueError(
-                "merge-on-read upserts require a log-mode "
-                "(snapshots=true) table — equality deletes are manifest "
-                "entries"
-            )
-        if branch != "main" and not self._log_mode(meta):
-            raise ValueError(
-                "branch writes require a log-mode (snapshots=true) table"
-            )
-        if extra_meta is not None and not self._log_mode(meta):
-            raise ValueError(
-                "extra_meta requires a log-mode (snapshots=true) table"
-            )
         # ONE head capture anchors the whole merge (review r12 #1): the
         # column set, the current partition spec, and the copy-on-write
         # replace's expected_parent all derive from head0, so a schema
         # or spec DDL landing anywhere during the merge aborts the
         # publish instead of mislabeling old-layout files with the
         # post-DDL sid/pid
-        head0 = (
-            self._head_light(schema, table, branch)
-            if self._log_mode(meta)
-            else None
-        )
+        head0 = self._head_light(schema, table, branch)
         if head0 is not None and "schemas" in head0:
             table_cols = [
                 f["name"] for f in head0["schemas"][str(head0["schema_id"])]
@@ -9969,15 +9678,9 @@ class ParquetWarehouse:
         )
 
         data_dir = self._live_data_dir(schema, table)
-        tmp_dir = os.path.join(self._tdir(schema, table), "_merge_tmp")
-        shutil.rmtree(tmp_dir, ignore_errors=True)
         # new row images lay out by head0's CURRENT spec (partition-spec
-        # evolution); dir mode has no head and keeps the meta spec
-        cur_part = (
-            self._head_partitioning(meta, head0)
-            if self._log_mode(meta)
-            else list(meta.partitioning or [])
-        )
+        # evolution)
+        cur_part = self._head_partitioning(meta, head0)
         part_specs = partition_transform_exprs(cur_part)
         n_deleted = int(mstats["n_del"])
         result = {
@@ -9988,7 +9691,7 @@ class ParquetWarehouse:
         if n_updates == 0:
             return result
 
-        if self._log_mode(meta) and mode == "merge-on-read":
+        if mode == "merge-on-read":
             import pyarrow.parquet as pq
 
             # ONE head capture (head0) anchors version, schema resolution,
@@ -10134,157 +9837,106 @@ class ParquetWarehouse:
                 "version": manifest["version"],
             }
 
-        if self._log_mode(meta):
-            # log mode (partitioned or not): the merged table is a new
-            # generation + commit (same retention story as optimize) — no
-            # swap, no deletion, time travel to the pre-merge snapshot
-            # keeps working until expiry.  expected_parent is the head
-            # cur_part/table_cols were derived from — NOT a fresh read —
-            # so a spec/schema DDL that slid in during the batch stats
-            # aborts the replace instead of publishing old-layout files
-            # stamped with the new pid/sid (review r12 #1; a benign
-            # concurrent append aborts too, which a full REPLACE must)
-            if head0 is None:
-                raise ValueError(
-                    f"merge_upsert on {schema}.{table}: no committed "
-                    "snapshot to merge into — append first"
-                )
-            head_version = head0["version"]
-            part_names = [n for n, _ in part_specs]
+        # copy-on-write: the merged rows are a new generation + commit
+        # (same retention story as optimize).  expected_parent is the head
+        # cur_part/table_cols were derived from — NOT a fresh read — so a
+        # spec/schema DDL that slid in during the batch stats aborts the
+        # publish instead of stamping old-layout files with the new
+        # pid/sid (review r12 #1); a concurrent append aborts too, since
+        # it may carry one of the batch's keys
+        if head0 is None:
+            raise ValueError(
+                f"merge_upsert on {schema}.{table}: no committed "
+                "snapshot to merge into — append first"
+            )
+        part_names = [n for n, _ in part_specs]
+        ups = upserts
+        if part_specs:
+            ups, _ = apply_partition_transforms(ups, cur_part)
+        if not part_names:
+            # unpartitioned: rewrite the whole table as a replace
             kept = self.read(schema, table, branch=branch).join(
                 changed_keys, key_cols, "left_anti"
             )
-            ups = upserts
-            if part_specs:
-                ups, _ = apply_partition_transforms(ups, cur_part)
-            merged = kept.select(*table_cols).unionByName(ups.select(*table_cols))
-            gen_dir = os.path.join(data_dir, f"merge_{uuid.uuid4().hex[:8]}")
-            writer = merged.write.mode("error")
-            if part_names:
-                writer = writer.partitionBy(*part_names)
-            for k, v in self._write_options(meta).items():
-                writer = writer.option(k, v)
-            writer.parquet(gen_dir)
-            new = sorted(
-                os.path.join(base, fn)
-                for base, _d, fns in os.walk(gen_dir)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-            self.commit_snapshot(
-                schema, table, "merge_upsert", file_paths=new,
-                expected_parent=head_version, branch=branch,
-                extra_meta=extra_meta,
-            )
-            if part_names:
-                result["partitions_rewritten"] = len(
-                    {os.path.dirname(p) for p in new}
-                )
-            return result
-
-        if part_specs:
-            from functools import reduce
-
-            part_names = [n for n, _ in part_specs]
-            # discovery scan: where do the changed keys currently live?
-            # (key + partition cols + file path only — column-pruned)
-            cur = self.read(schema, table).select(
-                *key_cols, *part_names, F.input_file_name().alias("_f")
-            )
-            hits = cur.join(changed_keys, key_cols, "left_semi")
-            hit_rows = hits.select(*part_names, "_f").distinct().collect()
-            # input_file_name() yields file:// URIs with percent-encoding;
-            # decode to plain paths before taking dirnames relative to data/
-            old_dirs = {
-                os.path.relpath(
-                    os.path.dirname(unquote(urlparse(r["_f"]).path)), data_dir
-                )
-                for r in hit_rows
-            }
-            # touched partition VALUES: current positions of changed keys
-            # plus the updates' new positions (value-based so the scoped
-            # read below still partition-prunes)
-            all_changed = (
-                upserts if deletes is None else upserts.unionByName(deletes)
-            )
-            changed_parts, _ = apply_partition_transforms(
-                all_changed, cur_part
-            )
-            touched = {
-                tuple(r[n] for n in part_names)
-                for r in changed_parts.select(*part_names).distinct().collect()
-            } | {tuple(r[n] for n in part_names) for r in hit_rows}
-            if not touched:
-                return result
-            in_touched = reduce(
-                lambda a, b: a | b,
-                [
-                    reduce(
-                        lambda a, b: a & b,
-                        [
-                            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
-                            for c, v in zip(part_names, t)
-                        ],
-                    )
-                    for t in sorted(touched, key=repr)
-                ],
-            )
-            scoped = self.read(schema, table).filter(in_touched)
-            kept = scoped.join(changed_keys, key_cols, "left_anti")
-            upserts_p, _ = apply_partition_transforms(upserts, cur_part)
             merged = kept.select(*table_cols).unionByName(
-                upserts_p.select(*table_cols)
+                ups.select(*table_cols)
             )
-            writer = merged.write.mode("overwrite").partitionBy(*part_names)
-            for k, v in self._write_options(meta).items():
-                writer = writer.option(k, v)
-            writer.parquet(tmp_dir)
-            # swap by the dir names Spark actually wrote (encoding-safe):
-            # every leaf dir in tmp replaces its counterpart atomically ...
-            new_dirs = set()
-            for base, _dirs, files in os.walk(tmp_dir):
-                if any(fn.endswith(".parquet") for fn in files):
-                    new_dirs.add(os.path.relpath(base, tmp_dir))
-            # staged OUTSIDE data/ (_merge_old/<rel>): a crash between the
-            # two renames must not leave an '_old'-suffixed dir inside
-            # data/ where hive discovery would parse it as a bogus
-            # partition value; _live_data_dir's healing sweep restores or
-            # discards _merge_old leftovers on the next access
-            merge_old_root = os.path.join(self._tdir(schema, table), "_merge_old")
-            shutil.rmtree(merge_old_root, ignore_errors=True)
-            for rel in sorted(new_dirs):
-                src = os.path.join(tmp_dir, rel)
-                dst = os.path.join(data_dir, rel)
-                old = os.path.join(merge_old_root, rel)
-                if os.path.isdir(dst):
-                    os.makedirs(os.path.dirname(old), exist_ok=True)
-                    os.rename(dst, old)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-            shutil.rmtree(merge_old_root, ignore_errors=True)
-            # ... and a changed key\'s old partition with NO surviving output
-            # (every row deleted or moved away) is removed outright
-            for rel in sorted(old_dirs - new_dirs):
-                victim = os.path.join(data_dir, rel)
-                if os.path.realpath(victim).startswith(os.path.realpath(data_dir)):
-                    shutil.rmtree(victim, ignore_errors=True)
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-            result["partitions_rewritten"] = len(new_dirs | old_dirs)
-            return result
-
-        current = self.read(schema, table)
-        merged = current.join(changed_keys, key_cols, "left_anti").select(
-            *table_cols
-        ).unionByName(upserts.select(*table_cols))
-        writer = merged.write.mode("overwrite")
+            victims: list[dict] = []
+        else:
+            # partitioned: a scoped delta.  A discovery scan (key columns
+            # plus the manifest-relative path) finds the files that hold a
+            # changed key; only those are rewritten, and the new row
+            # images land as new files of their partitions.  Files of
+            # every other partition stay in the manifest untouched.
+            head = self._load_snapshot(
+                schema, table, head0["version"], branch
+            )
+            hit = {
+                r[0]
+                for r in self._read_entries(
+                    schema, table, meta, head, head["files"], with_pos=True
+                )
+                .select(*key_cols, self._POS_REL)
+                .join(changed_keys, key_cols, "left_semi")
+                .select(self._POS_REL)
+                .distinct()
+                .collect()
+            }
+            victims = [e for e in head["files"] if e["path"] in hit]
+            if not victims and n_updates == n_deleted:
+                return result  # tombstones only, none of them live
+            merged = ups.select(*table_cols)
+            if victims:
+                kept = self._read_entries(
+                    schema, table, meta, head, victims
+                ).join(changed_keys, key_cols, "left_anti")
+                merged = kept.select(*table_cols).unionByName(merged)
+        gen_dir = os.path.join(data_dir, f"merge_{uuid.uuid4().hex[:8]}")
+        writer = merged.write.mode("error")
+        if part_names:
+            writer = writer.partitionBy(*part_names)
         for k, v in self._write_options(meta).items():
             writer = writer.option(k, v)
-        writer.parquet(tmp_dir)
-        old_dir = os.path.join(self._tdir(schema, table), "data_old")
-        shutil.rmtree(old_dir, ignore_errors=True)
-        os.rename(data_dir, old_dir)
-        os.rename(tmp_dir, data_dir)
-        shutil.rmtree(old_dir, ignore_errors=True)
+        writer.parquet(gen_dir)
+        new = sorted(
+            os.path.join(base, fn)
+            for base, _d, fns in os.walk(gen_dir)
+            for fn in fns
+            if fn.endswith(".parquet")
+        )
+        if not part_names:
+            self.commit_snapshot(
+                schema, table, "merge_upsert", file_paths=new,
+                expected_parent=head0["version"], branch=branch,
+                extra_meta=extra_meta,
+            )
+            return result
+        import pyarrow.parquet as pq
+
+        for p in list(new):
+            if pq.ParquetFile(p).metadata.num_rows == 0:
+                os.unlink(p)  # every victim row deleted, no new image
+                new.remove(p)
+        tdir = self._tdir(schema, table)
+        try:
+            self.commit_snapshot(
+                schema, table, "merge_upsert", add_files=new,
+                drop_files=[os.path.join(tdir, e["path"]) for e in victims],
+                expected_parent=head0["version"], branch=branch,
+                extra_meta=extra_meta,
+            )
+        except BaseException:
+            shutil.rmtree(gen_dir, ignore_errors=True)
+            raise
+        result["partitions_rewritten"] = len(
+            {tuple(sorted(e.get("partitions", {}).items())) for e in victims}
+            | {
+                tuple(sorted(self._file_partitions(
+                    os.path.relpath(p, tdir)
+                ).items()))
+                for p in new
+            }
+        )
         return result
 
     def merge_into(
@@ -10350,12 +10002,7 @@ class ParquetWarehouse:
         # own heads, and a concurrent commit between them gives the
         # matched clauses and the not-matched-by-source clause two
         # different views of the table — read skew inside one MERGE)
-        meta_mi = self.table_meta(schema, table)
-        head_mi = (
-            self._head_light(schema, table, branch)
-            if self._log_mode(meta_mi)
-            else None
-        )
+        head_mi = self._head_light(schema, table, branch)
         if head_mi is not None:
             tgt = self.read_snapshot(
                 schema, table, head_mi["version"], branch=branch
@@ -10663,41 +10310,34 @@ class ParquetWarehouse:
         rewrite of each file (pyarrow accepts per-column compression dicts).
         Files rewrite independently — driver thread pool here; on a cluster
         this is one task per file (Iceberg rewrite_data_files shape).
-        Crash-safe: same tmp-dir + rename swap as optimize().
+        The rewrite is a NEW committed generation (operation 'rewrite'),
+        like optimize(): retained generations stay on disk, so time travel
+        to pre-rewrite snapshots keeps working until expire_snapshots GCs
+        them.  Relative paths (incl. hive partition segments) are
+        preserved under the generation root.
         """
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
 
         meta = self.table_meta(schema, table)
-        head_version = None
-        if self._log_mode(meta):
-            head = self.head_snapshot(schema, table)
-            head_version = head["version"] if head else None
-            if head is not None and head.get("deletes"):
-                # this rewrite copies parquet row groups BYTE-for-byte
-                # (pyarrow, below) — it never evaluates the merge-on-read
-                # delete tuples, and its replace commit would clear them,
-                # silently resurrecting deleted rows.  Fold first.
-                raise ValueError(
-                    f"{schema}.{table} has merge-on-read delete files; "
-                    "run optimize() to fold them before a per-column "
-                    "codec rewrite"
-                )
-        files = self._data_files(schema, table)
-        if not files:
+        head = self.head_snapshot(schema, table)
+        if head is None or not head["files"]:
             return {"files": 0}
+        if head.get("deletes"):
+            # this rewrite copies parquet row groups BYTE-for-byte
+            # (pyarrow, below) — it never evaluates the merge-on-read
+            # delete tuples, and its replace commit would clear them,
+            # silently resurrecting deleted rows.  Fold first.
+            raise ValueError(
+                f"{schema}.{table} has merge-on-read delete files; "
+                "run optimize() to fold them before a per-column "
+                "codec rewrite"
+            )
+        tdir = self._tdir(schema, table)
+        files = sorted(os.path.join(tdir, e["path"]) for e in head["files"])
         data_dir = self._live_data_dir(schema, table)
-        if self._log_mode(meta):
-            # log mode: the rewrite is a NEW committed generation (operation
-            # 'rewrite'), not a dir swap — retained generations stay on
-            # disk, so time travel to pre-rewrite snapshots keeps working
-            # until expire_snapshots GCs them.  Relative paths (incl. hive
-            # partition segments) are preserved under the generation root.
-            tmp_dir = os.path.join(data_dir, f"percol_{uuid.uuid4().hex[:8]}")
-        else:
-            tmp_dir = os.path.join(self._tdir(schema, table), "_percol_tmp")
-            shutil.rmtree(tmp_dir, ignore_errors=True)
+        tmp_dir = os.path.join(data_dir, f"percol_{uuid.uuid4().hex[:8]}")
 
         arrow_codec = {
             "zstd": "ZSTD", "gzip": "GZIP", "snappy": "SNAPPY",
@@ -10742,23 +10382,16 @@ class ParquetWarehouse:
         with ThreadPoolExecutor(max_workers=max_workers) as ex:
             list(ex.map(rewrite_one, files))
 
-        if self._log_mode(meta):
-            new = sorted(
-                os.path.join(base, fn)
-                for base, _d, fns in os.walk(tmp_dir)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-            self.commit_snapshot(
-                schema, table, "rewrite", file_paths=new,
-                expected_parent=head_version,
-            )
-        else:
-            old_dir = os.path.join(self._tdir(schema, table), "data_old")
-            shutil.rmtree(old_dir, ignore_errors=True)
-            os.rename(data_dir, old_dir)
-            os.rename(tmp_dir, data_dir)
-            shutil.rmtree(old_dir, ignore_errors=True)
+        new = sorted(
+            os.path.join(base, fn)
+            for base, _d, fns in os.walk(tmp_dir)
+            for fn in fns
+            if fn.endswith(".parquet")
+        )
+        self.commit_snapshot(
+            schema, table, "rewrite", file_paths=new,
+            expected_parent=head["version"],
+        )
         self.alter_table_properties(
             schema, table,
             **{"per_column_codecs": json.dumps(
@@ -10800,17 +10433,15 @@ class ParquetWarehouse:
         if config is not None:
             return iceberg_ddl(config, table, meta.codec, meta.level)
         fields: list[tuple[str, str]] | None = None
-        part_list = list(meta.partitioning or [])
-        if self._log_mode(meta):
-            head = self._head_light(schema, table)
-            part_list = self._head_partitioning(meta, head)
-            if head is not None and "schemas" in head:
-                # metadata-only: the recorded CURRENT schema (reflects
-                # add/rename/drop/widen), zero data IO
-                fields = [
-                    (f["name"], f["type"])
-                    for f in head["schemas"][str(head["schema_id"])]
-                ]
+        head = self._head_light(schema, table)
+        part_list = self._head_partitioning(meta, head)
+        if head is not None and "schemas" in head:
+            # metadata-only: the recorded CURRENT schema (reflects
+            # add/rename/drop/widen), zero data IO
+            fields = [
+                (f["name"], f["type"])
+                for f in head["schemas"][str(head["schema_id"])]
+            ]
         if fields is None:
             df = self.read(schema, table)
             fields = [

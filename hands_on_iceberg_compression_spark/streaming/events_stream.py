@@ -172,13 +172,14 @@ def stream_into_warehouse(
     retain_checkpoints: list[str] | None = None,
 ) -> None:
     """Streaming sink into a warehouse table via foreachBatch: each
-    micro-batch appends as its own batch directory (committer-isolated,
+    micro-batch appends as its own batch generation (committer-isolated,
     exactly-once per epoch via the streaming checkpoint + idempotent batch
-    ids).  This is the ingest path: stream -> table, then every batch
-    operator in operators/ runs over the table.
+    ids — a replayed epoch id supersedes its prior generation in the
+    manifest, partitioned or not).  This is the ingest path: stream ->
+    table, then every batch operator in operators/ runs over the table.
 
-    ``maintenance_every=N`` (log-mode tables) co-locates Iceberg's table
-    maintenance with the ingest: every N epochs, compact the PARTITIONS
+    ``maintenance_every=N`` co-locates Iceberg's table maintenance with
+    the ingest: every N epochs, compact the PARTITIONS
     TOUCHED since the last tick (``optimize(partition_filter=...)`` — the
     scoped rewrite, so cold partitions are never rewritten) and, when
     ``expire_keep_last`` is set, expire old snapshots.  At 100 TB a
@@ -197,23 +198,6 @@ def stream_into_warehouse(
     )
 
     meta = warehouse.table_meta(schema, table)
-    if meta.partitioning and not warehouse._log_mode(meta):
-        # partitioned DIR-MODE parquet tables ignore batch_id (shared data/
-        # root), so a replayed epoch would duplicate rows.  Partitioned
-        # LOG-MODE tables (snapshots=true) ARE safe: each epoch commits a
-        # unique generation and a replayed epoch id supersedes its prior
-        # generation in the manifest (warehouse.append drop_prefix) — the
-        # Iceberg snapshot-commit shape.
-        raise NotImplementedError(
-            "exactly-once streaming ingest into a partitioned dir-mode "
-            "parquet table is not supported; use snapshots=true (log mode), "
-            "an unpartitioned table, or Iceberg"
-        )
-    if maintenance_every is not None and not warehouse._log_mode(meta):
-        raise ValueError(
-            "maintenance_every requires a log-mode (snapshots=true) table — "
-            "compaction and expiry are snapshot operations"
-        )
     part_names = [
         n for n, _ in partition_transform_exprs(meta.partitioning or [])
     ]

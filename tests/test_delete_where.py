@@ -129,15 +129,19 @@ def test_delete_null_predicate_keeps_row(spark, tmp_path):
 def test_delete_everything_commits_pure_drop(spark, tmp_path):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     wh.create_table("lab", "allgone", "zstd", 1, properties={"snapshots": "true"})
+    # main-ref is_empty answers off the head's totals at every stage
+    assert wh.is_empty("lab", "allgone")  # no snapshot yet
     wh.append(
         "lab", "allgone",
         spark.createDataFrame([(i,) for i in range(10)], "id int"),
         batch_id="b0",
     )
+    assert not wh.is_empty("lab", "allgone")
     out = wh.delete_where("lab", "allgone", "id >= 0")
     assert out["rows_deleted"] == 10 and out["files_added"] == 0
     head = wh.head_snapshot("lab", "allgone")
     assert head["files"] == [] and head["total_rows"] == 0
+    assert wh.is_empty("lab", "allgone")
     # the pre-delete snapshot still time-travels to the full data
     assert wh.read_snapshot("lab", "allgone", head["parent"]).count() == 10
 
@@ -235,13 +239,6 @@ def test_pv_definitely_satisfies_guards():
     # hive NULL sentinel: rows are NULL, equality never satisfied
     assert pds("__HIVE_DEFAULT_PARTITION__",
                ("__HIVE_DEFAULT_PARTITION__", "__HIVE_DEFAULT_PARTITION__")) is False
-
-
-def test_delete_requires_log_mode(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    wh.create_table("lab", "plain", "zstd", 1)
-    with pytest.raises(ValueError, match="log-mode"):
-        wh.delete_where("lab", "plain", "1 = 1")
 
 
 def test_delete_no_matching_files_is_noop(day_table):

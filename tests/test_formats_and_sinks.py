@@ -116,18 +116,6 @@ def test_streaming_ingest_with_maintenance_policy(spark, tmp_path):
         d = e["partitions"]["created_at_day"]
         per_day[d] = per_day.get(d, 0) + 1
     assert max(per_day.values()) <= 2
-    # maintenance on a dir-mode table is refused
-    wh.create_table(cfg.schema, "maintdir", "zstd", 1)
-    stream2 = (
-        spark.readStream.schema(src.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    with pytest.raises(ValueError, match="log-mode"):
-        stream_into_warehouse(
-            stream2, wh, cfg.schema, "maintdir", str(tmp_path / "ckpt2"),
-            maintenance_every=2,
-        )
 
 
 def test_alter_properties_and_show_create(spark, tmp_path):
@@ -203,13 +191,3 @@ def test_stream_into_partitioned_log_table_exactly_once(spark, tmp_path):
     assert head["version"] > v_first
     assert head["total_rows"] == want
     assert all("partitions" in f for f in head["files"])
-
-    # partitioned DIR-mode destination is still (correctly) refused
-    import pytest as _pytest
-
-    wh.create_table(cfg.schema, "events_dir", "zstd", 1, partitioning=["days(ts)"])
-    with _pytest.raises(NotImplementedError, match="log mode"):
-        stream_into_warehouse(
-            read_events_stream(spark, SF_SMALL), wh, cfg.schema, "events_dir",
-            str(tmp_path / "ckpt3"),
-        )

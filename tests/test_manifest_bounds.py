@@ -1025,13 +1025,6 @@ def test_partition_scoped_optimize(spark, tmp_path):
             cfg.schema, table, "optimize",
             drop_files=[_os.path.join(wh._tdir(cfg.schema, table), victims_before[0])],
         )
-    # dir-mode tables have no manifest to scope from
-    wh.create_table(cfg.schema, "plaindir", "zstd", 1, partitioning=cfg.partitioning)
-    with pytest.raises(ValueError, match="log-mode"):
-        wh.optimize(
-            cfg.schema, "plaindir",
-            partition_filter={"created_at_day": (target, target)},
-        )
 
 
 def test_age_based_snapshot_expiry(spark, tmp_path):

@@ -38,10 +38,13 @@ def test_partitioned_write_and_prune(spark, tmp_path):
     assert back.count() == 5000
     assert "created_at_month" in back.columns
 
-    # hive layout on disk
-    data_dir = os.path.join(str(tmp_path / "wh"), cfg.schema, table, "data")
-    months = [d for d in os.listdir(data_dir) if d.startswith("created_at_month=")]
+    # hive layout on disk, one partition value per file in the head manifest
+    files = wh.head_snapshot(cfg.schema, table)["files"]
+    months = {e["partitions"]["created_at_month"] for e in files}
     assert len(months) == 12
+    for e in files:
+        m = e["partitions"]["created_at_month"]
+        assert f"{os.sep}created_at_month={m}{os.sep}" in e["path"]
 
     # partition pruning: filter on the transform column reaches the scan as
     # a PartitionFilter, not a data filter

@@ -67,7 +67,7 @@ def test_load_checkpoint_and_metrology(spark, tmp_path):
     size = measure_sizes(wh, cfg.schema, table, "zstd", 6)
     assert size.row_count == 3000
     assert size.data_bytes > 0 and size.bytes_per_row > 0
-    # C8 manifest-equivalent: parquet footer index bytes, never a constant 0
+    # C8: the snapshot log's manifest bytes, never a constant 0
     assert 0 < size.manifest_bytes < size.data_bytes
     assert size.total_bytes == size.data_bytes + size.manifest_bytes
 
@@ -82,6 +82,46 @@ def test_load_checkpoint_and_metrology(spark, tmp_path):
         json.dump({"completedBatches": [0, 2]}, f)
     stats3 = load_table(spark, wh, cfg, table, plan)
     assert stats3["loaded_batches"] == 1 and stats3["rows"] == 1000
+
+    # partitioned batches load concurrently: each append writes its own
+    # generation dir and CAS-commits, so 4 in-flight batches lose nothing
+    # and duplicate nothing
+    from hands_on_iceberg_compression_spark.functions.generators import generate_df
+    from hands_on_iceberg_compression_spark.sources.warehouse import (
+        apply_partition_transforms,
+    )
+
+    assert cfg.partitioning
+    par = "par_c4"
+    wh.create_table(cfg.schema, par, "zstd", 6, partitioning=cfg.partitioning)
+    plan4 = LoadPlan(
+        total_rows=4000, batch_rows=1000, concurrency=4,
+        checkpoint_dir=str(tmp_path / "ckpt4"), compact_after_load=False,
+        partitions_per_batch=2, progress=False,
+    )
+    assert load_table(spark, wh, cfg, par, plan4)["loaded_batches"] == 4
+    got = wh.read(cfg.schema, par)
+
+    def checksum(df):
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64(*got.columns)).alias("h"),
+        ).collect()[0]
+        return row["n"], row["h"]
+
+    want = None
+    for b in make_batches(1, 4000, 1000):
+        df = generate_df(spark, cfg, start_id=b.start_id, num_rows=b.rows, seed=1)
+        want = df if want is None else want.unionByName(df)
+    want, _ = apply_partition_transforms(want, cfg.partitioning)
+    assert checksum(got) == checksum(want.select(*got.columns))
+    assert checksum(got)[0] == 4000
+    gens: dict[str, set[str]] = {}
+    for e in wh.head_snapshot(cfg.schema, par)["files"]:
+        _data, batch, gen = e["path"].split(os.sep)[:3]
+        gens.setdefault(batch, set()).add(gen)
+    assert sorted(gens) == [f"batch_{i:06d}" for i in range(4)]
+    assert all(len(g) == 1 for g in gens.values())
 
 
 def test_optimize_compacts_files(spark, tmp_path):
@@ -163,9 +203,12 @@ def test_codec_bench_honors_declared_partitioning(spark, tmp_path):
     res = run_codec_bench(spark, wh, cfg, plan, codec_levels=[("zstd", 3)], verbose=False)
     assert res.sizes[0].row_count == 2000
     table = variant_table_name(cfg.table_base, "zstd", 3)
-    data_dir = os.path.join(str(tmp_path / "wh"), cfg.schema, table, "data")
-    part_dirs = [d for d in os.listdir(data_dir) if d.startswith("created_at_day=")]
-    assert len(part_dirs) > 100  # ~366 day partitions over 2024
+    files = wh.head_snapshot(cfg.schema, table)["files"]
+    days = {e["partitions"]["created_at_day"] for e in files}
+    assert len(days) > 100  # ~366 day partitions over 2024
+    for e in files:
+        d = e["partitions"]["created_at_day"]
+        assert f"{os.sep}created_at_day={d}{os.sep}" in e["path"]
 
 
 def test_zstd_level_knob_changes_size(spark, tmp_path):
@@ -331,7 +374,9 @@ def test_merge_upsert_partitioned_touches_only_changed_partitions(spark, tmp_pat
     assert after.filter(F.col("id") == 10_000_000).count() == 1
     assert after.filter(F.col("id") == deleted["id"]).count() == 0
 
-    # untouched partitions: identical file paths and mtimes
+    # untouched partitions: every file is still listed in the head
+    # manifest, with identical path and mtime
+    files_after = set(wh._data_files(cfg.schema, table))
     import datetime as _dt
 
     touched_days = {
@@ -344,6 +389,7 @@ def test_merge_upsert_partitioned_touches_only_changed_partitions(spark, tmp_pat
             None,
         )
         if day not in touched_days:
+            assert p in files_after, p
             assert os.path.exists(p) and os.path.getmtime(p) == mtime, p
 
     # ambiguous MERGE refused
@@ -450,9 +496,10 @@ def test_merge_upsert_moves_row_across_partitions(spark, tmp_path):
 
 
 def test_snapshot_log_time_travel_and_expiry(spark, tmp_path):
-    """Opt-in snapshot log: append-only history time-travels exactly; a
-    compaction expires older snapshots detectably; metrology reports real
-    manifest bytes once snapshots exist."""
+    """Every append commits a snapshot: append-only history time-travels
+    exactly; time travel survives compaction until expiry, after which the
+    expired snapshots fail detectably; metrology reports real manifest
+    bytes."""
     cfg = narrow_example_config()
     cfg.partitioning = []
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
@@ -461,9 +508,9 @@ def test_snapshot_log_time_travel_and_expiry(spark, tmp_path):
     from hands_on_iceberg_compression_spark.functions.generators import generate_df
 
     wh.append(cfg.schema, table, generate_df(spark, cfg, 1, 300, seed=29, num_partitions=1), batch_id="b1")
-    m1 = wh.commit_snapshot(cfg.schema, table, "append")
+    m1 = wh.head_snapshot(cfg.schema, table)
     wh.append(cfg.schema, table, generate_df(spark, cfg, 301, 200, seed=29, num_partitions=1), batch_id="b2")
-    m2 = wh.commit_snapshot(cfg.schema, table, "append")
+    m2 = wh.head_snapshot(cfg.schema, table)
 
     assert m1["version"] == 1 and m2["version"] == 2 and m2["parent"] == 1
     assert m1["total_rows"] == 300 and m2["total_rows"] == 500
@@ -475,18 +522,21 @@ def test_snapshot_log_time_travel_and_expiry(spark, tmp_path):
     size = measure_sizes(wh, cfg.schema, table, "zstd", 3)
     assert size.manifest_bytes == wh.snapshot_manifest_bytes(cfg.schema, table) > 0
 
-    # compaction rewrites files -> v1/v2 expire detectably; a fresh commit
-    # is readable again
+    # compaction commits v3; the superseded files stay on disk, so v1
+    # still time-travels until expiry
     wh.optimize(cfg.schema, table)
-    m3 = wh.commit_snapshot(cfg.schema, table, "optimize")
-    with pytest.raises(FileNotFoundError, match="expired"):
-        wh.read_snapshot(cfg.schema, table, 1)
+    m3 = wh.head_snapshot(cfg.schema, table)
+    assert m3["version"] == 3 and m3["parent"] == 2
+    assert wh.read_snapshot(cfg.schema, table, 1).count() == 300
     assert wh.read_snapshot(cfg.schema, table, 3).count() == 500
 
-    # expiry drops manifests only, never data
+    # expiry drops the old manifests (and GCs the files only they
+    # referenced): v1 then fails detectably, the live table is whole
     removed = wh.expire_snapshots(cfg.schema, table, keep_last=1)
     assert removed == 2
     assert [m["version"] for m in wh.snapshots(cfg.schema, table)] == [3]
+    with pytest.raises(KeyError, match="no snapshot v1"):
+        wh.read_snapshot(cfg.schema, table, 1)
     assert wh.read(cfg.schema, table).count() == 500
 
 
@@ -801,35 +851,6 @@ def test_log_mode_optimize_honors_sort_order(spark, tmp_path):
         assert hi1 <= lo2, f"overlapping sort ranges after log-mode optimize: {ranges}"
 
 
-def test_merge_old_staging_heals(spark, tmp_path):
-    """ADVICE r3 low: partitioned merge stages displaced partition dirs in
-    _merge_old/ (outside data/, so hive discovery never parses them), and a
-    stranded dir (crash between the two renames) is restored on next access."""
-    cfg = narrow_example_config()  # days(created_at)
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    table = "healmerge"
-    wh.create_table(cfg.schema, table, "zstd", 1, partitioning=cfg.partitioning)
-    from hands_on_iceberg_compression_spark.functions.generators import generate_df
-
-    wh.append(cfg.schema, table, generate_df(spark, cfg, 1, 500, seed=59, num_partitions=1))
-    n = wh.read(cfg.schema, table).count()
-    data_dir = wh._live_data_dir(cfg.schema, table)
-    part_dirs = [
-        d for d in os.listdir(data_dir)
-        if "=" in d and os.path.isdir(os.path.join(data_dir, d))
-    ]
-    assert part_dirs
-    # simulate the crash window: one partition renamed out, merge died
-    victim = part_dirs[0]
-    stranded = os.path.join(str(tmp_path / "wh"), cfg.schema, table, "_merge_old", victim)
-    os.makedirs(os.path.dirname(stranded), exist_ok=True)
-    os.rename(os.path.join(data_dir, victim), stranded)
-    # next access heals: the partition is back, row count intact
-    assert wh.read(cfg.schema, table).count() == n
-    assert os.path.isdir(os.path.join(data_dir, victim))
-    assert not os.path.isdir(os.path.dirname(stranded))
-
-
 def test_remove_orphan_files_age_gated(spark, tmp_path):
     """Iceberg remove_orphan_files twin: unreferenced data files older than
     the grace window are swept; YOUNG unreferenced files (a concurrent
@@ -856,11 +877,6 @@ def test_remove_orphan_files_age_gated(spark, tmp_path):
 
         _sh.copyfile(src, p)
     os.utime(old_orphan, (1, 1))  # ancient mtime
-
-    with pytest.raises(ValueError):
-        # dir-mode tables have no orphan concept
-        wh.create_table(cfg.schema, "plain", "zstd", 1)
-        wh.remove_orphan_files(cfg.schema, "plain")
 
     removed = wh.remove_orphan_files(cfg.schema, table, older_than_s=3600)
     assert removed == 1
@@ -893,3 +909,39 @@ def test_replace_commit_conflict_detected(spark, tmp_path):
     # nothing was committed; the table is unchanged
     assert wh.snapshots(cfg.schema, table)[-1]["version"] == 2
     assert wh.read(cfg.schema, table).count() == 200
+
+
+def test_one_table_format(spark, tmp_path):
+    """Every table keeps a snapshot log: a table created with no
+    properties commits version 1 on its first append and time-travels;
+    any other ``snapshots`` value names the removed directory format and
+    is refused; parquet files without a snapshot log are not a table."""
+    import shutil
+
+    cfg = narrow_example_config()
+    cfg.partitioning = []
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    from hands_on_iceberg_compression_spark.functions.generators import generate_df
+
+    wh.create_table(cfg.schema, "plain", "zstd", 1)
+    wh.append(cfg.schema, "plain", generate_df(spark, cfg, 1, 50, seed=71, num_partitions=1))
+    assert wh.head_snapshot(cfg.schema, "plain")["version"] == 1
+    assert wh.read_snapshot(cfg.schema, "plain", 1).count() == 50
+
+    with pytest.raises(ValueError, match="directory tables were removed"):
+        wh.create_table(cfg.schema, "dirmode", "zstd", 1, properties={"snapshots": "false"})
+
+    # a data dir with parquet files but no snapshot log (the removed
+    # directory format's on-disk shape) fails loudly, never reads empty
+    wh.create_table(cfg.schema, "nolog", "zstd", 1)
+    src = wh._data_files(cfg.schema, "plain")[0]
+    dst = os.path.join(wh._live_data_dir(cfg.schema, "nolog"), "batch_x", os.path.basename(src))
+    os.makedirs(os.path.dirname(dst))
+    shutil.copyfile(src, dst)
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        wh.read(cfg.schema, "nolog")
+    # with no manifest nothing proves a file unreferenced: the orphan
+    # sweep refuses instead of deleting the old format's data
+    with pytest.raises(ValueError, match="no committed snapshot"):
+        wh.remove_orphan_files(cfg.schema, "nolog", older_than_s=0)
+    assert os.path.isfile(dst)

@@ -158,7 +158,7 @@ def test_ngram_jaccard_window_runs_once(spark):
     """r20 shape: the doc-frequency Window subtree is materialized ONCE
     (localCheckpoint) before the shingle self-join — the r19 executed plan
     showed the self-join's broadcast build side REBUILDING the whole
-    explode+window pipeline (plans/r19 dump ops 12-17).  Pin the fix from
+    explode+window pipeline (executed-plan ops 12-17).  Pin the fix from
     the returned plan: NO Window node survives in the query's own plan (it
     ran exactly once, upstream in the eager checkpoint), and both self-join
     sides read the checkpointed rows (two ExistingRDD scans)."""

@@ -283,10 +283,6 @@ def test_evolution_guards(spark, tmp_path):
         wh.rename_column("lab", "g", "nope", "x")
     with pytest.raises(ValueError, match="invalid column type"):
         wh.add_column("lab", "g", "bad", "not_a_type!!")
-    # dir-mode tables have no metadata log to version schemas in
-    wh.create_table("lab", "plain", "zstd", 1)
-    with pytest.raises(ValueError, match="log-mode"):
-        wh.add_column("lab", "plain", "x", "int")
     # no commit yet -> nothing to evolve
     wh.create_table("lab", "fresh", "zstd", 1, properties={"snapshots": "true"})
     with pytest.raises(ValueError, match="no recorded schema"):

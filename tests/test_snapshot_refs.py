@@ -137,7 +137,3 @@ def test_partitions_report(spark, tmp_path):
     )
     flat = wh.partitions_report("lab", "flat")
     assert len(flat) == 1 and flat[0]["partition"] == {} and flat[0]["rows"] == 2
-    # dir mode has no manifest to serve from
-    wh.create_table("lab", "plain", "zstd", 1)
-    with pytest.raises(ValueError, match="log-mode"):
-        wh.partitions_report("lab", "plain")

@@ -200,9 +200,6 @@ def test_update_casts_to_recorded_type_and_guards(spark, tmp_path):
     assert wh.read("lab", "uc").collect()[0].v == 12  # 12.5 cast-truncates
     with pytest.raises(ValueError, match="no column"):
         wh.update_where("lab", "uc", "id = 1", {"ghost": "1"})
-    wh.create_table("lab", "plain", "zstd", 1)
-    with pytest.raises(ValueError, match="log-mode"):
-        wh.update_where("lab", "plain", "1=1", {"v": "1"})
 
 
 # --- DML x schema evolution (VERDICT r7 #3) -------------------------------
