@@ -189,7 +189,7 @@ def _cmd_ndv_report(args: argparse.Namespace) -> int:
     if out["files_covered"] < out["files_total"]:
         print(
             "note: uncovered files have no bloom filter for this column "
-            "(legacy files or bloom_columns set later) — optimize() "
+            "(written before bloom_columns was set) — optimize() "
             "rewrites them with filters"
         )
     return 0

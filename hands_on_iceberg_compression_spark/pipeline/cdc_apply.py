@@ -31,6 +31,7 @@ from hands_on_iceberg_compression_spark.operators.dedup import keep_latest
 from hands_on_iceberg_compression_spark.pipeline.incremental_mv import (
     _ckpt_state,
     _evolve_mv_schema,
+    _keys_changelog,
     _maybe_auto_fold,
     _src_types,
     _validate_policy,
@@ -63,11 +64,11 @@ def pending_rows_estimate(
         except KeyError:
             prev = None
             continue
-        t = h.get("total_rows")
+        t = h["total_rows"]
         if v > fv and h.get("operation") not in wh._CHANGELOG_SKIP_OPS:
             if "added_rows" in h:
                 est += h["added_rows"]
-            elif prev is not None and t is not None and t > prev:
+            elif prev is not None and t > prev:
                 est += t - prev
         prev = t
     return est
@@ -124,9 +125,9 @@ def merge_into_batched(
     key-pruned read; keys absent from the source become tombstones) —
     the same delta-scoped-refresh shape as the keep-latest MV, applied
     through conditional MERGE.  Refreshing an over-approximated key is
-    a no-op under the freshness guard, so the superset is free; a
-    legacy pre-schema source falls back to the row-exact net changelog
-    automatically (the ``keys_only=False`` path, kept for A/B).
+    a no-op under the freshness guard, so the superset is free
+    (``keys_only=False`` pulls the row-exact net changelog, kept for
+    A/B).
 
     Bootstrap (no checkpoint): initializes at the current head and
     applies nothing — the standard consume-from-now contract; seed the
@@ -317,31 +318,10 @@ def merge_into_batched(
         )
         out["tombstones"] = res.get("matched_deleted", 0)
 
-    def keys_changelog(s, t, fv, tv, net=True, branch="main"):
-        df = wh.touched_keys(s, t, fv, tv, key_cols, branch=branch)
-        if df is None:
-            # legacy pre-schema source: reduce the row-exact changelog
-            # to the keys-only shape reduce_to_batch re-derives from the
-            # source.  net=False is mandatory — the superset_changelog
-            # contract promises non-empty whenever the window provably
-            # added rows, and a NET window can cancel an added key to
-            # nothing, recording a spurious empty fire (ADVICE r15)
-            df = (
-                wh.read_changes(s, t, fv, tv, net=False, branch=branch)
-                .select(*key_cols)
-                .distinct()
-            )
-        try:
-            # one execution shared by the emptiness probe and the fire
-            df = df.localCheckpoint(eager=True)
-        except Exception:
-            pass
-        return df
-
     res = wh.consume_changes(
         sschema, stable, checkpoint_file, process, net=True,
         branch=src_branch,
-        changelog_fn=keys_changelog if keys_only else None,
+        changelog_fn=_keys_changelog(wh, key_cols) if keys_only else None,
         superset_changelog=keys_only,
     )
     if not out["fired"]:

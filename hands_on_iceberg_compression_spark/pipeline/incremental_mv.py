@@ -208,19 +208,15 @@ def _evolve_mv_schema(
     gracefully without DDL — refresh batches omit them and merge
     conformance NULL-fills, so they fade to NULL per refreshed key;
     type changes are NOT propagated (widening the MV is a deliberate
-    operator DDL).  Legacy MVs without a recorded schema are
-    skipped (their reads project the union anyway)."""
+    operator DDL).  An MV with no commit yet has nothing recorded to
+    evolve and is skipped."""
     mschema, mtable = mv
-    try:
-        mv_types = {
-            f["name"]: f["type"]
-            for f in wh.table_schema(mschema, mtable, branch=mv_branch)
-        }
-    except (ValueError, KeyError):
-        # legacy pre-schema MV: nothing recorded to evolve —
-        # only these specific errors skip; transient IO must PROPAGATE,
-        # or the silent-drop this helper exists to prevent comes back
+    if wh.current_version(mschema, mtable, mv_branch) is None:
         return
+    mv_types = {
+        f["name"]: f["type"]
+        for f in wh.table_schema(mschema, mtable, branch=mv_branch)
+    }
     # TYPE-DIVERGED shared columns refuse with full context (VERDICT
     # r17 #6 — the raw conformance error surfaced from deep inside the
     # merge without naming the sides).  A source type that legally
@@ -268,17 +264,36 @@ def _evolve_mv_schema(
 
 
 def _src_types(wh, schema: str, table: str, branch: str) -> dict:
-    """name -> recorded type of a source's CURRENT schema (empty for
-    legacy pre-schema tables — evolution needs a recorded schema; a new
-    column with no recorded type then refuses in _evolve_mv_schema
-    rather than silently dropping)."""
-    try:
-        return {
-            f["name"]: f["type"]
-            for f in wh.table_schema(schema, table, branch=branch)
-        }
-    except (ValueError, KeyError):
+    """name -> recorded type of a source's CURRENT schema (empty before
+    its first commit — a new column with no recorded type then refuses
+    in _evolve_mv_schema rather than silently dropping)."""
+    if wh.current_version(schema, table, branch) is None:
         return {}
+    return {
+        f["name"]: f["type"]
+        for f in wh.table_schema(schema, table, branch=branch)
+    }
+
+
+def _keys_changelog(wh, cols: list[str], rename=None):
+    """``consume_changes`` changelog_fn pulling the KEYS-ONLY changelog
+    (``warehouse.touched_keys``, a superset) of ``cols``; ``rename``
+    maps a source's physical key names to the consumer's.  The frame is
+    checkpointed here so the emptiness probe and every process action
+    share one execution of the window read (r15: the probe used to
+    re-drive the whole touched-keys plan)."""
+
+    def fn(s, t, fv, tv, net=True, branch="main"):
+        df = wh.touched_keys(s, t, fv, tv, cols, branch=branch)
+        if rename is not None:
+            df = rename(df)
+        try:
+            df = df.localCheckpoint(eager=True)
+        except Exception:
+            pass
+        return df
+
+    return fn
 
 
 def maintain_keep_latest_mv(
@@ -313,8 +328,7 @@ def maintain_keep_latest_mv(
     no per-delete-commit row diffs) instead of the row-exact changelog:
     this maintainer only ever uses the window's DISTINCT keys, and
     refreshing an over-approximated key is a no-op, so the cheap
-    substrate is exactly sufficient (legacy pre-schema sources fall back
-    to the row-exact pull automatically).  ``src_branch`` (r16) pulls
+    substrate is exactly sufficient.  ``src_branch`` (r16) pulls
     the changelog from a SOURCE BRANCH (the staging workflow) — the
     checkpoint records the ref and refuses cross-ref pulls; the MV
     itself stays on main.  ``evolve_schema`` (r17) propagates source
@@ -469,29 +483,6 @@ def maintain_keep_latest_mv(
             mschema, mtable, batch, key_cols, delete_col=_DEL, mode=mode
         )
 
-    def keys_changelog(s, t, fv, tv, net=net, branch="main"):
-        df = wh.touched_keys(s, t, fv, tv, key_cols, branch=branch)
-        if df is None:
-            # legacy pre-schema source: reduce the row-exact changelog
-            # to the SAME keys-only shape.  net=False is mandatory here
-            # — the superset_changelog contract promises a non-empty
-            # frame whenever the window provably added rows, and a NET
-            # window can cancel an added-then-deleted key to nothing
-            # (ADVICE r15); refreshing the extra keys is a no-op.
-            df = (
-                wh.read_changes(s, t, fv, tv, net=False, branch=branch)
-                .select(*key_cols)
-                .distinct()
-            )
-        try:
-            # checkpoint HERE so the emptiness probe and every process
-            # action share one execution of the window read (r15: the
-            # probe used to re-drive the whole touched-keys plan)
-            df = df.localCheckpoint(eager=True)
-        except Exception:
-            pass
-        return df
-
     # Always-incremental pull — on a bootstrap tick the window is
     # (head_v, current head]: normally empty, and any commit that raced
     # in is refreshed here rather than silently skipped (the refresh is
@@ -500,7 +491,7 @@ def maintain_keep_latest_mv(
     res = wh.consume_changes(
         sschema, stable, checkpoint_file, process, net=net,
         branch=src_branch,
-        changelog_fn=keys_changelog if keys_only else None,
+        changelog_fn=_keys_changelog(wh, key_cols) if keys_only else None,
         superset_changelog=keys_only,
     )
     fold = _maybe_auto_fold(wh, mschema, mtable, maintenance_policy)
@@ -728,26 +719,10 @@ def maintain_topn_mv(
             mschema, mtable, batch, mv_key, delete_col=_DEL, mode=mode
         )
 
-    def keys_changelog(s, t, fv, tv, net=True, branch="main"):
-        df = wh.touched_keys(s, t, fv, tv, group_cols, branch=branch)
-        if df is None:
-            # legacy pre-schema source: keys-only shape, net=False so
-            # the superset_changelog contract holds
-            df = (
-                wh.read_changes(s, t, fv, tv, net=False, branch=branch)
-                .select(*group_cols)
-                .distinct()
-            )
-        try:
-            df = df.localCheckpoint(eager=True)
-        except Exception:
-            pass
-        return df
-
     res = wh.consume_changes(
         sschema, stable, checkpoint_file, process, net=True,
         branch=src_branch,
-        changelog_fn=keys_changelog if keys_only else None,
+        changelog_fn=_keys_changelog(wh, group_cols) if keys_only else None,
         superset_changelog=keys_only,
     )
     fold = _maybe_auto_fold(wh, mschema, mtable, maintenance_policy)
@@ -1079,44 +1054,17 @@ def maintain_join_mv(
         if out["keys_refreshed"] != -1:
             out["keys_refreshed"] += n
 
-    def keys_changelog_for(s, t, cols, is_right=False):
-        def fn(_s, _t, fv, tv, net=True, branch="main"):
-            df = wh.touched_keys(s, t, fv, tv, cols, branch=branch)
-            if df is None:
-                # legacy pre-schema source: keys-only shape, net=False
-                # so the superset_changelog contract holds (a NET window
-                # can cancel an added key to nothing — ADVICE r15)
-                df = (
-                    wh.read_changes(s, t, fv, tv, net=False, branch=branch)
-                    .select(*cols)
-                    .distinct()
-                )
-            if is_right:
-                df = _r(df)  # right physical names -> MV key names
-            try:
-                df = df.localCheckpoint(eager=True)
-            except Exception:
-                pass
-            return df
-
-        return fn
-
     res_l = wh.consume_changes(
         lschema, ltable, checkpoint_left, process, net=True,
         branch=left_branch,
-        changelog_fn=(
-            keys_changelog_for(lschema, ltable, key_cols)
-            if keys_only else None
-        ),
+        changelog_fn=_keys_changelog(wh, key_cols) if keys_only else None,
         superset_changelog=keys_only,
     )
     res_r = wh.consume_changes(
         rschema, rtable, checkpoint_right, process, net=True,
         branch=right_branch,
-        changelog_fn=(
-            keys_changelog_for(rschema, rtable, rkeys, is_right=True)
-            if keys_only else None
-        ),
+        # right physical key names -> MV key names
+        changelog_fn=_keys_changelog(wh, rkeys, _r) if keys_only else None,
         superset_changelog=keys_only,
     )
     fold = _maybe_auto_fold(wh, mschema, mtable, maintenance_policy)

@@ -181,15 +181,12 @@ def measure_log_table(
     dels = head.get("deletes", [])
     # visible rows, exact, when the manifest can prove it (count_rows'
     # fast path: pos-delete target_counts arithmetic; with no pending
-    # deletes it is the head totals, legacy no-total_rows heads
-    # included); pending deletes it cannot price (eq keys) fall back to
-    # the DATA row total — still zero data IO, the "pend dels" column
-    # flags the pendings either way
+    # deletes it is the head totals); pending deletes it cannot price
+    # (eq keys) fall back to the DATA row total — still zero data IO,
+    # the "pend dels" column flags the pendings either way
     visible = warehouse.count_rows(schema, table, fallback=False)
     if visible is None:
-        visible = head.get("total_rows")
-        if visible is None:  # legacy head: sum the materialized entries
-            visible = sum(e["rows"] for e in head["files"])
+        visible = head["total_rows"]
     return LogStatsRow(
         table=table,
         snapshots=len(versions),

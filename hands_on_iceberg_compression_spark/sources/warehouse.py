@@ -599,30 +599,17 @@ class ParquetWarehouse:
                 else f"no branch {branch!r} on {schema}.{table}"
             )
         if not head["files"]:
-            if "schemas" in head:
-                # fully-emptied table (delete_where of everything):
-                # schema-stable empty frame off the recorded schema
-                return self._empty_frame(
-                    head["schemas"][str(head["schema_id"])]
-                )
-            raise ValueError(
-                f"table {schema}.{table} has no live files and no "
-                "recorded schema"
-            )
+            # fully-emptied table (delete_where of everything):
+            # schema-stable empty frame off the recorded schema
+            return self._empty_frame(head["schemas"][str(head["schema_id"])])
         return self._read_entries(schema, table, meta, head, head["files"])
 
     def is_empty(self, schema: str, table: str, branch: str = "main") -> bool:
         """True when the ref's head holds no rows — a MANIFEST question
         (the shared data dir also holds other refs' generations), answered
-        off the head's totals.  Legacy inline-files heads record no
-        total_rows — fall back to the file list (entries with 0 rows are
-        never written)."""
+        off the head's totals."""
         head = self._head_light(schema, table, branch)
-        if head is None:
-            return True
-        if "total_rows" in head:
-            return head["total_rows"] == 0
-        return not head.get("files") and not head.get("segments")
+        return head is None or head["total_rows"] == 0
 
     def count_rows(
         self, schema: str, table: str, branch: str = "main",
@@ -646,8 +633,7 @@ class ParquetWarehouse:
           whose rv_seq covers an earlier entry's seq cannot re-tuple its
           rows (sequential deletes always chain; RACING overlapping
           deletes may tuple the same row twice, reads de-duplicate but
-          subtraction would double-count, so a broken chain falls back),
-        - a legacy pos entry predating ``target_counts``.
+          subtraction would double-count, so a broken chain falls back).
 
         ``fallback=False`` returns None instead of reading when the
         arithmetic cannot be proven — the metadata-only contract
@@ -669,31 +655,20 @@ class ParquetWarehouse:
             )
         dels = self._head_deletes(schema, table, head)
         if not dels:
-            if head.get("total_rows") is not None:
-                return head["total_rows"]
-            if "segments" in head:  # legacy no-total_rows segmented head
-                return sum(r["rows"] for r in head["segments"])
-            return sum(e["rows"] for e in head.get("files") or [])
+            return head["total_rows"]
         files = self._materialize(schema, table, head)["files"]
         live = {e["path"] for e in files}
-        min_seq = min((e.get("seq", 0) for e in files), default=0)
+        min_seq = min((e["seq"] for e in files), default=0)
         total = sum(e["rows"] for e in files)
         by_file: dict[str, list[dict]] = {}
         for d in dels:
-            if d.get("kind", "pos") == "eq":
-                t = d.get("targets")
-                reaches = (
-                    min_seq < d.get("seq", 0)
-                    if t is None  # seq-scoped: applies below its commit
-                    else bool(set(t) & live)
-                )
-                if reaches:
+            if d["kind"] == "eq":
+                # seq-scoped: applies to files below its commit
+                if min_seq < d["seq"]:
                     return _fb()
                 continue  # dead eq delete: every reachable file dropped
-            tc = d.get("target_counts")
-            if tc is None:  # legacy entry: counts unknown
-                return _fb()
-            for t in d.get("targets") or []:
+            tc = d["target_counts"]
+            for t in d["targets"]:
                 if t not in live:
                     continue  # tuples of dropped files can never match
                 if t not in tc:
@@ -707,10 +682,10 @@ class ParquetWarehouse:
                 # entry — its victim scan then saw that delete applied
                 # and cannot re-tuple the same rows.  Same-seq entries
                 # are one commit's disjoint part files.
-                ents.sort(key=lambda d: d.get("seq", 0))
+                ents.sort(key=lambda d: d["seq"])
                 for prev, nxt in zip(ents, ents[1:]):
-                    if nxt.get("seq", 0) != prev.get("seq", 0) and (
-                        nxt.get("rv_seq", -1) < prev.get("seq", 0)
+                    if nxt["seq"] != prev["seq"] and (
+                        nxt.get("rv_seq", -1) < prev["seq"]
                     ):
                         return _fb()
             sub += sum(d["target_counts"][t] for d in ents)
@@ -945,7 +920,7 @@ class ParquetWarehouse:
         self,
         meta: TableMeta,
         files: list[str],
-        fields: list[dict] | None = None,
+        fields: list[dict],
         with_pos: bool = False,
         partitioning: list[str] | None = None,
     ) -> DataFrame:
@@ -963,9 +938,7 @@ class ParquetWarehouse:
         r6) and the footer schema-merge sampling is skipped (a planning
         win on wide tables); the collapsed shape casts its path-parsed
         partition values to the same recorded types, and both shapes
-        present the recorded column order.  Without ``fields`` (legacy
-        pre-schema heads) behavior is unchanged: hive inference per
-        branch, all-values sampling collapsed.
+        present the recorded column order.
 
         Bounded plan width: past ``MAX_BASEPATH_BRANCHES`` generation roots
         the union is collapsed to ONE scan of the explicit file list (Spark
@@ -978,18 +951,17 @@ class ParquetWarehouse:
         before Spark ever sees them) or compact; partition VALUES, names,
         order, and types are identical in both shapes (asserted by
         test_manifest_bounds)."""
+        from pyspark.sql.types import StructType
+
+        def read_schema():
+            return StructType.fromDDL(
+                ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
+            )
+
         if partitioning is None:
             partitioning = meta.partitioning
         if not partitioning:
-            if fields is not None:
-                from pyspark.sql.types import StructType
-
-                st = StructType.fromDDL(
-                    ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
-                )
-                df = self.spark.read.schema(st).parquet(*files)
-            else:
-                df = self.spark.read.parquet(*files)
+            df = self.spark.read.schema(read_schema()).parquet(*files)
             return self._with_pos_cols(df) if with_pos else df
         from functools import reduce
 
@@ -997,29 +969,19 @@ class ParquetWarehouse:
         for p in files:
             groups.setdefault(self._generation_root(p), []).append(p)
         if len(groups) <= self.MAX_BASEPATH_BRANCHES:
-            if fields is not None:
-                from pyspark.sql.types import StructType
-
-                st = StructType.fromDDL(
-                    ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
-                )
-                branches = [
-                    self.spark.read.schema(st)
-                    .option("basePath", root)
-                    .parquet(*paths)
-                    for root, paths in sorted(groups.items())
-                ]
-            else:
-                branches = [
-                    self.spark.read.option("basePath", root).parquet(*paths)
-                    for root, paths in sorted(groups.items())
-                ]
+            st = read_schema()
+            branches = [
+                self.spark.read.schema(st)
+                .option("basePath", root)
+                .parquet(*paths)
+                for root, paths in sorted(groups.items())
+            ]
             if with_pos:
                 branches = [self._with_pos_cols(b) for b in branches]
             return reduce(lambda a, b: a.unionByName(b), branches)
         import re as _re
 
-        rec_types = {f["name"]: f["type"] for f in (fields or [])}
+        rec_types = {f["name"]: f["type"] for f in fields}
         static_types = self._partition_static_types(partitioning)
         part_names = list(static_types)
         # identity columns without a recorded type have no statically-
@@ -1061,15 +1023,13 @@ class ParquetWarehouse:
                 or self._infer_identity_type(sorted(ident_vals[name]))
             )
             df = df.withColumn(name, raw.cast(dt))
-        if fields is not None:
-            # both shapes present the RECORDED column order (the collapsed
-            # scan appends partition columns; the branch schema inlines
-            # them at their declared position)
-            cols = [f["name"] for f in fields]
-            if with_pos:
-                cols += [self._POS_FILE, self._POS_IDX]
-            df = df.select(*cols)
-        return df
+        # both shapes present the RECORDED column order (the collapsed
+        # scan appends partition columns; the branch schema inlines them
+        # at their declared position)
+        cols = [f["name"] for f in fields]
+        if with_pos:
+            cols += [self._POS_FILE, self._POS_IDX]
+        return df.select(*cols)
 
     def _data_files(self, schema: str, table: str) -> list[str]:
         """Absolute paths of the head snapshot's live data files."""
@@ -1340,17 +1300,14 @@ class ParquetWarehouse:
             return True
 
         victims: list[dict] = []
-        if "files" in head:  # legacy inline head
-            victims = [e for e in head["files"] if is_victim(e)]
-        else:
-            for ref in head["segments"]:
-                if self._segment_skippable(ref, norm, static_types):
-                    continue  # summary disjoint — contains no victims
-                victims.extend(
-                    e
-                    for e in self._load_segment(schema, table, ref["path"])
-                    if is_victim(e)
-                )
+        for ref in head["segments"]:
+            if self._segment_skippable(ref, norm, static_types):
+                continue  # summary disjoint — contains no victims
+            victims.extend(
+                e
+                for e in self._load_segment(schema, table, ref["path"])
+                if is_victim(e)
+            )
         if not victims:
             return 0
         new = self._rewrite_entries_delta(
@@ -1410,7 +1367,7 @@ class ParquetWarehouse:
         )
         self.commit_snapshot(
             schema, table, "optimize", add_files=new, drop_files=victim_paths,
-            expected_schema_id=head.get("schema_id"),
+            expected_schema_id=head["schema_id"],
             expected_spec_id=head["spec_id"] if "specs" in head else 0,
             rewrite_read_version=version,
             retire_deletes=retire_deletes,
@@ -1493,23 +1450,16 @@ class ParquetWarehouse:
         self, schema: str, table: str, branch: str = "main"
     ) -> dict:
         """{"files", "bytes"} of the ref's LIVE data set — HEAD JSON
-        ONLY (segment refs carry count/bytes; legacy inline heads count
-        their list), the fragmentation twin of
+        ONLY (segment refs carry count/bytes), the fragmentation twin of
         ``pending_delete_stats``: zero Spark jobs, no segment parse, so
         a maintenance policy can poll it every tick for free."""
         head = self._head_light(schema, table, branch)
         if head is None:
             return {"files": 0, "bytes": 0}
-        if "segments" in head:
-            refs = head["segments"]
-            return {
-                "files": sum(r.get("count", 0) for r in refs),
-                "bytes": sum(r.get("bytes", 0) for r in refs),
-            }
-        files = head.get("files") or []
+        refs = head["segments"]
         return {
-            "files": len(files),
-            "bytes": sum(e["bytes"] for e in files),
+            "files": sum(r["count"] for r in refs),
+            "bytes": sum(r["bytes"] for r in refs),
         }
 
     def compact_small_files(
@@ -1740,7 +1690,7 @@ class ParquetWarehouse:
         table: str,
         keys_df: DataFrame,
         eq_cols: list[str],
-        eq_ids: list[int] | None,
+        eq_ids: list[int],
         key_ranges: dict,
     ) -> tuple[str, list[dict]]:
         """Write an Iceberg-v2-style EQUALITY DELETE file: a parquet of
@@ -1766,11 +1716,7 @@ class ParquetWarehouse:
         # — the tick-jobs probe showed the CDC steady state's per-tick
         # job count growing linearly with the delete stack
         type_of = {f.name: f.dataType.simpleString() for f in keys_df.schema.fields}
-        eq_types = (
-            [type_of[c] for c in eq_cols]
-            if all(c in type_of for c in eq_cols)
-            else None
-        )
+        eq_types = [type_of[c] for c in eq_cols]
         entries: list[dict] = []
         for base, _d, fns in os.walk(del_root):
             for fn in fns:
@@ -1787,13 +1733,11 @@ class ParquetWarehouse:
                     "rows": n,
                     "kind": "eq",
                     "eq_cols": list(eq_cols),
+                    "eq_types": eq_types,
                 }
-                if eq_types is not None:
-                    entry["eq_types"] = eq_types
                 if key_ranges:
                     entry["key_ranges"] = key_ranges
-                if eq_ids is not None:
-                    entry["eq_ids"] = list(eq_ids)
+                entry["eq_ids"] = list(eq_ids)
                 entries.append(entry)
         if not entries:
             shutil.rmtree(del_root, ignore_errors=True)
@@ -1825,8 +1769,7 @@ class ParquetWarehouse:
         TRUNCATES toward zero (no error on fraction), overflow and
         unparsable values RAISE (the DataFrame path's cast errors
         likewise under ANSI; pre-ANSI it cast to NULL, which the null
-        check rejected).  Unknown recorded types pass through untouched
-        (legacy tables record no types at all)."""
+        check rejected).  Unknown recorded types pass through untouched."""
         import datetime as _dt
         import math
 
@@ -1927,7 +1870,7 @@ class ParquetWarehouse:
         rows: list[tuple],
         cols: list[str],
         rec_types: dict[str, str],
-        eq_ids: list[int] | None,
+        eq_ids: list[int],
         key_ranges: dict,
     ) -> tuple[str, list[dict]]:
         """Driver-side equality-delete write for LOCAL key lists: the file
@@ -1984,8 +1927,7 @@ class ParquetWarehouse:
             entry["eq_types"] = eq_types
         if key_ranges:
             entry["key_ranges"] = key_ranges
-        if eq_ids is not None:
-            entry["eq_ids"] = list(eq_ids)
+        entry["eq_ids"] = list(eq_ids)
         return del_root, [entry]
 
     def delete_by_keys(
@@ -2084,21 +2026,13 @@ class ParquetWarehouse:
             kdf = None
 
         # --- resolve against the recorded schema (names -> field ids +
-        # types); legacy pre-schema tables record names only
-        eq_ids: list[int] | None = None
-        rec_types: dict[str, str] = {}
-        if head is not None and "schemas" in head:
-            cur = {
-                f["name"]: f
-                for f in head["schemas"][str(head["schema_id"])]
-            }
-            missing = [c for c in cols if c not in cur]
-            if missing:
-                raise ValueError(
-                    f"no column(s) {missing} in {schema}.{table}"
-                )
-            eq_ids = [cur[c]["id"] for c in cols]
-            rec_types = {c: cur[c]["type"] for c in cols}
+        # types)
+        cur = {f["name"]: f for f in head["schemas"][str(head["schema_id"])]}
+        missing = [c for c in cols if c not in cur]
+        if missing:
+            raise ValueError(f"no column(s) {missing} in {schema}.{table}")
+        eq_ids = [cur[c]["id"] for c in cols]
+        rec_types = {c: cur[c]["type"] for c in cols}
 
         # --- LOCAL keys: normalize through the recorded types (plain
         # Python mirror of the DataFrame path's Spark cast, VERDICT r9
@@ -2107,7 +2041,7 @@ class ParquetWarehouse:
         # [10.5] prune set that skips the file whose rows the read-side
         # cast (10) matches.  Unrepresentable values raise.  Re-dedup:
         # casting can collide previously-distinct raw keys (10, 10.5).
-        if local is not None and rec_types:
+        if local is not None:
             local = sorted(
                 {
                     tuple(
@@ -2129,11 +2063,9 @@ class ParquetWarehouse:
         # entirely — driver-side write below.
         env = None
         if kdf is not None:
-            if rec_types:
-                kdf = kdf.select(
-                    *[F.col(c).cast(rec_types[c]).alias(c) for c in cols]
-                )
-            kdf = kdf.distinct()
+            kdf = kdf.select(
+                *[F.col(c).cast(rec_types[c]).alias(c) for c in cols]
+            ).distinct()
             try:
                 kdf = kdf.localCheckpoint(eager=True)
             except Exception:
@@ -2201,7 +2133,7 @@ class ParquetWarehouse:
                 schema, table, "delete",
                 add_files=[],
                 add_deletes=del_entries,
-                expected_schema_id=(head or {}).get("schema_id"),
+                expected_schema_id=head["schema_id"],
                 branch=branch,
             )
         except BaseException:
@@ -2387,7 +2319,7 @@ class ParquetWarehouse:
                 # delete-APPLIED read at this head, so these tuples are
                 # provably disjoint from every delete entry with
                 # seq <= rv_seq — count_rows' exact-subtraction proof
-                rv = self._seq_base(schema, table, head)
+                rv = head["last_seq"]
                 for d in del_entries:
                     d["rv_seq"] = rv
                 rows_marked = sum(e["rows"] for e in del_entries)
@@ -2408,7 +2340,7 @@ class ParquetWarehouse:
                     add_files=[],
                     drop_files=drop_paths or None,
                     add_deletes=del_entries or None,
-                    expected_schema_id=head.get("schema_id"),
+                    expected_schema_id=head["schema_id"],
                     deletes_read_version=version,
                     branch=branch,
                 )
@@ -2470,7 +2402,7 @@ class ParquetWarehouse:
         manifest = self.commit_snapshot(
             schema, table, "delete", add_files=sorted(new),
             drop_files=victim_paths,
-            expected_schema_id=head.get("schema_id"),
+            expected_schema_id=head["schema_id"],
             expected_spec_id=head["spec_id"] if "specs" in head else 0,
             rewrite_read_version=version,
             branch=branch,
@@ -2539,12 +2471,10 @@ class ParquetWarehouse:
         if version is None:
             return {"files_rewritten": 0, "files_kept": 0, "rows_matched": 0}
         head = self._load_snapshot(schema, table, version, branch)
-        rec_types: dict[str, str] = {}
-        if "schemas" in head:
-            rec_types = {
-                f["name"]: f["type"]
-                for f in head["schemas"][str(head["schema_id"])]
-            }
+        rec_types = {
+            f["name"]: f["type"]
+            for f in head["schemas"][str(head["schema_id"])]
+        }
         # transforms of the CURRENT spec drive re-derivation and the
         # rewrite's hive layout; the assignment guard covers EVERY
         # recorded spec's derived columns (an old spec's derived column
@@ -2564,7 +2494,7 @@ class ParquetWarehouse:
                     f"cannot assign to derived partition column {c!r}; "
                     "update its source column and the transform re-derives"
                 )
-            if rec_types and c not in rec_types:
+            if c not in rec_types:
                 raise ValueError(f"no column {c!r} in {schema}.{table}")
         tdir = self._tdir(schema, table)
         entries_by_path = {e["path"]: e for e in head["files"]}
@@ -2594,15 +2524,6 @@ class ParquetWarehouse:
         df = self._read_entries(
             schema, table, meta, head, victims, with_pos=mor
         )
-        if not rec_types:
-            # legacy pre-schema table: the head records no schema, so the
-            # name check above couldn't run — validate against the read
-            # frame instead of silently no-op-rewriting (ADVICE r7)
-            unknown = sorted(set(assignments) - set(df.columns))
-            if unknown:
-                raise ValueError(
-                    f"no column(s) {unknown} in {schema}.{table}"
-                )
         if count_matched:
             rows_matched = df.filter(hit).count()
             no_match = rows_matched == 0
@@ -2641,9 +2562,7 @@ class ParquetWarehouse:
                 if name in pos_cols:
                     continue
                 if name in assignments:
-                    val = F.expr(assignments[name])
-                    if rec_types.get(name):
-                        val = val.cast(rec_types[name])
+                    val = F.expr(assignments[name]).cast(rec_types[name])
                     out_cols.append(val.alias(name))
                 else:
                     out_cols.append(F.col(name))
@@ -2680,7 +2599,7 @@ class ParquetWarehouse:
             del_root, del_entries = self._write_pos_deletes(
                 schema, table, tuples
             )
-            rv = self._seq_base(schema, table, head)  # see delete_where
+            rv = head["last_seq"]  # see delete_where
             for d in del_entries:
                 d["rv_seq"] = rv
             rows_marked = sum(e["rows"] for e in del_entries)
@@ -2710,7 +2629,7 @@ class ParquetWarehouse:
                     schema, table, "update",
                     add_files=sorted(new),
                     add_deletes=del_entries,
-                    expected_schema_id=head.get("schema_id"),
+                    expected_schema_id=head["schema_id"],
                     expected_spec_id=head["spec_id"] if "specs" in head else 0,
                     deletes_read_version=version,
                     # the updated IMAGES re-materialize rows read at
@@ -2740,9 +2659,7 @@ class ParquetWarehouse:
         out_cols = []
         for name in df.columns:
             if name in assignments:
-                val = F.expr(assignments[name])
-                if rec_types.get(name):
-                    val = val.cast(rec_types[name])
+                val = F.expr(assignments[name]).cast(rec_types[name])
                 out_cols.append(F.when(hit, val).otherwise(F.col(name)).alias(name))
             else:
                 out_cols.append(F.col(name))
@@ -2775,7 +2692,7 @@ class ParquetWarehouse:
         )
         manifest = self.commit_snapshot(
             schema, table, "update", add_files=new, drop_files=victim_paths,
-            expected_schema_id=head.get("schema_id"),
+            expected_schema_id=head["schema_id"],
             expected_spec_id=head["spec_id"] if "specs" in head else 0,
             rewrite_read_version=version,
             branch=branch,
@@ -2847,7 +2764,7 @@ class ParquetWarehouse:
         boundary file.  Dropping a constraint only ever KEEPS extra
         candidate files — never loses a matching row."""
         derived = ranges_from_condition(condition)
-        if derived is None or head is None or "schemas" not in head:
+        if derived is None or head is None:
             return None
         types = {
             f["name"]: f["type"]
@@ -2904,6 +2821,27 @@ class ParquetWarehouse:
             for f in df.schema.fields
         ]
 
+    @classmethod
+    def _footer_schema_fields(cls, tdir: str, path: str) -> list[dict]:
+        """Schema fields of one data file without a Spark job: its parquet
+        footer, then the hive partition columns its path encodes (Spark's
+        writer keeps those out of the file) — what a raw first commit
+        records as schema 0."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        fields = [
+            {"name": f.name, "type": f.dataType.simpleString()}
+            for f in from_arrow_schema(pq.read_schema(path)).fields
+        ]
+        names = {f["name"] for f in fields}
+        for col, v in cls._file_partitions(os.path.relpath(path, tdir)).items():
+            if col not in names:
+                fields.append(
+                    {"name": col, "type": cls._infer_identity_type([v])}
+                )
+        return fields
+
     def _conform_log_schema(
         self, schema: str, table: str, df: DataFrame, branch: str = "main",
         head: dict | None = ...,
@@ -2914,12 +2852,12 @@ class ParquetWarehouse:
         type evolution), columns the write omits are NULL-filled at their
         recorded type, and the projection pins the recorded column order
         so every file of one schema id is physically identical in shape.
-        A table without a recorded schema yet (first commit, or a legacy
-        pre-r07 head) adopts the write's schema as schema 0."""
+        A table without a commit yet adopts the write's schema as schema
+        0."""
         fields_now = self._schema_fields_of(df)
         if head is ...:
             head = self._head_light(schema, table, branch)
-        if head is None or "schemas" not in head:
+        if head is None:
             return df, fields_now
         cur = head["schemas"][str(head["schema_id"])]
         cur_types = {f["name"]: f["type"] for f in cur}
@@ -3013,70 +2951,63 @@ class ParquetWarehouse:
         columns through every shape — the merge-on-read substrate."""
         tdir = self._tdir(schema, table)
         extras = (self._POS_FILE, self._POS_IDX) if with_pos else ()
-        schemas = head.get("schemas")
+        schemas = head["schemas"]
         cur_pid = int(head["spec_id"]) if "specs" in head else 0
         cur_part = self._head_partitioning(meta, head)
-        if not schemas:
+        target_sid = head["schema_id"]
+        tgt = schemas[str(target_sid)]
+        keys = {
+            (int(e.get("sid", 0)), int(e.get("pid", 0))) for e in entries
+        }
+        if keys <= {(int(target_sid), cur_pid)}:
             df = self._read_file_list(
                 meta,
                 [os.path.join(tdir, e["path"]) for e in entries],
+                fields=tgt,
                 with_pos=with_pos,
+                partitioning=cur_part,
             )
         else:
-            target_sid = head["schema_id"]
-            tgt = schemas[str(target_sid)]
-            keys = {
-                (int(e.get("sid", 0)), int(e.get("pid", 0))) for e in entries
-            }
-            if keys <= {(int(target_sid), cur_pid)}:
-                df = self._read_file_list(
-                    meta,
-                    [os.path.join(tdir, e["path"]) for e in entries],
-                    fields=tgt,
-                    with_pos=with_pos,
-                    partitioning=cur_part,
-                )
-            else:
-                from functools import reduce
+            from functools import reduce
 
-                groups: dict[tuple[int, int], list[str]] = {}
-                for e in entries:
-                    groups.setdefault(
-                        (int(e.get("sid", 0)), int(e.get("pid", 0))), []
-                    ).append(os.path.join(tdir, e["path"]))
-                derived = {
-                    n: b
-                    for n, b in partition_transform_exprs(cur_part)
-                    if b is not None
-                }
-                tgt_by_name = {f["name"]: f for f in tgt}
-                frames = []
-                for sid, pid in sorted(groups):
-                    src = schemas[str(sid)]
-                    g = self._read_file_list(
-                        meta,
-                        groups[(sid, pid)],
-                        fields=src,
-                        with_pos=with_pos,
-                        partitioning=self._spec_transforms(meta, head, pid),
-                    )
-                    if sid == int(target_sid) and pid == cur_pid:
-                        # current-(schema, spec) group: no projection —
-                        # keeps parquet metadata-only count and the
-                        # narrowest possible plan for the files that
-                        # dominate a maintained table
-                        frames.append(g)
-                        continue
-                    g = self._project_to_schema(g, src, tgt, extras)
-                    # computed fill: a current-spec derived column whose
-                    # field id predates this group's schema
-                    src_ids = {f["id"] for f in src}
-                    for n, build in derived.items():
-                        f = tgt_by_name.get(n)
-                        if f is not None and f["id"] not in src_ids:
-                            g = g.withColumn(n, build().cast(f["type"]))
+            groups: dict[tuple[int, int], list[str]] = {}
+            for e in entries:
+                groups.setdefault(
+                    (int(e.get("sid", 0)), int(e.get("pid", 0))), []
+                ).append(os.path.join(tdir, e["path"]))
+            derived = {
+                n: b
+                for n, b in partition_transform_exprs(cur_part)
+                if b is not None
+            }
+            tgt_by_name = {f["name"]: f for f in tgt}
+            frames = []
+            for sid, pid in sorted(groups):
+                src = schemas[str(sid)]
+                g = self._read_file_list(
+                    meta,
+                    groups[(sid, pid)],
+                    fields=src,
+                    with_pos=with_pos,
+                    partitioning=self._spec_transforms(meta, head, pid),
+                )
+                if sid == int(target_sid) and pid == cur_pid:
+                    # current-(schema, spec) group: no projection —
+                    # keeps parquet metadata-only count and the
+                    # narrowest possible plan for the files that
+                    # dominate a maintained table
                     frames.append(g)
-                df = reduce(lambda a, b: a.unionByName(b), frames)
+                    continue
+                g = self._project_to_schema(g, src, tgt, extras)
+                # computed fill: a current-spec derived column whose
+                # field id predates this group's schema
+                src_ids = {f["id"] for f in src}
+                for n, build in derived.items():
+                    f = tgt_by_name.get(n)
+                    if f is not None and f["id"] not in src_ids:
+                        g = g.withColumn(n, build().cast(f["type"]))
+                frames.append(g)
+            df = reduce(lambda a, b: a.unionByName(b), frames)
         if with_pos:
             # manifest-relative path: what position-delete tuples key on
             # (portable across warehouse relocation, unlike the scan's
@@ -3117,8 +3048,9 @@ class ParquetWarehouse:
         (r15): a schema-inference read launches one footer-scan Spark
         job per pending delete entry per table read — the tick-jobs
         probe showed the CDC steady state's per-tick job count growing
-        linearly with the delete stack.  Entries written before r15 (no
-        ``eq_types``) keep the inference read."""
+        linearly with the delete stack.  Entries without ``eq_types`` (a
+        local write whose key type has no unambiguous parquet mapping,
+        e.g. timestamps) keep the inference read."""
         p = os.path.join(tdir, d["path"])
         ts = d.get("eq_types")
         if (
@@ -3157,10 +3089,7 @@ class ParquetWarehouse:
         ``__mor_rel``/``__mor_pos`` columns on the result (the delete
         writers' substrate); ``apply_deletes=False`` reads the physical
         rows (time travel passes the snapshot's own head, so old
-        snapshots see exactly their own delete set — not this flag).
-
-        Legacy r08 equality entries carry explicit ``targets`` instead of
-        seq + key_ranges and apply by membership, exactly as written."""
+        snapshots see exactly their own delete set — not this flag)."""
         all_dels = (
             self._head_deletes(schema, table, head) if apply_deletes else []
         )
@@ -3172,8 +3101,8 @@ class ParquetWarehouse:
             return self._assemble_entries(
                 schema, table, meta, head, entries, with_pos=with_pos
             )
-        pos_dels = [d for _i, d, _t in live_dels if d.get("kind", "pos") == "pos"]
-        eq_dels = [(i, d, t) for i, d, t in live_dels if d.get("kind") == "eq"]
+        pos_dels = [d for _i, d, _t in live_dels if d["kind"] == "pos"]
+        eq_dels = [(i, d, t) for i, d, t in live_dels if d["kind"] == "eq"]
         hot = [e for e in entries if e["path"] in hot_paths]
         cold = [e for e in entries if e["path"] not in hot_paths]
         hot_df = self._assemble_entries(
@@ -3257,16 +3186,16 @@ class ParquetWarehouse:
         live_dels: list[tuple[int, dict, set]] = []
         hot_paths: set[str] = set()
         for i, d in enumerate(all_dels):
-            if d.get("targets") is not None:
+            if d["kind"] == "pos":
                 t = set(d["targets"]) & entry_paths
             else:
                 # seq-scoped equality delete: strictly-older files,
                 # narrowed by the stored key summary vs manifest stats
-                dseq = d.get("seq", 0)
+                dseq = d["seq"]
                 t = {
                     p
                     for p, e in entry_by_path.items()
-                    if e.get("seq", 0) < dseq
+                    if e["seq"] < dseq
                 }
                 if t and d.get("key_ranges"):
                     t = self._narrow_eq_targets(
@@ -3279,41 +3208,38 @@ class ParquetWarehouse:
 
     def _head_deletes(self, schema: str, table: str, head: dict) -> list[dict]:
         """The head's pending merge-on-read delete entries, in COMMIT
-        order: legacy r08 heads carry them inline under ``deletes``; from
-        r09 on they live in immutable DELETE SEGMENT files referenced by
+        order.  They live in immutable DELETE SEGMENT files referenced by
         ``head["delete_segments"]`` (same ``_load_segment`` store and
         cache as data segments), so heads stay O(refs) however broad the
         pending deletes.  A MATERIALIZED head (``_materialize`` adds
-        ``files``) already resolved its delete segments into ``deletes``
-        — the inline list is then complete and the refs are not re-read.
-        Legacy inline entries always PRECEDE segment entries in commit
-        order: once segment storage exists, no new inline entry is ever
-        written."""
-        dels = list(head.get("deletes") or [])
-        if "files" not in head:
-            for ref in head.get("delete_segments") or []:
-                dels += self._load_segment(schema, table, ref["path"])
+        ``files``) already resolved them into ``deletes``; the refs are
+        then not re-read.  Every entry passes ``_check_delete_entries``."""
+        if "files" in head:
+            return list(head.get("deletes", []))
+        dels: list[dict] = []
+        for ref in head.get("delete_segments", []):
+            dels += self._load_segment(schema, table, ref["path"])
+        self._check_delete_entries(schema, table, head["version"], dels)
         return dels
 
     def pending_delete_stats(
         self, schema: str, table: str, branch: str = "main"
     ) -> dict:
         """{"entries", "rows"} of pending merge-on-read deletes at the
-        head — HEAD JSON ONLY (r18, VERDICT r17 #1): inline legacy
-        entries count directly and delete-segment refs carry
-        count/rows, so no segment file is parsed and no Spark job runs.
+        head — HEAD JSON ONLY (r18, VERDICT r17 #1): delete-segment refs
+        carry count/rows, so no segment file is parsed and no Spark job
+        runs.
         This is the zero-cost census the delete-stack maintenance
         policy polls every tick; log-report's "pend dels" column shows
         the same numbers."""
         head = self._head_light(schema, table, branch)
         if head is None:
             return {"entries": 0, "rows": 0}
-        ents = list(head.get("deletes") or [])
-        n, rows = len(ents), sum(d.get("rows", 0) for d in ents)
-        for r in head.get("delete_segments") or []:
-            n += r.get("count", 0)
-            rows += r.get("rows", 0)
-        return {"entries": n, "rows": rows}
+        refs = head.get("delete_segments", [])
+        return {
+            "entries": sum(r["count"] for r in refs),
+            "rows": sum(r["rows"] for r in refs),
+        }
 
     def apply_maintenance_policy(
         self,
@@ -3411,21 +3337,17 @@ class ParquetWarehouse:
         """Resolve an equality delete's write-time key column names to the
         head schema's CURRENT names through FIELD IDS, so deletes written
         before a rename keep applying."""
-        write_names = d["eq_cols"]
-        ids = d.get("eq_ids")
-        if ids and "schemas" in head:
-            cur_by_id = {
-                f["id"]: f for f in head["schemas"][str(head["schema_id"])]
-            }
-            missing = [fid for fid in ids if fid not in cur_by_id]
-            if missing:
-                raise RuntimeError(
-                    f"equality delete {d['path']} references dropped "
-                    f"field id(s) {missing} — drop_column should have "
-                    "refused while this delete was pending"
-                )
-            return [cur_by_id[fid]["name"] for fid in ids]
-        return list(write_names)
+        cur_by_id = {
+            f["id"]: f for f in head["schemas"][str(head["schema_id"])]
+        }
+        missing = [fid for fid in d["eq_ids"] if fid not in cur_by_id]
+        if missing:
+            raise RuntimeError(
+                f"equality delete {d['path']} references dropped "
+                f"field id(s) {missing} — drop_column should have "
+                "refused while this delete was pending"
+            )
+        return [cur_by_id[fid]["name"] for fid in d["eq_ids"]]
 
     def _narrow_eq_targets(
         self,
@@ -3473,14 +3395,13 @@ class ParquetWarehouse:
 
     def _eq_diff_candidates(
         self, schema: str, table: str, head: dict, new_dels: list[dict],
-        t_fields: list[dict] | None,
+        t_fields: list[dict],
     ):
         """SUPERSET row filter for a delete commit's changelog diff
         (r14): returns f(df) keeping exactly the rows whose keys match
         any of the commit's EQUALITY deletes, or None when no filter
-        applies (a pos-kind delete in the set, missing schema, or any
-        resolution failure — the unfiltered diff is always correct,
-        just larger).
+        applies (a pos-kind delete in the set, or any resolution failure
+        — the unfiltered diff is always correct, just larger).
 
         Correctness posture: the filter only needs to be a SUPERSET of
         the rows the deletes actually remove — both diff sides filter
@@ -3493,13 +3414,13 @@ class ParquetWarehouse:
         equality).  Multiset-exact across multiple deletes via a
         hit/remainder chain (a plain union would double-count rows
         matching two key sets)."""
-        if self.spark is None or not new_dels or t_fields is None:
+        if self.spark is None or not new_dels:
             return None
         types = {f["name"]: f["type"] for f in t_fields}
         groups: list[tuple[list[str], DataFrame]] = []
         try:
             for d in new_dels:
-                if d.get("kind") != "eq":
+                if d["kind"] != "eq":
                     return None
                 cols = self._eq_current_names(head, d)
                 if not all(c in types for c in cols):
@@ -3545,9 +3466,8 @@ class ParquetWarehouse:
         Iceberg's sequence-number rule — "an equality delete applies only
         to data files OLDER than it" — is enforced per file: entry ``i``'s
         applicable set (computed by the caller: files with lower ``seq``
-        for seq-scoped entries, explicit ``targets`` for legacy r08
-        entries; both minus bounds-narrowed files, to which applying it
-        is a no-op by construction) is a SUFFIX property over the
+        minus bounds-narrowed files, to which applying it is a no-op by
+        construction) is a SUFFIX property over the
         commit-ordered delete list — if any entry applies to ``f``, every
         later entry's keys either genuinely apply or cannot match ``f``'s
         rows.  So a file's first applicable index ``k(f)`` splits the
@@ -3561,24 +3481,19 @@ class ParquetWarehouse:
         Key columns resolve through FIELD IDS, so deletes written before
         a rename keep resolving; key values cast to the current (possibly
         widened) column type."""
-        cur_types: dict[str, str] = {}
-        if "schemas" in head:
-            cur_types = {
-                f["name"]: f["type"]
-                for f in head["schemas"][str(head["schema_id"])]
-            }
+        cur_types = {
+            f["name"]: f["type"]
+            for f in head["schemas"][str(head["schema_id"])]
+        }
         tdir = self._tdir(schema, table)
         if fast:
             _i, d, _t = eq_dels[0]
             cur_names = self._eq_current_names(head, d)
             keys = self._read_delete_parquet(tdir, d)
-            sel = []
-            for j, (wname, cname) in enumerate(zip(d["eq_cols"], cur_names)):
-                c = F.col(wname)
-                if cur_types.get(cname):
-                    c = c.cast(cur_types[cname])
-                sel.append(c.alias(f"__eqk_{j}"))
-            keys = keys.select(*sel)
+            keys = keys.select(*[
+                F.col(wname).cast(cur_types[cname]).alias(f"__eqk_{j}")
+                for j, (wname, cname) in enumerate(zip(d["eq_cols"], cur_names))
+            ])
             cond = F.lit(True)
             for j, cname in enumerate(cur_names):
                 cond = cond & (F.col(cname) == F.col(f"__eqk_{j}"))
@@ -3613,13 +3528,15 @@ class ParquetWarehouse:
         for i, d, _t in eq_dels:
             cur_names = self._eq_current_names(head, d)
             keys = self._read_delete_parquet(tdir, d)
-            sel = []
-            for j, (wname, cname) in enumerate(zip(d["eq_cols"], cur_names)):
-                c = F.col(wname)
-                if cur_types.get(cname):
-                    c = c.cast(cur_types[cname])
-                sel.append(c.alias(f"__eqk_{j}"))
-            keys = keys.select(*sel, F.lit(i).alias("__eq_idx"))
+            keys = keys.select(
+                *[
+                    F.col(wname).cast(cur_types[cname]).alias(f"__eqk_{j}")
+                    for j, (wname, cname) in enumerate(
+                        zip(d["eq_cols"], cur_names)
+                    )
+                ],
+                F.lit(i).alias("__eq_idx"),
+            )
             groups.setdefault(tuple(cur_names), []).append(keys)
         for cur_names, frames in groups.items():
             from functools import reduce
@@ -3648,10 +3565,10 @@ class ParquetWarehouse:
                 f"no branch {branch!r} on {schema}.{table} — "
                 "create_branch() first"
             )
-        if head is None or "schemas" not in head:
+        if head is None:
             raise ValueError(
-                f"{schema}.{table} has no recorded schema (no commit yet, "
-                "or a legacy pre-schema head — append once to record one)"
+                f"{schema}.{table} has no recorded schema (no commit yet — "
+                "append once to record one)"
             )
         return [dict(f) for f in head["schemas"][str(head["schema_id"])]]
 
@@ -3680,7 +3597,7 @@ class ParquetWarehouse:
                     f"no branch {branch!r} on {schema}.{table} — "
                     "create_branch() first"
                 )
-            if head is None or "schemas" not in head:
+            if head is None:
                 raise ValueError(
                     f"{schema}.{table} has no recorded schema to evolve — "
                     "schemas are recorded at the first commit; append first"
@@ -3708,15 +3625,16 @@ class ParquetWarehouse:
             new_sid = max(int(k) for k in schemas) + 1
             schemas[str(new_sid)] = new_fields
             version = head["version"] + 1
+            # the data and delete state carries verbatim (every head
+            # writer's discipline: a DDL commit must not silently
+            # resurrect deleted rows)
             manifest = {
                 "version": version,
                 "parent": head["version"],
                 "operation": operation,
                 "ts": round(_time.time(), 3),
-                "last_seq": self._seq_base(schema, table, head),
-                "segments": head["segments"],
-                "total_rows": head.get("total_rows"),
-                "total_bytes": head.get("total_bytes"),
+                "last_seq": head["last_seq"],
+                **self._carried_state(head),
                 "schemas": schemas,
                 "schema_id": new_sid,
             }
@@ -3724,14 +3642,6 @@ class ParquetWarehouse:
                 # partition-spec carry (every-head-writer discipline)
                 manifest["specs"] = head["specs"]
                 manifest["spec_id"] = head["spec_id"]
-            if head.get("deletes"):
-                # every head writer carries the merge-on-read delete set
-                # forward (same discipline as the schema carry) — a DDL
-                # commit must not silently resurrect deleted rows
-                manifest["deletes"] = head["deletes"]
-            if head.get("delete_segments"):
-                # delete-segment refs carry verbatim (same discipline)
-                manifest["delete_segments"] = head["delete_segments"]
             path = os.path.join(snap_dir, f"v{version:06d}.json")
             if self._cas_link(manifest, path):
                 self._write_version_hint(schema, table, version, branch)
@@ -4136,7 +4046,7 @@ class ParquetWarehouse:
                     f"no branch {branch!r} on {schema}.{table} — "
                     "create_branch() first"
                 )
-            if head is None or "schemas" not in head:
+            if head is None:
                 raise ValueError(
                     f"{schema}.{table} has no recorded schema — partition-"
                     "spec evolution needs one (append first)"
@@ -4150,10 +4060,8 @@ class ParquetWarehouse:
                 "parent": head["version"],
                 "operation": operation,
                 "ts": round(_time.time(), 3),
-                "last_seq": self._seq_base(schema, table, head),
-                "segments": head["segments"],
-                "total_rows": head.get("total_rows"),
-                "total_bytes": head.get("total_bytes"),
+                "last_seq": head["last_seq"],
+                **self._carried_state(head),
                 "specs": specs,
                 "spec_id": new_pid,
             }
@@ -4182,10 +4090,6 @@ class ParquetWarehouse:
             else:
                 manifest["schemas"] = head["schemas"]
                 manifest["schema_id"] = head["schema_id"]
-            if head.get("deletes"):
-                manifest["deletes"] = head["deletes"]
-            if head.get("delete_segments"):
-                manifest["delete_segments"] = head["delete_segments"]
             path = os.path.join(snap_dir, f"v{manifest['version']:06d}.json")
             if self._cas_link(manifest, path):
                 self._write_version_hint(
@@ -4405,7 +4309,8 @@ class ParquetWarehouse:
     # manifest-list layer removed (measured 2-3 KB/commit).  Opt-in via
     # the table property ``bloom_columns`` ("col1,col2"): absent property
     # = zero new work, and entries WITHOUT a bloom are conservatively
-    # kept (legacy tables keep the full scan).
+    # kept (files written before the property was set keep the full
+    # scan).
     #
     # Sizing: 16 bits/key, k=7 probes -> FPR ~7e-4 (measured in
     # test_bloom_pruning).  Bits are capped at 2^25 (4 MB) per file per
@@ -4736,7 +4641,7 @@ class ParquetWarehouse:
         name in the head's current schema.  Unresolvable names (dropped
         fields, typos) pass through unchanged — they match no file
         column downstream, a conservative no-op."""
-        if not cols or head is None or "schemas" not in head:
+        if not cols or head is None:
             return cols
         schemas = head["schemas"]
         cur = schemas[str(head["schema_id"])]
@@ -5048,9 +4953,6 @@ class ParquetWarehouse:
                 )
             )
 
-        if "files" in head:  # legacy inline-files head
-            file_pass(head["files"])
-            return kept, len(head["files"]), head
         total = 0
         for ref in head["segments"]:
             total += ref["count"]
@@ -5060,16 +4962,13 @@ class ParquetWarehouse:
         return kept, total, head
 
     @staticmethod
-    def _bounds_maps(head: dict) -> dict | None:
+    def _bounds_maps(head: dict) -> dict:
         """Per-sid ``{query column -> write-time bounds key}``: pruning
         specs are keyed by THIS head's schema names; files written before
         a rename recorded their bounds under the old name.  ``None``
         value = the field didn't exist under that sid (bounds lookup
-        misses, file kept); ``None`` return = pre-schema head (no
-        mapping, names used verbatim)."""
-        schemas = head.get("schemas")
-        if not schemas:
-            return None
+        misses, file kept)."""
+        schemas = head["schemas"]
         tgt = schemas[str(head["schema_id"])]
         bmaps: dict[int, dict] = {}
         for sid_str, flds in schemas.items():
@@ -5084,7 +4983,7 @@ class ParquetWarehouse:
         e: dict,
         norm: dict,
         static_types: dict,
-        bmaps: dict | None,
+        bmaps: dict,
         bloom_memo: dict | None = None,
     ) -> bool:
         """One manifest entry vs a normalized conjunctive filter spec:
@@ -5099,7 +4998,7 @@ class ParquetWarehouse:
         range; ``bloom_memo`` (one dict per prune call) holds the
         spec-value hashes so the hash pass runs once however many
         entries are tested."""
-        emap = bmaps.get(int(e.get("sid", 0))) if bmaps is not None else None
+        emap = bmaps.get(int(e.get("sid", 0)))
         for col, spec in norm.items():
             pv = e.get("partitions", {}).get(col)
             try:
@@ -5187,10 +5086,8 @@ class ParquetWarehouse:
             schema, table, ranges, version=version, branch=branch
         )
         if not entries:
-            # schema-stable empty frame off the (non-empty) manifest list
-            if "schemas" in head:
-                return self._empty_frame(head["schemas"][str(head["schema_id"])])
-            return self.read(schema, table, branch=branch).limit(0)
+            # schema-stable empty frame off the recorded schema
+            return self._empty_frame(head["schemas"][str(head["schema_id"])])
         return self._read_entries(schema, table, meta, head, entries)
 
     def read_where(self, schema: str, table: str, condition: str) -> DataFrame:
@@ -5286,13 +5183,12 @@ class ParquetWarehouse:
             "count": len(entries),
             "rows": sum(e["rows"] for e in entries),
             "bytes": sum(e["bytes"] for e in entries),
-            # lowest commit seq any entry carries (absent = pre-r09 = 0):
-            # lets commit-time delete folding decide "no live file
-            # predates delete D" from refs alone, O(refs) not O(entries)
-            "min_seq": min((e.get("seq", 0) for e in entries), default=0),
-            # highest seq: lets _seq_base recover a legacy head's true
-            # sequence counter from refs alone, O(refs) not O(entries)
-            "max_seq": max((e.get("seq", 0) for e in entries), default=0),
+            # lowest commit seq any entry carries: lets commit-time
+            # delete folding decide "no live file predates delete D" from
+            # refs alone, O(refs) not O(entries)
+            "min_seq": min((e["seq"] for e in entries), default=0),
+            # highest seq: bounds the entries' seq span from refs alone
+            "max_seq": max((e["seq"] for e in entries), default=0),
         }
         roots = sorted({self._entry_root(e["path"]) for e in entries})
         if len(roots) <= self.SEG_ROOTS_MAX:
@@ -5321,8 +5217,8 @@ class ParquetWarehouse:
             "count": len(entries),
             "rows": sum(e["rows"] for e in entries),
             "bytes": sum(e["bytes"] for e in entries),
-            "min_seq": min((e.get("seq", 0) for e in entries), default=0),
-            "max_seq": max((e.get("seq", 0) for e in entries), default=0),
+            "min_seq": min((e["seq"] for e in entries), default=0),
+            "max_seq": max((e["seq"] for e in entries), default=0),
         }
 
     # Delete-segment refs above this count merge into one (deletes are few
@@ -5333,6 +5229,7 @@ class ParquetWarehouse:
         self,
         schema: str,
         table: str,
+        version: int,
         dseg_refs: list[dict],
         min_live_seq,
         dropped_prefix_rel: str | None,
@@ -5352,23 +5249,24 @@ class ParquetWarehouse:
         the entry still applied to in this same commit, and narrowing
         exclusions are exact) — the seq test alone cannot see that a
         seq-scoped equality delete's remaining older files are all
-        key-disjoint.  Returns (refs, newly written segment names)."""
+        key-disjoint.  Every opened entry passes ``_check_delete_entries``
+        against the parent head ``version``.  Returns (refs, newly
+        written segment names)."""
         retire = retire or set()
         out_refs: list[dict] = []
         new_names: list[str] = []
         for r in dseg_refs:
-            if min_live_seq >= r.get("max_seq", float("inf")):
+            if min_live_seq >= r["max_seq"]:
                 continue  # every entry obsolete — ref dropped unopened
             ents = self._load_segment(schema, table, r["path"])
+            self._check_delete_entries(schema, table, version, ents)
             out: list[dict] = []
             changed = False
             for d in ents:
                 if d.get("path") in retire:
                     changed = True
                     continue
-                # dseg entries are always seq-stamped at commit; an entry
-                # somehow missing one is conservatively kept, never retired
-                if "seq" in d and min_live_seq >= d["seq"]:
+                if min_live_seq >= d["seq"]:
                     changed = True
                     continue
                 t = d.get("targets")
@@ -5444,24 +5342,12 @@ class ParquetWarehouse:
     def _seg_ref_names(head: dict) -> set[str]:
         """Every segment file a head references — data segments AND
         delete segments — for the expiry/orphan GC liveness sets."""
-        return {r["path"] for r in head.get("segments") or []} | {
-            r["path"] for r in head.get("delete_segments") or []
+        return {r["path"] for r in head["segments"]} | {
+            r["path"] for r in head.get("delete_segments", [])
         }
 
-    def _head_segment_refs(self, schema: str, table: str, head: dict) -> list[dict]:
-        """Segment refs of a head; a legacy inline-files head (pre-segment
-        format) is converted by writing its entries as one real segment."""
-        if "segments" in head:
-            return list(head["segments"])
-        return [self._write_segment(schema, table, head["files"])]
-
     def _head_live_paths(self, schema: str, table: str, head: dict) -> set[str]:
-        """The rel paths of every data file live under ``head`` — a
-        read-only view (unlike ``_head_segment_refs`` it never converts a
-        legacy inline-files head, so fences inside the commit CAS loop can
-        call it without leaking an untracked migration segment)."""
-        if "segments" not in head:
-            return {e["path"] for e in head.get("files") or []}
+        """The rel paths of every data file live under ``head``."""
         live: set[str] = set()
         for r in head["segments"]:
             live.update(
@@ -5469,48 +5355,6 @@ class ParquetWarehouse:
                 for e in self._load_segment(schema, table, r["path"])
             )
         return live
-
-    def _seq_base(self, schema: str, table: str, head: dict) -> int:
-        """Highest data-sequence number any entry under ``head`` carries —
-        what the next commit's seq stamp must exceed.  Modern heads record
-        it (``last_seq``); for legacy heads, defaulting to ``version`` is
-        only valid while seq and version moved in lockstep, and a
-        PRE-UPGRADE ``fast_forward`` publish broke that: it collapsed N
-        branch commits into ONE main version while the carried entries
-        keep branch seqs ABOVE it, so a version-based default would stamp
-        the first post-upgrade equality delete BELOW carried entries and
-        it would silently skip them (the seq-skew bug, legacy-head flavor;
-        ADVICE r10).  Take max(version, every ref's max seq): data and
-        delete segment refs record ``max_seq`` going forward; a legacy ref
-        without it pays one cached segment parse, ONCE — the very next
-        commit persists ``last_seq``."""
-        if "last_seq" in head:
-            return head["last_seq"]
-        base = head["version"]
-        for r in head.get("segments") or []:
-            if "max_seq" in r:
-                base = max(base, r["max_seq"])
-            else:
-                base = max(
-                    base,
-                    max(
-                        (
-                            e.get("seq", 0)
-                            for e in self._load_segment(
-                                schema, table, r["path"]
-                            )
-                        ),
-                        default=0,
-                    ),
-                )
-        for r in head.get("delete_segments") or []:
-            base = max(base, r.get("max_seq", 0))
-        # pre-segment inline heads: entries/deletes live on the head itself
-        for e in head.get("files") or []:
-            base = max(base, e.get("seq", 0))
-        for d in head.get("deletes") or []:
-            base = max(base, d.get("seq", 0))
-        return base
 
     def _apply_drop_prefix(
         self, schema: str, table: str, refs: list[dict], rel_prefix: str
@@ -5757,26 +5601,29 @@ class ParquetWarehouse:
                 "create_branch() first (branches always fork from an "
                 "existing snapshot)"
             )
-        sid: int | None = None
+        if add_deletes:
+            self._check_delete_entries(
+                schema, table, head["version"] + 1 if head else 1, add_deletes
+            )
+        # the FIRST commit of a fresh table records schema 0: the write's
+        # fields, or (a raw file commit) the footer schema of its first
+        # data file
+        sid = head["schema_id"] if head is not None else 0
         new_schema0: list[dict] | None = None
-        if schema_fields is not None:
-            if head is not None and "schemas" in head:
-                sid = head["schema_id"]
-            elif head is None:
-                # FIRST commit of a fresh table adopts the write's schema
-                new_schema0 = [
-                    {"id": i + 1, **f} for i, f in enumerate(schema_fields)
-                ]
-                sid = 0
-            # else: a LEGACY pre-schema head with live entries — stay
-            # schema-less.  Adopting this write's schema as schema 0 would
-            # claim it describes the legacy files too (entries without
-            # "sid" default to 0), and reading them under an explicit
-            # schema they were never validated against can fail or
-            # silently NULL-fill.  Legacy tables keep the pre-r07 read
-            # path; schema tracking starts with tables created after it.
-        elif head is not None and "schemas" in head:
-            sid = head["schema_id"]
+        if head is None:
+            fields0 = schema_fields
+            if fields0 is None:
+                paths = sorted(
+                    p for p in (file_paths or add_files or [])
+                    if isinstance(p, str)
+                )
+                if not paths:
+                    raise ValueError(
+                        f"the first commit of {schema}.{table} records "
+                        "schema 0: pass schema_fields or a data file"
+                    )
+                fields0 = self._footer_schema_fields(tdir, paths[0])
+            new_schema0 = [{"id": i + 1, **f} for i, f in enumerate(fields0)]
         # partition-spec-id resolution mirrors the schema id: fresh data
         # entries stamp the CURRENT spec (what their writer laid dirs out
         # by — the spec_transforms/expected_spec_id fences below abort a
@@ -5829,9 +5676,8 @@ class ParquetWarehouse:
                 "bytes": st.st_size,
                 "rows": pf.metadata.num_rows,
                 "mtime_ns": st.st_mtime_ns,
+                "sid": sid,
             }
-            if sid is not None:
-                entry["sid"] = sid
             if pid is not None:
                 entry["pid"] = pid
             nulls = self._file_null_counts(pf)
@@ -5928,10 +5774,8 @@ class ParquetWarehouse:
                 # DATA SEQUENCE NUMBER, decoupled from the version counter
                 # (Iceberg separates sequence-number from snapshot-id for
                 # exactly this reason): heads carry ``last_seq`` and each
-                # commit stamps ``last_seq + 1``.  Legacy heads without it
-                # default to their version — valid because seq WAS the
-                # version while both counters moved in lockstep.  The
-                # counters diverge at fast_forward: a branch advances the
+                # commit stamps ``last_seq + 1``.  The counters diverge
+                # at fast_forward: a branch advances the
                 # SHARED seq counter past the fork while main's version
                 # stays put, so the publish commit inherits the branch's
                 # last_seq and later main commits stamp ABOVE every
@@ -5939,12 +5783,7 @@ class ParquetWarehouse:
                 # equality delete (seq = small main version) silently
                 # skipped branch entries stamped with larger branch
                 # versions (strictly-lower-seq rule inverted).
-                # legacy heads (no last_seq) recover the counter from ref
-                # max_seq — NOT from version, which undercounts after a
-                # pre-upgrade fast_forward (see _seq_base)
-                seq = (
-                    self._seq_base(schema, table, head) if head else 0
-                ) + 1
+                seq = (head["last_seq"] if head else 0) + 1
                 if seg_stamp_v != seq:
                     for e in fresh_list:
                         e["seq"] = seq
@@ -5986,12 +5825,12 @@ class ParquetWarehouse:
                 if (
                     expected_schema_id is not None
                     and head is not None
-                    and head.get("schema_id") != expected_schema_id
+                    and head["schema_id"] != expected_schema_id
                 ):
                     raise RuntimeError(
                         f"concurrent schema change on {schema}.{table}: "
                         f"rewrite read schema id {expected_schema_id}, head "
-                        f"now has {head.get('schema_id')} — redo the "
+                        f"now has {head['schema_id']} — redo the "
                         "rewrite from the new head"
                     )
                 # Partition-spec fences (mirror of the schema fences):
@@ -6113,15 +5952,7 @@ class ParquetWarehouse:
                 dropped_rel: set[str] = set()
                 dropped_prefix_rel: str | None = None
                 if is_delta:
-                    if head is not None:
-                        refs = self._head_segment_refs(schema, table, head)
-                        if "segments" not in head:
-                            # legacy head converted: the migration segment is
-                            # parent-derived
-                            created.append(refs[0]["path"])
-                            derived.append(refs[0]["path"])
-                    else:
-                        refs = []
+                    refs = list(head["segments"]) if head is not None else []
                     if drop_prefix is not None:
                         rel_prefix = os.path.relpath(
                             drop_prefix.rstrip(os.sep), tdir
@@ -6179,12 +6010,12 @@ class ParquetWarehouse:
                     or retire_deletes
                 ):
                     min_live_seq = min(
-                        (r.get("min_seq", 0) for r in refs),
-                        default=float("inf"),
+                        (r["min_seq"] for r in refs), default=float("inf")
                     )
                     dseg_refs, names = self._fold_delete_segments(
                         schema,
                         table,
+                        head["version"],
                         dseg_refs,
                         min_live_seq,
                         dropped_prefix_rel,
@@ -6218,7 +6049,8 @@ class ParquetWarehouse:
                     stale = {
                         t
                         for d in add_deletes
-                        for t in d.get("targets", [])
+                        if d["kind"] == "pos"
+                        for t in d["targets"]
                     } - live_now
                     if stale:
                         raise RuntimeError(
@@ -6261,62 +6093,28 @@ class ParquetWarehouse:
                 # the current schema no longer matching this write's
                 # fields (concurrent DDL) must abort, not publish files
                 # under a schema id that misdescribes them.
-                schemas_out = head.get("schemas") if head else None
-                schema_id_out = head.get("schema_id") if head else None
-                if schema_fields is not None and schemas_out is not None:
-                    curw = schemas_out[str(schema_id_out)]
-                    if {(f["name"], f["type"]) for f in curw} != {
-                        (f["name"], f["type"]) for f in schema_fields
-                    }:
+                if head is None:
+                    manifest["schemas"] = {"0": new_schema0}
+                    manifest["schema_id"] = 0
+                else:
+                    curw = head["schemas"][str(head["schema_id"])]
+                    if schema_fields is not None and {
+                        (f["name"], f["type"]) for f in curw
+                    } != {(f["name"], f["type"]) for f in schema_fields}:
                         raise RuntimeError(
                             f"concurrent schema change on {schema}.{table}: "
                             "the table schema moved between write and "
                             "commit — re-validate against the new schema "
                             "and retry"
                         )
-                if schemas_out is None and new_schema0 is not None:
-                    schemas_out = {"0": new_schema0}
-                    schema_id_out = 0
-                if schemas_out is not None:
-                    manifest["schemas"] = schemas_out
-                    manifest["schema_id"] = schema_id_out
+                    manifest["schemas"] = head["schemas"]
+                    manifest["schema_id"] = head["schema_id"]
                 # partition-spec carry (same every-head-writer discipline
                 # as schemas: entries keep their pids, so a head without
                 # the specs dict would silently un-evolve the layout)
                 if head is not None and "specs" in head:
                     manifest["specs"] = head["specs"]
                     manifest["spec_id"] = head["spec_id"]
-                # LEGACY INLINE delete carry (pre-r09 heads; the same
-                # EVERY-head-writer discipline as the schema carry above):
-                # delta commits carry the parent's inline entries forward,
-                # pruning targets that this commit dropped (a rewritten/
-                # superseded file's tuples can never match again — and a
-                # rewrite READ the delete-applied rows, so dropping the
-                # reference is the fold, not a loss).  Replace commits
-                # carry none.  NEW delete entries never land here — they
-                # go to delete segments (below).
-                dels_out: list[dict] = []
-                if is_delta and head is not None:
-                    retire_set = set(retire_deletes or [])
-                    for d in head.get("deletes", []):
-                        if d.get("path") in retire_set:
-                            continue  # caller-proven inert (see fold)
-                        t = d.get("targets", [])
-                        if dropped_prefix_rel is not None:
-                            pref = dropped_prefix_rel.rstrip(os.sep) + os.sep
-                            t = [
-                                x for x in t
-                                if x != dropped_prefix_rel
-                                and not x.startswith(pref)
-                            ]
-                        if dropped_rel:
-                            t = [x for x in t if x not in dropped_rel]
-                        if t:
-                            dels_out.append(
-                                d if t == d.get("targets") else {**d, "targets": t}
-                            )
-                if dels_out:
-                    manifest["deletes"] = dels_out
                 if dseg_new_ref is not None:
                     dseg_refs = dseg_refs + [dseg_new_ref]
                 if len(dseg_refs) > self.DSEG_MERGE_MAX:
@@ -6402,20 +6200,80 @@ class ParquetWarehouse:
         self, schema: str, table: str, version: int, branch: str = "main"
     ) -> dict:
         """Parse exactly ONE head file — segment refs and totals, no
-        entries.  Every head-file read routes through here so tests can
-        count parses (the O(head)-read contract of
-        ``test_manifest_bounds.py``)."""
+        entries — and check its layout (``_check_head``).  Every head-file
+        read routes through here so tests can count parses (the
+        O(head)-read contract of ``test_manifest_bounds.py``)."""
         path = os.path.join(
             self._ref_dir(schema, table, branch), f"v{version:06d}.json"
         )
         try:
             with open(path) as f:
-                return json.load(f)
+                head = json.load(f)
         except FileNotFoundError:
             raise KeyError(
                 f"no snapshot v{version} for {schema}.{table}"
                 + ("" if branch == "main" else f" (branch {branch})")
             )
+        self._check_head(schema, table, version, head)
+        return head
+
+    # The one head layout: every head file carries these keys, and its
+    # data and delete entries live in segment files, never inline.
+    _HEAD_KEYS = (
+        "version", "ts", "last_seq", "segments", "total_rows",
+        "total_bytes", "schemas", "schema_id",
+    )
+
+    # Table state a head writer that adds no data carries verbatim from
+    # its parent (DDL, rewrite_manifests' delete refs, fast_forward,
+    # schema adoption, rollback).
+    _STATE_KEYS = ("segments", "total_rows", "total_bytes", "delete_segments")
+
+    @classmethod
+    def _carried_state(cls, head: dict) -> dict:
+        return {k: head[k] for k in cls._STATE_KEYS if k in head}
+
+    @classmethod
+    def _check_head(cls, schema: str, table: str, version: int, head: dict) -> None:
+        """Refuse a head file in any layout but the current one: a missing
+        required key, or inline ``files``/``deletes``.  Nothing reads,
+        migrates or garbage-collects such a table."""
+        bad = [f"no {k!r}" for k in cls._HEAD_KEYS if k not in head] + [
+            f"inline {k!r}" for k in ("files", "deletes") if k in head
+        ]
+        if bad:
+            raise ValueError(
+                f"{schema}.{table} snapshot v{version} has an unsupported "
+                f"head layout ({', '.join(bad)})"
+            )
+
+    @staticmethod
+    def _check_delete_entries(
+        schema: str, table: str, version: int, dels: list[dict]
+    ) -> None:
+        """Refuse delete entries in any layout but the current one: a
+        position entry records ``targets`` and ``target_counts``; an
+        equality entry records ``eq_cols`` and ``eq_ids`` and is scoped by
+        sequence number, never by a ``targets`` list."""
+        for d in dels:
+            kind = d.get("kind")
+            if kind == "pos":
+                need = ("targets", "target_counts")
+            elif kind == "eq":
+                need = ("eq_cols", "eq_ids")
+            else:
+                need = ()
+            bad = [f"no {k!r}" for k in need if k not in d]
+            if not need:
+                bad.append(f"kind {kind!r}")
+            elif kind == "eq" and "targets" in d:
+                bad.append("explicit 'targets'")
+            if bad:
+                raise ValueError(
+                    f"{schema}.{table} snapshot v{version}: delete entry "
+                    f"{d.get('path')!r} has an unsupported layout "
+                    f"({', '.join(bad)})"
+                )
 
     def _hint_path(self, schema: str, table: str, branch: str = "main") -> str:
         return os.path.join(
@@ -6524,10 +6382,8 @@ class ParquetWarehouse:
         """Head + resolved ``files`` entries (the shape every consumer
         reads): concatenated from the head's segments, de-duplicated by
         path (defensive; appends never re-add a path) and sorted for
-        determinism.  Legacy pre-segment heads already carry inline
-        files."""
-        if "files" in head:
-            return head
+        determinism, plus the resolved ``deletes``.  Only this in-memory
+        form carries those two keys; a head FILE never does."""
         # resolve deletes FIRST: _head_deletes keys off the absence of
         # "files" to know the delete segments are not yet folded in
         dels = self._head_deletes(schema, table, head)
@@ -6577,8 +6433,9 @@ class ParquetWarehouse:
 
     def history(self, schema: str, table: str) -> list[dict]:
         """Iceberg ``$history``/``$snapshots``-style lineage summary —
-        version, parent, operation, totals, segment count — parsed from
-        HEAD FILES ONLY: O(V) small parses, zero segment/entry reads, so
+        version, parent, operation, commit time ``ts``, totals, segment
+        count, schema id (every field always set) — parsed from HEAD
+        FILES ONLY: O(V) small parses, zero segment/entry reads, so
         inspecting a 10k-commit table's lineage never touches the live
         file set (``snapshots()`` is the materializing, O(V*F) cousin)."""
         out = []
@@ -6589,14 +6446,11 @@ class ParquetWarehouse:
                     "version": h["version"],
                     "parent": h.get("parent"),
                     "operation": h.get("operation"),
-                    "ts": h.get("ts"),  # committed_at (None on legacy heads)
-                    "total_rows": h.get("total_rows"),
-                    "total_bytes": h.get("total_bytes"),
-                    "segments": len(h["segments"])
-                    if "segments" in h
-                    else None,  # legacy inline-files head
-                    # schema lineage (None before schema recording existed)
-                    "schema_id": h.get("schema_id"),
+                    "ts": h["ts"],
+                    "total_rows": h["total_rows"],
+                    "total_bytes": h["total_bytes"],
+                    "segments": len(h["segments"]),
+                    "schema_id": h["schema_id"],
                 }
             )
         return out
@@ -6615,13 +6469,6 @@ class ParquetWarehouse:
                 raise ValueError(
                     f"{schema}.{table} has no committed snapshot to rewrite"
                 )
-            if "segments" not in head:
-                # legacy inline-files head = ONE logical segment; nothing to
-                # compact.  Converting via _head_segment_refs here would
-                # write a migration segment that no head ever publishes
-                # (ADVICE r6: the early return below leaked it to the
-                # age-gated orphan sweep) — detect before converting.
-                return {"segments_before": 1, "segments_after": 1}
             refs = list(head["segments"])
             if len(refs) <= 1:
                 return {"segments_before": len(refs), "segments_after": len(refs)}
@@ -6640,28 +6487,22 @@ class ParquetWarehouse:
                 "parent": head["version"],
                 "operation": "rewrite_manifests",
                 "ts": round(_time.time(), 3),
-                "last_seq": self._seq_base(schema, table, head),
+                "last_seq": head["last_seq"],
+                # schema record, merge-on-read delete refs and spec record
+                # carry through metadata rewrites (the randomized model
+                # test caught the schema dropping: entries keep their
+                # sids, so a head without the schema list would silently
+                # un-evolve the table)
+                **self._carried_state(head),
                 "segments": [merged],
                 "total_rows": merged["rows"],
                 "total_bytes": merged["bytes"],
+                "schemas": head["schemas"],
+                "schema_id": head["schema_id"],
             }
-            if "schemas" in head:
-                # schema record carries through metadata rewrites (the
-                # randomized model test caught this dropping: entries keep
-                # their sids, so a head without the schema list would
-                # silently un-evolve the table)
-                manifest["schemas"] = head["schemas"]
-                manifest["schema_id"] = head["schema_id"]
             if "specs" in head:
-                # partition-spec record carries too (same discipline)
                 manifest["specs"] = head["specs"]
                 manifest["spec_id"] = head["spec_id"]
-            if head.get("deletes"):
-                # merge-on-read delete set carries through metadata
-                # rewrites too (same every-head-writer discipline)
-                manifest["deletes"] = head["deletes"]
-            if head.get("delete_segments"):
-                manifest["delete_segments"] = head["delete_segments"]
             path = os.path.join(snap_dir, f"v{version:06d}.json")
             if self._cas_link(manifest, path):
                 self._write_version_hint(schema, table, version)
@@ -6841,10 +6682,8 @@ class ParquetWarehouse:
         fork — rather than silently merging).  The publish is ONE commit
         carrying the branch head's segment refs/schemas/deletes verbatim
         (O(refs) bytes however many commits the branch accumulated); its
-        data generations were shared all along.  Exception: LEGACY
-        pre-segment tables keep inline ``"files"`` heads, so publishing
-        one copies the file list — O(files), not O(refs), there.  The
-        branch stays live for further staging until ``drop_branch``.
+        data generations were shared all along.  The branch stays live
+        for further staging until ``drop_branch``.
 
         ``expected_head`` pins the publish to a specific audited branch
         version (the WAP gate): when the branch head moved past it, the
@@ -6877,14 +6716,12 @@ class ParquetWarehouse:
                     "branch from the new head"
                 )
             manifest = {
-                k: bhead[k]
-                for k in (
-                    "segments", "total_rows", "total_bytes",
-                    "schemas", "schema_id", "specs", "spec_id",
-                    "deletes", "delete_segments",
-                    "files",  # legacy inline-files branch heads
-                )
-                if k in bhead
+                **self._carried_state(bhead),
+                **{
+                    k: bhead[k]
+                    for k in ("schemas", "schema_id", "specs", "spec_id")
+                    if k in bhead
+                },
             }
             manifest.update({
                 "version": main_v + 1,
@@ -6894,13 +6731,12 @@ class ParquetWarehouse:
                 # the branch advanced the SHARED data-sequence counter
                 # past the fork; main must continue from it or later
                 # eq deletes would skip the carried entries (the seq
-                # skew bug — see commit_snapshot's last_seq note);
-                # legacy branch heads recover it from refs (_seq_base)
-                "last_seq": self._seq_base(schema, table, bhead),
+                # skew bug — see commit_snapshot's last_seq note)
+                "last_seq": bhead["last_seq"],
                 "from_branch": name,
                 "from_branch_ts": self._load_head_light(
                     schema, table, fork, name
-                ).get("ts"),
+                )["ts"],
                 "branch_head": bhead_v,
             })
             path = os.path.join(
@@ -7021,21 +6857,15 @@ class ParquetWarehouse:
         mhead = self._head_light(schema, table)
         if mhead is None:  # branches always fork FROM a snapshot
             raise RuntimeError(f"{schema}.{table} has no main snapshot")
-        bsch, msch = bhead.get("schemas"), mhead.get("schemas")
-        if added and (bsch is None) != (msch is None):
-            raise RuntimeError(
-                f"cannot cherry-pick {schema}.{table} {name}@v{version}: "
-                "schema tracking differs between branch and main"
-            )
-        if bsch is not None:
-            for s in sorted({str(e.get("sid", 0)) for e in added}):
-                if (msch or {}).get(s) != bsch[s]:
-                    raise RuntimeError(
-                        f"cannot cherry-pick {schema}.{table} "
-                        f"{name}@v{version}: schema id {s} of the picked "
-                        "entries is absent or diverged on main (DDL since "
-                        "the fork) — re-stage on a fresh branch"
-                    )
+        bsch, msch = bhead["schemas"], mhead["schemas"]
+        for s in sorted({str(e.get("sid", 0)) for e in added}):
+            if msch.get(s) != bsch[s]:
+                raise RuntimeError(
+                    f"cannot cherry-pick {schema}.{table} "
+                    f"{name}@v{version}: schema id {s} of the picked "
+                    "entries is absent or diverged on main (DDL since "
+                    "the fork) — re-stage on a fresh branch"
+                )
         # partition-spec fence (mirror of the sid fence): every spec id
         # the picked entries carry must resolve to the SAME transform
         # list on main, or the per-pid read would parse their dirs under
@@ -7055,16 +6885,12 @@ class ParquetWarehouse:
                     "DDL since the fork) — merge_branch adopts branch-"
                     "only spec evolution first, or re-stage"
                 )
-        cur_ids = (
-            {f["id"] for f in msch[str(mhead["schema_id"])]}
-            if msch is not None
-            else None
-        )
+        cur_ids = {f["id"] for f in msch[str(mhead["schema_id"])]}
         pos_targets: set[str] = set()
         for d in added_dels:
-            if d.get("kind", "pos") == "pos":
-                pos_targets.update(d.get("targets") or [])
-            elif cur_ids is not None and d.get("eq_ids"):
+            if d["kind"] == "pos":
+                pos_targets.update(d["targets"])
+            else:
                 missing = sorted(set(d["eq_ids"]) - cur_ids)
                 if missing:
                     raise RuntimeError(
@@ -7121,10 +6947,7 @@ class ParquetWarehouse:
                 d
                 for d in self._head_deletes(schema, table, mhead)
                 if d["path"] not in known
-                and (
-                    d.get("kind") != "pos"
-                    or set(d.get("targets") or []) & dropped_set
-                )
+                and (d["kind"] != "pos" or set(d["targets"]) & dropped_set)
             ]
             if unseen:
                 raise RuntimeError(
@@ -7155,14 +6978,14 @@ class ParquetWarehouse:
             # MoR delete committing between the fence check above and the
             # publish would otherwise slip past it (check-then-act)
             rewrite_read_version=(mhead["version"] if dropped else None),
-            expected_schema_id=mhead.get("schema_id"),
+            expected_schema_id=mhead["schema_id"],
             # provenance: lets merge_branch skip already-picked commits
             # on a crashed re-run (idempotency over retained history);
             # the fork ts scopes the skip to THIS branch incarnation
             extra_meta={
                 "from_branch": name,
                 "picked": version,
-                "picked_branch_ts": fork_rec.get("ts"),
+                "picked_branch_ts": fork_rec["ts"],
             },
         )
         return {
@@ -7205,23 +7028,17 @@ class ParquetWarehouse:
             # EITHER adopts; both-sides changes of either refuse (spec
             # ids would alias exactly like field ids)
             return (
-                h.get("schemas"), h.get("schema_id"),
+                h["schemas"], h["schema_id"],
                 h.get("specs"), h.get("spec_id"),
             )
 
-        bsch = bhead.get("schemas")
+        bsch = bhead["schemas"]
         if ddl_state(bhead) == ddl_state(fork_rec):
             return None  # no branch-side DDL: nothing to replay
         import time as _time
 
         while True:
             mhead = self._head_light(schema, table)
-            msch = mhead.get("schemas") if mhead else None
-            if (bsch is None) != (msch is None):
-                raise RuntimeError(
-                    f"cannot merge branch {name!r} of {schema}.{table}: "
-                    "schema tracking differs between branch and main"
-                )
             if ddl_state(mhead) == ddl_state(bhead):
                 return None  # already adopted (crashed-merge re-run)
             if ddl_state(mhead) != ddl_state(fork_rec):
@@ -7246,7 +7063,7 @@ class ParquetWarehouse:
                 "parent": mhead["version"],
                 "operation": "merge_schema",
                 "ts": round(_time.time(), 3),
-                "last_seq": self._seq_base(schema, table, mhead),
+                "last_seq": mhead["last_seq"],
                 "from_branch": name,
                 "schemas": bsch,
                 "schema_id": bhead["schema_id"],
@@ -7255,14 +7072,8 @@ class ParquetWarehouse:
                 # branch-side spec evolution adopts ID-faithfully too
                 manifest["specs"] = bhead["specs"]
                 manifest["spec_id"] = bhead["spec_id"]
-            # every other head key carries from MAIN verbatim (the
-            # head-writer carry discipline: segments, totals, deletes)
-            for k in (
-                "segments", "total_rows", "total_bytes",
-                "deletes", "delete_segments", "files",
-            ):
-                if k in mhead:
-                    manifest[k] = mhead[k]
+            # the data and delete state carries from MAIN verbatim
+            manifest.update(self._carried_state(mhead))
             path = os.path.join(
                 self._snap_dir(schema, table),
                 f"v{manifest['version']:06d}.json",
@@ -7341,7 +7152,7 @@ class ParquetWarehouse:
         # refuses it and the refusal is folded into already_published
         # below (pre-fence, a re-pick could resurrect deleted rows).
         fork_rec = self._load_head_light(schema, table, fork, name)
-        fid = fork_rec.get("ts")
+        fid = fork_rec["ts"]
         # commuting DDL: adopt branch-only schema evolution BEFORE the
         # picks (idempotent; refuses both-sides DDL and guarded drops)
         adopted = self._merge_adopt_schemas(
@@ -7473,56 +7284,39 @@ class ParquetWarehouse:
                     f"head is v{head['version']} — rollback targets an "
                     "EARLIER snapshot"
                 )
-            if ("schemas" in head) != ("schemas" in target):
-                # legacy/modern mixed tracking cannot happen on one ref's
-                # linear history (schemas only ever appear at table
-                # creation) — refuse rather than guess
-                raise RuntimeError(
-                    f"cannot roll back {schema}.{table}: schema tracking "
-                    f"differs between v{version} and the head"
-                )
-            if "schemas" in head:
-                cur_ids = {
-                    f["id"] for f in head["schemas"][str(head["schema_id"])]
-                }
-                for d in self._head_deletes(schema, table, target):
-                    missing = sorted(set(d.get("eq_ids") or []) - cur_ids)
-                    if missing:
-                        raise ValueError(
-                            f"cannot roll back {schema}.{table} to "
-                            f"v{version}: its pending equality delete "
-                            f"{d['path']} keys on field id(s) {missing} "
-                            "dropped from the current schema — the keys "
-                            "could no longer resolve"
-                        )
+            cur_ids = {
+                f["id"] for f in head["schemas"][str(head["schema_id"])]
+            }
+            for d in self._head_deletes(schema, table, target):
+                missing = sorted(set(d.get("eq_ids", [])) - cur_ids)
+                if missing:
+                    raise ValueError(
+                        f"cannot roll back {schema}.{table} to "
+                        f"v{version}: its pending equality delete "
+                        f"{d['path']} keys on field id(s) {missing} "
+                        "dropped from the current schema — the keys "
+                        "could no longer resolve"
+                    )
             manifest = {
                 "version": head["version"] + 1,
                 "parent": head["version"],
                 "operation": "rollback",
                 "ts": round(_time.time(), 3),
                 # counter monotone across the rollback — see docstring
-                "last_seq": max(
-                    self._seq_base(schema, table, head),
-                    self._seq_base(schema, table, target),
-                ),
+                "last_seq": max(head["last_seq"], target["last_seq"]),
                 "rolled_back_to": version,
+                # state carry from the TARGET (the restored truth):
+                # entries, totals, pending MoR deletes — every state key
+                # a head must carry (an omitted key silently resets that
+                # subsystem)
+                **self._carried_state(target),
+                # schema carry from the CURRENT head (DDL not reverted):
+                # its schemas dict is the superset of the target's
+                # (schemas only grow down a linear history), so restored
+                # sids keep resolving
+                "schemas": head["schemas"],
+                "schema_id": head["schema_id"],
             }
-            # state carry from the TARGET (the restored truth): entries,
-            # totals, pending MoR deletes — every state key a head must
-            # carry (an omitted key silently resets that subsystem),
-            # legacy inline shapes included
-            for k in (
-                "segments", "total_rows", "total_bytes",
-                "deletes", "delete_segments", "files",
-            ):
-                if k in target:
-                    manifest[k] = target[k]
-            # schema carry from the CURRENT head (DDL not reverted): its
-            # schemas dict is the superset of the target's (schemas only
-            # grow down a linear history), so restored sids keep resolving
-            if "schemas" in head:
-                manifest["schemas"] = head["schemas"]
-                manifest["schema_id"] = head["schema_id"]
             # partition-spec carry, same rule: spec DDL is not reverted,
             # restored entries resolve through their recorded pids
             if "specs" in head:
@@ -7691,7 +7485,7 @@ class ParquetWarehouse:
         the fork (O(commits since fork), heads are light) so a crashed
         ``publish_tables`` resumes even after unrelated commits landed
         on top of the published half."""
-        fid = self._load_head_light(schema, table, fork, name).get("ts")
+        fid = self._load_head_light(schema, table, fork, name)["ts"]
         v = self._latest_version(schema, table)
         while v is not None and v > fork:
             try:
@@ -8182,8 +7976,8 @@ class ParquetWarehouse:
           deleted rows are computed as visible-before MINUS
           visible-after over the surviving files, using the production
           delete application itself (position tuples, equality keys,
-          sequence scoping, legacy targets — one code path, no
-          changelog re-implementation to drift).
+          sequence scoping — one code path, no changelog
+          re-implementation to drift).
         - compactions / metadata commits (``_CHANGELOG_SKIP_OPS``):
           skipped — no logical change; the deletes a fold materializes
           were emitted when their delete committed.
@@ -8246,24 +8040,15 @@ class ParquetWarehouse:
                 )
 
         tvh = _load(tv)
-        t_fields = (
-            tvh["schemas"][str(tvh["schema_id"])]
-            if "schemas" in tvh
-            else None
-        )
+        t_fields = tvh["schemas"][str(tvh["schema_id"])]
 
         def hyb(deletes_src: dict) -> dict:
             # window-end SCHEMA + a chosen commit's DELETE set: lets
             # _read_entries project every emitted row to the same
             # columns while applying the right point-in-time deletes
-            h = {
-                k: v
-                for k, v in tvh.items()
-                if k not in ("deletes", "delete_segments")
-            }
-            for k in ("deletes", "delete_segments"):
-                if k in deletes_src:
-                    h[k] = deletes_src[k]
+            h = {k: v for k, v in tvh.items() if k != "delete_segments"}
+            if "delete_segments" in deletes_src:
+                h["delete_segments"] = deletes_src["delete_segments"]
             return h
 
         def stamp(df, change, v, ordinal):
@@ -8354,9 +8139,9 @@ class ParquetWarehouse:
                 ))
             if new_dels:
                 # scope the before/after diff to files the new deletes
-                # can TOUCH: pos entries and legacy eq entries carry
-                # explicit targets; seq-scoped eq deletes (no target
-                # list) reach strictly-older files, narrowed through
+                # can TOUCH: pos entries carry explicit targets;
+                # seq-scoped eq deletes reach strictly-older files,
+                # narrowed through
                 # their stored key_ranges vs manifest bounds/partitions/
                 # BLOOMS — the same proven `_narrow_eq_targets` the read
                 # path uses (r14: the diff used to fall back to ALL
@@ -8365,15 +8150,10 @@ class ParquetWarehouse:
                 cand_all = {p for p in cur_files if p in prev_files}
                 touched: set[str] = set()
                 for d in new_dels:
-                    t = d.get("targets")
-                    if t is not None:
-                        touched |= set(t) & cand_all
+                    if d["kind"] == "pos":
+                        touched |= set(d["targets"]) & cand_all
                         continue
-                    c = {
-                        p
-                        for p in cand_all
-                        if prev_files[p].get("seq", 0) < d.get("seq", 0)
-                    }
+                    c = {p for p in cand_all if prev_files[p]["seq"] < d["seq"]}
                     if c and d.get("key_ranges"):
                         c = self._narrow_eq_targets(
                             schema, table, meta, hyb(h), d, c, prev_files
@@ -8383,7 +8163,7 @@ class ParquetWarehouse:
                 if common:
                     maps = [
                         f["name"]
-                        for f in (t_fields or [])
+                        for f in t_fields
                         if str(f["type"]).replace(" ", "").startswith("map<")
                     ]
                     if maps:
@@ -8423,12 +8203,6 @@ class ParquetWarehouse:
                     ))
             prev, prev_files = h, cur_files
         if not parts:
-            if t_fields is None:
-                raise ValueError(
-                    f"read_changes on legacy pre-schema table {schema}."
-                    f"{table} found an empty window and no recorded "
-                    "schema to shape the empty result"
-                )
             return stamp(self._empty_frame(t_fields), "insert", 0, 0).limit(0)
         out = parts[0]
         for p in parts[1:]:
@@ -8486,7 +8260,7 @@ class ParquetWarehouse:
         to_version: int | None = None,
         key_cols: list[str] | None = None,
         branch: str = "main",
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """KEYS-ONLY changelog (r14): DISTINCT ``key_cols`` tuples that
         are a CONSERVATIVE SUPERSET of the keys whose visible rows
         changed in ``(from_version, to_version]`` — the cheap substrate
@@ -8506,14 +8280,13 @@ class ParquetWarehouse:
           delete-on-the-key case);
         - other delete entries (position deletes, non-covering equality
           deletes) fall back to their VICTIM FILES' keys — explicit
-          targets for pos/legacy entries, seq-scoped + key_ranges
-          narrowing (bounds/partitions/blooms) for eq entries.
+          targets for pos entries, seq-scoped + key_ranges narrowing
+          (bounds/partitions/blooms) for eq entries.
 
         Same window contracts as ``read_changes``: changelog-skip ops
         (compaction, DDL) contribute nothing, a rollback in-window
-        raises, expired commits raise.  Returns None for legacy
-        pre-schema tables (no recorded schema to resolve keys under) —
-        callers fall back to the row-exact changelog."""
+        raises, expired commits raise.  Always returns a DataFrame of
+        ``key_cols`` (empty when nothing changed)."""
         if not key_cols:
             raise ValueError("key_cols is required")
         meta = self.table_meta(schema, table)
@@ -8543,8 +8316,6 @@ class ParquetWarehouse:
                 )
 
         tvh = _load(tv)
-        if "schemas" not in tvh:
-            return None  # legacy: no schema to resolve keys under
         t_fields = tvh["schemas"][str(tvh["schema_id"])]
         names = {f["name"] for f in t_fields}
         missing = [c for c in key_cols if c not in names]
@@ -8555,11 +8326,7 @@ class ParquetWarehouse:
             )
         types = {f["name"]: f["type"] for f in t_fields}
         # window-end schema, NO delete refs: raw column-pruned reads
-        raw_head = {
-            k: v
-            for k, v in tvh.items()
-            if k not in ("deletes", "delete_segments")
-        }
+        raw_head = {k: v for k, v in tvh.items() if k != "delete_segments"}
         prev = _load(fv)
         prev_files: dict | None = None
         touched: dict[str, dict] = {}
@@ -8590,9 +8357,9 @@ class ParquetWarehouse:
             prev_files = None
 
             def _side_entries(a: dict, b: dict) -> dict:
-                bs = {r["path"] for r in b.get("segments", [])}
+                bs = {r["path"] for r in b["segments"]}
                 out: dict[str, dict] = {}
-                for r in a.get("segments", []):
+                for r in a["segments"]:
                     if r["path"] not in bs:
                         for e in self._load_segment(
                             schema, table, r["path"]
@@ -8600,19 +8367,8 @@ class ParquetWarehouse:
                             out[e["path"]] = e
                 return out
 
-            if "segments" in h and "segments" in prev:
-                c_only = _side_entries(h, prev)
-                p_only = _side_entries(prev, h)
-            else:  # legacy inline-files heads: full materialize diff
-                p_only = {
-                    e["path"]: e
-                    for e in self._materialize(schema, table, prev)["files"]
-                }
-                c_only = {
-                    e["path"]: e
-                    for e in self._materialize(schema, table, h)["files"]
-                }
-                prev_files = p_only
+            c_only = _side_entries(h, prev)
+            p_only = _side_entries(prev, h)
             for p, e in c_only.items():
                 if p not in p_only:
                     touched[p] = e
@@ -8637,7 +8393,7 @@ class ParquetWarehouse:
             for d in self._head_deletes(schema, table, h):
                 if d["path"] in prev_del_paths:
                     continue
-                if d.get("kind") == "eq":
+                if d["kind"] == "eq":
                     try:
                         cur_names = self._eq_current_names(tvh, d)
                     except RuntimeError:
@@ -8666,15 +8422,10 @@ class ParquetWarehouse:
                 # victim-file fallback (pos, non-covering/unreadable eq)
                 # — the one case that pays the full prev materialization
                 pf = _prev_files()
-                t = d.get("targets")
-                if t is not None:
-                    cand = set(t) & set(pf)
+                if d["kind"] == "pos":
+                    cand = set(d["targets"]) & set(pf)
                 else:
-                    cand = {
-                        p
-                        for p in pf
-                        if pf[p].get("seq", 0) < d.get("seq", 0)
-                    }
+                    cand = {p for p in pf if pf[p]["seq"] < d["seq"]}
                     if cand and d.get("key_ranges"):
                         cand = self._narrow_eq_targets(
                             schema, table, meta, tvh, d, cand, pf
@@ -8852,8 +8603,8 @@ class ParquetWarehouse:
         as inserts) and its keys-superset changelog necessarily emits
         keys, so the per-pull emptiness-probe job can be skipped (r15
         tick-floor fold).  Conservative: heads without ``added_rows``
-        (pre-r14) or delete-only windows return False and the probe
-        runs as before."""
+        (metadata commits) or delete-only windows return False and the
+        probe runs as before."""
         try:
             return any(
                 (
@@ -8935,11 +8686,7 @@ class ParquetWarehouse:
                 )
         new_entries = [e for e in mf_to["files"] if e["path"] not in from_paths]
         if not new_entries:
-            if "schemas" in mf_to:
-                return self._empty_frame(
-                    mf_to["schemas"][str(mf_to["schema_id"])]
-                )
-            return self.read(schema, table).limit(0)
+            return self._empty_frame(mf_to["schemas"][str(mf_to["schema_id"])])
         return self._read_entries(schema, table, meta, mf_to, new_entries)
 
     def partitions_report(self, schema: str, table: str) -> list[dict]:
@@ -9014,11 +8761,9 @@ class ParquetWarehouse:
                 f"{len(paths)} files were rewritten (e.g. {missing[0]})"
             )
         if not paths:
-            if "schemas" in manifest:
-                return self._empty_frame(
-                    manifest["schemas"][str(manifest["schema_id"])]
-                )
-            return self.read(schema, table).limit(0)
+            return self._empty_frame(
+                manifest["schemas"][str(manifest["schema_id"])]
+            )
         # the snapshot presents itself under ITS OWN schema (_read_entries
         # targets the head we pass — schema evolution time-travel contract)
         return self._read_entries(
@@ -9031,8 +8776,7 @@ class ParquetWarehouse:
         the newest snapshot whose commit time is <= ``ts`` (a unix-seconds
         float or a datetime; naive datetimes are treated as UTC, matching
         the repo's session pin).  Head-light scan — one small parse per
-        version, no entries; legacy heads without a recorded commit time
-        are skipped.  Raises if no snapshot is old enough."""
+        version, no entries.  Raises if no snapshot is old enough."""
         import datetime as _dt
 
         if isinstance(ts, _dt.datetime):
@@ -9041,8 +8785,7 @@ class ParquetWarehouse:
             ts = ts.timestamp()
         best: int | None = None
         for v in self._snapshot_versions(schema, table):
-            t = self._load_head_light(schema, table, v).get("ts")
-            if t is not None and t <= ts:
+            if self._load_head_light(schema, table, v)["ts"] <= ts:
                 best = v if best is None or v > best else best
         if best is None:
             raise ValueError(
@@ -9161,9 +8904,7 @@ class ParquetWarehouse:
         victims = snaps[:-keep_last]
         if older_than_s is not None:
             cutoff = time.time() - older_than_s
-            victims = [
-                m for m in victims if m.get("ts") is not None and m["ts"] < cutoff
-            ]
+            victims = [m for m in victims if m["ts"] < cutoff]
         # TAGGED snapshots are retained regardless of age/position
         # (Iceberg ref retention): the tag is the user's promise that this
         # snapshot — and its data files — stay reachable until drop_tag.
@@ -9222,8 +8963,7 @@ class ParquetWarehouse:
         ``older_than_s``, all but the newest ``keep_last`` expire; with it,
         only candidates COMMITTED more than that many seconds ago expire
         (Iceberg's ``expire_snapshots(older_than)`` — the newest
-        ``keep_last`` are always retained regardless of age, and legacy
-        heads without a recorded commit time are conservatively kept).
+        ``keep_last`` are always retained regardless of age).
         ``keep_last`` must be >= 1 — expiring every manifest would also
         GC every data file (manifest-driven reads would then see an
         empty, unrecoverable table).
@@ -9526,7 +9266,7 @@ class ParquetWarehouse:
         # publish instead of mislabeling old-layout files with the
         # post-DDL sid/pid
         head0 = self._head_light(schema, table, branch)
-        if head0 is not None and "schemas" in head0:
+        if head0 is not None:
             table_cols = [
                 f["name"] for f in head0["schemas"][str(head0["schema_id"])]
             ]
@@ -9546,11 +9286,7 @@ class ParquetWarehouse:
         # folded.  Key casts use head0's recorded types (the same single
         # capture the rest of the merge derives from).
         env_types: dict[str, str] = {}
-        if (
-            mode == "merge-on-read"
-            and head0 is not None
-            and "schemas" in head0
-        ):
+        if mode == "merge-on-read" and head0 is not None:
             cur0 = {
                 f["name"]: f
                 for f in head0["schemas"][str(head0["schema_id"])]
@@ -9714,16 +9450,10 @@ class ParquetWarehouse:
             # key columns resolved + CAST in the combined stats aggregate
             # above (ADVICE r8: envelope over POST-cast values); NULL
             # rejection + the min/max pruning envelope read off its row
-            eq_ids = None
-            kdf = changed_keys.select(*key_cols)
-            if head is not None and "schemas" in head:
-                eq_ids = [cur0[c]["id"] for c in key_cols]
-                kdf = kdf.select(
-                    *[
-                        F.col(c).cast(cur0[c]["type"]).alias(c)
-                        for c in key_cols
-                    ]
-                )
+            eq_ids = [cur0[c]["id"] for c in key_cols]
+            kdf = changed_keys.select(
+                *[F.col(c).cast(cur0[c]["type"]).alias(c) for c in key_cols]
+            )
             if any((mstats[f"n_{c}"] or 0) > 0 for c in key_cols):
                 raise ValueError(
                     "NULL key values are not supported for merge-on-read "
@@ -9812,9 +9542,7 @@ class ParquetWarehouse:
                     add_deletes=del_entries or None,
                     schema_fields=schema_fields,
                     expected_schema_id=(
-                        (head or {}).get("schema_id")
-                        if schema_fields is None
-                        else None
+                        head["schema_id"] if schema_fields is None else None
                     ),
                     spec_transforms=cur_part if new else None,
                     branch=branch,
@@ -10056,7 +9784,7 @@ class ParquetWarehouse:
         # version — the same snapshot tgt reads.  The NMBS clause keeps
         # the full read: it is about rows the source does NOT have.
         t_join = tgt
-        if head_mi is not None and "schemas" in head_mi:
+        if head_mi is not None:
             try:
                 rec = {
                     f["name"]: f["type"]
@@ -10157,9 +9885,8 @@ class ParquetWarehouse:
                             version=head_mi["version"], branch=branch,
                         )
             except (KeyError, ValueError, TypeError):
-                # expected shapes: legacy heads without per-sid schema
-                # records, unparsable/unprunable range types — pruning is
-                # an optimization, never required
+                # expected shapes: unparsable/unprunable range types —
+                # pruning is an optimization, never required
                 t_join = tgt
             except Exception as exc:  # pragma: no cover - environment
                 # a genuine driver/job failure during the envelope
@@ -10427,26 +10154,16 @@ class ParquetWarehouse:
 
     def show_create_table(self, schema: str, table: str, config=None) -> str:
         """SHOW CREATE TABLE equivalent (reference README.md:50,83): emits
-        the Iceberg DDL this table maps to; falls back to the observed
-        parquet schema when no TableConfig is given."""
+        the Iceberg DDL this table maps to; falls back to the recorded
+        schema when no TableConfig is given."""
         meta = self.table_meta(schema, table)
         if config is not None:
             return iceberg_ddl(config, table, meta.codec, meta.level)
-        fields: list[tuple[str, str]] | None = None
+        # metadata-only: the recorded CURRENT schema (reflects
+        # add/rename/drop/widen), zero data IO
+        fields = [(f["name"], f["type"]) for f in self.table_schema(schema, table)]
         head = self._head_light(schema, table)
         part_list = self._head_partitioning(meta, head)
-        if head is not None and "schemas" in head:
-            # metadata-only: the recorded CURRENT schema (reflects
-            # add/rename/drop/widen), zero data IO
-            fields = [
-                (f["name"], f["type"])
-                for f in head["schemas"][str(head["schema_id"])]
-            ]
-        if fields is None:
-            df = self.read(schema, table)
-            fields = [
-                (f.name, f.dataType.simpleString()) for f in df.schema.fields
-            ]
         cols = ",\n  ".join(f"{n} {t}" for n, t in fields)
         props = {
             "write.parquet.compression-codec": meta.codec,

@@ -11,9 +11,6 @@
   medium): a concurrent DDL between the rewrite's read and its CAS
   publish now RAISES instead of stamping old-name files with the
   post-rename schema id (which would silently NULL-fill on read).
-- ``update_where`` on a LEGACY pre-schema table validates assignment
-  column names against the read frame (ADVICE r7 low): a misspelled
-  column raises instead of committing a no-op full rewrite.
 - ``tags()`` skips a tag file deleted by a concurrent ``drop_tag``
   between listdir and open (ADVICE r7 low).
 - ``update_where(count_matched=False)`` keeps the zero-match no-op
@@ -24,7 +21,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -158,49 +154,6 @@ def test_scoped_optimize_raises_on_concurrent_ddl(spark, tmp_path, monkeypatch):
     _ddl_mid_rewrite(monkeypatch)
     with pytest.raises(RuntimeError, match="concurrent schema change"):
         wh.optimize("lab", "sco", partition_filter={"day": ["2024-01-01"]})
-
-
-# --- legacy update_where assignment validation ----------------------------
-
-
-def _make_legacy_table(spark, wh, table):
-    wh.create_table("lab", table, "zstd", 1, properties={"snapshots": "true"})
-    spark.createDataFrame([(10,), (20,)], "id bigint").coalesce(1).write.parquet(
-        os.path.join(wh._tdir("lab", table), "data", "b0", "g_x")
-    )
-    p = next(
-        os.path.join(b, f)
-        for b, _d, fs in os.walk(os.path.join(wh._tdir("lab", table), "data"))
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    snap_dir = wh._snap_dir("lab", table)
-    os.makedirs(snap_dir, exist_ok=True)
-    st = os.stat(p)
-    rel = os.path.relpath(p, wh._tdir("lab", table))
-    with open(os.path.join(snap_dir, "v000001.json"), "w") as f:
-        json.dump(
-            {
-                "version": 1, "parent": None, "operation": "append",
-                "files": [{"path": rel, "bytes": st.st_size, "rows": 2,
-                           "mtime_ns": st.st_mtime_ns}],
-                "total_rows": 2, "total_bytes": st.st_size,
-            },
-            f,
-        )
-
-
-def test_legacy_update_unknown_column_raises(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    _make_legacy_table(spark, wh, "leg")
-    with pytest.raises(ValueError, match="idd"):
-        wh.update_where("lab", "leg", "id = 10", {"idd": "5"})
-    # nothing was committed — the no-op full rewrite is gone
-    assert wh._head_light("lab", "leg")["version"] == 1
-    # a valid legacy update still works
-    out = wh.update_where("lab", "leg", "id = 10", {"id": "id + 1"})
-    assert out["rows_matched"] == 1
-    assert {r.id for r in wh.read("lab", "leg").collect()} == {11, 20}
 
 
 # --- tags() vs concurrent drop_tag ----------------------------------------

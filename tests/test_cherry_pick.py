@@ -523,41 +523,6 @@ def test_merge_branch_resumes_past_expired_provenance(cp_table, spark):
     assert got.count() == 23
 
 
-def test_legacy_head_seq_base_recovers_from_refs(cp_table, spark):
-    """ADVICE r10 (low): a LEGACY head (no last_seq) written by a
-    pre-upgrade fast_forward carries entries with branch seqs ABOVE its
-    version; defaulting seq to version+1 would stamp the next equality
-    delete BELOW them and it would silently skip the carried rows.
-    _seq_base must recover the counter from the refs (max_seq) or, for
-    refs predating max_seq, from one cached segment parse."""
-    import json as _json
-
-    wh = cp_table  # main at v2, seqs 1..2
-    wh.create_branch("lab", "cpt", "legacy")
-    for i in range(3):  # branch seqs 3,4,5
-        _mk_branch_append(wh, spark, "legacy", [(400 + i, "b")], f"bl{i}")
-    wh.fast_forward("lab", "cpt", "legacy")  # main v3, last_seq 5
-    head_path = os.path.join(wh._snap_dir("lab", "cpt"), "v000003.json")
-    with open(head_path) as f:
-        head = _json.load(f)
-    assert head["last_seq"] == 5
-    # simulate a pre-upgrade publish: strip last_seq AND ref max_seq
-    del head["last_seq"]
-    for r in head["segments"]:
-        r.pop("max_seq", None)
-    os.unlink(head_path)  # hard-linked CAS artifact; rewrite in place
-    with open(head_path, "w") as f:
-        _json.dump(head, f)
-    wh._seg_cache.clear()
-    assert wh._seq_base("lab", "cpt", head) == 5  # not version (3)
-    # the eq delete must now out-sequence the carried entries
-    wh.delete_by_keys("lab", "cpt", [(401,)], ["id"])
-    got = wh.read("lab", "cpt")
-    assert got.filter(F.col("id") == 401).count() == 0  # no seq skew
-    assert got.count() == 22
-    assert wh.head_snapshot("lab", "cpt")["last_seq"] == 6
-
-
 def test_picked_pos_delete_does_not_fool_count_arithmetic(cp_table, spark):
     """Review r11 #1: a cherry-picked pos delete keeps a BRANCH-timeline
     rv_seq while its seq is re-stamped onto main's — left in place, the

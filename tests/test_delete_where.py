@@ -415,27 +415,6 @@ def test_count_rows_falls_back_when_arithmetic_could_lie(day_table, monkeypatch)
     assert calls, "pending eq delete must fall back to the read"
 
 
-def test_count_rows_legacy_entry_falls_back(day_table):
-    """A pos entry without target_counts (pre-r11) can't subtract —
-    falls back, still exact."""
-    import json
-
-    wh = day_table
-    wh.delete_where("lab", "deltab", "v = 2", mode="merge-on-read")
-    # strip target_counts from the delete segment (simulate legacy)
-    head = wh._head_light("lab", "deltab")
-    ref = head["delete_segments"][0]
-    p = os.path.join(wh._snap_dir("lab", "deltab"), ref["path"])
-    with open(p) as f:
-        seg = json.load(f)
-    for d in seg["files"]:
-        d.pop("target_counts", None)
-    with open(p, "w") as f:
-        json.dump(seg, f)
-    wh._seg_cache.pop(p, None)
-    assert wh.count_rows("lab", "deltab") == 27
-
-
 def test_count_rows_branch_and_empty(day_table, spark):
     wh = day_table
     wh.create_branch("lab", "deltab", "wip")
@@ -446,23 +425,6 @@ def test_count_rows_branch_and_empty(day_table, spark):
     assert wh.count_rows("lab", "deltab") == 30  # main untouched
     with pytest.raises(ValueError, match="no branch"):
         wh.count_rows("lab", "deltab", branch="ghost")
-
-
-def test_count_rows_legacy_head_without_total_rows(day_table):
-    """Review r11 #2: a legacy segmented head with no total_rows must
-    sum the segment refs' rows, not silently report 0."""
-    import json
-
-    wh = day_table
-    v = wh._latest_version("lab", "deltab")
-    p = os.path.join(wh._snap_dir("lab", "deltab"), f"v{v:06d}.json")
-    with open(p) as f:
-        head = json.load(f)
-    del head["total_rows"]
-    os.unlink(p)
-    with open(p, "w") as f:
-        json.dump(head, f)
-    assert wh.count_rows("lab", "deltab") == 30
 
 
 def test_count_rows_metadata_only_mode_and_log_report(day_table, monkeypatch):

@@ -326,7 +326,7 @@ def test_concurrent_rewrite_does_not_lose_eq_delete(eq_table, spark):
     head = wh._load_head_light("lab", "eqt", v_read)
     kdf = spark.createDataFrame([(7,)], "id int")
     _root, del_entries = wh._write_eq_deletes(
-        "lab", "eqt", kdf, ["id"], None, {"id": {"set": [7]}}
+        "lab", "eqt", kdf, ["id"], [1], {"id": {"set": [7]}}
     )
     # a concurrent optimize() folds every candidate into new files
     # BETWEEN this delete's read and its commit
@@ -347,7 +347,7 @@ def test_concurrent_rewrite_does_not_lose_eq_delete(eq_table, spark):
     v2 = wh._latest_version("lab", "eqt")
     _root2, del2 = wh._write_eq_deletes(
         "lab", "eqt", spark.createDataFrame([(100,)], "id int"),
-        ["id"], None, {"id": {"set": [100]}},
+        ["id"], [1], {"id": {"set": [100]}},
     )
     wh.append(
         "lab", "eqt",
@@ -393,9 +393,11 @@ def test_widen_after_pending_delete_and_legacy_entries_still_apply(
     """r15 explicit-schema delete reads (eq_types): a pending eq delete
     whose parquet stores the PRE-widen type must keep applying after
     update_column_type (the read passes the WRITE-time schema, then
-    casts to the current type — never the other way around), and a
-    pre-r15 entry with no eq_types (stripped here) must fall back to
-    the inference read with identical results."""
+    casts to the current type — never the other way around), and an
+    entry with no eq_types (what a local-key write records for a key
+    type without an unambiguous parquet mapping, e.g. a timestamp;
+    stripped here) must fall back to the inference read with identical
+    results."""
     wh = eq_table
     wh.delete_by_keys("lab", "eqt", [3, 41], eq_cols=["id"])
     head = wh.head_snapshot("lab", "eqt")
@@ -405,29 +407,19 @@ def test_widen_after_pending_delete_and_legacy_entries_still_apply(
     got = {r["id"] for r in wh.read("lab", "eqt").collect()}
     assert 3 not in got and 41 not in got and len(got) == 58
     assert all(isinstance(i, int) for i in got)
-    # strip eq_types in the head on disk -> legacy inference path
+    # strip eq_types from the delete segment -> inference read path
     import json as _json
     import os as _os
 
-    v = wh._latest_version("lab", "eqt")
-    hp = _os.path.join(wh._ref_dir("lab", "eqt"), f"v{v:06d}.json")
-    with open(hp) as f:
-        h = _json.load(f)
-    # deletes may live inline or in delete segments; strip wherever
     changed = False
-    for d in h.get("deletes", []):
-        changed |= d.pop("eq_types", None) is not None
-    if not changed:
-        for ref in h.get("delete_segments", []):
-            sp = _os.path.join(wh._snap_dir("lab", "eqt"), ref["path"])
-            with open(sp) as f:
-                seg = _json.load(f)
-            for d in seg["files"]:
-                changed |= d.pop("eq_types", None) is not None
-            with open(sp, "w") as f:
-                _json.dump(seg, f)
-    with open(hp, "w") as f:
-        _json.dump(h, f)
+    for ref in wh._head_light("lab", "eqt")["delete_segments"]:
+        sp = _os.path.join(wh._snap_dir("lab", "eqt"), ref["path"])
+        with open(sp) as f:
+            seg = _json.load(f)
+        for d in seg["files"]:
+            changed |= d.pop("eq_types", None) is not None
+        with open(sp, "w") as f:
+            _json.dump(seg, f)
     assert changed
     wh2 = ParquetWarehouse(spark, wh.root)  # fresh caches
     got2 = {r["id"] for r in wh2.read("lab", "eqt").collect()}

@@ -323,57 +323,6 @@ def test_bootstrap_crash_between_checkpoint_and_refresh(spark, tmp_path):
     assert _mv_rows(wh) == _expected(wh)
 
 
-def _strip_schemas(wh, schema, table):
-    """Rewrite the head in place to the legacy pre-schema shape so
-    touched_keys returns None and the maintainer's fallback engages."""
-    import os as _os
-
-    v = wh._latest_version(schema, table)
-    hp = _os.path.join(wh._ref_dir(schema, table), f"v{v:06d}.json")
-    with open(hp) as f:
-        h = json.load(f)
-    h.pop("schemas", None)
-    h.pop("schema_id", None)
-    with open(hp, "w") as f:
-        json.dump(h, f)
-
-
-def test_legacy_fallback_honors_superset_contract(spark, tmp_path):
-    """ADVICE r15: the legacy pre-schema fallback used to return the
-    row-exact NET changelog, which cancels an added-then-deleted key to
-    an EMPTY frame while superset_changelog's head-JSON proof says rows
-    were added.  The fallback now reduces the net=False changelog to
-    the keys-only shape, so the cancelled key still surfaces (its
-    refresh is a harmless no-op) and the contract holds."""
-    wh = _mk(spark, tmp_path, "sup")
-    ckpt = str(tmp_path / "sup" / "ck.json")
-    wh.append(
-        "lab", "src",
-        spark.createDataFrame([(1, 10, 1, 100)], SCHEMA),
-        batch_id="b0",
-    )
-    _tick(wh, ckpt)  # bootstrap
-    # one window: key 9 appended THEN deleted (net cancels to nothing),
-    # key 1 untouched
-    wh.append(
-        "lab", "src",
-        spark.createDataFrame([(9, 10, 2, 900)], SCHEMA),
-        batch_id="b1",
-    )
-    wh.delete_where("lab", "src", "k = 9", mode="merge-on-read")
-    _strip_schemas(wh, "lab", "src")
-    wh2 = ParquetWarehouse(spark, wh.root)  # fresh caches
-    out = maintain_keep_latest_mv(
-        wh2, ("lab", "src"), ("lab", "mv"), ["k"],
-        ts_col="ts", tie_col="eid", checkpoint_file=ckpt,
-    )
-    # the cancelled key flowed through the fallback keys frame (the old
-    # net=True fallback delivered an empty frame here)
-    assert out["delivered"] is True
-    assert out["keys_refreshed"] == 1
-    assert _mv_rows(wh2) == _expected(wh2) == [(1, 10, 1, 100)]
-
-
 def test_merge_upsert_binary_key(spark, tmp_path):
     """ADVICE r15: binary key columns collect as bytearray (unhashable)
     — they must route to the Spark-aggregate stats path instead of the

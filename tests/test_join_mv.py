@@ -264,42 +264,6 @@ def test_randomized_two_sided_dml_converges(spark, tmp_path_factory, ops):
     assert _mv_rows(wh) == _expected(wh)
 
 
-def test_legacy_pre_schema_side_falls_back_row_exact(spark, tmp_path):
-    """A side whose head predates recorded schemas (touched_keys ->
-    None) must fall back to the row-exact changelog transparently —
-    the tick still converges."""
-    wh = _mk(spark, tmp_path, "jlg")
-    d = str(tmp_path / "jlg")
-    _tick(wh, d)
-    wh.merge_upsert(
-        "lab", "l",
-        spark.createDataFrame([(2, 1, 500, 202)], L_SCHEMA),
-        ["k"], mode="merge-on-read",
-    )
-    # strip the LEFT head's recorded schemas in place (legacy shape)
-    import os as _os
-
-    v = wh._latest_version("lab", "l")
-    hp = _os.path.join(wh._ref_dir("lab", "l"), f"v{v:06d}.json")
-    with open(hp) as f:
-        h = json.load(f)
-    h.pop("schemas", None)
-    h.pop("schema_id", None)
-    with open(hp, "w") as f:
-        json.dump(h, f)
-    wh2 = ParquetWarehouse(spark, wh.root)  # fresh caches
-    out = maintain_join_mv(
-        wh2, ("lab", "l"), ("lab", "r"), ("lab", "mv"), ["k"],
-        ts_col="ts", tie_col="eid",
-        checkpoint_left=f"{d}/ckl.json", checkpoint_right=f"{d}/ckr.json",
-    )
-    assert out["left"]["delivered"] is True
-    got = sorted(
-        (r["k"], r["lv"], r["rv"]) for r in wh2.read("lab", "mv").collect()
-    )
-    assert (2, 202, "r2") in got
-
-
 def test_left_outer_lifecycle(spark, tmp_path):
     """VERDICT r15 #1 — the enrichment shape: a surviving LEFT row with
     no right match carries NULL right values; a right row arriving

@@ -1054,18 +1054,14 @@ def test_age_based_snapshot_expiry(spark, tmp_path):
         p = os.path.join(snap_dir, f"v{version:06d}.json")
         with open(p) as f:
             h = _json.load(f)
-        if ts is None:
-            h.pop("ts", None)
-        else:
-            h["ts"] = ts
+        h["ts"] = ts
         with open(p, "w") as f:
             _json.dump(h, f)
 
     old = time.time() - 7200
     set_ts(1, old)
     set_ts(2, old)
-    set_ts(3, None)  # legacy head: no commit time -> conservatively kept
-    # v4 recent, v5 head
+    # v3 and v4 recent (their own commit times), v5 head
     removed = wh.expire_snapshots(cfg.schema, table, keep_last=1, older_than_s=3600)
     assert removed == 2  # v1, v2 only
     assert wh._snapshot_versions(cfg.schema, table) == [3, 4, 5]
@@ -1074,11 +1070,11 @@ def test_age_based_snapshot_expiry(spark, tmp_path):
     # keep_last floor: even ancient heads survive inside it
     set_ts(5, old)
     removed = wh.expire_snapshots(cfg.schema, table, keep_last=1, older_than_s=3600)
-    assert removed == 0  # v3 has no ts, v4 recent, v5 is the kept head
+    assert removed == 0  # v3, v4 recent, v5 is the kept head
     assert wh._snapshot_versions(cfg.schema, table) == [3, 4, 5]
 
     # TIMESTAMP AS OF: newest snapshot committed at or before the instant;
-    # v3 (no ts) is skipped, a future-dated v5 is not yet visible
+    # a future-dated v5 is not yet visible
     import datetime as dt
 
     set_ts(5, time.time() + 10_000)
@@ -1091,56 +1087,6 @@ def test_age_based_snapshot_expiry(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="at or before"):
         wh.read_snapshot_as_of(cfg.schema, table, old - 10_000)
-
-
-def test_legacy_inline_files_head_migrates(spark, tmp_path):
-    """A pre-segment head (inline ``files`` list, the r4/r5 on-disk format)
-    still reads, prunes, and time-travels; the NEXT commit converts it into
-    a real segment and the lineage stays consistent."""
-    import json as _json
-    import os
-
-    cfg = narrow_example_config()
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    table = "legacy"
-    wh.create_table(cfg.schema, table, "zstd", 1, properties={"snapshots": "true"})
-    tdir = wh._tdir(cfg.schema, table)
-    p1 = _tiny_parquet(tdir, "b0", 0)
-    snap_dir = wh._snap_dir(cfg.schema, table)
-    os.makedirs(snap_dir, exist_ok=True)
-    st = os.stat(p1)
-    legacy = {
-        "version": 1,
-        "parent": None,
-        "operation": "append",
-        "files": [
-            {
-                "path": os.path.relpath(p1, tdir),
-                "bytes": st.st_size,
-                "rows": 1,
-                "mtime_ns": st.st_mtime_ns,
-                "bounds": {"id": [0, 0]},
-            }
-        ],
-        "total_rows": 1,
-        "total_bytes": st.st_size,
-    }
-    with open(os.path.join(snap_dir, "v000001.json"), "w") as f:
-        _json.dump(legacy, f)
-
-    assert wh.read(cfg.schema, table).count() == 1
-    kept, total = wh.prune_files(cfg.schema, table, {"id": (0, 0)})
-    assert (len(kept), total) == (1, 1)
-    assert wh.history(cfg.schema, table)[0]["segments"] is None  # legacy marker
-
-    wh.commit_snapshot(
-        cfg.schema, table, "append", add_files=[_tiny_parquet(tdir, "b1", 1)]
-    )
-    head = wh._head_light(cfg.schema, table)
-    assert head["version"] == 2 and len(head["segments"]) == 2  # migrated + new
-    assert head["total_rows"] == 2
-    assert wh.read(cfg.schema, table).count() == 2
-    assert wh.read_snapshot(cfg.schema, table, 1).count() == 1
 
 
 def test_orphaned_segment_files_age_gated_sweep(spark, tmp_path):

@@ -562,8 +562,7 @@ def test_broad_eq_delete_keeps_commits_flat(mor_table, spark):
         head = wh._head_light("lab", "mor")
         # carried verbatim: same ref dict, same segment file
         assert head["delete_segments"] == [ref]
-        # data-segment refs only (each ref carries min_seq AND, since
-        # r11, max_seq — ~18 bytes/ref for _seq_base's legacy recovery)
+        # data-segment refs only (each ref carries min_seq AND max_seq)
         assert head_bytes() - h1 < 700
     # reads still honor the pending delete and the late appends
     got = wh.read("lab", "mor")

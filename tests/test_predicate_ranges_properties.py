@@ -14,6 +14,7 @@ import json
 import os
 import shutil
 import tempfile
+import time
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -27,23 +28,25 @@ _INT_FIELDS = [{"id": 1, "name": "v", "type": "int"}]
 
 
 @contextlib.contextmanager
-def _mk_table(entries: list[dict], schemas=None, schema_id=0):
+def _mk_table(entries: list[dict], schemas, schema_id=0):
     root = tempfile.mkdtemp(prefix="pred_prop_")
     wh = ParquetWarehouse(None, root)
     wh.create_table("lab", "t", "zstd", 1, properties={"snapshots": "true"})
     snap_dir = wh._snap_dir("lab", "t")
     os.makedirs(snap_dir, exist_ok=True)
+    seg = wh._write_segment("lab", "t", [{**e, "seq": 1} for e in entries])
     manifest = {
         "version": 1,
         "parent": None,
         "operation": "append",
-        "files": entries,
-        "total_rows": 0,
-        "total_bytes": 0,
+        "ts": time.time(),
+        "last_seq": 1,
+        "segments": [seg],
+        "total_rows": seg["rows"],
+        "total_bytes": seg["bytes"],
+        "schemas": schemas,
+        "schema_id": schema_id,
     }
-    if schemas is not None:
-        manifest["schemas"] = schemas
-        manifest["schema_id"] = schema_id
     with open(os.path.join(snap_dir, "v000001.json"), "w") as f:
         json.dump(manifest, f)
     try:

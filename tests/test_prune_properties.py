@@ -15,6 +15,7 @@ import json
 import os
 import shutil
 import tempfile
+import time
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -26,22 +27,35 @@ UTC = dt.timezone.utc
 
 @contextlib.contextmanager
 def _mk_log_table(entries: list[dict]):
-    """A throwaway log-mode table whose head manifest lists ``entries``
-    verbatim — prune_files never opens data files, so none exist.
-    Context-managed so hypothesis's hundreds of examples don't litter
-    /tmp with a dir each."""
+    """A throwaway log-mode table whose head's one segment lists
+    ``entries`` verbatim — prune_files never opens data files, so none
+    exist.  Context-managed so hypothesis's hundreds of examples don't
+    litter /tmp with a dir each."""
     root = tempfile.mkdtemp(prefix="prune_prop_")
     wh = ParquetWarehouse(None, root)  # spark unused by pruning paths
     wh.create_table("lab", "t", "zstd", 1, properties={"snapshots": "true"})
     snap_dir = wh._snap_dir("lab", "t")
     os.makedirs(snap_dir, exist_ok=True)
+    seg = wh._write_segment("lab", "t", [{**e, "seq": 1} for e in entries])
+    cols = sorted(
+        {c for e in entries for c in (*e.get("bounds", {}), *e.get("partitions", {}))}
+    )
     manifest = {
         "version": 1,
         "parent": None,
         "operation": "append",
-        "files": entries,
-        "total_rows": 0,
-        "total_bytes": 0,
+        "ts": time.time(),
+        "last_seq": 1,
+        "segments": [seg],
+        "total_rows": seg["rows"],
+        "total_bytes": seg["bytes"],
+        "schemas": {
+            "0": [
+                {"id": i + 1, "name": c, "type": "string"}
+                for i, c in enumerate(cols)
+            ]
+        },
+        "schema_id": 0,
     }
     with open(os.path.join(snap_dir, "v000001.json"), "w") as f:
         json.dump(manifest, f)

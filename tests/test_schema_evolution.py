@@ -426,52 +426,6 @@ def test_show_create_reflects_evolved_schema_metadata_only(spark, tmp_path, monk
     assert "name string" not in ddl
 
 
-def test_legacy_pre_schema_table_stays_schema_less(spark, tmp_path):
-    """Appends to a LEGACY head (live entries, no schemas) must not adopt
-    the write's schema as schema 0 (review finding): the legacy files
-    were never validated against it, and reading them under an explicit
-    schema could fail or silently NULL-fill.  Legacy tables keep the
-    pre-schema read path; DDL on them still raises."""
-    import json as _json
-
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    wh.create_table("lab", "leg", "zstd", 1, properties={"snapshots": "true"})
-    # a legacy file whose physical schema (id BIGINT) differs from what
-    # the next append will write (id INT)
-    spark.createDataFrame([(10,)], "id bigint").coalesce(1).write.parquet(
-        os.path.join(wh._tdir("lab", "leg"), "data", "b0", "g_x")
-    )
-    p = next(
-        os.path.join(b, f)
-        for b, _d, fs in os.walk(os.path.join(wh._tdir("lab", "leg"), "data"))
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    snap_dir = wh._snap_dir("lab", "leg")
-    os.makedirs(snap_dir, exist_ok=True)
-    st = os.stat(p)
-    rel = os.path.relpath(p, wh._tdir("lab", "leg"))
-    with open(os.path.join(snap_dir, "v000001.json"), "w") as f:
-        _json.dump(
-            {
-                "version": 1, "parent": None, "operation": "append",
-                "files": [{"path": rel, "bytes": st.st_size, "rows": 1,
-                           "mtime_ns": st.st_mtime_ns}],
-                "total_rows": 1, "total_bytes": st.st_size,
-            },
-            f,
-        )
-    wh.append(
-        "lab", "leg", spark.createDataFrame([(2,)], "id int"), batch_id="b1"
-    )
-    head = wh._head_light("lab", "leg")
-    assert "schemas" not in head  # stayed schema-less
-    # the mixed-physical-type read still works exactly as pre-r07
-    assert {r.id for r in wh.read("lab", "leg").collect()} == {10, 2}
-    with pytest.raises(ValueError, match="no recorded schema"):
-        wh.add_column("lab", "leg", "x", "int")
-
-
 def test_rewrite_manifests_carries_schemas(spark, tmp_path):
     """Metadata segment compaction must not drop the schema record (the
     randomized model test found exactly this: entries keep their sids, so

@@ -69,14 +69,12 @@ OPS = st.lists(
                 # prunes targets, replay prunes by prefix, DDL/rewrite
                 # carry verbatim, expiry GCs unreferenced delete files)
                 "mor_delete",
-                # equality delete commits ride the same carry rules with
-                # kind="eq" entries (key VALUES, no positions); the legacy
-                # r08 shape carries explicit targets
-                "eq_delete",
-                # r09 seq-scoped equality delete: NO stored targets — it
-                # applies to every file live at its commit (lower seq) and
-                # is retired by the fold exactly when the last of them is
-                # dropped (min_live_seq >= entry seq)
+                # seq-scoped equality delete (kind="eq", key VALUES, no
+                # positions, NO stored targets): it applies to every file
+                # live at its commit (lower seq) and is retired by the
+                # fold exactly when the last of them is dropped
+                # (min_live_seq >= entry seq).  It keys on field id 1, so
+                # dropping that field refuses while one is pending.
                 "eq_delete_seq",
                 # r09 branches: fork, stage commits, publish or drop —
                 # branch file sets must track their own model, expiry must
@@ -152,6 +150,13 @@ def test_random_op_sequences_match_model(ops):
         def cur_fields():
             return [{"name": f["name"], "type": f["type"]} for f in schema_model]
 
+        def key_field_live() -> bool:
+            # the first appended field (id 1) is what eq deletes key on;
+            # rename keeps the dict, drop removes it
+            return bool(key_field) and any(f is key_field[0] for f in schema_model)
+
+        key_field: list[dict] = []  # [the model dict of field id 1]
+
         def check():
             head = wh.head_snapshot("lab", "t")
             if not model:
@@ -208,6 +213,7 @@ def test_random_op_sequences_match_model(ops):
                 ]
                 if not schema_model:
                     schema_model.append({"name": "id", "type": "bigint"})
+                    key_field.append(schema_model[0])
                 wh.commit_snapshot(
                     "lab", "t", "append", add_files=files,
                     drop_prefix=os.path.join(tdir, "data", batch) + os.sep,
@@ -268,6 +274,15 @@ def test_random_op_sequences_match_model(ops):
                             wh.drop_column("lab", "t", f["name"])
                         ddl_epoch -= 1  # nothing committed
                         continue  # refused: no commit to assert on
+                    elif key_field and f is key_field[0] and seq_dels_model:
+                        import pytest as _pytest
+
+                        with _pytest.raises(
+                            ValueError, match="pending equality delete"
+                        ):
+                            wh.drop_column("lab", "t", f["name"])
+                        ddl_epoch -= 1  # nothing committed
+                        continue
                     else:
                         wh.drop_column("lab", "t", f["name"])
                         schema_model.remove(f)
@@ -331,32 +346,11 @@ def test_random_op_sequences_match_model(ops):
                         "rows": len(targets),
                         "kind": "pos",
                         "targets": targets,
+                        "target_counts": {t: 1 for t in targets},
                     }],
                 )
                 dels_model[rel] = set(targets)
-            elif op == "eq_delete" and model:
-                targets = sorted(model)[pick % len(model):][:2]
-                d = os.path.join(tdir, "deletes", f"eq_{counter:03d}")
-                os.makedirs(d, exist_ok=True)
-                dp = os.path.join(d, "part-0.parquet")
-                pq.write_table(
-                    pa.table({"id": pa.array([pick], pa.int64())}), dp
-                )
-                rel = os.path.relpath(dp, tdir)
-                wh.commit_snapshot(
-                    "lab", "t", "delete",
-                    add_files=[],
-                    add_deletes=[{
-                        "path": rel,
-                        "bytes": os.stat(dp).st_size,
-                        "rows": 1,
-                        "kind": "eq",
-                        "eq_cols": ["id"],
-                        "targets": targets,
-                    }],
-                )
-                dels_model[rel] = set(targets)
-            elif op == "eq_delete_seq" and model:
+            elif op == "eq_delete_seq" and model and key_field_live():
                 d = os.path.join(tdir, "deletes", f"eqs_{counter:03d}")
                 os.makedirs(d, exist_ok=True)
                 dp = os.path.join(d, "part-0.parquet")
@@ -374,6 +368,7 @@ def test_random_op_sequences_match_model(ops):
                         "kind": "eq",
                         "eq_cols": ["id"],
                         "key_ranges": {"id": {"set": [pick]}},
+                        "eq_ids": [1],
                     }],
                 )
                 # applies to every file live at commit (all lower seq)
@@ -640,9 +635,17 @@ def test_random_op_sequences_match_model(ops):
                 if len(vs) < 2 or not cands:
                     continue
                 v = cands[pick % len(cands)]
+                files, dels, seqd = states[v]
+                if seqd and not key_field_live():
+                    import pytest as _pytest
+
+                    # a restored pending eq delete would key on a field
+                    # dropped since
+                    with _pytest.raises(ValueError, match="dropped from"):
+                        wh.rollback_to_snapshot("lab", "t", v)
+                    continue
                 out = wh.rollback_to_snapshot("lab", "t", v)
                 assert out["rolled_back_to"] == v
-                files, dels, seqd = states[v]
                 model.clear()
                 model |= set(files)
                 dels_model.clear()

@@ -8,13 +8,12 @@ by default.  Pinned here:
   covering eq deletes, NON-covering eq deletes, CoW rewrites);
 - TIGHTNESS (exact equality) for windows of covering ops only;
 - compaction contributes nothing; rollback raises; empty windows give
-  an empty keyed frame; legacy pre-schema heads return None.
+  an empty keyed frame.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
 import pytest
 
@@ -187,20 +186,6 @@ def test_spec_ddl_in_window(spark, tmp_path):
     wh.drop_partition_field("lab", "t", "k")
     v2 = wh._latest_version("lab", "t")
     assert _keys(wh.touched_keys("lab", "t", v1, v2, ["k"])) == []
-
-
-def test_legacy_pre_schema_head_returns_none(spark, tmp_path):
-    wh = _mk(spark, tmp_path)
-    v = wh._latest_version("lab", "t")
-    # fabricate a legacy head: strip the recorded schemas in place
-    hp = os.path.join(wh._ref_dir("lab", "t"), f"v{v:06d}.json")
-    with open(hp) as f:
-        h = json.load(f)
-    h.pop("schemas", None)
-    h.pop("schema_id", None)
-    with open(hp, "w") as f:
-        json.dump(h, f)
-    assert wh.touched_keys("lab", "t", v - 1, v, ["k"]) is None
 
 
 def test_changelog_fn_failure_leaves_checkpoint_untouched(spark, tmp_path):
