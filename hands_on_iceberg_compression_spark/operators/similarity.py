@@ -473,6 +473,18 @@ def q_knn_vectorized(spark: SparkSession, sf: str) -> DataFrame:
 KMEANS_ITERS = 2
 
 
+def _centroid_frame(spark: SparkSession, centroids: list[tuple[int, list]]) -> DataFrame:
+    """(centroid_id bigint, c_u array<double>) as an Arrow local relation:
+    it plans as LocalTableScan, so broadcasting it starts no Python
+    workers (a Python-list frame is a pickled RDD)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "centroid_id": pa.array([c for c, _v in centroids], pa.int64()),
+        "c_u": pa.array([v for _c, v in centroids], pa.list_(pa.float64())),
+    }))
+
+
 def q_ann_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     """IVF with Lloyd-refined centroids: KMEANS_ITERS distributed k-means
     steps (assign via broadcast argmin, re-center via posexplode +
@@ -496,9 +508,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     centroids = [(i, list(r.u)) for i, r in enumerate(centroids_rows)]
 
     for _ in range(KMEANS_ITERS):
-        c_df = F.broadcast(
-            unit.sparkSession.createDataFrame(centroids, ["centroid_id", "c_u"])
-        )
+        c_df = F.broadcast(_centroid_frame(unit.sparkSession, centroids))
         sim = _dot(F.col("u"), F.col("c_u"))
         assigned = (
             unit.crossJoin(c_df)
@@ -516,9 +526,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
         new = {r.centroid_id: list(r.c_u) for r in means.collect()}
         centroids = [(cid, new.get(cid, vec)) for cid, vec in centroids]
 
-    c_df = F.broadcast(
-        unit.sparkSession.createDataFrame(centroids, ["centroid_id", "c_u"])
-    )
+    c_df = F.broadcast(_centroid_frame(unit.sparkSession, centroids))
     sim_c = _dot(F.col("u"), F.col("c_u"))
     listed = (
         unit.crossJoin(c_df)
@@ -708,11 +716,15 @@ def q_pca_topcomponent(spark: SparkSession, sf: str) -> DataFrame:
     if v[int(np.argmax(np.abs(v)))] < 0:
         v = -v
 
-    rows = [
-        (int(i), round(float(v[i]), 6), round(float(mean[i]), 6), round(eigval, 6))
-        for i in range(d)
-    ]
-    return spark.createDataFrame(rows, ["dim", "pc1_loading", "mean_val", "eigval"])
+    import pyarrow as pa
+
+    # an Arrow local relation, like the k-means centroids above
+    return spark.createDataFrame(pa.table({
+        "dim": pa.array(range(d), pa.int64()),
+        "pc1_loading": pa.array([round(float(x), 6) for x in v], pa.float64()),
+        "mean_val": pa.array([round(float(x), 6) for x in mean], pa.float64()),
+        "eigval": pa.array([round(eigval, 6)] * d, pa.float64()),
+    }))
 
 
 _COS_SQL = "list_cosine_similarity(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"

@@ -3114,16 +3114,24 @@ class ParquetWarehouse:
         # the per-ROW decode projection (``_POS_REL``) is never
         # referenced — Catalyst prunes it away entirely.  Special-char
         # paths fall back to the decode join (uri_of is None).
+        # The small join-side frames built here and in _apply_eq_deletes
+        # come from Arrow tables: they plan as LocalTableScan and run in
+        # the JVM, whereas a Python-list frame is a pickled RDD whose
+        # every action starts Python worker processes.
         tdir = self._tdir(schema, table)
         uri_of = self._predict_uris(tdir, sorted(hot_paths))
         if pos_dels:
             tuples = self._delete_tuples(schema, table, pos_dels)
             if uri_of is not None:
+                import pyarrow as pa
+
                 # normalize the SMALL side: map the tuples' manifest-
                 # relative paths to scan URIs with one broadcast join
-                m = self.spark.createDataFrame(
-                    sorted(uri_of.items()), "file_path string, __mor_uri string"
-                )
+                pairs = sorted(uri_of.items())
+                m = self.spark.createDataFrame(pa.table({
+                    "file_path": pa.array([p for p, _u in pairs], pa.string()),
+                    "__mor_uri": pa.array([u for _p, u in pairs], pa.string()),
+                }))
                 tuples = tuples.join(F.broadcast(m), "file_path").select(
                     F.col("__mor_uri").alias("file_path"), "pos"
                 )
@@ -3507,18 +3515,21 @@ class ParquetWarehouse:
                     k_of[p] = i
         # URI-safe fast path: key the per-file index on the RAW scan URI
         # (driver-predicted, see _predict_uris) so no per-row decode of
-        # ``_metadata.file_path`` is ever evaluated
+        # ``_metadata.file_path`` is ever evaluated.  The index frame is
+        # an Arrow local relation (LocalTableScan), so the read starts no
+        # Python workers (see _read_entries).
+        import pyarrow as pa
+
         if uri_of is not None:
-            fs = self.spark.createDataFrame(
-                sorted((uri_of[p], k) for p, k in k_of.items()),
-                f"__eq_path string, {self._EQ_K} int",
-            )
+            pairs = sorted((uri_of[p], k) for p, k in k_of.items())
             join_col = self._POS_FILE
         else:
-            fs = self.spark.createDataFrame(
-                sorted(k_of.items()), f"__eq_path string, {self._EQ_K} int"
-            )
+            pairs = sorted(k_of.items())
             join_col = self._POS_REL
+        fs = self.spark.createDataFrame(pa.table({
+            "__eq_path": pa.array([p for p, _k in pairs], pa.string()),
+            self._EQ_K: pa.array([k for _p, k in pairs], pa.int32()),
+        }))
         df = df.join(
             F.broadcast(fs),
             F.col(join_col) == F.col("__eq_path"),
@@ -9332,7 +9343,9 @@ class ParquetWarehouse:
                 *([F.col(delete_col)] if delete_col is not None else []),
                 *cast_exprs,
             )
-            sample = probe.limit(
+            # coalesce(1): one job; a bare CollectLimit scans partition 0
+            # first and the rest in a second job.  Same rows, same order.
+            sample = probe.coalesce(1).limit(
                 self.MOR_LOCAL_DELETE_KEYS_MAX + 1
             ).collect()
             if len(sample) > self.MOR_LOCAL_DELETE_KEYS_MAX:

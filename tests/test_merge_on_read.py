@@ -391,7 +391,36 @@ def test_mor_update_then_duckdb_check(mor_table):
     assert got == [tuple(r) for r in expected]
 
 
-def test_mor_deletes_on_special_char_partition_values(spark, tmp_path):
+def _assert_no_python_rdd_scan(wh, schema, table, cond, monkeypatch):
+    """The executed plans of ``read``, ``read_where`` and the
+    ``count_rows`` fallback hold no ``Scan ExistingRDD``: every join-side
+    frame the merge-on-read read builds on the driver is an Arrow local
+    relation (LocalTableScan), so none of these reads starts Python
+    workers."""
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "Scan ExistingRDD" not in plan(wh.read(schema, table))
+    assert "Scan ExistingRDD" not in plan(wh.read_where(schema, table, cond))
+    counted = []
+    real_read = ParquetWarehouse.read
+
+    def read(self, *a, **k):
+        df = real_read(self, *a, **k)
+        counted.append(df)
+        return df
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetWarehouse, "read", read)
+        assert wh.count_rows(schema, table, fallback=False) is None
+        wh.count_rows(schema, table)
+    assert len(counted) == 1  # the fallback's delete-applied read
+    assert "Scan ExistingRDD" not in plan(counted[0].groupBy().count())
+
+
+def test_mor_deletes_on_special_char_partition_values(
+    spark, tmp_path, monkeypatch
+):
     """Regression (round 8): ``_metadata.file_path`` is a URI and
     percent-encodes the on-disk hive-escaped partition dirs ONE MORE
     time ('grp=a b' scans as 'grp=a%20b', 'grp=p%25q' as 'grp=p%2525q')
@@ -421,6 +450,8 @@ def test_mor_deletes_on_special_char_partition_values(spark, tmp_path):
     assert r["delete_files_added"] >= 1
     got = {r.id for r in wh.read("lab", "sp").select("id").collect()}
     assert got == set(range(24)) - {0, 1, 2, 3, 4, 5, 6}
+    # both delete kinds pending on the decode path (uri_of is None)
+    _assert_no_python_rdd_scan(wh, "lab", "sp", "id BETWEEN 0 AND 12", monkeypatch)
     # fold and re-check: optimize read the delete-applied rows
     wh.optimize("lab", "sp")
     assert wh.head_snapshot("lab", "sp").get("deletes", []) == []
@@ -457,6 +488,7 @@ def test_uri_fastpath_matches_decode_path(spark, tmp_path, monkeypatch):
     assert wh._uri_predictable[1] is True
     plan = wh.read("lab", "uf")._jdf.queryExecution().executedPlan().toString()
     assert "url_decode" not in plan  # no per-row decode in the fast plan
+    _assert_no_python_rdd_scan(wh, "lab", "uf", "id BETWEEN 0 AND 20", monkeypatch)
     # a probe mismatch pins the decode fallback permanently
     import os as _os
 
@@ -469,10 +501,31 @@ def test_uri_fastpath_matches_decode_path(spark, tmp_path, monkeypatch):
     )
     slow = sorted(r.id for r in wh.read("lab", "uf").collect())
     assert fast == slow == sorted(set(range(30)) - {1, 2, 3, 4})
+    _assert_no_python_rdd_scan(wh, "lab", "uf", "id BETWEEN 0 AND 20", monkeypatch)
     monkeypatch.undo()
     # special-char partition values force the fallback
     assert wh._predict_uris("/tmp/x", ["data/b/grp=a%20b/f.parquet"]) is None
     assert wh._predict_uris("/tmp/x", ["data/b/grp=a b/f.parquet"]) is None
+
+
+def test_mor_upsert_launches_three_jobs(mor_table, spark):
+    """A small merge-on-read upsert runs three Spark jobs.  Its key probe
+    collects through ``coalesce(1)``: a bare ``limit().collect()`` scans
+    partition 0 first and the other partitions in a second job."""
+    wh = mor_table
+    sc = spark.sparkContext
+    for i in range(2):  # the second upsert also meets a pending delete
+        # a scan-shaped batch, like a generated one (a shuffle would add
+        # its own adaptive stage jobs)
+        updates = spark.range(5 * i, 5 * i + 8).selectExpr(
+            "CAST(id AS INT) AS id", "9 AS k", "'up' AS u"
+        )
+        group = f"mor_upsert_{i}"
+        sc.setJobGroup(group, group)
+        wh.merge_upsert("lab", "mor", updates, ["id"], mode="merge-on-read")
+        sc.setJobGroup("other", "other")
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert wh.count_rows("lab", "mor") == 60
 
 
 def test_rewrite_read_version_fences_concurrent_mor_delete(mor_table, spark):
