@@ -162,7 +162,8 @@ def _cmd_spec_report(args: argparse.Namespace) -> int:
     if head and (head.get("deletes") or head.get("delete_segments")):
         print(
             "note: rows are write-time counts; pending merge-on-read "
-            "deletes are not subtracted (log-report shows live rows)"
+            "deletes are not subtracted (log-report subtracts their "
+            "recorded per-file counts and shows live rows)"
         )
     return 0
 
@@ -650,7 +651,7 @@ def _cmd_mv_report(args: argparse.Namespace) -> int:
     auto = _resolve_agg_mv_mode(wh, mschema, mtable, "auto")
     print(
         f"mv {args.mv}: head v{mv_v}  "
-        f"rows={'unknown (pending eq deletes)' if rows is None else rows}  "
+        f"rows={'unknown (unproven delete chain)' if rows is None else rows}  "
         f"pend_dels={dels['entries']}/{dels['rows']}  "
         f"files={fstats['files']}  "
         f"applied_to={'-' if applied < 0 else f'v{applied}'}  "

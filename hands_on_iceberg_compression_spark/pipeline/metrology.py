@@ -140,8 +140,8 @@ class LogStatsRow:
     manifest_bytes: int
     pruned_kept: int | None = None
     pruned_total: int | None = None
-    # pending merge-on-read delete files (position + equality); a
-    # maintained table shows 0 — optimize() folds them
+    # pending merge-on-read (position) delete files; a maintained table
+    # shows 0 — optimize() and fold_pending_deletes() fold them
     delete_files: int = 0
     delete_rows: int = 0
 

@@ -307,6 +307,13 @@ class AlreadyPublishedError(RuntimeError):
     not by error-message substring (review r11 second pass)."""
 
 
+class DeleteTargetsRewrittenError(RuntimeError):
+    """A position-delete commit whose tuples name files a concurrent
+    commit rewrote between the delete's scan and its publish (the
+    ``deletes_read_version`` fence).  Nothing was committed; a rescan
+    from the new head finds the rows in their new files."""
+
+
 MAINTENANCE_POLICY_KEYS = {
     "max_pending_delete_entries",
     "max_pending_delete_rows",
@@ -617,23 +624,20 @@ class ParquetWarehouse:
     ) -> int | None:
         """Exact row count, O(metadata) when the manifest can prove it —
         the monitoring-query fast path under pending merge-on-read
-        deletes (VERDICT r10 "what's wrong" #1; A/B in PERF.md round
-        11).  With no pending deletes the head's totals answer without
-        materializing entries.  Pending POSITION deletes subtract their
-        per-target tuple counts (``target_counts``, recorded at write
-        time — one commit's victims are distinct rows, so the per-file
-        counts are exact).  Falls back to the full delete-applied read
-        whenever arithmetic could lie:
-
-        - a pending EQUALITY delete reaches any live file (how many rows
-          match the keys is unknowable without reading),
-        - two pos-delete entries target one live file WITHOUT a proven
-          read chain: each entry records ``rv_seq``, the seq of the
-          delete-applied head its victims were computed from — an entry
-          whose rv_seq covers an earlier entry's seq cannot re-tuple its
-          rows (sequential deletes always chain; RACING overlapping
-          deletes may tuple the same row twice, reads de-duplicate but
-          subtraction would double-count, so a broken chain falls back).
+        deletes.  With no pending deletes the head's totals answer
+        without materializing entries.  Pending position deletes (every
+        merge-on-read delete, update and upsert writes one) subtract
+        their per-target tuple counts (``target_counts``, recorded at
+        write time — one commit's victims are distinct rows, so the
+        per-file counts are exact).  Falls back to the full
+        delete-applied read only when two entries target one live file
+        WITHOUT a proven read chain: each entry records ``rv_seq``, the
+        seq of the delete-applied head its victims were computed from —
+        an entry whose rv_seq covers an earlier entry's seq cannot
+        re-tuple its rows (sequential deletes always chain; RACING
+        overlapping deletes may tuple the same row twice, reads
+        de-duplicate but subtraction would double-count, so a broken
+        chain falls back).
 
         ``fallback=False`` returns None instead of reading when the
         arithmetic cannot be proven — the metadata-only contract
@@ -658,15 +662,9 @@ class ParquetWarehouse:
             return head["total_rows"]
         files = self._materialize(schema, table, head)["files"]
         live = {e["path"] for e in files}
-        min_seq = min((e["seq"] for e in files), default=0)
         total = sum(e["rows"] for e in files)
         by_file: dict[str, list[dict]] = {}
         for d in dels:
-            if d["kind"] == "eq":
-                # seq-scoped: applies to files below its commit
-                if min_seq < d["seq"]:
-                    return _fb()
-                continue  # dead eq delete: every reachable file dropped
             tc = d["target_counts"]
             for t in d["targets"]:
                 if t not in live:
@@ -852,7 +850,7 @@ class ParquetWarehouse:
         if ANY path contains a character the URI layer percent-encodes.
 
         Why: the merge-on-read joins key rows to per-file metadata (the
-        eq-delete first-applicable index, position-delete tuples).  The
+        position-delete tuples).  The
         r08-r09 design normalized the SCAN side — a percent-decode +
         substring evaluated per ROW — which the 40M --mor-steady probe
         showed costing ~0.7 s per 4M rows, the dominant term of the
@@ -1387,22 +1385,18 @@ class ParquetWarehouse:
         retire the whole pending set — Iceberg's
         ``rewrite_data_files(delete-file-threshold)`` shape.  Victims
         come from the SAME applicability decision the read path uses
-        (``_live_deletes``: explicit pos targets; eq entries seq-scoped
-        then narrowed by key_ranges vs bounds/partition values/blooms),
-        so cost scales with TOUCHED files, not table size — on a
-        partitioned CDC mirror whose batches land in a few hot
-        partitions, a fold rewrites those files and leaves cold data
-        untouched (strictly tighter than a partition_filter derived
-        from the same key_ranges, and exact for transforms a range
-        can't map).  This is what makes ``maintenance_policy`` safe on
+        (``_live_deletes``: each entry's explicit targets), so cost
+        scales with TOUCHED files, not table size — on a partitioned
+        CDC mirror whose batches land in a few hot partitions, a fold
+        rewrites those files and leaves cold data untouched.  This is
+        what makes ``maintenance_policy`` safe on
         UNBOUNDED targets (``merge_into_batched``, the streaming CDC
         sink): the full ``optimize()`` fold is O(table rows) per fire.
 
         Retirement is EXACT, so the census (``pending_delete_stats``)
         returns to zero and the policy never fires in a loop: every
-        entry's applicable files are rewritten delete-applied in this
-        commit (narrowing exclusions are proven — no false negatives),
-        which is exactly the condition ``commit_snapshot``'s
+        entry's live targets are rewritten delete-applied in this
+        commit, which is exactly the condition ``commit_snapshot``'s
         ``retire_deletes`` documents.  Concurrency: the commit passes
         ``rewrite_read_version`` (a concurrent MoR delete raises — the
         rewrite would resurrect its rows) and ``drop_files`` conflicts
@@ -1421,9 +1415,7 @@ class ParquetWarehouse:
         if not all_dels:
             return {"files": 0, "victims": 0, "retired": 0}
         entry_by_path = {e["path"]: e for e in head["files"]}
-        _live, hot = self._live_deletes(
-            schema, table, meta, head, entry_by_path, all_dels
-        )
+        _live, hot = self._live_deletes(set(entry_by_path), all_dels)
         retire = sorted({d["path"] for d in all_dels})
         victims = [entry_by_path[p] for p in sorted(hot)]
         if not victims:
@@ -1482,12 +1474,10 @@ class ParquetWarehouse:
         commit as an add+drop delta (``_rewrite_entries_delta`` — the
         same fences as the scoped optimize: ``rewrite_read_version``
         raises on a concurrent MoR delete, drop conflicts raise, pos
-        delete targets prune on the drop).  Pending eq deletes are NOT
-        retired here (they may still apply to untouched files — that is
-        the delete policy's job); folding them INTO the rewritten rows
-        is exact, the entries just keep applying to the remaining older
-        files.  Fewer than TWO victims is a no-op (rewriting one small
-        file alone gains nothing).  Returns {"files", "victims"}."""
+        delete targets prune on the drop, so an entry whose every
+        target was rewritten retires).  Fewer than TWO victims is a
+        no-op (rewriting one small file alone gains nothing).  Returns
+        {"files", "victims"}."""
         meta = self.table_meta(schema, table)
         version = self._latest_version(schema, table, branch)
         if version is None:
@@ -1505,65 +1495,118 @@ class ParquetWarehouse:
         return {"files": len(new), "victims": len(victims)}
 
     def _write_pos_deletes(
-        self, schema: str, table: str, tuples: DataFrame
-    ) -> tuple[str, list[dict]]:
-        """Write position-delete tuples (``file_path`` manifest-relative,
-        ``pos`` row ordinal) as a parquet under ``deletes/`` and return
-        (root dir, manifest delete entries).  Each entry records its EXACT
-        target file list read back from the tuples — reads anti-join only
-        those files, commit-time pruning and optimize folding key on the
-        list.  0-row part files are unlinked; an all-empty write removes
-        the root and returns no entries."""
+        self, schema: str, table: str, tuples
+    ) -> tuple[str | None, list[dict]]:
+        """Write collected position-delete tuples — a pyarrow table of
+        ``file_path`` (manifest-relative) and ``pos`` (row ordinal) — as
+        ONE parquet under ``deletes/`` and return (its dir, [its manifest
+        entry]), or (None, []) when there are no tuples.  The file is
+        sorted by (file_path, pos) and written with the table's codec and
+        level, ``file_path`` dictionary-encoded and ``pos`` delta-encoded.
+        The entry records its exact target list — reads anti-join only
+        those files, commit-time pruning and folds key on it — and the
+        per-target tuple counts: one commit's victims are DISTINCT rows,
+        so ``count_rows`` subtracts them without touching data (a dict,
+        not an aligned list: folds prune ``targets`` and the dict stays
+        correct un-rewritten)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if tuples.num_rows == 0:
+            return None, []
+        tuples = pa.table({
+            "file_path": tuples.column("file_path").cast(pa.string()),
+            "pos": tuples.column("pos").cast(pa.int64()),
+        }).sort_by([("file_path", "ascending"), ("pos", "ascending")])
+        meta = self.table_meta(schema, table)
+        tdir = self._tdir(schema, table)
+        del_root = os.path.join(tdir, "deletes", f"del_{uuid.uuid4().hex[:8]}")
+        os.makedirs(del_root)
+        p = os.path.join(del_root, "part-00000.parquet")
+        pq.write_table(
+            tuples, p,
+            compression="none" if meta.codec == "uncompressed" else meta.codec,
+            compression_level=meta.level if meta.codec == "zstd" else None,
+            use_dictionary=["file_path"],
+            column_encoding={"pos": "DELTA_BINARY_PACKED"},
+        )
+        vc = pc.value_counts(tuples.column("file_path"))
+        counts = dict(zip(
+            vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+        ))
+        return del_root, [{
+            "path": os.path.relpath(p, tdir),
+            "bytes": os.stat(p).st_size,
+            "rows": tuples.num_rows,
+            "kind": "pos",
+            "targets": sorted(counts),
+            "target_counts": {k: counts[k] for k in sorted(counts)},
+        }]
+
+    def _pos_tuples(
+        self, schema: str, table: str, dels: list[dict], files: set
+    ):
+        """The (file_path, pos) tuples that position-delete entries
+        ``dels`` record for ``files`` (manifest-relative paths), read with
+        pyarrow: no Spark job."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         tdir = self._tdir(schema, table)
-        del_root = os.path.join(tdir, "deletes", f"del_{uuid.uuid4().hex[:8]}")
-        tuples.coalesce(1).write.mode("error").parquet(del_root)
-        entries: list[dict] = []
-        for base, _d, fns in os.walk(del_root):
-            for fn in fns:
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(base, fn)
-                n = pq.ParquetFile(p).metadata.num_rows
-                if n == 0:
-                    os.unlink(p)
-                    continue
-                from collections import Counter
+        want = pa.array(sorted(files), pa.string())
+        parts = [pa.table({
+            "file_path": pa.array([], pa.string()),
+            "pos": pa.array([], pa.int64()),
+        })]
+        for d in dels:
+            if files.isdisjoint(d["targets"]):
+                continue
+            t = pq.ParquetFile(os.path.join(tdir, d["path"])).read(
+                columns=["file_path", "pos"]
+            )
+            t = pa.table({
+                "file_path": t.column("file_path").cast(pa.string()),
+                "pos": t.column("pos").cast(pa.int64()),
+            })
+            parts.append(t.filter(pc.is_in(t.column("file_path"), value_set=want)))
+        return pa.concat_tables(parts)
 
-                counts = Counter(
-                    pq.read_table(p, columns=["file_path"])
-                    .column("file_path")
-                    .to_pylist()
-                )
-                entries.append(
-                    {
-                        "path": os.path.relpath(p, tdir),
-                        "bytes": os.stat(p).st_size,
-                        "rows": n,
-                        "kind": "pos",
-                        "targets": sorted(counts),
-                        # per-target tuple counts: one commit's victims
-                        # are DISTINCT rows, so these are exact per-file
-                        # deleted-row counts — count_rows() subtracts
-                        # them without touching data (a dict, not an
-                        # aligned list: fold rewrites prune "targets"
-                        # and a dict stays correct un-rewritten)
-                        "target_counts": {
-                            k: counts[k] for k in sorted(counts)
-                        },
-                    }
-                )
-        if not entries:
-            shutil.rmtree(del_root, ignore_errors=True)
-        return del_root, entries
+    def _at_tuples(
+        self, df: DataFrame, tdir: str, tuples, rels, how: str
+    ) -> DataFrame:
+        """Join a ``with_pos`` scan of the files ``rels`` with position
+        ``tuples`` (a pyarrow table) on (file, row ordinal): ``left_anti``
+        applies deletes, ``left_semi`` keeps exactly the named rows.  The
+        tuples ship as one broadcast Arrow local relation: it plans as
+        LocalTableScan and runs in the JVM, whereas a Python-list frame is
+        a pickled RDD whose every action starts Python worker processes.
+        When every path in ``rels`` has a predictable scan URI
+        (``_predict_uris``) the tuples carry those URIs and join the raw
+        ``_metadata.file_path``, so the scan evaluates no per-row decode;
+        otherwise they stay manifest-relative and join the decoded
+        ``__mor_rel``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    # An eq-delete entry's stored key_ranges discrete set is capped: above
-    # this many distinct values per column it collapses to a (min, max)
-    # envelope — read-time narrowing stays O(1) per file however many keys
-    # the delete carries (the key VALUES live in the parquet, not the
-    # manifest).
-    EQ_KEY_RANGES_SET_MAX = 64
+        paths = tuples.column("file_path").combine_chunks()
+        uri_of = self._predict_uris(tdir, sorted(rels))
+        if uri_of is not None:
+            keys = pa.array(sorted(uri_of), pa.string())
+            uris = pa.array([uri_of[k] for k in keys.to_pylist()], pa.string())
+            paths = uris.take(pc.index_in(paths, value_set=keys))
+            col = self._POS_FILE
+        else:
+            col = self._POS_REL
+        tdf = self.spark.createDataFrame(pa.table({
+            "__mor_del_file": paths,
+            "__mor_del_pos": tuples.column("pos").combine_chunks(),
+        }))
+        cond = (F.col(col) == tdf["__mor_del_file"]) & (
+            F.col(self._POS_IDX) == tdf["__mor_del_pos"]
+        )
+        return df.join(F.broadcast(tdf), cond, how)
 
     # merge_into discovery: batches up to this many DISTINCT keys prune
     # the target scan by exact membership (discrete sets -> partition +
@@ -1622,14 +1665,12 @@ class ParquetWarehouse:
     # and read fan-in on every later scan.
     MOR_IMAGE_COALESCE_ROWS = 100_000
 
-    # merge_upsert batches at or below this many keys write their
-    # equality-delete parquet DRIVER-SIDE (collect + pyarrow, the
-    # delete_by_keys fast path) instead of launching a Spark write job
-    # for a small file of key values — r15 tick-floor fold (VERDICT r14
-    # #1).  The bound is driver-memory-shaped: the stats probe collects
-    # (raw keys, flag, cast keys) rows, a few tens of bytes each, so
-    # 64k keys is single-digit MB; a W=8 CDC fire window (~16k keys)
-    # stays on the folded path.
+    # merge_upsert batches at or below this many keys collect their
+    # post-cast keys in the one stats probe, and find their victims with
+    # the driver-side key scan (``_key_victims``): no Spark job.  The
+    # bound is driver-memory-shaped: the probe collects (raw keys, flag,
+    # cast keys) rows, a few tens of bytes each, so 64k keys is
+    # single-digit MB.
     MOR_LOCAL_DELETE_KEYS_MAX = 65536
 
     # merge_into discovery collects up to this many DISTINCT source keys
@@ -1639,296 +1680,142 @@ class ParquetWarehouse:
     # (no second aggregation job — r15); above, one Spark envelope agg.
     MERGE_KEYS_COLLECT_MAX = 65536
 
-    @classmethod
-    def _store_key_ranges(cls, ranges: dict) -> dict:
-        """JSON-safe, shape-tagged encoding of a pruning spec for storage
-        in an equality-delete manifest entry: ``{col: {"set": [...]}}`` for
-        discrete values, ``{col: {"lo": x, "hi": y}}`` for envelopes.
-        Explicit tags survive the JSON round-trip (the r07 gotcha: JSON
-        turns range TUPLES into lists, which the pruning grammar reads as
-        discrete sets).  Values route through ``_json_bound`` — the same
-        order-preserving encoding the file bounds use, so read-time
-        comparisons are consistent by construction; a value _json_bound
-        cannot encode drops its COLUMN from the spec (conservative: no
-        narrowing on it, never wrong narrowing)."""
-        out: dict = {}
-        for c, spec in ranges.items():
-            if isinstance(spec, (list, set, frozenset)):
-                vals = [cls._json_bound(v) for v in spec]
-                if any(v is None for v in vals):
-                    continue
-                if len(vals) > cls.EQ_KEY_RANGES_SET_MAX:
-                    try:
-                        out[c] = {"lo": min(vals), "hi": max(vals)}
-                    except TypeError:
-                        pass  # mixed-type values: skip the column
-                    continue
-                out[c] = {"set": sorted(vals, key=repr)}
-            else:
-                lo, hi = spec
-                lo, hi = cls._json_bound(lo), cls._json_bound(hi)
-                if lo is None or hi is None:
-                    continue
-                out[c] = {"lo": lo, "hi": hi}
-        return out
-
-    @staticmethod
-    def _key_ranges_spec(key_ranges: dict) -> dict:
-        """Stored ``key_ranges`` back to the live pruning-spec shapes
-        (list = discrete set, tuple = range) ``_norm_filter`` expects."""
-        out: dict = {}
-        for c, kr in key_ranges.items():
-            if "set" in kr:
-                out[c] = list(kr["set"])
-            else:
-                out[c] = (kr.get("lo"), kr.get("hi"))
-        return out
-
-    def _write_eq_deletes(
-        self,
-        schema: str,
-        table: str,
-        keys_df: DataFrame,
-        eq_cols: list[str],
-        eq_ids: list[int],
-        key_ranges: dict,
-    ) -> tuple[str, list[dict]]:
-        """Write an Iceberg-v2-style EQUALITY DELETE file: a parquet of
-        key-column VALUE rows (no positions — nothing was scanned to
-        produce them) under ``deletes/``, plus manifest entries recording
-        the key column names, their FIELD IDS (so later renames keep
-        resolving), and a JSON-safe ``key_ranges`` summary of the keys for
-        read-time file narrowing.  Scope is Iceberg's sequence-number
-        rule ("an equality delete applies only to data files older than
-        it"): ``commit_snapshot`` stamps the entry with its commit ``seq``
-        and reads apply it to files whose seq is strictly lower — O(1)
-        metadata per delete however many files are live (the r08 design
-        stored the explicit target file list, which a scattered-key delete
-        inflated to O(live files) carried in every subsequent head)."""
-        import pyarrow.parquet as pq
-
-        tdir = self._tdir(schema, table)
-        del_root = os.path.join(tdir, "deletes", f"eq_{uuid.uuid4().hex[:8]}")
-        keys_df.coalesce(1).write.mode("error").parquet(del_root)
-        # record the written columns' SQL types so reads can pass an
-        # EXPLICIT schema (r15): a schema-inference read costs one
-        # footer-scan Spark job per pending delete entry per table read
-        # — the tick-jobs probe showed the CDC steady state's per-tick
-        # job count growing linearly with the delete stack
-        type_of = {f.name: f.dataType.simpleString() for f in keys_df.schema.fields}
-        eq_types = [type_of[c] for c in eq_cols]
-        entries: list[dict] = []
-        for base, _d, fns in os.walk(del_root):
-            for fn in fns:
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(base, fn)
-                n = pq.ParquetFile(p).metadata.num_rows
-                if n == 0:
-                    os.unlink(p)
-                    continue
-                entry = {
-                    "path": os.path.relpath(p, tdir),
-                    "bytes": os.stat(p).st_size,
-                    "rows": n,
-                    "kind": "eq",
-                    "eq_cols": list(eq_cols),
-                    "eq_types": eq_types,
-                }
-                if key_ranges:
-                    entry["key_ranges"] = key_ranges
-                entry["eq_ids"] = list(eq_ids)
-                entries.append(entry)
-        if not entries:
-            shutil.rmtree(del_root, ignore_errors=True)
-        return del_root, entries
-
-    # recorded SQL type -> pyarrow type for driver-side delete-file writes
+    # Recorded SQL types the driver-side key scan handles: pyarrow reads
+    # their parquet values back as the very Python values a Spark collect
+    # of the column yields, and equality on them is Spark's.  A key of any
+    # other type takes the Spark victim scan.
     _PA_TYPES = {
         "tinyint": "int8", "smallint": "int16", "int": "int32",
-        "bigint": "int64", "float": "float32", "double": "float64",
-        "string": "string", "boolean": "bool_", "date": "date32",
+        "bigint": "int64", "string": "string", "boolean": "bool_",
+        "date": "date32",
     }
 
-    _INT_BOUNDS = {
-        "tinyint": (-(1 << 7), (1 << 7) - 1),
-        "smallint": (-(1 << 15), (1 << 15) - 1),
-        "int": (-(1 << 31), (1 << 31) - 1),
-        "bigint": (-(1 << 63), (1 << 63) - 1),
-    }
-
-    @classmethod
-    def _cast_local_key(cls, v, sql_type: str):
-        """Normalize ONE local key value to the recorded column type —
-        the driver-side mirror of the DataFrame path's Spark cast
-        (VERDICT r9 "what's wrong" #4: pruning ``ranges`` built from RAW
-        Python values could skip a file whose rows the read-side cast
-        would match, e.g. a float 10.5 key for a bigint column).
-
-        Semantics match Spark 4 ANSI cast where it matters: float -> int
-        TRUNCATES toward zero (no error on fraction), overflow and
-        unparsable values RAISE (the DataFrame path's cast errors
-        likewise under ANSI; pre-ANSI it cast to NULL, which the null
-        check rejected).  Unknown recorded types pass through untouched."""
-        import datetime as _dt
-        import math
-
-        if sql_type in cls._INT_BOUNDS:
-            lo, hi = cls._INT_BOUNDS[sql_type]
-            if isinstance(v, bool):
-                out = int(v)
-            elif isinstance(v, int):
-                out = v
-            elif isinstance(v, float):
-                if math.isnan(v) or math.isinf(v):
-                    raise ValueError(
-                        f"key value {v!r} is not representable as {sql_type}"
-                    )
-                out = int(v)  # truncation toward zero, as Spark cast does
-            elif isinstance(v, str):
-                try:
-                    out = int(v.strip())
-                except ValueError:
-                    raise ValueError(
-                        f"key value {v!r} is not representable as {sql_type}"
-                    ) from None
-            else:
-                raise ValueError(
-                    f"key value {v!r} ({type(v).__name__}) is not "
-                    f"representable as {sql_type}"
-                )
-            if not lo <= out <= hi:
-                raise ValueError(f"key value {v!r} overflows {sql_type}")
-            return out
-        if sql_type in ("float", "double"):
-            if isinstance(v, (bool, int, float)):
-                return float(v)
-            if isinstance(v, str):
-                try:
-                    return float(v.strip())
-                except ValueError:
-                    raise ValueError(
-                        f"key value {v!r} is not representable as {sql_type}"
-                    ) from None
-            raise ValueError(
-                f"key value {v!r} ({type(v).__name__}) is not "
-                f"representable as {sql_type}"
-            )
-        if sql_type == "string":
-            if isinstance(v, str):
-                return v
-            if isinstance(v, bool):
-                return "true" if v else "false"  # Spark cast rendering
-            if isinstance(v, int):
-                return str(v)
-            raise ValueError(
-                f"key value {v!r} ({type(v).__name__}) is not "
-                f"representable as string — pass the Spark-rendered "
-                f"string explicitly"
-            )
-        if sql_type == "boolean":
-            if isinstance(v, bool):
-                return v
-            raise ValueError(
-                f"key value {v!r} is not representable as boolean"
-            )
-        if sql_type.startswith("timestamp"):
-            if isinstance(v, _dt.datetime):
-                return v
-            if isinstance(v, str):
-                try:
-                    return _dt.datetime.fromisoformat(v)
-                except ValueError:
-                    raise ValueError(
-                        f"key value {v!r} is not representable as "
-                        f"{sql_type}"
-                    ) from None
-            raise ValueError(
-                f"key value {v!r} is not representable as {sql_type}"
-            )
-        if sql_type == "date":
-            if isinstance(v, _dt.datetime):
-                return v.date()
-            if isinstance(v, _dt.date):
-                return v
-            if isinstance(v, str):
-                try:
-                    return _dt.date.fromisoformat(v)
-                except ValueError:
-                    raise ValueError(
-                        f"key value {v!r} is not representable as date"
-                    ) from None
-            raise ValueError(
-                f"key value {v!r} is not representable as date"
-            )
-        return v  # unmapped recorded type (e.g. decimal) — pass through
-
-    def _write_eq_deletes_local(
+    def _key_victims(
         self,
         schema: str,
         table: str,
-        rows: list[tuple],
-        cols: list[str],
-        rec_types: dict[str, str],
-        eq_ids: list[int],
-        key_ranges: dict,
-    ) -> tuple[str, list[dict]]:
-        """Driver-side equality-delete write for LOCAL key lists: the file
-        is a few KB of key values, so a pyarrow write beats launching a
-        Spark job for it by ~1-3 s — ``delete_by_keys`` with a local list
-        becomes a pure metadata operation (zero Spark jobs, zero data
-        IO).  Key columns are typed from the recorded schema where the
-        mapping is unambiguous; the read side casts to the current type
-        regardless."""
+        meta: TableMeta,
+        head: dict,
+        targets: list[dict],
+        key_cols: list[str],
+        keys: list[tuple] | None,
+        kdf: DataFrame | None = None,
+    ):
+        """Positions (file_path, pos) of the rows of ``targets`` whose key
+        columns equal one of the keys, with ``head``'s pending deletes
+        applied: the victims of a key delete, as a pyarrow table.
+
+        ``keys`` are post-cast key tuples already on the driver.  When
+        every key column is stored under a ``_PA_TYPES`` type in every
+        target, pyarrow reads only those columns (a file's physical row
+        order is Spark's ``_metadata.row_index``), matches them against
+        the keys and drops the positions pending deletes already name: no
+        Spark job.  Otherwise (``keys`` None, another key type, or a key
+        stored only in the partition path) one Spark job semi-joins the
+        delete-applied ``with_pos`` scan with ``kdf`` — or with the local
+        keys as an Arrow relation."""
         import pyarrow as pa
+
+        cur = {f["name"]: f for f in head["schemas"][str(head["schema_id"])]}
+        if keys is not None and all(
+            cur[c]["type"] in self._PA_TYPES for c in key_cols
+        ):
+            out = self._local_key_victims(
+                schema, table, head, targets, key_cols, keys
+            )
+            if out is not None:
+                return out
+        if kdf is None:
+            kdf = self.spark.createDataFrame(pa.table({
+                c: pa.array(
+                    [k[i] for k in keys],
+                    getattr(pa, self._PA_TYPES[cur[c]["type"]])(),
+                )
+                for i, c in enumerate(key_cols)
+            }))
+        return (
+            self._read_entries(schema, table, meta, head, targets, with_pos=True)
+            .select(*key_cols, self._POS_REL, self._POS_IDX)
+            .join(kdf.select(*key_cols), key_cols, "left_semi")
+            .select(
+                F.col(self._POS_REL).alias("file_path"),
+                F.col(self._POS_IDX).alias("pos"),
+            )
+            .toArrow()
+        )
+
+    def _local_key_victims(
+        self,
+        schema: str,
+        table: str,
+        head: dict,
+        targets: list[dict],
+        key_cols: list[str],
+        keys: list[tuple],
+    ):
+        """The driver-side half of ``_key_victims``, or None when a target
+        stores a key column under a type outside ``_PA_TYPES`` or only in
+        its partition path.  Key columns resolve through field ids, so a
+        renamed or widened key reads its stored name and type."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         tdir = self._tdir(schema, table)
-        del_root = os.path.join(tdir, "deletes", f"eq_{uuid.uuid4().hex[:8]}")
-        os.makedirs(del_root, exist_ok=True)
-        arrays = []
-        eq_types: list[str] | None = []
-        for i, c in enumerate(cols):
-            vals = [r[i] for r in rows]
-            pa_name = self._PA_TYPES.get(rec_types.get(c, ""))
-            t = getattr(pa, pa_name)() if pa_name else None
-            if rec_types.get(c, "").startswith("timestamp"):
-                t = pa.timestamp("us")
-            try:
-                arrays.append(pa.array(vals, type=t))
-                typed = t is not None
-            except (pa.ArrowInvalid, pa.ArrowTypeError):
-                arrays.append(pa.array(vals))  # inference fallback
-                typed = False
-            # eq_types (r15, explicit read schema): only when every
-            # column landed at an unambiguous recorded NON-timestamp
-            # type — a timestamp's ltz/ntz parquet annotation depends
-            # on the writer session, so those keep the inference read
-            if (
-                eq_types is not None
-                and typed
-                and pa_name
-                and not rec_types.get(c, "").startswith("timestamp")
-            ):
-                eq_types.append(rec_types[c])
-            else:
-                eq_types = None
-        tab = pa.Table.from_arrays(arrays, names=list(cols))
-        p = os.path.join(del_root, "keys.parquet")
-        pq.write_table(tab, p)
-        entry = {
-            "path": os.path.relpath(p, tdir),
-            "bytes": os.stat(p).st_size,
-            "rows": len(rows),
-            "kind": "eq",
-            "eq_cols": list(cols),
-        }
-        if eq_types is not None:
-            entry["eq_types"] = eq_types
-        if key_ranges:
-            entry["key_ranges"] = key_ranges
-        entry["eq_ids"] = list(eq_ids)
-        return del_root, [entry]
+        cur = {f["name"]: f for f in head["schemas"][str(head["schema_id"])]}
+        types = [getattr(pa, self._PA_TYPES[cur[c]["type"]])() for c in key_cols]
+        value_sets = [
+            pa.array(list({k[i] for k in keys}), t) for i, t in enumerate(types)
+        ]
+        key_set = set(keys)
+        paths = {e["path"] for e in targets}
+        pending: dict[str, set] = {}
+        live, _hot = self._live_deletes(
+            paths, self._head_deletes(schema, table, head)
+        )
+        tup = self._pos_tuples(schema, table, live, paths)
+        for p, i in zip(
+            tup.column("file_path").to_pylist(), tup.column("pos").to_pylist()
+        ):
+            pending.setdefault(p, set()).add(i)
+        out_paths: list[str] = []
+        out_pos: list[int] = []
+        for e in targets:
+            by_id = {f["id"]: f for f in head["schemas"][str(e.get("sid", 0))]}
+            stored = [by_id.get(cur[c]["id"]) for c in key_cols]
+            if any(f is None for f in stored):
+                continue  # a key column added after this file: NULL here
+            if any(f["type"] not in self._PA_TYPES for f in stored):
+                return None
+            pf = pq.ParquetFile(os.path.join(tdir, e["path"]))
+            names = [f["name"] for f in stored]
+            if not set(names) <= set(pf.schema_arrow.names):
+                return None  # an identity-partition key lives in the path
+            tab = pf.read(columns=names)
+            cols = [
+                tab.column(n).combine_chunks().cast(t)
+                for n, t in zip(names, types)
+            ]
+            mask = pc.is_in(cols[0], value_set=value_sets[0])
+            for c, vs in zip(cols[1:], value_sets[1:]):
+                mask = pc.and_(mask, pc.is_in(c, value_set=vs))
+            idx = pc.indices_nonzero(mask).to_pylist()
+            if len(cols) > 1 and idx:
+                # per-column membership is a superset: keep exact tuples
+                rows = zip(*(c.take(idx).to_pylist() for c in cols))
+                idx = [i for i, r in zip(idx, rows) if r in key_set]
+            gone = pending.get(e["path"], ())
+            idx = [i for i in idx if i not in gone]
+            out_paths += [e["path"]] * len(idx)
+            out_pos += idx
+        return pa.table({
+            "file_path": pa.array(out_paths, pa.string()),
+            "pos": pa.array(out_pos, pa.int64()),
+        })
+
+    # A key delete that loses its commit race to a rewrite of one of its
+    # target files rescans from the new head, at most this many times.
+    KEY_DELETE_ATTEMPTS = 8
 
     def delete_by_keys(
         self,
@@ -1938,48 +1825,33 @@ class ParquetWarehouse:
         eq_cols: list[str] | None = None,
         branch: str = "main",
     ) -> dict:
-        """Iceberg v2 EQUALITY DELETE: remove every row whose key columns
-        match one of ``keys`` — with ZERO data IO at delete time.  Where a
-        position delete must SCAN candidate files to find row ordinals,
-        an equality delete just commits the key VALUES; the read side
-        anti-joins them against the files that existed when the delete
-        committed.  At 100 TB this is the CDC/retention primitive: a
-        "forget these 10k user_ids" commit costs one small parquet + one
-        manifest commit regardless of table size, and ``optimize()``
-        folds it into real rewrites on the maintenance tick.
+        """Merge-on-read DELETE by key: remove every row whose key columns
+        equal one of ``keys``.  The victims come from ``merge_upsert``'s
+        key scan (``_key_victims``) over only the files whose manifest
+        bounds, partition values and blooms admit the keys, and ONE
+        position-delete file records them; no data file is rewritten.
 
         ``keys`` is a list of dicts ({col: value}), a list of tuples
         (with ``eq_cols`` naming the columns), a flat list of scalars
-        (single-column key), or a DataFrame of key rows.  NULL key values
-        are rejected (SQL equality never matches NULL; Iceberg identifier
-        fields are required non-null for the same reason).
+        (single-column key), or a DataFrame of key rows.  Keys cast to the
+        recorded column types: local values with pyarrow's safe cast (a
+        value the type cannot hold exactly — a fraction for an integer
+        column, an overflow, an unparsable string — raises ValueError),
+        DataFrame keys (and local keys of a type outside ``_PA_TYPES``)
+        with Spark's ``try_cast``.  Local keys of ``_PA_TYPES`` types need
+        no SparkSession and launch no Spark job.  NULL keys raise: SQL
+        equality never matches NULL.
 
-        Scope semantics (Iceberg sequence numbers): the commit stamps the
-        delete entry with its commit sequence number, and reads apply it
-        to every data file with a STRICTLY LOWER seq — i.e. files live at
-        COMMIT time, including a concurrent append that wins the CAS race
-        between this delete's read and its publish (Iceberg's "lower data
-        sequence => deleted" rule; rows appended later with the same key
-        survive, which is exactly what makes stacked CDC upsert batches
-        linearize).  The entry additionally records a small ``key_ranges``
-        summary of the keys (discrete values or a min/max envelope), which
-        reads use to NARROW the anti-join to files whose manifest bounds/
-        partition values can intersect the keys — pure optimization, the
-        anti-join itself enforces correctness.  Pending-delete metadata is
-        therefore O(keys), never O(live files), and a broad scattered-key
-        delete costs later commits nothing (the r08 design stored explicit
-        target lists, O(live files) for such keys, rewritten into every
-        subsequent head).
+        Concurrency is ``delete_where``'s: a concurrent append merges (its
+        rows are not subject to this delete), and when a concurrent commit
+        rewrote a target file between the scan and the publish, the
+        delete rescans from the new head (``KEY_DELETE_ATTEMPTS``).  When
+        the manifest proves no live file can match, nothing is committed.
 
-        One caveat the snapshot-isolation read implies: when the manifest
-        PROVES no live file can match (the no-op fast path below), no
-        delete is committed — a row appended concurrently with a matching
-        key is then not covered, exactly as if the delete had committed
-        first.
+        Returns {"rows_deleted" (exact), "keys", "delete_files_added",
+        "delete_bytes", "targets", "files_pruned", "version"}."""
+        import pyarrow as pa
 
-        Returns ``rows_deleted: None`` — the point of an equality delete
-        is NOT knowing (not reading) how many rows matched; use
-        ``delete_where(mode='merge-on-read')`` when the count matters."""
         version = self._latest_version(schema, table, branch)
         no_op = {
             "rows_deleted": 0,
@@ -1990,12 +1862,10 @@ class ParquetWarehouse:
         if version is None:
             return no_op
         head = self._load_head_light(schema, table, version, branch)
-
-        # --- normalize keys into (column names, local tuples | DataFrame)
-        local: list[tuple] | None
+        kdf: DataFrame | None = None
         if isinstance(keys, DataFrame):
             cols = list(eq_cols) if eq_cols else list(keys.columns)
-            kdf: DataFrame | None = keys.select(*cols)
+            kdf = keys.select(*cols)
             local = None
         else:
             rows = list(keys)
@@ -2017,139 +1887,114 @@ class ParquetWarehouse:
                 local = [(v,) for v in rows]
             if any(len(t) != len(cols) for t in local):
                 raise ValueError("key tuple arity does not match eq_cols")
-            if any(v is None for t in local for v in t):
-                raise ValueError(
-                    "NULL key values are not supported: SQL equality "
-                    "never matches NULL, so such a delete row is dead"
-                )
-            local = sorted(set(local), key=repr)
-            kdf = None
-
-        # --- resolve against the recorded schema (names -> field ids +
-        # types)
         cur = {f["name"]: f for f in head["schemas"][str(head["schema_id"])]}
         missing = [c for c in cols if c not in cur]
         if missing:
             raise ValueError(f"no column(s) {missing} in {schema}.{table}")
-        eq_ids = [cur[c]["id"] for c in cols]
         rec_types = {c: cur[c]["type"] for c in cols}
-
-        # --- LOCAL keys: normalize through the recorded types (plain
-        # Python mirror of the DataFrame path's Spark cast, VERDICT r9
-        # #4) BEFORE building the pruning ranges AND the parquet write —
-        # a raw float 10.5 for a bigint column would otherwise build a
-        # [10.5] prune set that skips the file whose rows the read-side
-        # cast (10) matches.  Unrepresentable values raise.  Re-dedup:
-        # casting can collide previously-distinct raw keys (10, 10.5).
-        if local is not None:
-            local = sorted(
-                {
-                    tuple(
-                        self._cast_local_key(v, rec_types[c])
-                        for v, c in zip(t, cols)
+        null_msg = (
+            "NULL key values are not supported: SQL equality never "
+            "matches NULL, so such a delete row is dead"
+        )
+        if local is not None and any(v is None for t in local for v in t):
+            raise ValueError(null_msg)
+        if local is not None and all(
+            t in self._PA_TYPES for t in rec_types.values()
+        ):
+            cast_cols = []
+            for i, c in enumerate(cols):
+                t = rec_types[c]
+                try:
+                    cast_cols.append(
+                        pa.array([k[i] for k in local])
+                        .cast(getattr(pa, self._PA_TYPES[t])())
+                        .to_pylist()
                     )
-                    for t in local
-                },
-                key=repr,
-            )
-
-        # --- DataFrame keys: dedup, cast to recorded types FIRST, then
-        # reject NULLs + compute the min/max pruning envelope in ONE
-        # aggregate over the CAST values (ADVICE r8: an envelope over
-        # pre-cast values — e.g. double keys 10.2-10.7 for an int column —
-        # could prune a file the post-cast keys (10) actually match; and a
-        # key the cast cannot represent becomes NULL, which the null check
-        # rejects rather than silently dropping).  Local lists skip Spark
-        # entirely — driver-side write below.
-        env = None
-        if kdf is not None:
+                except (pa.ArrowInvalid, pa.ArrowTypeError,
+                        pa.ArrowNotImplementedError) as e:
+                    raise ValueError(
+                        f"key value(s) of {c!r} not representable as {t}: {e}"
+                    ) from None
+            local = sorted(set(zip(*cast_cols)), key=repr)
+        else:
+            if local is not None:
+                try:
+                    raw = pa.table({
+                        c: pa.array([k[i] for k in local])
+                        for i, c in enumerate(cols)
+                    })
+                except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
+                    raise ValueError(f"mixed-type key values: {e}") from None
+                kdf = self.spark.createDataFrame(raw)
             kdf = kdf.select(
-                *[F.col(c).cast(rec_types[c]).alias(c) for c in cols]
+                *[F.col(c).try_cast(rec_types[c]).alias(c) for c in cols]
             ).distinct()
-            try:
-                kdf = kdf.localCheckpoint(eager=True)
-            except Exception:
-                pass  # lineage truncation is an optimization only
-            aggs = []
-            for c in cols:
-                aggs += [
-                    F.sum(F.col(c).isNull().cast("int")).alias(f"n_{c}"),
-                    F.min(c).alias(f"lo_{c}"),
-                    F.max(c).alias(f"hi_{c}"),
-                ]
-            env = kdf.agg(*aggs).collect()[0]
-            if any((env[f"n_{c}"] or 0) > 0 for c in cols):
+            local = [tuple(r) for r in kdf.collect()]
+            if any(v is None for t in local for v in t):
                 raise ValueError(
-                    "NULL key values are not supported (SQL equality "
-                    "never matches NULL, so such a delete row is dead) — "
-                    "a non-NULL key the recorded column type cannot "
-                    "represent casts to NULL and is rejected here too"
+                    null_msg + " (a key value the recorded column type "
+                    "cannot represent casts to NULL and is rejected too)"
                 )
-
-        # --- key pruning spec: manifest bounds + partition values, no
-        # footer opens.  Local key lists prune with DISCRETE value sets
-        # (exact membership); DataFrame keys prune with their min/max
-        # envelope (one tiny agg).  Conjunctive per-column specs are a
-        # SUPERSET of the tuple set for multi-column keys — conservative.
-        # Used twice: a commit-time no-op proof (zero candidate files ->
-        # no commit), and — stored as the entry's ``key_ranges`` — the
-        # read-time narrowing of which seq-eligible files pay the
-        # anti-join.
-        if local is not None:
+            local.sort(key=repr)
+        if not local:
+            return no_op
+        if len(local) <= self.MERGE_DISCRETE_KEYS_MAX:
             ranges = {
                 c: sorted({t[i] for t in local}, key=repr)
                 for i, c in enumerate(cols)
             }
         else:
-            if env[f"lo_{cols[0]}"] is None:
-                return no_op  # empty keys frame
-            ranges = {c: (env[f"lo_{c}"], env[f"hi_{c}"]) for c in cols}
-        target_entries, total, _head = self._prune_entries(
-            schema, table, ranges, version=version, branch=branch
-        )
-        if not target_entries:
-            # the manifest PROVES no live row can match — no commit, same
-            # no-op guarantee as a zero-match delete_where
-            return {**no_op, "files_pruned": total}
-        key_ranges = self._store_key_ranges(ranges)
-
-        if local is not None:
-            del_root, del_entries = self._write_eq_deletes_local(
-                schema, table, local, cols, rec_types, eq_ids, key_ranges
+            ranges = {
+                c: (min(t[i] for t in local), max(t[i] for t in local))
+                for i, c in enumerate(cols)
+            }
+        meta = self.table_meta(schema, table)
+        for attempt in range(self.KEY_DELETE_ATTEMPTS):
+            targets, total, head = self._prune_entries(
+                schema, table, ranges, version=version, branch=branch
             )
-        else:
-            del_root, del_entries = self._write_eq_deletes(
-                schema, table, kdf, cols, eq_ids, key_ranges
+            found = {
+                "keys": len(local),
+                "targets": len(targets),
+                "files_pruned": total - len(targets),
+            }
+            if not targets:
+                return {**no_op, **found, "version": version}
+            victims = self._key_victims(
+                schema, table, meta, head, targets, cols, local, kdf
             )
-        if not del_entries:
-            return no_op
-        # No deletes_read_version fence needed for a pure equality delete:
-        # seq scoping makes a concurrently-rewritten target HARMLESS — the
-        # rewrite's output files carry a lower seq than this delete's
-        # commit (the rewrite won the CAS race), so the delete still
-        # applies to them and no row escapes.
-        try:
-            manifest = self.commit_snapshot(
-                schema, table, "delete",
-                add_files=[],
-                add_deletes=del_entries,
-                expected_schema_id=head["schema_id"],
-                branch=branch,
+            del_root, del_entries = self._write_pos_deletes(
+                schema, table, victims
             )
-        except BaseException:
-            shutil.rmtree(del_root, ignore_errors=True)
-            raise
-        return {
-            "rows_deleted": None,
-            "keys": sum(e["rows"] for e in del_entries),
-            "delete_files_added": len(del_entries),
-            "delete_bytes": sum(e["bytes"] for e in del_entries),
-            # informational: candidate files at the read snapshot (reads
-            # re-derive the applicable set from seq + key_ranges)
-            "targets": len(target_entries),
-            "files_pruned": total - len(target_entries),
-            "version": manifest["version"],
-        }
+            if not del_entries:
+                return {**no_op, **found, "version": version}
+            for d in del_entries:
+                d["rv_seq"] = head["last_seq"]  # see delete_where
+            try:
+                manifest = self.commit_snapshot(
+                    schema, table, "delete",
+                    add_files=[],
+                    add_deletes=del_entries,
+                    expected_schema_id=head["schema_id"],
+                    deletes_read_version=version,
+                    branch=branch,
+                )
+            except DeleteTargetsRewrittenError:
+                shutil.rmtree(del_root, ignore_errors=True)
+                if attempt + 1 == self.KEY_DELETE_ATTEMPTS:
+                    raise
+                version = self._latest_version(schema, table, branch)
+                continue
+            except BaseException:
+                shutil.rmtree(del_root, ignore_errors=True)
+                raise
+            return {
+                **found,
+                "rows_deleted": victims.num_rows,
+                "delete_files_added": 1,
+                "delete_bytes": del_entries[0]["bytes"],
+                "version": manifest["version"],
+            }
 
     def delete_files_report(self, schema: str, table: str) -> list[dict]:
         """Iceberg ``$delete_files`` metadata table: the head's live
@@ -2311,7 +2156,7 @@ class ParquetWarehouse:
                 ).select(
                     F.col(self._POS_REL).alias("file_path"),
                     F.col(self._POS_IDX).alias("pos"),
-                )
+                ).toArrow()
                 del_root, del_entries = self._write_pos_deletes(
                     schema, table, tuples
                 )
@@ -2595,7 +2440,7 @@ class ParquetWarehouse:
             tuples = matched.select(
                 F.col(self._POS_REL).alias("file_path"),
                 F.col(self._POS_IDX).alias("pos"),
-            )
+            ).toArrow()
             del_root, del_entries = self._write_pos_deletes(
                 schema, table, tuples
             )
@@ -2608,7 +2453,8 @@ class ParquetWarehouse:
                 # assignment is non-deterministic — committing would
                 # corrupt (rows vanish or duplicate); abort and clean up
                 shutil.rmtree(gen_dir, ignore_errors=True)
-                shutil.rmtree(del_root, ignore_errors=True)
+                if del_root is not None:
+                    shutil.rmtree(del_root, ignore_errors=True)
                 raise RuntimeError(
                     f"non-deterministic update on {schema}.{table}: the "
                     f"delete scan matched {rows_marked} rows but the "
@@ -3033,37 +2879,6 @@ class ParquetWarehouse:
             ).drop(decoded)
         return df
 
-    def _delete_tuples(self, schema: str, table: str, dels: list[dict]) -> DataFrame:
-        """Union of position-delete files as (file_path, pos) tuples —
-        explicit schema (the one shape every pos-delete writer emits):
-        an inference read pays a footer-scan job per call (r15)."""
-        tdir = self._tdir(schema, table)
-        return self.spark.read.schema("file_path string, pos bigint").parquet(
-            *[os.path.join(tdir, d["path"]) for d in dels]
-        ).select("file_path", "pos")
-
-    def _read_delete_parquet(self, tdir: str, d: dict) -> DataFrame:
-        """ONE equality-delete parquet as a DataFrame, with the entry's
-        recorded ``eq_types`` as an EXPLICIT read schema when present
-        (r15): a schema-inference read launches one footer-scan Spark
-        job per pending delete entry per table read — the tick-jobs
-        probe showed the CDC steady state's per-tick job count growing
-        linearly with the delete stack.  Entries without ``eq_types`` (a
-        local write whose key type has no unambiguous parquet mapping,
-        e.g. timestamps) keep the inference read."""
-        p = os.path.join(tdir, d["path"])
-        ts = d.get("eq_types")
-        if (
-            ts
-            and len(ts) == len(d["eq_cols"])
-            and not any("`" in c for c in d["eq_cols"])
-        ):
-            sch = ", ".join(
-                f"`{c}` {t}" for c, t in zip(d["eq_cols"], ts)
-            )
-            return self.spark.read.schema(sch).parquet(p)
-        return self.spark.read.parquet(p)
-
     def _read_entries(
         self,
         schema: str,
@@ -3074,85 +2889,38 @@ class ParquetWarehouse:
         with_pos: bool = False,
         apply_deletes: bool = True,
     ) -> DataFrame:
-        """Assemble ``entries`` and apply the head's MERGE-ON-READ deletes
-        (Iceberg v2): a position delete applies to the files its
-        ``targets`` name; an equality delete applies to every file whose
-        commit ``seq`` is strictly lower than the delete's (Iceberg's
-        sequence-number rule), NARROWED by the delete's ``key_ranges``
-        against each file's manifest bounds/partition values (an
-        optimization only — a spuriously included file just anti-joins to
-        zero matches, so narrowing can never lose a delete).  Applicable
-        files are scanned with their (file, row ordinal) metadata and
-        anti-joined against the (small, broadcast) delete keys; files no
-        delete applies to take the untouched zero-overhead path, so a
-        table with no deletes pays nothing.  ``with_pos=True`` keeps the
-        ``__mor_rel``/``__mor_pos`` columns on the result (the delete
-        writers' substrate); ``apply_deletes=False`` reads the physical
-        rows (time travel passes the snapshot's own head, so old
-        snapshots see exactly their own delete set — not this flag)."""
+        """Assemble ``entries`` and apply the head's MERGE-ON-READ
+        position deletes (Iceberg v2): each delete entry applies to the
+        files its ``targets`` name.  The targeted files are scanned with
+        their (file, row ordinal) metadata and anti-joined against the
+        broadcast tuples, which pyarrow reads from the delete files and
+        ships as one Arrow local relation; files no delete applies to take
+        the untouched zero-overhead path, so a table with no deletes pays
+        nothing.  ``with_pos=True`` keeps the ``__mor_rel``/``__mor_pos``
+        columns on the result (the delete writers' substrate);
+        ``apply_deletes=False`` reads the physical rows (time travel passes
+        the snapshot's own head, so old snapshots see exactly their own
+        delete set — not this flag)."""
         all_dels = (
             self._head_deletes(schema, table, head) if apply_deletes else []
         )
-        entry_by_path = {e["path"]: e for e in entries}
         live_dels, hot_paths = self._live_deletes(
-            schema, table, meta, head, entry_by_path, all_dels
+            {e["path"] for e in entries}, all_dels
         )
         if not live_dels:
             return self._assemble_entries(
                 schema, table, meta, head, entries, with_pos=with_pos
             )
-        pos_dels = [d for _i, d, _t in live_dels if d["kind"] == "pos"]
-        eq_dels = [(i, d, t) for i, d, t in live_dels if d["kind"] == "eq"]
         hot = [e for e in entries if e["path"] in hot_paths]
         cold = [e for e in entries if e["path"] not in hot_paths]
         hot_df = self._assemble_entries(
             schema, table, meta, head, hot, with_pos=True
         )
-        # URI-safe fast path (r10, --mor-steady finding): when every hot
-        # path is URI-predictable, the per-file joins below key on the
-        # RAW ``_metadata.file_path`` against driver-predicted URIs and
-        # the per-ROW decode projection (``_POS_REL``) is never
-        # referenced — Catalyst prunes it away entirely.  Special-char
-        # paths fall back to the decode join (uri_of is None).
-        # The small join-side frames built here and in _apply_eq_deletes
-        # come from Arrow tables: they plan as LocalTableScan and run in
-        # the JVM, whereas a Python-list frame is a pickled RDD whose
-        # every action starts Python worker processes.
-        tdir = self._tdir(schema, table)
-        uri_of = self._predict_uris(tdir, sorted(hot_paths))
-        if pos_dels:
-            tuples = self._delete_tuples(schema, table, pos_dels)
-            if uri_of is not None:
-                import pyarrow as pa
-
-                # normalize the SMALL side: map the tuples' manifest-
-                # relative paths to scan URIs with one broadcast join
-                pairs = sorted(uri_of.items())
-                m = self.spark.createDataFrame(pa.table({
-                    "file_path": pa.array([p for p, _u in pairs], pa.string()),
-                    "__mor_uri": pa.array([u for _p, u in pairs], pa.string()),
-                }))
-                tuples = tuples.join(F.broadcast(m), "file_path").select(
-                    F.col("__mor_uri").alias("file_path"), "pos"
-                )
-                cond = (
-                    F.col(self._POS_FILE) == tuples["file_path"]
-                ) & (F.col(self._POS_IDX) == tuples["pos"])
-            else:
-                cond = (
-                    F.col(self._POS_REL) == tuples["file_path"]
-                ) & (F.col(self._POS_IDX) == tuples["pos"])
-            hot_df = hot_df.join(F.broadcast(tuples), cond, "left_anti")
-        if eq_dels:
-            # single-entry fast path (VERDICT r8 #7): with ONE eq delete
-            # and no pos deletes, the hot frame IS exactly that delete's
-            # applicable files — skip the per-file seq broadcast join and
-            # anti-join the keys directly (one join instead of two)
-            fast = len(eq_dels) == 1 and not pos_dels
-            hot_df = self._apply_eq_deletes(
-                schema, table, head, hot_df, eq_dels, fast=fast,
-                uri_of=uri_of,
-            )
+        hot_df = self._at_tuples(
+            hot_df, self._tdir(schema, table),
+            self._pos_tuples(schema, table, live_dels, hot_paths),
+            hot_paths, "left_anti",
+        )
         if cold:
             cold_df = self._assemble_entries(
                 schema, table, meta, head, cold, with_pos=with_pos
@@ -3166,51 +2934,23 @@ class ParquetWarehouse:
             return hot_df
         return hot_df.drop(self._POS_FILE, self._POS_IDX, self._POS_REL)
 
-    _EQ_K = "__eq_k"
-
+    @staticmethod
     def _live_deletes(
-        self,
-        schema: str,
-        table: str,
-        meta: TableMeta,
-        head: dict,
-        entry_by_path: dict,
-        all_dels: list[dict],
-    ) -> tuple[list[tuple[int, dict, set]], set]:
-        """Which pending delete entries still APPLY to which of
-        ``entry_by_path``'s files: ([(list index, entry, target path
-        set)...] for entries with a non-empty set, union of all sets).
-        The ORIGINAL list index is kept — the delete list is in commit
-        order (carry appends) and equality-delete scoping needs it.
-        This is THE applicability decision: the read path anti-joins
-        exactly these (file, delete) pairs, and the scoped fold
-        (``fold_pending_deletes``) rewrites exactly the union — one
-        code path, so the fold can never miss a file the read would
-        have filtered.  Exclusions are EXACT: targets are explicit, seq
-        scoping is the Iceberg rule, and ``_narrow_eq_targets`` only
-        excludes files PROVEN (bounds/partition values/blooms — no
-        false negatives) to hold no matching key."""
-        entry_paths = set(entry_by_path)
-        live_dels: list[tuple[int, dict, set]] = []
+        paths: set, all_dels: list[dict]
+    ) -> tuple[list[dict], set]:
+        """Which pending delete entries still APPLY to which of ``paths``:
+        (the entries whose ``targets`` meet ``paths``, the union of the
+        files they meet).  This is THE applicability decision: the read
+        path anti-joins exactly these files, and the scoped fold
+        (``fold_pending_deletes``) rewrites exactly the union — one code
+        path, so the fold can never miss a file the read would have
+        filtered."""
+        live_dels: list[dict] = []
         hot_paths: set[str] = set()
-        for i, d in enumerate(all_dels):
-            if d["kind"] == "pos":
-                t = set(d["targets"]) & entry_paths
-            else:
-                # seq-scoped equality delete: strictly-older files,
-                # narrowed by the stored key summary vs manifest stats
-                dseq = d["seq"]
-                t = {
-                    p
-                    for p, e in entry_by_path.items()
-                    if e["seq"] < dseq
-                }
-                if t and d.get("key_ranges"):
-                    t = self._narrow_eq_targets(
-                        schema, table, meta, head, d, t, entry_by_path
-                    )
+        for d in all_dels:
+            t = paths.intersection(d["targets"])
             if t:
-                live_dels.append((i, d, t))
+                live_dels.append(d)
                 hot_paths |= t
         return live_dels, hot_paths
 
@@ -3341,224 +3081,6 @@ class ParquetWarehouse:
                 }
         return result or None
 
-    def _eq_current_names(self, head: dict, d: dict) -> list[str]:
-        """Resolve an equality delete's write-time key column names to the
-        head schema's CURRENT names through FIELD IDS, so deletes written
-        before a rename keep applying."""
-        cur_by_id = {
-            f["id"]: f for f in head["schemas"][str(head["schema_id"])]
-        }
-        missing = [fid for fid in d["eq_ids"] if fid not in cur_by_id]
-        if missing:
-            raise RuntimeError(
-                f"equality delete {d['path']} references dropped "
-                f"field id(s) {missing} — drop_column should have "
-                "refused while this delete was pending"
-            )
-        return [cur_by_id[fid]["name"] for fid in d["eq_ids"]]
-
-    def _narrow_eq_targets(
-        self,
-        schema: str,
-        table: str,
-        meta: TableMeta,
-        head: dict,
-        d: dict,
-        cand: set,
-        entry_by_path: dict,
-    ) -> set:
-        """Narrow a seq-scoped equality delete's candidate files through
-        its stored ``key_ranges`` vs each file's manifest bounds/partition
-        values — the same conservative per-entry test ``prune_files``
-        uses, reused via ``_entry_excluded``.  An excluded file is PROVEN
-        to hold no matching key, so skipping its anti-join is exact;
-        every conservative keep merely joins to zero matches."""
-        spec: dict = {}
-        cur_names = self._eq_current_names(head, d)
-        for wname, cname in zip(d["eq_cols"], cur_names):
-            kr = d["key_ranges"].get(wname)
-            if kr is not None:
-                spec[cname] = self._key_ranges_spec({cname: kr})[cname]
-        if not spec:
-            return cand
-        norm = self._norm_filter(spec)
-        static_types = self._partition_static_types(
-            self._all_partitioning(meta, head)
-        )
-        bmaps = self._bounds_maps(head)
-        bloom_memo: dict = {}
-        return {
-            p
-            for p in cand
-            if not self._entry_excluded(
-                schema,
-                table,
-                entry_by_path[p],
-                norm,
-                static_types,
-                bmaps,
-                bloom_memo,
-            )
-        }
-
-    def _eq_diff_candidates(
-        self, schema: str, table: str, head: dict, new_dels: list[dict],
-        t_fields: list[dict],
-    ):
-        """SUPERSET row filter for a delete commit's changelog diff
-        (r14): returns f(df) keeping exactly the rows whose keys match
-        any of the commit's EQUALITY deletes, or None when no filter
-        applies (a pos-kind delete in the set, or any resolution failure
-        — the unfiltered diff is always correct, just larger).
-
-        Correctness posture: the filter only needs to be a SUPERSET of
-        the rows the deletes actually remove — both diff sides filter
-        identically, so over-keeping cancels in exceptAll and can never
-        corrupt; the dangerous direction (missing a truly-deleted row)
-        cannot happen because the kept set is key-equality against the
-        delete's own key values, cast to the current column types the
-        same way the production anti-join casts (widenings are
-        value-preserving).  NULL keys match nothing on either path (SQL
-        equality).  Multiset-exact across multiple deletes via a
-        hit/remainder chain (a plain union would double-count rows
-        matching two key sets)."""
-        if self.spark is None or not new_dels:
-            return None
-        types = {f["name"]: f["type"] for f in t_fields}
-        groups: list[tuple[list[str], DataFrame]] = []
-        try:
-            for d in new_dels:
-                if d["kind"] != "eq":
-                    return None
-                cols = self._eq_current_names(head, d)
-                if not all(c in types for c in cols):
-                    return None
-                kdf = self._read_delete_parquet(
-                    self._tdir(schema, table), d
-                )
-                groups.append((
-                    cols,
-                    kdf.select(
-                        *[
-                            F.col(w).cast(types[c]).alias(c)
-                            for w, c in zip(d["eq_cols"], cols)
-                        ]
-                    ).distinct(),
-                ))
-        except Exception:
-            return None
-
-        def flt(df: DataFrame) -> DataFrame:
-            out = None
-            rem = df
-            for cols, keys in groups:
-                hit = rem.join(F.broadcast(keys), cols, "leftsemi")
-                out = hit if out is None else out.unionByName(hit)
-                rem = rem.join(F.broadcast(keys), cols, "leftanti")
-            return out
-
-        return flt
-
-    def _apply_eq_deletes(
-        self,
-        schema: str,
-        table: str,
-        head: dict,
-        df: DataFrame,
-        eq_dels: list[tuple[int, dict, set]],
-        fast: bool = False,
-        uri_of: dict[str, str] | None = None,
-    ) -> DataFrame:
-        """Apply EQUALITY DELETES to an assembled hot frame in ONE scan.
-
-        Iceberg's sequence-number rule — "an equality delete applies only
-        to data files OLDER than it" — is enforced per file: entry ``i``'s
-        applicable set (computed by the caller: files with lower ``seq``
-        minus bounds-narrowed files, to which applying it is a no-op by
-        construction) is a SUFFIX property over the
-        commit-ordered delete list — if any entry applies to ``f``, every
-        later entry's keys either genuinely apply or cannot match ``f``'s
-        rows.  So a file's first applicable index ``k(f)`` splits the
-        list: rather than fragment the read into per-delete-set file
-        groups (O(batches) scans for a CDC chain), each row gets its
-        file's ``k`` attached via a broadcast join on the
-        manifest-relative path and ONE anti-join per distinct key-column
-        set removes every (key match AND delete newer than file) row.
-        ``fast=True`` (single entry, hot frame == its applicable set)
-        skips the ``k`` join entirely and anti-joins the keys directly.
-        Key columns resolve through FIELD IDS, so deletes written before
-        a rename keep resolving; key values cast to the current (possibly
-        widened) column type."""
-        cur_types = {
-            f["name"]: f["type"]
-            for f in head["schemas"][str(head["schema_id"])]
-        }
-        tdir = self._tdir(schema, table)
-        if fast:
-            _i, d, _t = eq_dels[0]
-            cur_names = self._eq_current_names(head, d)
-            keys = self._read_delete_parquet(tdir, d)
-            keys = keys.select(*[
-                F.col(wname).cast(cur_types[cname]).alias(f"__eqk_{j}")
-                for j, (wname, cname) in enumerate(zip(d["eq_cols"], cur_names))
-            ])
-            cond = F.lit(True)
-            for j, cname in enumerate(cur_names):
-                cond = cond & (F.col(cname) == F.col(f"__eqk_{j}"))
-            return df.join(F.broadcast(keys), cond, "left_anti")
-        # per-file first applicable index (files only pos-targeted join
-        # to NULL -> the anti-join condition is NULL -> row kept)
-        k_of: dict[str, int] = {}
-        for i, _d, t in eq_dels:
-            for p in t:
-                if p not in k_of:
-                    k_of[p] = i
-        # URI-safe fast path: key the per-file index on the RAW scan URI
-        # (driver-predicted, see _predict_uris) so no per-row decode of
-        # ``_metadata.file_path`` is ever evaluated.  The index frame is
-        # an Arrow local relation (LocalTableScan), so the read starts no
-        # Python workers (see _read_entries).
-        import pyarrow as pa
-
-        if uri_of is not None:
-            pairs = sorted((uri_of[p], k) for p, k in k_of.items())
-            join_col = self._POS_FILE
-        else:
-            pairs = sorted(k_of.items())
-            join_col = self._POS_REL
-        fs = self.spark.createDataFrame(pa.table({
-            "__eq_path": pa.array([p for p, _k in pairs], pa.string()),
-            self._EQ_K: pa.array([k for _p, k in pairs], pa.int32()),
-        }))
-        df = df.join(
-            F.broadcast(fs),
-            F.col(join_col) == F.col("__eq_path"),
-            "left",
-        ).drop("__eq_path")
-        groups: dict[tuple, list[DataFrame]] = {}
-        for i, d, _t in eq_dels:
-            cur_names = self._eq_current_names(head, d)
-            keys = self._read_delete_parquet(tdir, d)
-            keys = keys.select(
-                *[
-                    F.col(wname).cast(cur_types[cname]).alias(f"__eqk_{j}")
-                    for j, (wname, cname) in enumerate(
-                        zip(d["eq_cols"], cur_names)
-                    )
-                ],
-                F.lit(i).alias("__eq_idx"),
-            )
-            groups.setdefault(tuple(cur_names), []).append(keys)
-        for cur_names, frames in groups.items():
-            from functools import reduce
-
-            keys = reduce(lambda a, b: a.unionByName(b), frames)
-            cond = F.col("__eq_idx") >= F.col(self._EQ_K)
-            for j, cname in enumerate(cur_names):
-                cond = cond & (F.col(cname) == F.col(f"__eqk_{j}"))
-            df = df.join(F.broadcast(keys), cond, "left_anti")
-        return df.drop(self._EQ_K)
-
     def table_schema(
         self, schema: str, table: str, version: int | None = None,
         branch: str = "main",
@@ -3616,23 +3138,6 @@ class ParquetWarehouse:
             schemas = {k: [dict(f) for f in v] for k, v in head["schemas"].items()}
             cur = [dict(f) for f in schemas[str(head["schema_id"])]]
             new_fields = mutate(cur, schemas, meta, head)
-            # a pending EQUALITY DELETE keys on field ids — dropping one
-            # of its key fields would leave the delete unapplicable (the
-            # rows it names would silently resurrect).  Refuse; the
-            # caller runs optimize() to fold the delete first.
-            surviving = {f["id"] for f in new_fields}
-            for d in self._head_deletes(schema, table, head):
-                lost = [
-                    fid
-                    for fid in d.get("eq_ids", [])
-                    if fid not in surviving
-                ]
-                if lost:
-                    raise ValueError(
-                        f"cannot drop column(s) with field id(s) {lost}: "
-                        f"pending equality delete {d['path']} keys on "
-                        "them — optimize() to fold the delete first"
-                    )
             new_sid = max(int(k) for k in schemas) + 1
             schemas[str(new_sid)] = new_fields
             version = head["version"] + 1
@@ -3979,7 +3484,7 @@ class ParquetWarehouse:
         from the schema in the same commit (it existed only as the
         transform's output); identity fields are ordinary data columns
         and the schema is untouched.  Refused when the derived column is
-        in the sort order or a pending equality delete keys on it."""
+        in the sort order."""
         canon = self._canon_transform(transform)
         out_name = transform_out_name(canon)
         fn = transform_fn_name(canon)
@@ -4078,22 +3583,7 @@ class ParquetWarehouse:
             }
             if schema_bump is not None:
                 # dual mutation, one commit: the derived column and its
-                # spec land/leave atomically.  Pending-eq-delete key
-                # fields are protected exactly as in drop_column.
-                surviving = {f["id"] for f in schema_bump}
-                for d in self._head_deletes(schema, table, head):
-                    lost = [
-                        fid
-                        for fid in d.get("eq_ids", [])
-                        if fid not in surviving
-                    ]
-                    if lost:
-                        raise ValueError(
-                            f"cannot {operation} on {schema}.{table}: "
-                            f"pending equality delete {d['path']} keys on "
-                            f"field id(s) {lost} — optimize() to fold the "
-                            "delete first"
-                        )
+                # spec land/leave atomically
                 new_sid = max(int(k) for k in schemas) + 1
                 schemas[str(new_sid)] = schema_bump
                 manifest["schemas"] = schemas
@@ -5001,9 +4491,9 @@ class ParquetWarehouse:
         True iff the entry's partition values / column bounds / null
         counts / key BLOOM filter PROVE no row can satisfy it.
         Conservative by construction — missing stats or incomparable
-        types keep the file.  Shared by ``_prune_entries``
-        (planning-time skipping) and equality-delete read-time
-        narrowing.  Blooms are consulted LAST (they cost a sidecar read
+        types keep the file.  Used by ``_prune_entries``
+        (planning-time skipping, and the key deletes' target pruning).
+        Blooms are consulted LAST (they cost a sidecar read
         where bounds/partitions are in-memory) and only for
         membership-shaped specs — a discrete value list or a point
         range; ``bloom_memo`` (one dict per prune call) holds the
@@ -5250,17 +4740,14 @@ class ParquetWarehouse:
         """Fold pass run ONLY by commits that drop data files (or pass
         ``retire_deletes``): prune position-delete targets of dropped
         paths and remove OBSOLETE entries — an entry whose seq no
-        surviving data file predates can never apply again (position
-        targets are all files live at its commit, i.e. strictly older;
-        equality scope is strictly-older by definition), so
+        surviving data file predates can never apply again (its targets
+        are all files live at its commit, i.e. strictly older), so
         ``min_live_seq >= entry.seq`` retires it.  A ref whose
         ``max_seq`` is already retired drops unopened.  ``retire`` is
         an explicit entry-path set from a caller that PROVED those
         entries inert (``fold_pending_deletes``: it rewrote every file
-        the entry still applied to in this same commit, and narrowing
-        exclusions are exact) — the seq test alone cannot see that a
-        seq-scoped equality delete's remaining older files are all
-        key-disjoint.  Every opened entry passes ``_check_delete_entries``
+        the entry still applied to in this same commit).  Every opened
+        entry passes ``_check_delete_entries``
         against the parent head ``version``.  Returns (refs, newly
         written segment names)."""
         retire = retire or set()
@@ -5312,9 +4799,7 @@ class ParquetWarehouse:
     def _merge_delete_segments(
         self, schema: str, table: str, refs: list[dict]
     ) -> tuple[list[dict], list[str]]:
-        """Concatenate delete segments into one, PRESERVING commit order
-        (equality-delete scoping sorts on entry seq, which is
-        commit-ordered across refs by construction)."""
+        """Concatenate delete segments into one, PRESERVING commit order."""
         ents: list[dict] = []
         for r in refs:
             ents += self._load_segment(schema, table, r["path"])
@@ -5500,10 +4985,8 @@ class ParquetWarehouse:
         SEQUENCE NUMBERS (Iceberg data-sequence semantics): every fresh
         entry — data file or delete — is stamped ``seq = <its commit
         version>``; entries reused from the parent keep their original
-        seq.  Equality deletes apply at read time to files with a
-        STRICTLY LOWER seq, so a delete needs no target list (O(keys)
-        metadata however many files are live) and same-commit data files
-        (CDC images) are never self-deleted.  Delete entries live in
+        seq; the fold below retires a delete entry once no live file
+        predates it.  Delete entries live in
         immutable DELETE SEGMENTS referenced by
         ``head["delete_segments"]``; append commits carry the refs
         VERBATIM (O(refs) bytes — a pending broad delete costs later
@@ -5537,8 +5020,7 @@ class ParquetWarehouse:
         ``deletes_read_version`` (position-delete writers): a commit
         whose delete TUPLES name files a concurrent commit rewrote
         RAISES — the tuples reference dead paths and the rows would
-        resurrect.  Pure equality deletes don't need it (seq scoping
-        covers the rewritten files).
+        resurrect (``DeleteTargetsRewrittenError``).
 
         ``retire_deletes`` (r19, the scoped fold): manifest-relative
         delete-entry paths the CALLER proved inert — every file each
@@ -5555,9 +5037,8 @@ class ParquetWarehouse:
         ADD paths were NOT already live as of this head version; if the
         head moved past it, the commit re-validates and RAISES when any
         add is now live — a concurrent duplicate pick publishing the
-        same carried entries would otherwise re-stamp them at a higher
-        seq and intervening equality deletes would silently stop
-        applying (rows resurrect).  O(live files), only on a race.
+        same carried entries would otherwise publish them twice.
+        O(live files), only on a race.
 
         ``add_files`` commits
         are a DELTA — the retry re-references the winner's segments and no
@@ -5790,10 +5271,8 @@ class ParquetWarehouse:
                 # SHARED seq counter past the fork while main's version
                 # stays put, so the publish commit inherits the branch's
                 # last_seq and later main commits stamp ABOVE every
-                # carried entry — under version-as-seq, a post-publish
-                # equality delete (seq = small main version) silently
-                # skipped branch entries stamped with larger branch
-                # versions (strictly-lower-seq rule inverted).
+                # carried entry, so the fold's "no live file predates
+                # this delete" test stays sound across refs.
                 seq = (head["last_seq"] if head else 0) + 1
                 if seg_stamp_v != seq:
                     for e in fresh_list:
@@ -5932,9 +5411,7 @@ class ParquetWarehouse:
                     # (cherry_pick) checked its adds against the head it
                     # read; the head moved, so re-check against the
                     # winner — an already-live path means a concurrent
-                    # pick of the same commit published first, and
-                    # re-adding it at a higher seq would un-apply any
-                    # equality delete committed in between
+                    # pick of the same commit published first
                     add_paths = {e["path"] for e in entries}
                     dup = sorted(
                         add_paths
@@ -6046,8 +5523,7 @@ class ParquetWarehouse:
                     # race, any target it rewrote now lives on in folded
                     # replacement files the delete does NOT reference —
                     # publishing would silently LOSE the delete for those
-                    # rows (position tuples name dead paths; equality
-                    # targets omit the replacements).  Pay an O(live
+                    # rows (its tuples name dead paths).  Pay an O(live
                     # files) liveness check ONLY on an actual race.
                     live_now: set[str] = set()
                     for r in refs:
@@ -6058,13 +5534,10 @@ class ParquetWarehouse:
                             )
                         )
                     stale = {
-                        t
-                        for d in add_deletes
-                        if d["kind"] == "pos"
-                        for t in d["targets"]
+                        t for d in add_deletes for t in d["targets"]
                     } - live_now
                     if stale:
-                        raise RuntimeError(
+                        raise DeleteTargetsRewrittenError(
                             f"concurrent commit conflict on "
                             f"{schema}.{table}: {len(stale)} file(s) this "
                             "delete targets were rewritten between read "
@@ -6263,22 +5736,22 @@ class ParquetWarehouse:
         schema: str, table: str, version: int, dels: list[dict]
     ) -> None:
         """Refuse delete entries in any layout but the current one: a
-        position entry records ``targets`` and ``target_counts``; an
-        equality entry records ``eq_cols`` and ``eq_ids`` and is scoped by
-        sequence number, never by a ``targets`` list."""
+        position entry recording ``targets`` and ``target_counts``.
+        Equality entries (``kind == "eq"``) are refused too — position
+        deletes are the only row-level delete, and nothing reads,
+        applies or folds key-valued deletes any more."""
         for d in dels:
             kind = d.get("kind")
             if kind == "pos":
-                need = ("targets", "target_counts")
+                bad = [
+                    f"no {k!r}"
+                    for k in ("targets", "target_counts")
+                    if k not in d
+                ]
             elif kind == "eq":
-                need = ("eq_cols", "eq_ids")
+                bad = ["an equality delete; only position deletes are read"]
             else:
-                need = ()
-            bad = [f"no {k!r}" for k in need if k not in d]
-            if not need:
-                bad.append(f"kind {kind!r}")
-            elif kind == "eq" and "targets" in d:
-                bad.append("explicit 'targets'")
+                bad = [f"kind {kind!r}"]
             if bad:
                 raise ValueError(
                     f"{schema}.{table} snapshot v{version}: delete entry "
@@ -6740,9 +6213,9 @@ class ParquetWarehouse:
                 "operation": "fast_forward",
                 "ts": round(_time.time(), 3),
                 # the branch advanced the SHARED data-sequence counter
-                # past the fork; main must continue from it or later
-                # eq deletes would skip the carried entries (the seq
-                # skew bug — see commit_snapshot's last_seq note)
+                # past the fork; main must continue from it so later
+                # commits stamp above every carried entry (see
+                # commit_snapshot's last_seq note)
                 "last_seq": bhead["last_seq"],
                 "from_branch": name,
                 "from_branch_ts": self._load_head_light(
@@ -6784,13 +6257,10 @@ class ParquetWarehouse:
           conflicting-rewrite fence raises otherwise (main already
           rewrote or deleted them: the pick's inputs changed under it);
         - POSITION deletes must target files main still has (or the
-          pick's own adds); EQUALITY deletes replay against everything
-          live at pick time (seq scoping — "forget these keys" is
-          position-independent).  Both checks are metadata-only.
+          pick's own adds).  Both checks are metadata-only.
 
         Schema fence: every sid the picked entries carry must exist on
-        main with an IDENTICAL field list, and added eq deletes' field
-        ids must resolve in main's current schema — DDL that happened on
+        main with an IDENTICAL field list — DDL that happened on
         either side since the fork refuses the pick (DDL commits
         themselves have no data delta and are rejected outright).
         Cost: O(branch live files) manifest parse to diff the commit +
@@ -6799,21 +6269,15 @@ class ParquetWarehouse:
         shapes), mirroring the existing only-on-conflict fences.
 
         Duplicate-pick fence: a pick whose ADDED files are ALL already
-        live on main REFUSES — re-adding would re-stamp the entries at a
-        higher seq, and any equality delete committed on main between
-        the first publish and the re-pick would silently stop applying
-        to them (deleted rows resurrect; reads de-duplicate by path and
-        keep the HIGHER-seq entry, so "a double pick only inflates
-        counts" was wrong — ADVICE r10).  The fence re-validates inside
+        live on main REFUSES — re-adding would publish the same entries
+        twice at a higher seq.  The fence re-validates inside
         the commit CAS loop (``adds_read_version``) so a concurrent
         duplicate pick cannot slip between check and publish.
         ``merge_branch`` treats the refusal as already-published, which
         restores resume idempotency even after the provenance-record
-        history window expired.  Picks that add NO files (pure eq/pos
-        delete commits) are not double-pick fenced — their replay is
-        key/tuple-idempotent against the same rows, but a re-pick
-        applies at pick time and can reach rows appended since; rely on
-        merge_branch provenance (or don't re-pick delete-only commits).
+        history window expired.  Picks that add NO files (pure delete
+        commits) are not double-pick fenced — their replay is
+        tuple-idempotent against the same rows.
         Pick a branch's commits oldest-first."""
         versions = self._snapshot_versions(schema, table, name)
         if not versions:
@@ -6896,20 +6360,7 @@ class ParquetWarehouse:
                     "DDL since the fork) — merge_branch adopts branch-"
                     "only spec evolution first, or re-stage"
                 )
-        cur_ids = {f["id"] for f in msch[str(mhead["schema_id"])]}
-        pos_targets: set[str] = set()
-        for d in added_dels:
-            if d["kind"] == "pos":
-                pos_targets.update(d["targets"])
-            else:
-                missing = sorted(set(d["eq_ids"]) - cur_ids)
-                if missing:
-                    raise RuntimeError(
-                        f"cannot cherry-pick {schema}.{table} "
-                        f"{name}@v{version}: equality-delete key field "
-                        f"id(s) {missing} no longer exist in main's "
-                        "schema"
-                    )
+        pos_targets = {t for d in added_dels for t in d["targets"]}
         mlive: set[str] | None = None
         if added or pos_targets:
             mlive = self._head_live_paths(schema, table, mhead)
@@ -6919,9 +6370,8 @@ class ParquetWarehouse:
                 raise AlreadyPublishedError(
                     f"cherry-pick of {schema}.{table} {name}@v{version} "
                     "already published: every file it adds is already "
-                    "live on main — re-adding would re-stamp the entries "
-                    "at a higher seq and un-apply any equality delete "
-                    "committed since the first pick"
+                    "live on main — re-adding would publish the same "
+                    "entries twice"
                 )
             if dup:
                 raise RuntimeError(
@@ -6958,7 +6408,7 @@ class ParquetWarehouse:
                 d
                 for d in self._head_deletes(schema, table, mhead)
                 if d["path"] not in known
-                and (d["kind"] != "pos" or set(d["targets"]) & dropped_set)
+                and set(d["targets"]) & dropped_set
             ]
             if unseen:
                 raise RuntimeError(
@@ -7029,10 +6479,7 @@ class ParquetWarehouse:
         adopt (no branch DDL, or an earlier merge already adopted —
         idempotent for crashed-merge re-runs).  REFUSES real conflicts:
         - schema DDL on BOTH sides since the fork (field id / sid spaces
-          collided; even same-shaped changes would alias distinct ids),
-        - a branch drop of a field some MAIN pending equality delete
-          keys on (adoption would leave the delete unapplicable and its
-          rows would resurrect — the drop_column guard, merge flavor).
+          collided; even same-shaped changes would alias distinct ids).
         """
         def ddl_state(h):
             # schema AND partition-spec record — branch-only evolution of
@@ -7059,16 +6506,6 @@ class ParquetWarehouse:
                     "since the fork — ids would alias; re-stage on a "
                     "fresh branch"
                 )
-            cur_ids = {f["id"] for f in bsch[str(bhead["schema_id"])]}
-            for d in self._head_deletes(schema, table, mhead):
-                missing = sorted(set(d.get("eq_ids") or []) - cur_ids)
-                if missing:
-                    raise RuntimeError(
-                        f"cannot merge branch {name!r} of {schema}."
-                        f"{table}: it drops field id(s) {missing} that "
-                        f"main's pending equality delete {d['path']} "
-                        "keys on — optimize() main to fold it first"
-                    )
             manifest = {
                 "version": mhead["version"] + 1,
                 "parent": mhead["version"],
@@ -7251,13 +6688,10 @@ class ParquetWarehouse:
         - DDL is NOT reverted — the snapshot pointer moves, the table
           schema stays current (the head carries the CURRENT schemas
           superset + schema_id; the restored entries resolve through
-          their recorded sids as always).  A restored pending equality
-          delete whose key field was dropped since REFUSES — its keys
-          could no longer resolve (mirror of ``drop_column``'s guard).
+          their recorded sids as always).
         - The sequence counter stays MONOTONE across the rollback
           (max of both timelines' counters): new commits out-sequence
-          every entry either timeline ever stamped, so no future
-          equality delete can collide with a restored or abandoned seq.
+          every entry either timeline ever stamped.
         - Works on branches (``branch=``); tags are main-namespace.
 
         Within one ref our history is strictly linear (every commit's
@@ -7285,6 +6719,7 @@ class ParquetWarehouse:
                 "snapshot is not retained (expired, or never existed) — "
                 "see history()"
             )
+        self._head_deletes(schema, table, target)  # refuses old layouts
         import time as _time
 
         while True:
@@ -7295,19 +6730,6 @@ class ParquetWarehouse:
                     f"head is v{head['version']} — rollback targets an "
                     "EARLIER snapshot"
                 )
-            cur_ids = {
-                f["id"] for f in head["schemas"][str(head["schema_id"])]
-            }
-            for d in self._head_deletes(schema, table, target):
-                missing = sorted(set(d.get("eq_ids", [])) - cur_ids)
-                if missing:
-                    raise ValueError(
-                        f"cannot roll back {schema}.{table} to "
-                        f"v{version}: its pending equality delete "
-                        f"{d['path']} keys on field id(s) {missing} "
-                        "dropped from the current schema — the keys "
-                        "could no longer resolve"
-                    )
             manifest = {
                 "version": head["version"] + 1,
                 "parent": head["version"],
@@ -7985,10 +7407,9 @@ class ParquetWarehouse:
           snapshots (net-change collapsing is the consumer's business).
         - merge-on-read delete/update commits: ROW-level EXACT — the
           deleted rows are computed as visible-before MINUS
-          visible-after over the surviving files, using the production
-          delete application itself (position tuples, equality keys,
-          sequence scoping — one code path, no changelog
-          re-implementation to drift).
+          visible-after over the rows the commit's position tuples name,
+          using the production delete application itself (one code
+          path, no changelog re-implementation to drift).
         - compactions / metadata commits (``_CHANGELOG_SKIP_OPS``):
           skipped — no logical change; the deletes a fold materializes
           were emitted when their delete committed.
@@ -8131,8 +7552,8 @@ class ParquetWarehouse:
                 # files AND its pending deletes on them in ONE commit —
                 # reading raw would emit phantom inserts for rows the
                 # carried deletes hide (review r11 #1).  Same-commit CDC
-                # images are safe either way (an equality delete never
-                # reaches its own commit's files — seq rule).
+                # images are safe either way (an upsert's position delete
+                # targets only files live before its commit).
                 parts.append(stamp(
                     self._read_entries(
                         schema, table, meta, hyb(h), added,
@@ -8149,27 +7570,12 @@ class ParquetWarehouse:
                     "delete", v, ordinal,
                 ))
             if new_dels:
-                # scope the before/after diff to files the new deletes
-                # can TOUCH: pos entries carry explicit targets;
-                # seq-scoped eq deletes reach strictly-older files,
-                # narrowed through
-                # their stored key_ranges vs manifest bounds/partitions/
-                # BLOOMS — the same proven `_narrow_eq_targets` the read
-                # path uses (r14: the diff used to fall back to ALL
-                # common files for any seq-scoped delete, making each
-                # MoR CDC commit's changelog O(table scan))
+                # scope the before/after diff to the files the new
+                # deletes target
                 cand_all = {p for p in cur_files if p in prev_files}
                 touched: set[str] = set()
                 for d in new_dels:
-                    if d["kind"] == "pos":
-                        touched |= set(d["targets"]) & cand_all
-                        continue
-                    c = {p for p in cand_all if prev_files[p]["seq"] < d["seq"]}
-                    if c and d.get("key_ranges"):
-                        c = self._narrow_eq_targets(
-                            schema, table, meta, hyb(h), d, c, prev_files
-                        )
-                    touched |= c
+                    touched |= set(d["targets"]) & cand_all
                 common = [cur_files[p] for p in cand_all if p in touched]
                 if common:
                     maps = [
@@ -8187,28 +7593,23 @@ class ParquetWarehouse:
                             f"map-typed column(s) {maps} — drop/serialize "
                             "the column or use copy-on-write deletes"
                         )
-                    before = self._read_entries(
-                        schema, table, meta, hyb(prev), common,
-                        apply_deletes=True,
+                    # both sides keep only the rows the new tuples name:
+                    # the visibility delta between prev and h is confined
+                    # to them, every other row is identical on both sides
+                    # and would cancel, so the diff stays exact and costs
+                    # O(deleted rows), not O(target files)
+                    tuples = self._pos_tuples(schema, table, new_dels, touched)
+                    before, after = (
+                        self._at_tuples(
+                            self._read_entries(
+                                schema, table, meta, hyb(x), common,
+                                with_pos=True,
+                            ),
+                            self._tdir(schema, table), tuples, touched,
+                            "left_semi",
+                        ).drop(self._POS_FILE, self._POS_IDX, self._POS_REL)
+                        for x in (prev, h)
                     )
-                    after = self._read_entries(
-                        schema, table, meta, hyb(h), common,
-                        apply_deletes=True,
-                    )
-                    # bound the diff's exceptAll to rows whose keys the
-                    # commit's equality deletes can match (r14): the
-                    # visibility delta between prev and h is BY
-                    # CONSTRUCTION confined to rows the new deletes
-                    # remove, so any SUPERSET row filter applied to both
-                    # sides leaves the diff exact — non-matching rows
-                    # are identical on both sides and cancel.  Turns a
-                    # 20k-key CDC commit's changelog from an O(table)
-                    # exceptAll into an O(matching rows) one.
-                    flt = self._eq_diff_candidates(
-                        schema, table, hyb(h), new_dels, t_fields
-                    )
-                    if flt is not None:
-                        before, after = flt(before), flt(after)
                     parts.append(stamp(
                         before.exceptAll(after), "delete", v, ordinal
                     ))
@@ -8286,13 +7687,9 @@ class ParquetWarehouse:
           outputs) and files DROPPED in-window (CoW rewrite inputs —
           their rows may have vanished or moved), read RAW (no delete
           application: deletes never add keys);
-        - equality-delete parquets whose key columns COVER ``key_cols``
-          (the exact key tuples of every row they delete — the CDC
-          delete-on-the-key case);
-        - other delete entries (position deletes, non-covering equality
-          deletes) fall back to their VICTIM FILES' keys — explicit
-          targets for pos entries, seq-scoped + key_ranges narrowing
-          (bounds/partitions/blooms) for eq entries.
+        - the rows each in-window position delete names, read RAW at
+          their (file, row ordinal): the exact keys of every deleted
+          row.
 
         Same window contracts as ``read_changes``: changelog-skip ops
         (compaction, DDL) contribute nothing, a rollback in-window
@@ -8335,12 +7732,13 @@ class ParquetWarehouse:
                 f"no key column(s) {missing} in {schema}.{table}'s "
                 "window-end schema"
             )
-        types = {f["name"]: f["type"] for f in t_fields}
         # window-end schema, NO delete refs: raw column-pruned reads
         raw_head = {k: v for k, v in tvh.items() if k != "delete_segments"}
         prev = _load(fv)
         prev_files: dict | None = None
         touched: dict[str, dict] = {}
+        del_entries: list[dict] = []
+        del_files: dict[str, dict] = {}
         key_frames: list[DataFrame] = []
         for v in range(fv + 1, tv + 1):
             h = _load(v)
@@ -8364,7 +7762,7 @@ class ParquetWarehouse:
             # path); if that defensive invariant were ever violated the
             # set difference only OVER-approximates — still a superset.
             # The full prev map is materialized lazily below, only when a
-            # pos/non-covering delete needs victim candidates.
+            # position delete needs its target entries.
             prev_files = None
 
             def _side_entries(a: dict, b: dict) -> dict:
@@ -8404,51 +7802,33 @@ class ParquetWarehouse:
             for d in self._head_deletes(schema, table, h):
                 if d["path"] in prev_del_paths:
                     continue
-                if d["kind"] == "eq":
-                    try:
-                        cur_names = self._eq_current_names(tvh, d)
-                    except RuntimeError:
-                        cur_names = None  # dropped field: victim fallback
-                    if cur_names is not None and set(key_cols) <= set(
-                        cur_names
-                    ):
-                        try:
-                            kdf = self._read_delete_parquet(
-                                self._tdir(schema, table), d
-                            )
-                            key_frames.append(
-                                kdf.select(
-                                    *[
-                                        F.col(w).cast(types[c]).alias(c)
-                                        for w, c in zip(
-                                            d["eq_cols"], cur_names
-                                        )
-                                        if c in key_cols
-                                    ]
-                                ).select(*key_cols)
-                            )
-                            continue
-                        except Exception:
-                            pass  # unreadable: victim fallback below
-                # victim-file fallback (pos, non-covering/unreadable eq)
-                # — the one case that pays the full prev materialization
+                # the one case that pays the full prev materialization
                 pf = _prev_files()
-                if d["kind"] == "pos":
-                    cand = set(d["targets"]) & set(pf)
-                else:
-                    cand = {p for p in pf if pf[p]["seq"] < d["seq"]}
-                    if cand and d.get("key_ranges"):
-                        cand = self._narrow_eq_targets(
-                            schema, table, meta, tvh, d, cand, pf
-                        )
-                for p in cand:
-                    touched.setdefault(p, pf[p])
+                hit = set(d["targets"]) & set(pf)
+                if hit:
+                    del_entries.append(d)
+                    for p in hit:
+                        del_files.setdefault(p, pf[p])
             prev, prev_files = h, None
         if touched:
             key_frames.append(
                 self._read_entries(
                     schema, table, meta, raw_head,
                     list(touched.values()), apply_deletes=False,
+                ).select(*key_cols)
+            )
+        if del_files:
+            paths = set(del_files)
+            key_frames.append(
+                self._at_tuples(
+                    self._read_entries(
+                        schema, table, meta, raw_head,
+                        list(del_files.values()), with_pos=True,
+                        apply_deletes=False,
+                    ),
+                    self._tdir(schema, table),
+                    self._pos_tuples(schema, table, del_entries, paths),
+                    paths, "left_semi",
                 ).select(*key_cols)
             )
         if not key_frames:
@@ -9240,15 +8620,19 @@ class ParquetWarehouse:
         """Upsert ``updates`` into the table by key (MERGE INTO analogue).
 
         ``mode`` selects the Iceberg ``write.merge.mode`` strategy (falls
-        back to the ``merge_mode`` table property, then copy-on-write).  ``"merge-on-read"`` is the streaming-CDC
-        shape (Flink->Iceberg upsert commits): append ONLY the batch's
-        new row images plus ONE EQUALITY DELETE of the batch's keys
-        (scoped to the files live before the commit), so commit cost is
-        O(batch) however large the table — the copy-on-write path below
-        reads the whole table per batch.  Reads anti-join
-        the keys; ``optimize()`` folds.  Stacked batches linearize
-        because each batch's delete targets the previous batches' image
-        files but never its own.
+        back to the ``merge_mode`` table property, then copy-on-write).
+        ``"merge-on-read"`` is Spark's Iceberg ``MERGE INTO`` shape in
+        merge-on-read mode: append ONLY the batch's new row images plus
+        ONE POSITION DELETE of the live rows the batch's keys replace.
+        The victim scan reads the key columns of only the files whose
+        bounds admit the batch's key envelope (``_key_victims``: on the
+        driver with pyarrow for small batches, else one Spark job), so
+        commit cost stays O(batch + candidate key columns) — the
+        copy-on-write path below rewrites whole files.  Reads anti-join
+        the tuples and ``count_rows`` stays metadata-only; folds and
+        ``optimize()`` retire them.  The commit is fenced by
+        ``expected_parent``: a commit landing between this merge's head
+        capture and its publish makes it raise (redo the batch).
 
         Copy-on-write writes the merged rows as one new generation: an
         unpartitioned table is rewritten whole and committed as a replace,
@@ -9310,8 +8694,8 @@ class ParquetWarehouse:
             env_types = {c: cur0[c]["type"] for c in key_cols}
         # Small batches (the CDC tick norm) take ONE bounded collect of
         # (raw keys, tombstone flag, Spark-CAST keys): dup-check on raw
-        # tuples, envelope/NULLs on the cast values, and the key rows for
-        # the driver-side delete write all come from the same job.  Big
+        # tuples, envelope/NULLs on the cast values, and the keys of the
+        # driver-side victim scan all come from the same job.  Big
         # batches (or float keys, whose NaN ordering/equality diverges
         # between Python and Spark) take the one combined aggregate.
         dtype_of = dict(updates.dtypes)
@@ -9459,11 +8843,9 @@ class ParquetWarehouse:
                 result["mode"] = "merge-on-read"
                 result["delete_files_added"] = 0
                 return result
-            head = head0
             # key columns resolved + CAST in the combined stats aggregate
             # above (ADVICE r8: envelope over POST-cast values); NULL
             # rejection + the min/max pruning envelope read off its row
-            eq_ids = [cur0[c]["id"] for c in key_cols]
             kdf = changed_keys.select(
                 *[F.col(c).cast(cur0[c]["type"]).alias(c) for c in key_cols]
             )
@@ -9479,7 +8861,6 @@ class ParquetWarehouse:
             target_entries, _total, _h = self._prune_entries(
                 schema, table, ranges, version=version, branch=branch
             )
-            key_ranges = self._store_key_ranges(ranges)
             # new row images: same conform-and-commit shape as append()
             new: list[str] = []
             gen_dir = None
@@ -9525,39 +8906,39 @@ class ParquetWarehouse:
                         new.append(p)
             del_root, del_entries = (None, [])
             if target_entries:
-                # the eq delete is committed only when the manifest cannot
-                # PROVE the batch keys miss every live file; seq scoping
-                # makes it apply to all strictly-older files (no stored
-                # target list), narrowed at read time by key_ranges.
-                # Small batches (the CDC tick norm) already hold their
-                # post-cast keys driver-side from the stats probe — the
-                # few-KB parquet writes via pyarrow, zero Spark jobs.
-                if key_rows_local is not None:
-                    del_root, del_entries = self._write_eq_deletes_local(
-                        schema, table, key_rows_local, key_cols,
-                        env_types, eq_ids, key_ranges,
-                    )
-                else:
-                    del_root, del_entries = self._write_eq_deletes(
-                        schema, table, kdf, key_cols, eq_ids, key_ranges
-                    )
+                # victims: the live rows of the files the key envelope
+                # admits whose keys the batch carries, found on the
+                # driver for small batches (their post-cast keys came
+                # back with the stats probe); ONE position-delete file.
+                # Its victims were computed at head0 with head0's pending
+                # deletes applied: read-position stamp, as delete_where
+                victims = self._key_victims(
+                    schema, table, meta, head0, target_entries, key_cols,
+                    key_rows_local, kdf,
+                )
+                del_root, del_entries = self._write_pos_deletes(
+                    schema, table, victims
+                )
+                for d in del_entries:
+                    d["rv_seq"] = head0["last_seq"]
             if not new and not del_entries:
                 return {**result, "mode": "merge-on-read",
                         "delete_files_added": 0}
             try:
-                # no deletes_read_version fence: a pure equality delete
-                # survives concurrent rewrites by seq scoping (the
-                # rewrite's output files carry a lower seq), and the new
-                # IMAGES come from the caller's batch, not a table read
+                # expected_parent: the victims are positions in the files
+                # of head0, and any commit since could have rewritten
+                # them or added a row under a batch key — raise, the
+                # caller redoes the batch from the new head
                 manifest = self.commit_snapshot(
                     schema, table, "merge_upsert",
                     add_files=sorted(new),
                     add_deletes=del_entries or None,
                     schema_fields=schema_fields,
                     expected_schema_id=(
-                        head["schema_id"] if schema_fields is None else None
+                        head0["schema_id"] if schema_fields is None else None
                     ),
                     spec_transforms=cur_part if new else None,
+                    expected_parent=version,
                     branch=branch,
                     extra_meta=extra_meta,
                 )
@@ -9573,6 +8954,7 @@ class ParquetWarehouse:
                 "files_added": len(new),
                 "delete_files_added": len(del_entries),
                 "delete_bytes": sum(e["bytes"] for e in del_entries),
+                "rows_deleted": sum(e["rows"] for e in del_entries),
                 # informational: candidate files at the read snapshot
                 "targets": len(target_entries),
                 "version": manifest["version"],

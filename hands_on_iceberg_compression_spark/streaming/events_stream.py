@@ -301,12 +301,12 @@ def stream_upsert_latest_into_warehouse(
     merge_upsert is idempotent for identical updates.
 
     ``mode="merge-on-read"`` is the scale path (the Flink->Iceberg upsert
-    sink shape): each epoch commits O(batch) — new images + one equality
-    delete of the batch's keys — instead of rewriting the snapshot table.
-    Replay stays idempotent two ways: the ``fresh`` filter drops rows the
-    stored table already reflects, and even a raw re-commit linearizes
-    (the replay's equality delete targets the first attempt's image
-    files).  ``maintenance_every`` folds the accumulated delete files
+    sink shape): each epoch commits new images + one position delete of
+    the rows the batch's keys replace — instead of rewriting the snapshot
+    table.  Replay stays idempotent two ways: the ``fresh`` filter drops
+    rows the stored table already reflects, and even a raw re-commit
+    linearizes (the replay's position delete names the first attempt's
+    image rows).  ``maintenance_every`` folds the accumulated delete files
     with a full ``optimize()`` every N epochs — the ingest-cadence
     maintenance loop that keeps the read-side anti-join tax bounded.
     ``maintenance_policy`` (r18) is the STACK-DEPTH-triggered variant of

@@ -18,7 +18,9 @@ case).  Pinned here:
 from __future__ import annotations
 
 import json
+import os
 
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -365,7 +367,7 @@ def test_auto_mode_picks_cow_for_small_mv(spark, tmp_path):
     """r15: mode='auto' (now the default) maintains a metadata-provably
     SMALL MV copy-on-write — no pending delete entries accumulate on
     the MV (the growing read-plan term the tick-floor decomposition
-    found) — and conservatively stays merge-on-read when pending eq
+    found) — and conservatively stays merge-on-read when pending
     deletes make the MV's size unknowable from metadata."""
     from hands_on_iceberg_compression_spark.pipeline.incremental_mv import (
         _resolve_agg_mv_mode,
@@ -393,8 +395,15 @@ def test_auto_mode_picks_cow_for_small_mv(spark, tmp_path):
     head = wh.head_snapshot("lab", "mv")
     assert not head.get("deletes")  # CoW ticks: no MoR delete stack
     assert _mv_rows(wh) == _expected(wh)
-    # unknowable size (pending eq delete on the MV) -> merge-on-read
+    # unknowable size -> merge-on-read: a second entry over the same
+    # rows whose read position is unknown (no rv_seq, as cherry_pick
+    # leaves a picked delete) cannot be proven disjoint from the first
     wh.delete_by_keys("lab", "mv", [0], eq_cols=["k"])
+    assert wh.count_rows("lab", "mv", fallback=False) is not None
+    (d,) = wh.delete_files_report("lab", "mv")
+    tuples = pq.read_table(os.path.join(wh._tdir("lab", "mv"), d["path"]))
+    _root, dels = wh._write_pos_deletes("lab", "mv", tuples)
+    wh.commit_snapshot("lab", "mv", "delete", add_files=[], add_deletes=dels)
     assert wh.count_rows("lab", "mv", fallback=False) is None
     assert _resolve_agg_mv_mode(wh, "lab", "mv", "auto") == "merge-on-read"
     assert _resolve_agg_mv_mode(wh, "lab", "mv", "copy-on-write") == (

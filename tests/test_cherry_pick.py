@@ -11,12 +11,9 @@ Contracts pinned:
   keep their bounds (no footer reopened) and get the NEW commit's seq;
 - a CoW rewrite pick whose dropped files main no longer has RAISES
   (conflicting-rewrite fence) instead of erasing main's work;
-- an equality-delete pick REPLAYS at pick time (seq scoping): it
-  reaches rows main appended after the fork too;
 - a position-delete pick whose target files main rewrote RAISES;
 - DDL commits have no data delta and are rejected outright; picks whose
-  entries carry a schema id main lacks (branch-side DDL) refuse;
-- dropping the eq-key column on main refuses a later eq-delete pick.
+  entries carry a schema id main lacks (branch-side DDL) refuse.
 """
 
 from __future__ import annotations
@@ -24,6 +21,7 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -188,45 +186,6 @@ def test_pick_cow_rewrite_conflict_raises(cp_table, spark):
         wh.cherry_pick("lab", "cpt", "cow2", picked_v2)
 
 
-def test_pick_eq_delete_replays_at_pick_time(cp_table, spark):
-    """An equality delete staged on a branch, picked after main moved:
-    seq scoping replays it against EVERYTHING live at pick time —
-    including a row main appended after the fork with the same key."""
-    wh = cp_table
-    wh.create_branch("lab", "cpt", "ret")
-    bhead = wh._load_head_light(
-        "lab", "cpt", wh._snapshot_versions("lab", "cpt", "ret")[-1], "ret"
-    )
-    cur = {f["name"]: f for f in bhead["schemas"][str(bhead["schema_id"])]}
-    root, dels = wh._write_eq_deletes_local(
-        "lab", "cpt", [(7,)], ["id"], {"id": cur["id"]["type"]},
-        [cur["id"]["id"]], {"id": {"set": [7]}},
-    )
-    wh.commit_snapshot(
-        "lab", "cpt", "delete", add_files=[], add_deletes=dels,
-        expected_schema_id=bhead.get("schema_id"), branch="ret",
-    )
-    picked_v = wh._snapshot_versions("lab", "cpt", "ret")[-1]
-    # main diverges AND re-appends the same key before the pick
-    wh.append(
-        "lab", "cpt",
-        spark.createDataFrame([(7, "mainline-dup")], "id int, src string"),
-        batch_id="m2",
-    )
-    out = wh.cherry_pick("lab", "cpt", "ret", picked_v)
-    assert out["delete_files_added"] == 1
-    got = wh.read("lab", "cpt")
-    assert got.filter(F.col("id") == 7).count() == 0  # both copies gone
-    assert got.count() == 19
-    # a row appended AFTER the pick survives (strictly-lower-seq rule)
-    wh.append(
-        "lab", "cpt",
-        spark.createDataFrame([(7, "after-pick")], "id int, src string"),
-        batch_id="m3",
-    )
-    assert wh.read("lab", "cpt").filter(F.col("id") == 7).count() == 1
-
-
 def test_pick_pos_delete_target_gone_raises(cp_table, spark):
     wh = cp_table
     wh.create_branch("lab", "cpt", "pos")
@@ -234,9 +193,10 @@ def test_pick_pos_delete_target_gone_raises(cp_table, spark):
         "lab", "cpt", wh._snapshot_versions("lab", "cpt", "pos")[-1], "pos"
     )
     target = wh._materialize("lab", "cpt", bhead)["files"][0]["path"]
-    tuples = spark.createDataFrame(
-        [(target, 0)], "file_path string, pos bigint"
-    )
+    tuples = pa.table({
+        "file_path": pa.array([target], pa.string()),
+        "pos": pa.array([0], pa.int64()),
+    })
     _root, dels = wh._write_pos_deletes("lab", "cpt", tuples)
     wh.commit_snapshot(
         "lab", "cpt", "delete", add_files=[], add_deletes=dels,
@@ -303,27 +263,6 @@ def test_pick_ddl_and_schema_divergence_refused(cp_table, spark):
         wh.cherry_pick("lab", "cpt", "ddl", picked_v)
 
 
-def test_pick_eq_delete_key_dropped_on_main_refused(cp_table, spark):
-    wh = cp_table
-    wh.create_branch("lab", "cpt", "ek")
-    bhead = wh._load_head_light(
-        "lab", "cpt", wh._snapshot_versions("lab", "cpt", "ek")[-1], "ek"
-    )
-    cur = {f["name"]: f for f in bhead["schemas"][str(bhead["schema_id"])]}
-    _root, dels = wh._write_eq_deletes_local(
-        "lab", "cpt", [("base0",)], ["src"], {"src": cur["src"]["type"]},
-        [cur["src"]["id"]], {"src": {"set": ["base0"]}},
-    )
-    wh.commit_snapshot(
-        "lab", "cpt", "delete", add_files=[], add_deletes=dels,
-        expected_schema_id=bhead.get("schema_id"), branch="ek",
-    )
-    picked_v = wh._snapshot_versions("lab", "cpt", "ek")[-1]
-    wh.drop_column("lab", "cpt", "src")  # main drops the key column
-    with pytest.raises(RuntimeError, match="field id"):
-        wh.cherry_pick("lab", "cpt", "ek", picked_v)
-
-
 def test_pick_rewrite_refused_when_main_has_unseen_pending_deletes(
     cp_table, spark
 ):
@@ -357,13 +296,15 @@ def test_pick_rewrite_refused_when_main_has_unseen_pending_deletes(
         expected_schema_id=bhead.get("schema_id"), branch="rw",
     )
     picked_v = wh._snapshot_versions("lab", "cpt", "rw")[-1]
-    # main commits a pending MoR eq delete the branch never saw
-    wh.delete_by_keys("lab", "cpt", [15], eq_cols=["id"])
-    assert wh.read("lab", "cpt").filter(F.col("id") == 15).count() == 0
+    # main commits a pending MoR key delete the branch never saw, on a
+    # row of the file the picked rewrite drops
+    kept = vdf.orderBy("id").collect()[1].id
+    wh.delete_by_keys("lab", "cpt", [kept], eq_cols=["id"])
+    assert wh.read("lab", "cpt").filter(F.col("id") == kept).count() == 0
     with pytest.raises(RuntimeError, match="resurrect"):
         wh.cherry_pick("lab", "cpt", "rw", picked_v)
-    # row 15 still deleted, pick not committed
-    assert wh.read("lab", "cpt").filter(F.col("id") == 15).count() == 0
+    # the row is still deleted, pick not committed
+    assert wh.read("lab", "cpt").filter(F.col("id") == kept).count() == 0
     # folding main's deletes clears the fence for APPEND-shaped picks
     # (rewrite picks must re-stage: the fold replaced their victims)
     wh.optimize("lab", "cpt")
@@ -434,9 +375,8 @@ def test_pick_rewrite_fence_closes_commit_race(cp_table, spark, monkeypatch):
 def test_duplicate_pick_refused_no_resurrection(cp_table, spark):
     """ADVICE r10 (medium): a second pick of an already-published commit
     must REFUSE — re-stamping the carried entries at a higher seq would
-    let an equality delete committed between the two picks silently stop
-    applying (reads de-dup by path keeping the HIGHER-seq copy, so the
-    deleted rows would resurrect)."""
+    publish them twice, and a delete committed between the two picks
+    must keep applying."""
     wh = cp_table
     wh.create_branch("lab", "cpt", "dup")
     picked_v = _mk_branch_append(
@@ -449,7 +389,7 @@ def test_duplicate_pick_refused_no_resurrection(cp_table, spark):
     )
     wh.cherry_pick("lab", "cpt", "dup", picked_v)
     assert wh.read("lab", "cpt").count() == 26
-    # an eq delete lands on main AFTER the first pick
+    # a key delete lands on main AFTER the first pick
     wh.delete_by_keys("lab", "cpt", [(101,)], ["id"])
     assert wh.read("lab", "cpt").count() == 25
     # the duplicate pick refuses instead of resurrecting id=101

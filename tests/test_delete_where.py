@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -443,7 +444,12 @@ def test_count_rows_metadata_only_mode_and_log_report(day_table, monkeypatch):
     assert row.live_rows == 24  # visible, not the 30 data rows
     assert row.delete_files == 1
     monkeypatch.undo()
-    wh.delete_by_keys("lab", "deltab", [(100,)], ["v"])  # unprovable now
+    # a second entry over the same rows whose read position is unknown
+    # (no rv_seq, as cherry_pick leaves a picked delete): unprovable now
+    (d,) = wh.delete_files_report("lab", "deltab")
+    tuples = pq.read_table(os.path.join(wh._tdir("lab", "deltab"), d["path"]))
+    _root, dels = wh._write_pos_deletes("lab", "deltab", tuples)
+    wh.commit_snapshot("lab", "deltab", "delete", add_files=[], add_deletes=dels)
     _no_read(wh, monkeypatch)
     assert wh.count_rows("lab", "deltab", fallback=False) is None
     row = measure_log_table(wh, "lab", "deltab")

@@ -1,32 +1,26 @@
-"""Equality delete files (the second half of Iceberg v2 row-level
-deletes, VERDICT r7 #1): ``delete_by_keys`` commits key VALUES with zero
-data IO — no scan finds positions — and ``merge_upsert(mode=
-'merge-on-read')`` turns CDC batches into O(batch) commits (new images +
-one equality delete of the batch's keys), the Flink->Iceberg upsert
-shape.
+"""Key deletes: ``delete_by_keys`` and ``merge_upsert(mode=
+'merge-on-read')`` find the live rows a batch of keys names with the
+key-victim scan and commit ONE position-delete file of them — the shape
+of Spark's Iceberg ``MERGE INTO`` in merge-on-read mode.  Equality
+deletes are gone: position deletes are the only row-level delete.
 
 Contracts pinned here:
 
-- ``delete_by_keys`` touches no data file and reads none (mtime +
-  delete_bytes assertions); reads exclude exactly the keyed rows
-  (DuckDB-checked);
-- Iceberg sequence-number semantics (r09: per-entry commit ``seq``
-  instead of explicit target lists): rows APPENDED AFTER the delete
-  survive even under the same key;
+- ``delete_by_keys`` rewrites no data file, records exact
+  ``rows_deleted``/``target_counts``, and reads exclude exactly the keyed
+  rows (DuckDB-checked); ``count_rows`` stays metadata-only;
+- rows APPENDED AFTER a key delete survive even under the same key;
 - stacked MoR upsert batches linearize against a plain dict model and
   ``optimize()`` folds every delete away;
-- the stored ``key_ranges`` summary narrows reads through manifest
-  bounds (keys in one file's range hit one file); keys provably absent
-  from every bound commit NOTHING;
-- key columns resolve by FIELD ID through renames; dropping a pending
-  delete's key column is refused until the delete is folded;
-- position + equality deletes stack on the same file; time travel
-  presents each snapshot under its own delete set; expiry GCs folded
-  delete files;
-- an equality delete committed CONCURRENTLY with a rewrite of its
-  candidate files still applies (the rewrite's output carries a lower
-  seq) — no row resurrects, no raise needed (the r08 target-list design
-  had to abort here).
+- the keys prune the victim scan through manifest bounds (keys in one
+  file's range scan one file); keys provably absent from every bound
+  commit NOTHING;
+- deletes survive renames, drops and widenings of the key column;
+- local keys cast to the recorded type with pyarrow's safe cast:
+  values the type cannot hold exactly raise;
+- a commit landing between a MoR upsert's head capture and its publish
+  makes the upsert raise, and a retry applies the batch exactly once; a
+  key delete that loses to a rewrite of its targets rescans.
 """
 
 from __future__ import annotations
@@ -63,14 +57,13 @@ def _file_state(wh, schema, table):
     }
 
 
-def test_delete_by_keys_zero_data_io(eq_table):
+def test_delete_by_keys_writes_one_position_delete(eq_table):
     wh = eq_table
     before = _file_state(wh, "lab", "eqt")
     assert len(before) == 6
     out = wh.delete_by_keys("lab", "eqt", [7, 31, 55], eq_cols=["id"])
-    # the point of an equality delete: nothing was read, so the matched
-    # count is unknown and every data file is byte-identical
-    assert out["rows_deleted"] is None
+    # the victim scan counted the rows, and no data file was rewritten
+    assert out["rows_deleted"] == 3
     assert out["keys"] == 3
     assert out["delete_files_added"] == 1
     assert out["delete_bytes"] < 16 * 1024
@@ -79,10 +72,11 @@ def test_delete_by_keys_zero_data_io(eq_table):
     assert got.count() == 57
     assert got.filter(F.col("id").isin(7, 31, 55)).count() == 0
     (entry,) = wh.delete_files_report("lab", "eqt")
-    assert entry["kind"] == "eq"
-    assert entry["eq_cols"] == ["id"]
-    assert entry["eq_ids"]  # field ids recorded for rename resolution
+    assert entry["kind"] == "pos"
     assert entry["rows"] == 3
+    assert sum(entry["target_counts"].values()) == 3
+    assert entry["rv_seq"] == out["version"] - 1
+    assert wh.count_rows("lab", "eqt", fallback=False) == 57
 
 
 def test_delete_by_keys_matches_duckdb(eq_table):
@@ -102,8 +96,8 @@ def test_delete_by_keys_matches_duckdb(eq_table):
 
 
 def test_later_appends_survive_the_delete(spark, eq_table):
-    """Iceberg sequence-number semantics: an equality delete applies only
-    to files OLDER than it — a re-append of the same key survives."""
+    """A key delete names the rows live when it scanned — a re-append of
+    the same key afterwards survives."""
     wh = eq_table
     wh.delete_by_keys("lab", "eqt", [10], eq_cols=["id"])
     assert wh.read("lab", "eqt").filter(F.col("id") == 10).count() == 0
@@ -163,32 +157,27 @@ def test_mor_upsert_batches_linearize(spark, tmp_path):
 
 
 def test_key_ranges_narrow_by_bounds(eq_table):
-    """The entry stores an O(keys) ``key_ranges`` summary (never a file
-    list); reads narrow the anti-join to files whose bounds can hold the
-    keys, and keys provably absent from every bound commit NOTHING."""
+    """The keys prune the victim scan through manifest bounds: the one
+    position-delete entry targets only the file holding the key, and
+    keys provably absent from every bound commit NOTHING."""
     wh = eq_table
     v0 = wh._latest_version("lab", "eqt")
     out = wh.delete_by_keys("lab", "eqt", [0], eq_cols=["id"])
     (entry,) = wh.delete_files_report("lab", "eqt")
-    # no O(live-files) metadata anywhere: the entry carries the key
-    # summary + its commit seq, nothing per-file
-    assert "targets" not in entry
-    assert entry["key_ranges"] == {"id": {"set": [0]}}
+    assert entry["kind"] == "pos"
     assert entry["seq"] == out["version"]
     # id=0 lives in batch b0 (ids 0..19, two files) — bounds prune the
-    # other two batches' files in the informational candidate count
+    # other two batches' files before any footer is opened
     assert out["targets"] < 6
     assert out["files_pruned"] >= 4
-    # and at READ time: narrowing keeps only bound-compatible files hot
-    head = wh._head_light("lab", "eqt")
-    meta = wh.table_meta("lab", "eqt")
-    entries = wh._materialize("lab", "eqt", head)["files"]
-    by_path = {e["path"]: e for e in entries}
-    cand = {p for p, e in by_path.items() if e.get("seq", 0) < entry["seq"]}
-    narrowed = wh._narrow_eq_targets(
-        "lab", "eqt", meta, head, entry, cand, by_path
-    )
-    assert len(narrowed) == out["targets"]
+    assert out["files_pruned"] + out["targets"] == 6
+    tdir = wh._tdir("lab", "eqt")
+    (target,) = entry["targets"]
+    assert entry["target_counts"] == {target: 1}
+    assert 0 in {
+        r["id"]
+        for r in wh.spark.read.parquet(os.path.join(tdir, target)).collect()
+    }
     assert wh.read("lab", "eqt").count() == 59
     # keys provably absent: the manifest proof means NO commit
     out2 = wh.delete_by_keys("lab", "eqt", [10_000], eq_cols=["id"])
@@ -209,30 +198,35 @@ def test_rename_resolves_by_field_id(eq_table):
     assert wh.read("lab", "eqt").count() == 57
 
 
-def test_drop_pending_eq_key_column_refused(eq_table):
+def test_drop_key_column_with_pending_key_delete(eq_table):
+    """A position delete names rows, not key values: dropping the key
+    column of a pending key delete is allowed and the delete keeps
+    applying."""
     wh = eq_table
     wh.delete_by_keys("lab", "eqt", ["u2"], eq_cols=["u"])
-    with pytest.raises(ValueError, match="equality delete"):
-        wh.drop_column("lab", "eqt", "u")
-    # an unrelated column still drops fine
     wh.drop_column("lab", "eqt", "k")
-    # folding the delete unblocks the key column drop
-    wh.optimize("lab", "eqt")
     wh.drop_column("lab", "eqt", "u")
     assert wh.read("lab", "eqt").columns == ["id"]
     assert wh.read("lab", "eqt").count() == 48  # 12 u2-rows deleted
+    assert wh.count_rows("lab", "eqt", fallback=False) == 48
+    wh.optimize("lab", "eqt")
+    assert wh.delete_files_report("lab", "eqt") == []
+    assert wh.read("lab", "eqt").count() == 48
 
 
-def test_pos_and_eq_deletes_stack(eq_table):
+def test_key_and_condition_deletes_stack(eq_table):
     wh = eq_table
     wh.delete_where("lab", "eqt", "id = 8", mode="merge-on-read")
-    wh.delete_by_keys("lab", "eqt", [9], eq_cols=["id"])
+    wh.delete_by_keys("lab", "eqt", [9, 8], eq_cols=["id"])
     wh.delete_where("lab", "eqt", "id = 10", mode="merge-on-read")
     got = wh.read("lab", "eqt")
     assert got.count() == 57
     assert got.filter(F.col("id").isin(8, 9, 10)).count() == 0
-    kinds = sorted(d["kind"] for d in wh.delete_files_report("lab", "eqt"))
-    assert kinds == ["eq", "pos", "pos"]
+    dels = wh.delete_files_report("lab", "eqt")
+    assert [d["kind"] for d in dels] == ["pos", "pos", "pos"]
+    # id 8 was already deleted: the key delete's scan skipped it
+    assert [d["rows"] for d in dels] == [1, 1, 1]
+    assert wh.count_rows("lab", "eqt", fallback=False) == 57
 
 
 def test_time_travel_sees_own_delete_set(eq_table):
@@ -282,87 +276,118 @@ def test_dataframe_keys(spark, eq_table):
 
 
 def test_local_float_keys_cast_to_recorded_type(eq_table):
-    """VERDICT r9 #4: LOCAL key lists must normalize through the recorded
-    types BEFORE building prune ranges — the mirror of the ADVICE r8
-    DataFrame-path fix.  Raw 19.5 for the int column falls BETWEEN every
-    file's [lo,hi] bounds (b0 ends at 19, b1 starts at 20), so pre-fix
-    the manifest 'proved' no file could match and the delete no-op'd —
-    yet the read-side cast (19) matches a live row."""
+    """LOCAL key lists cast to the recorded types BEFORE building prune
+    ranges, with pyarrow's safe cast: a float that is a whole number
+    becomes that integer key, and a value the type cannot hold exactly
+    (a fraction, NaN, an overflow, an unparsable string) raises instead
+    of silently matching a truncated key or mis-pruning."""
     wh = eq_table
-    out = wh.delete_by_keys("lab", "eqt", [19.5], eq_cols=["id"])
-    assert out["delete_files_added"] == 1  # NOT pruned to a no-op
+    out = wh.delete_by_keys("lab", "eqt", [19.0], eq_cols=["id"])
+    assert out["delete_files_added"] == 1
     got = wh.read("lab", "eqt")
     assert got.count() == 59
     assert got.filter(F.col("id") == 19).count() == 0
-    # cast collisions dedup: 10 and 10.5 are ONE key after truncation
-    out = wh.delete_by_keys("lab", "eqt", [10, 10.5], eq_cols=["id"])
+    # cast collisions dedup: 10 and 10.0 are ONE key
+    out = wh.delete_by_keys("lab", "eqt", [10, 10.0], eq_cols=["id"])
     assert out["keys"] == 1
     assert wh.read("lab", "eqt").count() == 58
-    # unrepresentable values raise, mirroring the DataFrame path's
-    # ANSI-cast rejection — never silently mis-prune
     v = wh._latest_version("lab", "eqt")
-    with pytest.raises(ValueError, match="not representable"):
-        wh.delete_by_keys("lab", "eqt", [float("nan")], eq_cols=["id"])
-    with pytest.raises(ValueError, match="not representable"):
-        wh.delete_by_keys("lab", "eqt", ["abc"], eq_cols=["id"])
-    with pytest.raises(ValueError, match="overflows"):
-        wh.delete_by_keys("lab", "eqt", [2**40], eq_cols=["id"])
+    for bad in (19.5, float("nan"), "abc", 2**40):
+        with pytest.raises(ValueError, match="not representable"):
+            wh.delete_by_keys("lab", "eqt", [bad], eq_cols=["id"])
     assert wh._latest_version("lab", "eqt") == v
-    # string columns: ints render as Spark cast would; floats are refused
-    out = wh.delete_by_keys("lab", "eqt", ["u1"], eq_cols=["u"])
+    # string columns: ints render as their decimal string
+    wh.delete_by_keys("lab", "eqt", ["u1"], eq_cols=["u"])
     assert wh.read("lab", "eqt").filter(F.col("u") == "u1").count() == 0
-    with pytest.raises(ValueError, match="not representable"):
-        wh.delete_by_keys("lab", "eqt", [1.5], eq_cols=["u"])
+    assert wh.delete_by_keys("lab", "eqt", [1], eq_cols=["u"])[
+        "delete_files_added"
+    ] == 0
 
 
-def test_concurrent_rewrite_does_not_lose_eq_delete(eq_table, spark):
-    """Sequence scoping makes an eq delete race-proof against rewrites:
-    a concurrent optimize() commits FIRST, its output files get a lower
-    seq than the delete's commit, so the delete still applies to them —
-    no row resurrects and no abort is needed (the r08 target-list design
-    raised here, because its stored targets named only dead paths)."""
+def test_concurrent_commit_fails_mor_upsert_then_retry_applies_once(
+    eq_table, spark, monkeypatch
+):
+    """A merge-on-read upsert's victims are positions in the files of the
+    head it captured, so its commit is fenced by ``expected_parent``: a
+    commit landing between the capture and the publish — a rewrite that
+    moves the victims, or an append that adds a row under a batch key —
+    makes the upsert raise and leaves no trace.  A retry from the new
+    head then leaves exactly one live row per key."""
     wh = eq_table
-    v_read = wh._latest_version("lab", "eqt")
-    head = wh._load_head_light("lab", "eqt", v_read)
-    kdf = spark.createDataFrame([(7,)], "id int")
-    _root, del_entries = wh._write_eq_deletes(
-        "lab", "eqt", kdf, ["id"], [1], {"id": {"set": [7]}}
-    )
-    # a concurrent optimize() folds every candidate into new files
-    # BETWEEN this delete's read and its commit
-    wh.optimize("lab", "eqt")
-    manifest = wh.commit_snapshot(
-        "lab", "eqt", "delete",
-        add_files=[],
-        add_deletes=del_entries,
-        expected_schema_id=head.get("schema_id"),
-    )
-    assert manifest["version"] == v_read + 2
+    real = ParquetWarehouse._key_victims
+    racers = [
+        lambda: wh.optimize("lab", "eqt"),
+        lambda: wh.append(
+            "lab", "eqt",
+            spark.createDataFrame([(100, 0, "race")], "id int, k int, u string"),
+            batch_id="race",
+        ),
+    ]
+    race = []
+
+    def racing(self, *a, **k):
+        out = real(self, *a, **k)
+        if race:
+            race.pop()()  # lands after the head capture, before the publish
+        return out
+
+    monkeypatch.setattr(ParquetWarehouse, "_key_victims", racing)
+
+    def batch():
+        return spark.createDataFrame(
+            [(7, 9, "new"), (31, 9, "new"), (100, 9, "new")],
+            "id int, k int, u string",
+        )
+
+    for racer in racers:
+        race.append(racer)
+        v0 = wh._latest_version("lab", "eqt")
+        dels0 = wh.delete_files_report("lab", "eqt")
+        with pytest.raises(RuntimeError, match="concurrent commit conflict"):
+            wh.merge_upsert("lab", "eqt", batch(), ["id"], mode="merge-on-read")
+        assert not race
+        assert wh._latest_version("lab", "eqt") == v0 + 1  # the racer only
+        assert wh.delete_files_report("lab", "eqt") == dels0
+    out = wh.merge_upsert("lab", "eqt", batch(), ["id"], mode="merge-on-read")
+    assert out["rows_deleted"] == 3  # ids 7, 31 and the raced-in 100
+    rows = wh.read("lab", "eqt").collect()
+    ids = [r.id for r in rows]
+    assert len(ids) == len(set(ids)) == 61
+    assert {r.id: r.u for r in rows if r.id in (7, 31, 100)} == {
+        7: "new", 31: "new", 100: "new",
+    }
+    assert wh.count_rows("lab", "eqt", fallback=False) == 61
+
+
+def test_key_delete_rescans_after_concurrent_rewrite(eq_table, monkeypatch):
+    """A key delete that loses its commit race to a rewrite of its target
+    files (the ``deletes_read_version`` fence) rescans from the new head
+    and commits there; nothing of the first attempt is left behind."""
+    wh = eq_table
+    real = ParquetWarehouse._key_victims
+    calls = []
+
+    def racing(self, *a, **k):
+        out = real(self, *a, **k)
+        calls.append(1)
+        if len(calls) == 1:
+            wh.optimize("lab", "eqt")  # rewrites every target file
+        return out
+
+    monkeypatch.setattr(ParquetWarehouse, "_key_victims", racing)
+    out = wh.delete_by_keys("lab", "eqt", [7, 31], eq_cols=["id"])
+    assert len(calls) == 2
+    assert out["rows_deleted"] == 2
     got = wh.read("lab", "eqt")
-    assert got.filter(F.col("id") == 7).count() == 0  # delete NOT lost
-    assert got.count() == 59
-    # a concurrent APPEND between read and commit also commits first ->
-    # lower seq -> the delete applies to it too (commit-time semantics,
-    # matching Iceberg's sequence rule)
-    v2 = wh._latest_version("lab", "eqt")
-    _root2, del2 = wh._write_eq_deletes(
-        "lab", "eqt", spark.createDataFrame([(100,)], "id int"),
-        ["id"], [1], {"id": {"set": [100]}},
-    )
-    wh.append(
-        "lab", "eqt",
-        spark.createDataFrame([(100, 0, "ux")], "id int, k int, u string"),
-        batch_id="race",
-    )
-    manifest = wh.commit_snapshot(
-        "lab", "eqt", "delete", add_files=[], add_deletes=del2,
-    )
-    assert manifest["version"] == v2 + 2
-    assert wh.read("lab", "eqt").filter(F.col("id") == 100).count() == 0
+    assert got.count() == 58
+    assert got.filter(F.col("id").isin(7, 31)).count() == 0
+    (entry,) = wh.delete_files_report("lab", "eqt")
+    deletes_dir = os.path.join(wh._tdir("lab", "eqt"), "deletes")
+    assert os.listdir(deletes_dir) == [os.path.dirname(entry["path"]).split(os.sep)[-1]]
 
 
 def test_concurrent_rewrite_of_pos_targets_still_raises(eq_table):
-    """Position deletes DO keep the conflicting-rewrite validation: their
+    """Position deletes keep the conflicting-rewrite validation: their
     tuples name (file, ordinal) of specific paths, so a concurrent
     rewrite of those paths must abort the delete commit."""
     wh = eq_table
@@ -375,7 +400,7 @@ def test_concurrent_rewrite_of_pos_targets_still_raises(eq_table):
     tuples = df.filter(F.col("id") == 7).select(
         F.col(wh._POS_REL).alias("file_path"),
         F.col(wh._POS_IDX).alias("pos"),
-    )
+    ).toArrow()
     _root, del_entries = wh._write_pos_deletes("lab", "eqt", tuples)
     wh.optimize("lab", "eqt")  # rewrites every targeted file
     with pytest.raises(RuntimeError, match="rewritten between read and commit"):
@@ -390,37 +415,22 @@ def test_concurrent_rewrite_of_pos_targets_still_raises(eq_table):
 def test_widen_after_pending_delete_and_legacy_entries_still_apply(
     spark, eq_table
 ):
-    """r15 explicit-schema delete reads (eq_types): a pending eq delete
-    whose parquet stores the PRE-widen type must keep applying after
-    update_column_type (the read passes the WRITE-time schema, then
-    casts to the current type — never the other way around), and an
-    entry with no eq_types (what a local-key write records for a key
-    type without an unambiguous parquet mapping, e.g. a timestamp;
-    stripped here) must fall back to the inference read with identical
-    results."""
+    """A key delete pending across ``update_column_type`` keeps applying,
+    and a key delete after the widening matches the legacy file entries
+    still stored at the narrow type (the driver-side scan casts them up)
+    as well as rows written at the wide type."""
     wh = eq_table
     wh.delete_by_keys("lab", "eqt", [3, 41], eq_cols=["id"])
-    head = wh.head_snapshot("lab", "eqt")
-    dels = head.get("deletes", [])
-    assert dels and dels[0].get("eq_types") == ["int"]  # recorded
     wh.update_column_type("lab", "eqt", "id", "bigint")
     got = {r["id"] for r in wh.read("lab", "eqt").collect()}
     assert 3 not in got and 41 not in got and len(got) == 58
-    assert all(isinstance(i, int) for i in got)
-    # strip eq_types from the delete segment -> inference read path
-    import json as _json
-    import os as _os
-
-    changed = False
-    for ref in wh._head_light("lab", "eqt")["delete_segments"]:
-        sp = _os.path.join(wh._snap_dir("lab", "eqt"), ref["path"])
-        with open(sp) as f:
-            seg = _json.load(f)
-        for d in seg["files"]:
-            changed |= d.pop("eq_types", None) is not None
-        with open(sp, "w") as f:
-            _json.dump(seg, f)
-    assert changed
-    wh2 = ParquetWarehouse(spark, wh.root)  # fresh caches
-    got2 = {r["id"] for r in wh2.read("lab", "eqt").collect()}
-    assert got2 == got
+    wh.append(
+        "lab", "eqt",
+        spark.createDataFrame([(2**40, 0, "wide")], "id bigint, k int, u string"),
+        batch_id="wide",
+    )
+    out = wh.delete_by_keys("lab", "eqt", [5, 2**40], eq_cols=["id"])
+    assert out["rows_deleted"] == 2
+    got = {r["id"] for r in wh.read("lab", "eqt").collect()}
+    assert got == set(range(60)) - {3, 5, 41}
+    assert wh.count_rows("lab", "eqt", fallback=False) == 57

@@ -1,8 +1,7 @@
 """Delete-scoped fold (r19, VERDICT r18 #2): ``fold_pending_deletes``
 rewrites ONLY the files a pending merge-on-read delete still APPLIES to
-(the read path's own applicability decision — pos targets, eq seq scope
-narrowed by key_ranges vs bounds/partitions/blooms) and RETIRES the
-whole pending set exactly, so the census returns to zero and the
+(the read path's own applicability decision — each entry's position
+targets) and RETIRES the whole pending set exactly, so the census returns to zero and the
 auto-fold policy converges instead of re-firing.  Pinned: equality of
 the visible rows across the fold, cold files physically untouched,
 inert-entry metadata-only retirement, time travel across the fold, the
@@ -13,6 +12,7 @@ the cdc-apply "pending" default), and fold_scope validation.
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 
 from hands_on_iceberg_compression_spark.sources.warehouse import (
@@ -30,8 +30,8 @@ def _mk(spark, tmp_path, name, sort=True):
         "lab", "t", "zstd", 1, properties=props,
         sort_order=["k"] if sort else None,
     )
-    # three files with DISJOINT key ranges so eq-delete narrowing can
-    # prove cold files inert
+    # three files with DISJOINT key ranges so a key delete's target
+    # pruning leaves cold files untouched
     for lo in (0, 100, 200):
         wh.append(
             "lab", "t",
@@ -58,7 +58,7 @@ def test_fold_rewrites_only_touched_files(spark, tmp_path):
     wh = _mk(spark, tmp_path, "scoped")
     before_paths = _live_paths(wh)
     assert len(before_paths) == 3
-    wh.delete_by_keys("lab", "t", [5, 7], ["k"])  # key_ranges confined to file 1
+    wh.delete_by_keys("lab", "t", [5, 7], ["k"])  # bounds confine it to file 1
     expected = _rows(wh)
     assert len(expected) == 298
     assert wh.pending_delete_stats("lab", "t")["entries"] == 1
@@ -107,13 +107,15 @@ def test_fold_pos_deletes_and_stacked_cdc(spark, tmp_path):
 
 def test_fold_inert_entries_metadata_only(spark, tmp_path):
     wh = _mk(spark, tmp_path, "inert")
-    # an eq delete goes INERT when a CoW rewrite replaces every file it
-    # could match (the rewrite's output carries a higher seq, outside
-    # the eq scope; remaining older files are key-disjoint) — yet it
-    # still counts in the census.  The fold retires it with a
-    # METADATA-ONLY commit (no rewrite, no new files).
-    wh.delete_by_keys("lab", "t", [5], ["k"])
-    wh.delete_where("lab", "t", "k < 50")  # CoW rewrite of the b0 file
+    # an entry whose targets are all gone from the head (hand-built here:
+    # its one tuple names a file no commit ever added) applies to
+    # nothing — yet it still counts in the census.  The fold retires it
+    # with a METADATA-ONLY commit (no rewrite, no new files).
+    _root, dels = wh._write_pos_deletes("lab", "t", pa.table({
+        "file_path": pa.array(["data/gone/part-0.parquet"], pa.string()),
+        "pos": pa.array([0], pa.int64()),
+    }))
+    wh.commit_snapshot("lab", "t", "delete", add_files=[], add_deletes=dels)
     expected = _rows(wh)
     assert wh.pending_delete_stats("lab", "t")["entries"] == 1
     before_paths = _live_paths(wh)
@@ -226,8 +228,8 @@ def test_fold_scope_full_still_available(spark, tmp_path):
 def test_compact_small_files_scoped(spark, tmp_path):
     """r19 fragmentation twin: compact_small_files bin-packs only the
     live files below the size threshold — well-sized files survive
-    untouched, rows are exact (delete-applied read), and pending eq
-    deletes are NOT retired (they may still apply elsewhere)."""
+    untouched, rows are exact (delete-applied read), and a pending
+    delete whose every target was compacted retires with them."""
     wh = ParquetWarehouse(spark, str(tmp_path / "smallf"))
     wh.create_table("lab", "t", "zstd", 1, properties={"snapshots": "true"})
     # one WELL-SIZED file and three tiny ones
@@ -253,8 +255,9 @@ def test_compact_small_files_scoped(spark, tmp_path):
     assert st["bytes"] == sum(e["bytes"] for e in head["files"])
     big_path = max(head["files"], key=lambda e: e["bytes"])["path"]
     big_bytes = max(e["bytes"] for e in head["files"])
-    # a pending eq delete rides through the compaction un-retired
+    # pending deletes on a tiny file and on the big one
     wh.delete_by_keys("lab", "t", [100000], ["k"])
+    wh.delete_by_keys("lab", "t", [7], ["k"])
     expected = _rows(wh)
     out = wh.compact_small_files(
         "lab", "t", small_file_bytes=big_bytes
@@ -266,9 +269,11 @@ def test_compact_small_files_scoped(spark, tmp_path):
     assert big_path in {e["path"] for e in head2["files"]}
     assert len(head2["files"]) == 2  # big + one packed file
     assert _rows(wh) == expected
-    # the eq delete folded INTO the rewritten rows but stays pending
-    # for the (older) untouched big file — not retired here
+    # the tiny file's delete folded INTO the rewritten rows and retired
+    # with its target; the big file's stays pending
     assert wh.pending_delete_stats("lab", "t")["entries"] == 1
+    (d,) = wh.delete_files_report("lab", "t")
+    assert d["targets"] == [big_path]
     # fewer than two victims -> no-op, no commit
     v = wh.current_version("lab", "t")
     assert wh.compact_small_files(

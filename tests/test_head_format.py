@@ -4,9 +4,9 @@ writers produce and refuses every other one at load.
 - Every head file carries ``version``, ``ts``, ``last_seq``,
   ``segments``, ``total_rows``, ``total_bytes``, ``schemas`` and
   ``schema_id``, and never an inline ``files`` or ``deletes`` list.
-- A position-delete entry records ``targets`` and ``target_counts``; an
-  equality-delete entry records ``eq_cols`` and ``eq_ids`` and no
-  ``targets`` (it is scoped by sequence number).
+- A delete entry is a position delete recording ``targets`` and
+  ``target_counts``; equality-delete entries (``kind == "eq"``, the
+  retired key-valued shape) are refused.
 - A head or delete entry in any other layout raises ``ValueError``
   naming the table and the snapshot version, from reads, counts,
   appends, expiry and the orphan sweep alike — and nothing is deleted.
@@ -59,12 +59,8 @@ def _assert_current_layout(wh: ParquetWarehouse, schema: str, table: str) -> int
                     ents = json.load(f)["files"]
                 for e in ents:
                     assert "seq" in e, e
-                    if e["kind"] == "pos":
-                        assert {"targets", "target_counts"} <= set(e), e
-                    else:
-                        assert e["kind"] == "eq", e
-                        assert {"eq_cols", "eq_ids"} <= set(e), e
-                        assert "targets" not in e, e
+                    assert e["kind"] == "pos", e
+                    assert {"targets", "target_counts"} <= set(e), e
             # and the loader's own validation accepts it
             branch = "main" if d == snap_dir else os.path.basename(d)[7:]
             h = wh._load_head_light(schema, table, head["version"], branch)
@@ -263,6 +259,14 @@ def _entry_shape(kind, mutate):
     return apply
 
 
+def _as_eq(d: dict, **extra) -> None:
+    """Rewrite a position entry into the retired equality-delete shape:
+    key columns and field ids, no targets."""
+    for k in ("targets", "target_counts", "rv_seq"):
+        d.pop(k, None)
+    d.update(kind="eq", eq_cols=["id"], eq_ids=[1], **extra)
+
+
 def _inline_files(wh):
     def m(h):
         h["files"] = [e for r in h.pop("segments") for e in _entries(wh, r)]
@@ -296,10 +300,19 @@ RETIRED_SHAPES = {
     "pos_without_target_counts": _entry_shape(
         "pos", lambda d: d.pop("target_counts")
     ),
-    "eq_with_targets": _entry_shape(
-        "eq", lambda d: d.update(targets=["data/b0/f.parquet"])
+    "eq_entry": _entry_shape(
+        "pos",
+        lambda d: _as_eq(
+            d, eq_types=["int"], key_ranges={"id": {"set": [14]}}
+        ),
     ),
-    "eq_without_eq_ids": _entry_shape("eq", lambda d: d.pop("eq_ids")),
+    "eq_with_targets": _entry_shape(
+        "pos",
+        lambda d: (_as_eq(d), d.update(targets=["data/b0/f.parquet"])),
+    ),
+    "eq_without_eq_ids": _entry_shape(
+        "pos", lambda d: (_as_eq(d), d.pop("eq_ids"))
+    ),
 }
 
 
@@ -317,7 +330,7 @@ def test_retired_shapes_are_refused_and_never_collected(spark, tmp_path, shape):
             batch_id=f"b{i}",
         )
     wh.delete_where("lab", "t", "id = 3", mode="merge-on-read")  # pos, v3
-    wh.delete_by_keys("lab", "t", [14], eq_cols=["id"])  # eq, v4
+    wh.delete_by_keys("lab", "t", [14], eq_cols=["id"])  # pos, v4
     head_v = wh._latest_version("lab", "t")
     assert head_v == 4
     head_path = os.path.join(wh._snap_dir("lab", "t"), f"v{head_v:06d}.json")
@@ -333,8 +346,8 @@ def test_retired_shapes_are_refused_and_never_collected(spark, tmp_path, shape):
 
     before = on_disk()
     wh = ParquetWarehouse(spark, root)  # fresh segment cache
-    # the delete-entry shapes live in segments that v3 (pos) or v4 (eq)
-    # reference; the head shapes are on v4 only
+    # the delete-entry shapes live in segments that v3 or v4 reference;
+    # the head shapes are on v4 only
     err = r"lab\.t snapshot v[34]\b.*unsupported"
     new_rows = spark.createDataFrame([(99, 0)], "id int, k int")
     calls = [

@@ -391,31 +391,20 @@ def test_mor_update_then_duckdb_check(mor_table):
     assert got == [tuple(r) for r in expected]
 
 
-def _assert_no_python_rdd_scan(wh, schema, table, cond, monkeypatch):
-    """The executed plans of ``read``, ``read_where`` and the
-    ``count_rows`` fallback hold no ``Scan ExistingRDD``: every join-side
-    frame the merge-on-read read builds on the driver is an Arrow local
-    relation (LocalTableScan), so none of these reads starts Python
-    workers."""
+def _assert_no_python_rdd_scan(wh, schema, table, cond):
+    """The executed plans of ``read``, ``read_where`` and a counted read
+    hold no ``Scan ExistingRDD``: every join-side frame the
+    merge-on-read read builds on the driver is an Arrow local relation
+    (LocalTableScan), so none of these reads starts Python workers.  And
+    ``count_rows`` answers the same count from metadata alone."""
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
     assert "Scan ExistingRDD" not in plan(wh.read(schema, table))
     assert "Scan ExistingRDD" not in plan(wh.read_where(schema, table, cond))
-    counted = []
-    real_read = ParquetWarehouse.read
-
-    def read(self, *a, **k):
-        df = real_read(self, *a, **k)
-        counted.append(df)
-        return df
-
-    with monkeypatch.context() as m:
-        m.setattr(ParquetWarehouse, "read", read)
-        assert wh.count_rows(schema, table, fallback=False) is None
-        wh.count_rows(schema, table)
-    assert len(counted) == 1  # the fallback's delete-applied read
-    assert "Scan ExistingRDD" not in plan(counted[0].groupBy().count())
+    counted = wh.read(schema, table).groupBy().count()
+    assert "Scan ExistingRDD" not in plan(counted)
+    assert wh.count_rows(schema, table, fallback=False) == counted.first()[0]
 
 
 def test_mor_deletes_on_special_char_partition_values(
@@ -427,8 +416,8 @@ def test_mor_deletes_on_special_char_partition_values(
     while manifest entries record the os.walk on-disk form.  Before the
     plus-protected decode in ``_assemble_entries``, delete entries'
     targets never intersected the manifest entry paths on such
-    partitions, so BOTH delete kinds committed fine and then silently
-    failed to apply (the deleted rows stayed visible)."""
+    partitions, so the deletes committed fine and then silently failed
+    to apply (the deleted rows stayed visible)."""
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     wh.create_table(
         "lab", "sp", "zstd", 1,
@@ -441,7 +430,7 @@ def test_mor_deletes_on_special_char_partition_values(
         spark.createDataFrame(rows, "id int, grp string, v int"),
         batch_id="b0",
     )
-    # equality delete: one key per special-char partition
+    # key delete: one key per special-char partition
     wh.delete_by_keys("lab", "sp", [0, 1, 2, 3, 4], eq_cols=["id"])
     got = {r.id for r in wh.read("lab", "sp").select("id").collect()}
     assert got == set(range(24)) - {0, 1, 2, 3, 4}
@@ -450,8 +439,8 @@ def test_mor_deletes_on_special_char_partition_values(
     assert r["delete_files_added"] >= 1
     got = {r.id for r in wh.read("lab", "sp").select("id").collect()}
     assert got == set(range(24)) - {0, 1, 2, 3, 4, 5, 6}
-    # both delete kinds pending on the decode path (uri_of is None)
-    _assert_no_python_rdd_scan(wh, "lab", "sp", "id BETWEEN 0 AND 12", monkeypatch)
+    # both deletes pending on the decode path (uri_of is None)
+    _assert_no_python_rdd_scan(wh, "lab", "sp", "id BETWEEN 0 AND 12")
     # fold and re-check: optimize read the delete-applied rows
     wh.optimize("lab", "sp")
     assert wh.head_snapshot("lab", "sp").get("deletes", []) == []
@@ -474,7 +463,7 @@ def test_uri_fastpath_matches_decode_path(spark, tmp_path, monkeypatch):
         ),
         batch_id="b0",
     )
-    # stack BOTH delete kinds so both join shapes execute
+    # stack key and condition deletes over the same file
     wh.delete_by_keys("lab", "uf", [1, 2], eq_cols=["id"])
     wh.delete_by_keys("lab", "uf", [3], eq_cols=["id"])
     wh.delete_where("lab", "uf", "id = 4", mode="merge-on-read")
@@ -488,7 +477,7 @@ def test_uri_fastpath_matches_decode_path(spark, tmp_path, monkeypatch):
     assert wh._uri_predictable[1] is True
     plan = wh.read("lab", "uf")._jdf.queryExecution().executedPlan().toString()
     assert "url_decode" not in plan  # no per-row decode in the fast plan
-    _assert_no_python_rdd_scan(wh, "lab", "uf", "id BETWEEN 0 AND 20", monkeypatch)
+    _assert_no_python_rdd_scan(wh, "lab", "uf", "id BETWEEN 0 AND 20")
     # a probe mismatch pins the decode fallback permanently
     import os as _os
 
@@ -501,7 +490,7 @@ def test_uri_fastpath_matches_decode_path(spark, tmp_path, monkeypatch):
     )
     slow = sorted(r.id for r in wh.read("lab", "uf").collect())
     assert fast == slow == sorted(set(range(30)) - {1, 2, 3, 4})
-    _assert_no_python_rdd_scan(wh, "lab", "uf", "id BETWEEN 0 AND 20", monkeypatch)
+    _assert_no_python_rdd_scan(wh, "lab", "uf", "id BETWEEN 0 AND 20")
     monkeypatch.undo()
     # special-char partition values force the fallback
     assert wh._predict_uris("/tmp/x", ["data/b/grp=a%20b/f.parquet"]) is None
@@ -528,6 +517,43 @@ def test_mor_upsert_launches_three_jobs(mor_table, spark):
     assert wh.count_rows("lab", "mor") == 60
 
 
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched under its own job group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("other", "other")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mor_delete_read_and_count_job_budgets(mor_table, spark):
+    """With only position deletes pending (a merge-on-read upsert's and a
+    delete's), ``count_rows`` launches no Spark job and equals
+    ``read().count()``, ``read_where(...).count()`` launches at most 3
+    and a merge-on-read ``delete_where`` launches 1."""
+    wh = mor_table
+    updates = spark.range(10, 18).selectExpr(
+        "CAST(id AS INT) AS id", "9 AS k", "'up' AS u"
+    )
+    wh.merge_upsert("lab", "mor", updates, ["id"], mode="merge-on-read")
+    wh.read("lab", "mor").count()  # the once-per-instance URI probe
+    out, n = _jobs_in_group(spark, "mor_delete", lambda: wh.delete_where(
+        "lab", "mor", "id BETWEEN 30 AND 34", mode="merge-on-read",
+    ))
+    assert out["rows_deleted"] == 5 and n == 1
+    cnt, n = _jobs_in_group(
+        spark, "mor_count", lambda: wh.count_rows("lab", "mor")
+    )
+    assert n == 0
+    assert cnt == wh.read("lab", "mor").count() == 55
+    got, n = _jobs_in_group(spark, "mor_read", lambda: wh.read_where(
+        "lab", "mor", "id BETWEEN 5 AND 40 AND k = 9"
+    ).count())
+    assert got == 8 and n <= 3
+
+
 def test_rewrite_read_version_fences_concurrent_mor_delete(mor_table, spark):
     """Reverse lost-delete race (ADVICE r8): a rewrite that drops files it
     READ before a concurrent MoR delete committed must RAISE — its output
@@ -550,7 +576,7 @@ def test_rewrite_read_version_fences_concurrent_mor_delete(mor_table, spark):
         for fn in fns
         if fn.endswith(".parquet")
     ]
-    # concurrent equality delete commits between the read and the publish
+    # a concurrent key delete commits between the read and the publish
     wh.delete_by_keys("lab", "mor", [7], eq_cols=["id"])
     with pytest.raises(RuntimeError, match="resurrect"):
         wh.commit_snapshot(
@@ -586,8 +612,8 @@ def test_scoped_optimize_redo_after_concurrent_delete(mor_table, spark):
 
 
 def test_broad_eq_delete_keeps_commits_flat(mor_table, spark):
-    """The r09 scale contract (VERDICT r8 #1): a scattered-key equality
-    delete adds O(keys) metadata ONCE; subsequent append commits carry
+    """The r09 scale contract (VERDICT r8 #1): a scattered-key delete
+    adds its metadata ONCE; subsequent append commits carry
     the delete-segment ref VERBATIM — head bytes stay flat and the
     delete segment file is never rewritten by appends."""
     wh = mor_table

@@ -7,7 +7,7 @@ The gold contract (pinned here AND appended to the randomized DML
 model): read_snapshot(from) + window inserts − window deletes ==
 read_snapshot(to), as a MULTISET under the window-end schema —
 whatever mix of appends, replays, CoW rewrites, MoR position deletes,
-equality deletes, MoR updates, CDC upserts, compactions, and DDL the
+key deletes, MoR updates, CDC upserts, compactions, and DDL the
 window contains.
 """
 
@@ -611,15 +611,14 @@ def test_merge_upsert_small_and_large_paths_agree(ch_table, spark):
     )
     assert rows("cht") == rows("twin")
     assert (2, 9, 99) in rows("cht") and all(r[0] != 3 for r in rows("cht"))
-    # delete-entry metadata: same eq_cols/eq_types/key_ranges semantics
+    # delete-entry metadata: the same victims, tuple for tuple
     def dels(t):
         head = wh.head_snapshot("lab", t)
         return [
             {
-                "eq_cols": d["eq_cols"],
-                "eq_types": d.get("eq_types"),
-                "key_ranges": d.get("key_ranges"),
+                "kind": d["kind"],
                 "rows": d["rows"],
+                "counts": sorted(d["target_counts"].values()),
             }
             for d in head.get("deletes", [])
         ]

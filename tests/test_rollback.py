@@ -11,11 +11,11 @@ Contracts pinned:
   exact file list;
 - DDL is NOT reverted (Iceberg semantics): rollback across schema
   evolution keeps the current schema, old entries NULL-fill the new
-  column; a restored pending eq delete keying on a since-dropped field
-  REFUSES;
+  column; a restored pending key delete keeps applying after its key
+  column was dropped;
 - pending MoR deletes at the target become pending again (and ones
   committed after the target vanish — that is the point of rollback);
-- the sequence counter stays MONOTONE across rollback: an eq delete
+- the sequence counter stays MONOTONE across rollback: a delete
   committed after the rollback still out-sequences every restored entry;
 - expiry interplay: files the rollback restored survive
   expire_snapshots because the new head references them; an EXPIRED
@@ -147,7 +147,7 @@ def test_rollback_does_not_revert_ddl(rb_table, spark):
 def test_rollback_restores_pending_mor_deletes(rb_table, spark):
     """Pending MoR deletes at the target become pending again; deletes
     committed AFTER the target vanish; the monotone seq counter keeps a
-    post-rollback eq delete applying to every restored entry."""
+    post-rollback delete out-sequencing every restored entry."""
     wh = rb_table
     wh.delete_by_keys("lab", "rbt", [(5,)], ["id"])  # v4, pending
     assert wh.read("lab", "rbt").count() == 29
@@ -172,7 +172,9 @@ def test_rollback_restores_pending_mor_deletes(rb_table, spark):
     ) == [0, 1, 2, 3, 4, 6, 8, 9]
 
 
-def test_rollback_refuses_eq_delete_on_dropped_key(rb_table, spark):
+def test_rollback_restores_key_delete_after_key_column_drop(rb_table, spark):
+    """A restored pending key delete names rows, not key values: rolling
+    back to it after its key column was dropped restores it applying."""
     wh = rb_table
     wh.add_column("lab", "rbt", "tag", "string")
     wh.append(
@@ -182,12 +184,18 @@ def test_rollback_refuses_eq_delete_on_dropped_key(rb_table, spark):
         ),
         batch_id="b7",
     )
-    wh.delete_by_keys("lab", "rbt", [("k1",)], ["tag"])  # pending, keys tag
+    wh.delete_by_keys("lab", "rbt", [("k1",)], ["tag"])  # pending
     target_v = wh._latest_version("lab", "rbt")
-    wh.optimize("lab", "rbt")  # folds the delete -> drop becomes legal
+    n = wh.read("lab", "rbt").count()
+    wh.optimize("lab", "rbt")  # folds the delete
     wh.drop_column("lab", "rbt", "tag")
-    with pytest.raises(ValueError, match="keys on field id"):
-        wh.rollback_to_snapshot("lab", "rbt", target_v)
+    wh.rollback_to_snapshot("lab", "rbt", target_v)
+    assert len(wh.delete_files_report("lab", "rbt")) == 1
+    got = wh.read("lab", "rbt")
+    assert "tag" not in got.columns  # DDL is not reverted
+    assert got.count() == n
+    assert got.filter("id = 700").count() == 0
+    assert wh.count_rows("lab", "rbt", fallback=False) == n
 
 
 def test_rollback_expiry_and_tag_interplay(rb_table, spark):

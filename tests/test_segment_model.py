@@ -69,13 +69,6 @@ OPS = st.lists(
                 # prunes targets, replay prunes by prefix, DDL/rewrite
                 # carry verbatim, expiry GCs unreferenced delete files)
                 "mor_delete",
-                # seq-scoped equality delete (kind="eq", key VALUES, no
-                # positions, NO stored targets): it applies to every file
-                # live at its commit (lower seq) and is retired by the
-                # fold exactly when the last of them is dropped
-                # (min_live_seq >= entry seq).  It keys on field id 1, so
-                # dropping that field refuses while one is pending.
-                "eq_delete_seq",
                 # r09 branches: fork, stage commits, publish or drop —
                 # branch file sets must track their own model, expiry must
                 # keep branch-referenced segments, publish must fast-
@@ -118,14 +111,10 @@ def test_random_op_sequences_match_model(ops):
         schema_model: list[dict] = []  # (name, type) the schema must match
         tags_model: dict[str, int] = {}  # live tags -> pinned version
         dels_model: dict[str, set[str]] = {}  # delete rel path -> live targets
-        # seq-scoped eq deletes: rel path -> files that were live at its
-        # commit and still are (all strictly older than it); the entry
-        # must survive exactly while this set is non-empty
-        seq_dels_model: dict[str, set[str]] = {}
         # branches: name -> {"files": set of rel paths, "fork": version}
         branches_model: dict[str, dict] = {}
-        # the model's OWN state at each main version (files, deletes,
-        # seq deletes) — what a rollback to that version must restore
+        # the model's OWN state at each main version (files, deletes) —
+        # what a rollback to that version must restore
         states: dict[int, tuple] = {}
         batches: list[str] = []
         counter = 0
@@ -140,22 +129,9 @@ def test_random_op_sequences_match_model(ops):
                 dels_model[dp] -= gone
                 if not dels_model[dp]:
                     del dels_model[dp]
-            # seq retirement: the fold drops a seq entry iff no surviving
-            # file predates it — exactly when its older-set empties
-            for dp in list(seq_dels_model):
-                seq_dels_model[dp] -= gone
-                if not seq_dels_model[dp]:
-                    del seq_dels_model[dp]
 
         def cur_fields():
             return [{"name": f["name"], "type": f["type"]} for f in schema_model]
-
-        def key_field_live() -> bool:
-            # the first appended field (id 1) is what eq deletes key on;
-            # rename keeps the dict, drop removes it
-            return bool(key_field) and any(f is key_field[0] for f in schema_model)
-
-        key_field: list[dict] = []  # [the model dict of field id 1]
 
         def check():
             head = wh.head_snapshot("lab", "t")
@@ -171,16 +147,8 @@ def test_random_op_sequences_match_model(ops):
                     for f in wh.table_schema("lab", "t")
                 ] == cur_fields()
             all_dels = head.get("deletes", []) if head else []
-            got_dels = {
-                d["path"]: set(d["targets"])
-                for d in all_dels
-                if d.get("targets") is not None
-            }
+            got_dels = {d["path"]: set(d["targets"]) for d in all_dels}
             assert got_dels == dels_model
-            got_seq = {
-                d["path"] for d in all_dels if d.get("targets") is None
-            }
-            assert got_seq == set(seq_dels_model)
             # r18: the zero-parse census (LIGHT head + delete-segment
             # ref counts — what the auto-fold policy polls) must agree
             # with the materialized delete set the model pins
@@ -213,7 +181,6 @@ def test_random_op_sequences_match_model(ops):
                 ]
                 if not schema_model:
                     schema_model.append({"name": "id", "type": "bigint"})
-                    key_field.append(schema_model[0])
                 wh.commit_snapshot(
                     "lab", "t", "append", add_files=files,
                     drop_prefix=os.path.join(tdir, "data", batch) + os.sep,
@@ -274,15 +241,6 @@ def test_random_op_sequences_match_model(ops):
                             wh.drop_column("lab", "t", f["name"])
                         ddl_epoch -= 1  # nothing committed
                         continue  # refused: no commit to assert on
-                    elif key_field and f is key_field[0] and seq_dels_model:
-                        import pytest as _pytest
-
-                        with _pytest.raises(
-                            ValueError, match="pending equality delete"
-                        ):
-                            wh.drop_column("lab", "t", f["name"])
-                        ddl_epoch -= 1  # nothing committed
-                        continue
                     else:
                         wh.drop_column("lab", "t", f["name"])
                         schema_model.remove(f)
@@ -350,29 +308,6 @@ def test_random_op_sequences_match_model(ops):
                     }],
                 )
                 dels_model[rel] = set(targets)
-            elif op == "eq_delete_seq" and model and key_field_live():
-                d = os.path.join(tdir, "deletes", f"eqs_{counter:03d}")
-                os.makedirs(d, exist_ok=True)
-                dp = os.path.join(d, "part-0.parquet")
-                pq.write_table(
-                    pa.table({"id": pa.array([pick], pa.int64())}), dp
-                )
-                rel = os.path.relpath(dp, tdir)
-                wh.commit_snapshot(
-                    "lab", "t", "delete",
-                    add_files=[],
-                    add_deletes=[{
-                        "path": rel,
-                        "bytes": os.stat(dp).st_size,
-                        "rows": 1,
-                        "kind": "eq",
-                        "eq_cols": ["id"],
-                        "key_ranges": {"id": {"set": [pick]}},
-                        "eq_ids": [1],
-                    }],
-                )
-                # applies to every file live at commit (all lower seq)
-                seq_dels_model[rel] = set(model)
             elif op == "branch" and wh._snapshot_versions("lab", "t"):
                 name = f"br{counter:03d}"
                 wh.create_branch("lab", "t", name)
@@ -500,8 +435,8 @@ def test_random_op_sequences_match_model(ops):
                         check()
                         v = wh._latest_version("lab", "t")
                         if v is not None:
-                            # the FIRST model's state tuple (files, dels,
-                            # seq dels) — a copy-paste of the DML model's
+                            # the FIRST model's state tuple (files, dels)
+                            # — a copy-paste of the DML model's
                             # rows-dict shape sat here unexecuted until
                             # the r13 example-DB reset reached this path
                             states[v] = (
@@ -509,10 +444,6 @@ def test_random_op_sequences_match_model(ops):
                                 {
                                     k: frozenset(x)
                                     for k, x in dels_model.items()
-                                },
-                                {
-                                    k: frozenset(x)
-                                    for k, x in seq_dels_model.items()
                                 },
                             )
                         continue
@@ -635,23 +566,13 @@ def test_random_op_sequences_match_model(ops):
                 if len(vs) < 2 or not cands:
                     continue
                 v = cands[pick % len(cands)]
-                files, dels, seqd = states[v]
-                if seqd and not key_field_live():
-                    import pytest as _pytest
-
-                    # a restored pending eq delete would key on a field
-                    # dropped since
-                    with _pytest.raises(ValueError, match="dropped from"):
-                        wh.rollback_to_snapshot("lab", "t", v)
-                    continue
+                files, dels = states[v]
                 out = wh.rollback_to_snapshot("lab", "t", v)
                 assert out["rolled_back_to"] == v
                 model.clear()
                 model |= set(files)
                 dels_model.clear()
                 dels_model.update({k: set(x) for k, x in dels.items()})
-                seq_dels_model.clear()
-                seq_dels_model.update({k: set(x) for k, x in seqd.items()})
                 # schema_model deliberately untouched: DDL not reverted
             elif op == "rewrite" and model:
                 wh.rewrite_manifests("lab", "t")
@@ -735,7 +656,6 @@ def test_random_op_sequences_match_model(ops):
                 states[v] = (
                     frozenset(model),
                     {k: frozenset(x) for k, x in dels_model.items()},
-                    {k: frozenset(x) for k, x in seq_dels_model.items()},
                 )
 
         # the age-gated orphan sweep must never touch a live file
@@ -743,7 +663,7 @@ def test_random_op_sequences_match_model(ops):
             wh.remove_orphan_files("lab", "t", older_than_s=0)
             for rel in model:
                 assert os.path.isfile(os.path.join(tdir, rel)), rel
-            for rel in list(dels_model) + list(seq_dels_model):
+            for rel in dels_model:
                 assert os.path.isfile(os.path.join(tdir, rel)), rel
             check()
 
@@ -757,7 +677,7 @@ DML_OPS = st.lists(
                 "append",
                 "cow_delete", "mor_delete",
                 "cow_update", "mor_update",
-                "eq_delete", "mor_upsert",
+                "key_delete", "mor_upsert",
                 # r12 conditional MERGE: freshness-guarded update +
                 # tombstone delete clauses resolved against the model
                 "merge_into",
@@ -846,7 +766,7 @@ def test_random_dml_sequences_match_row_model(spark, ops):
                 for r in rows.values():
                     if r["k"] == k:
                         r["v"] += 100
-            elif op == "eq_delete" and rows:
+            elif op == "key_delete" and rows:
                 victims = sorted(rows)[pick % len(rows):][:2]
                 wh.delete_by_keys("lab", "t", victims, eq_cols=["id"])
                 for i in victims:

@@ -169,7 +169,7 @@ def test_streaming_upsert_matches_batch_keep_latest(spark, tmp_path):
 def test_streaming_upsert_merge_on_read_converges_and_folds(spark, tmp_path):
     """The MoR CDC sink (mode='merge-on-read' + maintenance_every) must
     converge to the same keep-latest snapshot as the copy-on-write path
-    while committing O(batch) per epoch — equality delete files appear
+    while committing O(batch) per epoch — position delete files appear
     while epochs run and the maintenance tick folds them away."""
     from hands_on_iceberg_compression_spark.operators.dedup import (
         keep_latest,
@@ -194,9 +194,9 @@ def test_streaming_upsert_merge_on_read_converges_and_folds(spark, tmp_path):
         stream, wh, "lab", "latest_mor", str(tmp_path / "ckpt_mor"),
         mode="merge-on-read",
     )
-    # the epochs committed equality deletes instead of rewriting
+    # the epochs committed position deletes instead of rewriting
     assert all(
-        d["kind"] == "eq" for d in wh.delete_files_report("lab", "latest_mor")
+        d["kind"] == "pos" for d in wh.delete_files_report("lab", "latest_mor")
     )
     assert len(wh.delete_files_report("lab", "latest_mor")) >= 1
 
