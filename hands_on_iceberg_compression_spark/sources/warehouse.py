@@ -39,6 +39,20 @@ _ZSTD_LEVEL_KEY = "parquet.compression.codec.zstd.level"
 
 SUPPORTED_CODECS = ("zstd", "gzip", "snappy", "lz4", "uncompressed")
 
+_ARROW_CODEC = {
+    "zstd": "ZSTD", "gzip": "GZIP", "snappy": "SNAPPY",
+    "lz4": "LZ4", "uncompressed": "NONE",
+}
+
+
+def _arrow_compression(codec: str, level: int | None):
+    """pyarrow (``compression``, ``compression_level``) for a table codec
+    and level, for the writers that write parquet with pyarrow (position
+    deletes, the per-column codec rewrite): zstd and gzip take a level,
+    the other codecs none."""
+    return _ARROW_CODEC[codec], level if codec in ("zstd", "gzip") else None
+
+
 # Iceberg-style partition transforms (README.md:85-86 shows the reference's
 # intended month()/bucket()/identity syntax; its partitioning config was dead
 # — FIXME at sqlHelpers.ts:127).  Here they work: transform columns are
@@ -1524,10 +1538,11 @@ class ParquetWarehouse:
         del_root = os.path.join(tdir, "deletes", f"del_{uuid.uuid4().hex[:8]}")
         os.makedirs(del_root)
         p = os.path.join(del_root, "part-00000.parquet")
+        codec, level = _arrow_compression(meta.codec, meta.level)
         pq.write_table(
             tuples, p,
-            compression="none" if meta.codec == "uncompressed" else meta.codec,
-            compression_level=meta.level if meta.codec == "zstd" else None,
+            compression=codec,
+            compression_level=level,
             use_dictionary=["file_path"],
             column_encoding={"pos": "DELTA_BINARY_PACKED"},
         )
@@ -1673,6 +1688,15 @@ class ParquetWarehouse:
     # single-digit MB.
     MOR_LOCAL_DELETE_KEYS_MAX = 65536
 
+    # ... and only while the candidate files the key envelope admits hold
+    # at most this many rows (their manifest ``rows``): the driver-side
+    # scan reads each candidate's key columns on one thread, so a batch
+    # whose keys spread over a large table takes the Spark semi-join.
+    # The bound caps driver memory, not speed: 500 keys spread over 8
+    # files of 1M bigint rows took 64 ms on the driver and 2.2 s in the
+    # semi-join (local[4], 4 vCPU).
+    MOR_LOCAL_SCAN_ROWS_MAX = 1_000_000
+
     # merge_into discovery collects up to this many DISTINCT source keys
     # in its one bounded job: at or below MERGE_DISCRETE_KEYS_MAX they
     # form the membership spec; between the two caps the [min, max]
@@ -1706,19 +1730,24 @@ class ParquetWarehouse:
         applied: the victims of a key delete, as a pyarrow table.
 
         ``keys`` are post-cast key tuples already on the driver.  When
-        every key column is stored under a ``_PA_TYPES`` type in every
-        target, pyarrow reads only those columns (a file's physical row
-        order is Spark's ``_metadata.row_index``), matches them against
-        the keys and drops the positions pending deletes already name: no
-        Spark job.  Otherwise (``keys`` None, another key type, or a key
-        stored only in the partition path) one Spark job semi-joins the
-        delete-applied ``with_pos`` scan with ``kdf`` — or with the local
-        keys as an Arrow relation."""
+        there are at most ``MOR_LOCAL_DELETE_KEYS_MAX`` of them, the
+        targets hold at most ``MOR_LOCAL_SCAN_ROWS_MAX`` rows and every
+        key column is stored under a ``_PA_TYPES`` type in every target,
+        pyarrow reads only those columns (a file's physical row order is
+        Spark's ``_metadata.row_index``), matches them against the keys
+        and drops the positions pending deletes already name: no Spark
+        job.  Otherwise (``keys`` None, past a bound, another key type, or
+        a key stored only in the partition path) one Spark job semi-joins
+        the delete-applied ``with_pos`` scan with ``kdf`` — or with the
+        local keys as an Arrow relation."""
         import pyarrow as pa
 
         cur = {f["name"]: f for f in head["schemas"][str(head["schema_id"])]}
-        if keys is not None and all(
-            cur[c]["type"] in self._PA_TYPES for c in key_cols
+        if (
+            keys is not None
+            and len(keys) <= self.MOR_LOCAL_DELETE_KEYS_MAX
+            and sum(e["rows"] for e in targets) <= self.MOR_LOCAL_SCAN_ROWS_MAX
+            and all(cur[c]["type"] in self._PA_TYPES for c in key_cols)
         ):
             out = self._local_key_victims(
                 schema, table, head, targets, key_cols, keys
@@ -1813,6 +1842,67 @@ class ParquetWarehouse:
             "pos": pa.array(out_pos, pa.int64()),
         })
 
+    _INT_BITS = {"tinyint": 7, "smallint": 15, "int": 31, "bigint": 63}
+
+    @classmethod
+    def _cast_local_key(cls, v, sql_type: str):
+        """ONE local key value cast to its recorded ``_PA_TYPES`` column
+        type the way Spark casts a key frame's value, so a list and a
+        DataFrame of the same keys delete the same rows: a float for an
+        integer column truncates toward zero (19.5 -> 19) and an integer
+        string parses; NaN, infinities, overflows and unparsable values
+        raise ValueError where the frame's cast yields NULL, which
+        ``delete_by_keys`` refuses.  A float for a string column raises
+        too: Python renders floats unlike Spark (1.0 vs "1.0", 1e20 vs
+        "1.0E20"), so such a key could quietly match the wrong rows —
+        pass the string."""
+        import datetime as _dt
+        import math
+
+        bad = ValueError(
+            f"key value {v!r} ({type(v).__name__}) is not representable "
+            f"as {sql_type}"
+        )
+        if sql_type in cls._INT_BITS:
+            if isinstance(v, int):  # bool too: Spark casts true to 1
+                out = int(v)
+            elif isinstance(v, float) and math.isfinite(v):
+                out = int(v)  # truncation toward zero, as Spark cast does
+            elif isinstance(v, str):
+                try:
+                    out = int(v.strip())
+                except ValueError:
+                    raise bad from None
+            else:
+                raise bad
+            lim = 1 << cls._INT_BITS[sql_type]
+            if not -lim <= out < lim:
+                raise ValueError(f"key value {v!r} overflows {sql_type}")
+            return out
+        if sql_type == "string":
+            if isinstance(v, str):
+                return v
+            if isinstance(v, bool):
+                return "true" if v else "false"  # Spark cast rendering
+            if isinstance(v, int):
+                return str(v)
+            raise bad
+        if sql_type == "boolean":
+            if isinstance(v, bool):
+                return v
+            raise bad
+        # date
+        if isinstance(v, _dt.datetime):
+            return v.date()
+        if isinstance(v, _dt.date):
+            return v
+        if isinstance(v, str):
+            try:
+                return _dt.date.fromisoformat(v.strip())
+            except ValueError:
+                raise bad from None
+        raise bad
+
     # A key delete that loses its commit race to a rewrite of one of its
     # target files rescans from the new head, at most this many times.
     KEY_DELETE_ATTEMPTS = 8
@@ -1834,13 +1924,16 @@ class ParquetWarehouse:
         ``keys`` is a list of dicts ({col: value}), a list of tuples
         (with ``eq_cols`` naming the columns), a flat list of scalars
         (single-column key), or a DataFrame of key rows.  Keys cast to the
-        recorded column types: local values with pyarrow's safe cast (a
-        value the type cannot hold exactly — a fraction for an integer
-        column, an overflow, an unparsable string — raises ValueError),
-        DataFrame keys (and local keys of a type outside ``_PA_TYPES``)
-        with Spark's ``try_cast``.  Local keys of ``_PA_TYPES`` types need
-        no SparkSession and launch no Spark job.  NULL keys raise: SQL
-        equality never matches NULL.
+        recorded column types with one rule, Spark's: a float for an
+        integer column truncates, and a value the type cannot hold (NaN,
+        an overflow, an unparsable string) raises ValueError.  Local keys
+        of ``_PA_TYPES`` types cast on the driver (``_cast_local_key``,
+        which also refuses a float for a string column) and, up to the
+        driver-scan bounds, need no SparkSession and launch no Spark job.
+        DataFrame keys (and local keys of other types) stay in Spark: they
+        cast with ``try_cast``, one aggregate yields their count and
+        pruning envelope, and the victim scan semi-joins them.  NULL keys
+        raise: SQL equality never matches NULL.
 
         Concurrency is ``delete_where``'s: a concurrent append merges (its
         rows are not subject to this delete), and when a concurrent commit
@@ -1901,22 +1994,31 @@ class ParquetWarehouse:
         if local is not None and all(
             t in self._PA_TYPES for t in rec_types.values()
         ):
-            cast_cols = []
-            for i, c in enumerate(cols):
-                t = rec_types[c]
-                try:
-                    cast_cols.append(
-                        pa.array([k[i] for k in local])
-                        .cast(getattr(pa, self._PA_TYPES[t])())
-                        .to_pylist()
+            # re-dedup: casting can collide distinct raw keys (10, 10.5)
+            local = sorted(
+                {
+                    tuple(
+                        self._cast_local_key(v, rec_types[c])
+                        for v, c in zip(t, cols)
                     )
-                except (pa.ArrowInvalid, pa.ArrowTypeError,
-                        pa.ArrowNotImplementedError) as e:
-                    raise ValueError(
-                        f"key value(s) of {c!r} not representable as {t}: {e}"
-                    ) from None
-            local = sorted(set(zip(*cast_cols)), key=repr)
+                    for t in local
+                },
+                key=repr,
+            )
+            n_keys = len(local)
+            if n_keys <= self.MERGE_DISCRETE_KEYS_MAX:
+                ranges = {
+                    c: sorted({t[i] for t in local}, key=repr)
+                    for i, c in enumerate(cols)
+                }
+            else:
+                ranges = {
+                    c: (min(t[i] for t in local), max(t[i] for t in local))
+                    for i, c in enumerate(cols)
+                }
         else:
+            # key frame: the keys stay in Spark; one aggregate over the
+            # CAST keys yields their count, NULLs and pruning envelope
             if local is not None:
                 try:
                     raw = pa.table({
@@ -1926,35 +2028,34 @@ class ParquetWarehouse:
                 except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
                     raise ValueError(f"mixed-type key values: {e}") from None
                 kdf = self.spark.createDataFrame(raw)
+                local = None
             kdf = kdf.select(
                 *[F.col(c).try_cast(rec_types[c]).alias(c) for c in cols]
             ).distinct()
-            local = [tuple(r) for r in kdf.collect()]
-            if any(v is None for t in local for v in t):
+            aggs = [F.count(F.lit(1)).alias("__n")]
+            for c in cols:
+                aggs += [
+                    F.sum(F.col(c).isNull().cast("int")).alias(f"n_{c}"),
+                    F.min(c).alias(f"lo_{c}"),
+                    F.max(c).alias(f"hi_{c}"),
+                ]
+            env = kdf.agg(*aggs).collect()[0]
+            if any((env[f"n_{c}"] or 0) > 0 for c in cols):
                 raise ValueError(
                     null_msg + " (a key value the recorded column type "
                     "cannot represent casts to NULL and is rejected too)"
                 )
-            local.sort(key=repr)
-        if not local:
+            n_keys = env["__n"]
+            ranges = {c: (env[f"lo_{c}"], env[f"hi_{c}"]) for c in cols}
+        if not n_keys:
             return no_op
-        if len(local) <= self.MERGE_DISCRETE_KEYS_MAX:
-            ranges = {
-                c: sorted({t[i] for t in local}, key=repr)
-                for i, c in enumerate(cols)
-            }
-        else:
-            ranges = {
-                c: (min(t[i] for t in local), max(t[i] for t in local))
-                for i, c in enumerate(cols)
-            }
         meta = self.table_meta(schema, table)
         for attempt in range(self.KEY_DELETE_ATTEMPTS):
             targets, total, head = self._prune_entries(
                 schema, table, ranges, version=version, branch=branch
             )
             found = {
-                "keys": len(local),
+                "keys": n_keys,
                 "targets": len(targets),
                 "files_pruned": total - len(targets),
             }
@@ -9461,12 +9562,8 @@ class ParquetWarehouse:
         data_dir = self._live_data_dir(schema, table)
         tmp_dir = os.path.join(data_dir, f"percol_{uuid.uuid4().hex[:8]}")
 
-        arrow_codec = {
-            "zstd": "ZSTD", "gzip": "GZIP", "snappy": "SNAPPY",
-            "lz4": "LZ4", "uncompressed": "NONE",
-        }
         for col, (codec, _lvl) in overrides.items():
-            if codec not in arrow_codec:
+            if codec not in _ARROW_CODEC:
                 raise ValueError(f"codec {codec!r} not in {SUPPORTED_CODECS}")
 
         def rewrite_one(path: str) -> None:
@@ -9484,9 +9581,10 @@ class ParquetWarehouse:
             for i in range(pf.metadata.num_columns):
                 leaf = rg0.column(i).path_in_schema
                 top = leaf.split(".", 1)[0]
-                codec, lvl = overrides.get(top, (meta.codec, meta.level))
-                comp[leaf] = arrow_codec[codec]
-                if lvl is not None and codec in ("zstd", "gzip"):
+                comp[leaf], lvl = _arrow_compression(
+                    *overrides.get(top, (meta.codec, meta.level))
+                )
+                if lvl is not None:
                     levels[leaf] = lvl
             # stream row-group-sized batches: memory stays one row group per
             # worker regardless of file size (512 MB+ compacted files)

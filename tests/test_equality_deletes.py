@@ -275,33 +275,53 @@ def test_dataframe_keys(spark, eq_table):
         )
 
 
-def test_local_float_keys_cast_to_recorded_type(eq_table):
+def test_local_float_keys_cast_to_recorded_type(eq_table, spark):
     """LOCAL key lists cast to the recorded types BEFORE building prune
-    ranges, with pyarrow's safe cast: a float that is a whole number
-    becomes that integer key, and a value the type cannot hold exactly
-    (a fraction, NaN, an overflow, an unparsable string) raises instead
-    of silently matching a truncated key or mis-pruning."""
+    ranges, by Spark's cast rule.  Raw 19.5 for the int column falls
+    BETWEEN every file's [lo, hi] bounds (one file ends at 19, the next
+    starts at 20), so pruning on the raw value would 'prove' no file can
+    match and no-op — yet Spark's cast (19) matches a live row.  A list
+    and a DataFrame of the same keys delete the same rows."""
     wh = eq_table
-    out = wh.delete_by_keys("lab", "eqt", [19.0], eq_cols=["id"])
-    assert out["delete_files_added"] == 1
+    out = wh.delete_by_keys("lab", "eqt", [19.5], eq_cols=["id"])
+    assert out["delete_files_added"] == 1  # NOT pruned to a no-op
     got = wh.read("lab", "eqt")
     assert got.count() == 59
     assert got.filter(F.col("id") == 19).count() == 0
-    # cast collisions dedup: 10 and 10.0 are ONE key
-    out = wh.delete_by_keys("lab", "eqt", [10, 10.0], eq_cols=["id"])
+    # cast collisions dedup: 10 and 10.5 are ONE key after truncation
+    out = wh.delete_by_keys("lab", "eqt", [10, 10.5], eq_cols=["id"])
     assert out["keys"] == 1
     assert wh.read("lab", "eqt").count() == 58
+    # the same float keys as a DataFrame truncate the same way
+    kdf = spark.createDataFrame([(30.5,), (30.9,), (41.2,)], "id double")
+    out = wh.delete_by_keys("lab", "eqt", kdf)
+    assert (out["keys"], out["rows_deleted"]) == (2, 2)
+    got = wh.read("lab", "eqt")
+    assert got.count() == 56
+    assert got.filter(F.col("id").isin(30, 41)).count() == 0
+    # unrepresentable values raise on both paths — never silently
+    # mis-prune; nothing is committed
     v = wh._latest_version("lab", "eqt")
-    for bad in (19.5, float("nan"), "abc", 2**40):
+    for bad in (float("nan"), float("inf"), "abc"):
         with pytest.raises(ValueError, match="not representable"):
             wh.delete_by_keys("lab", "eqt", [bad], eq_cols=["id"])
+    with pytest.raises(ValueError, match="overflows"):
+        wh.delete_by_keys("lab", "eqt", [2**40], eq_cols=["id"])
+    with pytest.raises(ValueError, match="NULL"):
+        wh.delete_by_keys(
+            "lab", "eqt", spark.createDataFrame([(2**40,)], "id bigint")
+        )
     assert wh._latest_version("lab", "eqt") == v
-    # string columns: ints render as their decimal string
-    wh.delete_by_keys("lab", "eqt", ["u1"], eq_cols=["u"])
+    # string columns: ints render as Spark cast would; floats are refused
+    # (Python renders 1.0 and 1e20 unlike Spark's "1.0" and "1.0E20")
+    out = wh.delete_by_keys("lab", "eqt", ["u1"], eq_cols=["u"])
     assert wh.read("lab", "eqt").filter(F.col("u") == "u1").count() == 0
     assert wh.delete_by_keys("lab", "eqt", [1], eq_cols=["u"])[
         "delete_files_added"
     ] == 0
+    for bad in (1.5, 1.0, 1e20):
+        with pytest.raises(ValueError, match="not representable"):
+            wh.delete_by_keys("lab", "eqt", [bad], eq_cols=["u"])
 
 
 def test_concurrent_commit_fails_mor_upsert_then_retry_applies_once(

@@ -14,7 +14,9 @@ shapes where the two could drift:
 - target files with pending position deletes (already-deleted rows are
   never victims again);
 - key types outside ``_PA_TYPES`` (timestamp, double, decimal), which
-  must route to the Spark scan.
+  must route to the Spark scan;
+- batches past the driver-scan bounds (too many candidate rows or keys)
+  and DataFrame keys, which route to the Spark scan too.
 """
 
 from __future__ import annotations
@@ -163,3 +165,52 @@ def test_unmapped_key_types_take_the_spark_scan(spark, tmp_path, monkeypatch):
         assert out["rows_deleted"] == 2, col
     got = sorted(r["id"] for r in wh.read("lab", "um").collect())
     assert got == sorted(set(range(20)) - {3, 11, 2, 10, 4, 15})
+
+
+def test_bounds_and_key_frames_take_the_spark_scan(spark, tmp_path, monkeypatch):
+    """Candidate files holding more than ``MOR_LOCAL_SCAN_ROWS_MAX`` rows
+    (keys spread over a large table) or more than
+    ``MOR_LOCAL_DELETE_KEYS_MAX`` keys send the victim scan to the Spark
+    semi-join, for ``delete_by_keys`` and the merge-on-read upsert alike;
+    DataFrame keys never come to the driver.  Same rows either way."""
+    wh = _table(
+        spark, tmp_path, "bd", [(i, i % 3) for i in range(40)], "id int, k int"
+    )
+    seen = []
+    real = ParquetWarehouse._key_victims
+
+    def spy(self, *a, **k):
+        seen.append(a[6])  # the local keys, None for a key frame
+        return real(self, *a, **k)
+
+    def refuse(*a, **k):
+        raise AssertionError("the driver-side scan ran past its bounds")
+
+    monkeypatch.setattr(ParquetWarehouse, "_key_victims", spy)
+    monkeypatch.setattr(ParquetWarehouse, "_local_key_victims", refuse)
+    with monkeypatch.context() as m:
+        m.setattr(ParquetWarehouse, "MOR_LOCAL_SCAN_ROWS_MAX", 0)
+        assert wh.delete_by_keys("lab", "bd", [1, 21], eq_cols=["id"])[
+            "rows_deleted"
+        ] == 2
+        wh.merge_upsert(
+            "lab", "bd",
+            spark.createDataFrame([(5, 9), (6, 9), (77, 9)], "id int, k int"),
+            ["id"], mode="merge-on-read",
+        )
+    with monkeypatch.context() as m:
+        m.setattr(ParquetWarehouse, "MOR_LOCAL_DELETE_KEYS_MAX", 1)
+        assert wh.delete_by_keys("lab", "bd", [2, 22], eq_cols=["id"])[
+            "rows_deleted"
+        ] == 2
+    out = wh.delete_by_keys(
+        "lab", "bd", spark.createDataFrame([(3,), (23,), (500,)], "id int")
+    )
+    assert (out["keys"], out["rows_deleted"]) == (3, 2)
+    assert seen[-1] is None
+    got = {r["id"]: r["k"] for r in wh.read("lab", "bd").collect()}
+    assert sorted(got) == sorted(
+        set(range(40)) - {1, 21, 2, 22, 3, 23} | {77}
+    )
+    assert got[5] == got[6] == got[77] == 9
+    assert wh.count_rows("lab", "bd") == len(got)
