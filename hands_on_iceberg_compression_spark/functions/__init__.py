@@ -1,5 +1,5 @@
 from hands_on_iceberg_compression_spark.functions.generators import (
-    column_expr,
+    column_sql,
     generate_df,
     rows_df,
 )
@@ -9,7 +9,7 @@ from hands_on_iceberg_compression_spark.functions.prng import (
 )
 
 __all__ = [
-    "column_expr",
+    "column_sql",
     "generate_df",
     "rows_df",
     "generate_random_strings",

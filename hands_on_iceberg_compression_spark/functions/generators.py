@@ -1,16 +1,25 @@
-"""FieldSpec -> Spark Column compiler (the data-generation operator core).
+"""FieldSpec -> Spark SQL text compiler (the data-generation operator core).
 
 Parity: reference ``src/sqlHelpers.ts:28-98`` (columnExpr + helpers, operators
-A1-A13 in SURVEY.md §2).  The reference emitted Trino SQL over engine
-``random()``/``uuid()`` — *unseeded*, so generated rows were unreproducible.
-We instead derive every random draw from ``xxhash64(id, column, salt, seed)``,
-which is:
+A1-A13 in SURVEY.md §2).  Like the reference, each spec compiles to one SQL
+expression string, and a batch is ``SELECT <one expression per column> FROM
+range(...)``, handed to Spark in one ``selectExpr`` call.  A ``Column`` tree
+would cost a py4j round trip per node: a wide batch took about 21k calls.
+
+The reference drew from engine ``random()``/``uuid()`` — *unseeded*, so
+generated rows were unreproducible.  We instead derive every random draw
+from ``xxhash64(id, column, salt, seed)``, which is:
 
 - deterministic per (seed, column, row id) — replayable for oracle checks,
-  independent of partitioning, task retries, and executor count (``F.rand``
+  independent of partitioning, task retries, and executor count (``rand``
   is none of those: it depends on partition layout, which changes at scale);
 - JVM-side and whole-stage-codegen friendly (no Python in the hot path), so a
   1000-executor load is pure codegen over ``spark.range``.
+
+Literal types are part of the values: xxhash64 hashes an INT in 4 bytes and
+a BIGINT in 8, so every Python int is written bare (INT below 2**31, BIGINT
+above, as Spark types it) and every Python float with a ``D`` suffix (a
+bare ``0.5`` is a DECIMAL in Spark SQL).
 
 The reference's 10k-sequence CTE dance to synthesize row ids
 (sqlHelpers.ts:160-212, operator A12) collapses to ``spark.range``.
@@ -20,8 +29,7 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from hands_on_iceberg_compression_spark.schema.specs import (
     ArraySpec,
@@ -43,57 +51,65 @@ from hands_on_iceberg_compression_spark.schema.specs import (
 # at a negligible 2**-24.
 _U_DEN = 1 << 40
 
+_ID = "id"  # the spark.range column every expression draws from
+_ELEM = "__i"  # the array lambda's 1-based slot index
 
-def _uniform(id_col: Column, name: str, salt: str, seed: int, *extra: Column) -> Column:
+
+def _str(s: str) -> str:
+    """SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _lit(v) -> str:
+    """SQL literal of the type ``F.lit(v)`` would give: INT/BIGINT for ints,
+    DOUBLE for floats, STRING for strings."""
+    if isinstance(v, str):
+        return _str(v)
+    if isinstance(v, float):
+        return f"{v!r}D"
+    return str(int(v))
+
+
+def _uniform(row_id: str, name: str, salt: str, seed: int, *extra: str) -> str:
     """Deterministic U[0,1) from (row id, column name, salt, seed, extras).
 
     pmod (not abs) so xxhash64's Long.MIN_VALUE cannot overflow under ANSI.
     """
-    h = F.xxhash64(id_col, F.lit(name), F.lit(salt), F.lit(seed), *extra)
-    return F.pmod(h, F.lit(_U_DEN)).cast("double") / F.lit(float(_U_DEN))
+    args = ", ".join([row_id, _str(name), _str(salt), _lit(seed), *extra])
+    return f"(CAST(pmod(xxhash64({args}), {_U_DEN}) AS DOUBLE) / {_lit(float(_U_DEN))})"
 
 
-def _int_expr(spec: IntSpec | BigintSpec, u: Column) -> Column:
+def _int_expr(spec: IntSpec | BigintSpec, u: str) -> str:
     # A1/A2: uniform integer in [min, max] inclusive (sqlHelpers.ts:33-36,69-73)
     span = spec.max - spec.min
-    expr = F.lit(spec.min) + F.floor(u * F.lit(span + 1)).cast("long")
-    return expr.cast("int") if spec.kind == "int" else expr.cast("long")
+    kind = "INT" if spec.kind == "int" else "BIGINT"
+    return f"CAST({_lit(spec.min)} + CAST(floor({u} * {_lit(span + 1)}) AS BIGINT) AS {kind})"
 
 
-def _double_expr(spec: DoubleSpec, u: Column) -> Column:
+def _double_expr(spec: DoubleSpec, u: str) -> str:
     # A3: uniform double in [min, max), rounded to 6 dp (sqlHelpers.ts:37-40,74-78)
-    return F.round(F.lit(spec.min) + u * F.lit(spec.max - spec.min), 6)
+    return f"round({_lit(spec.min)} + {u} * {_lit(spec.max - spec.min)}, 6)"
 
 
-def _string_expr(spec: StringSpec, id_col: Column, name: str, seed: int, *extra: Column) -> Column:
+def _string_expr(spec: StringSpec, row_id: str, name: str, seed: int, *extra: str) -> str:
     # A4: random lowercase-hex string of exactly `length` chars.  The reference
     # used substr(uuid-hex, 1, len) and silently truncated at 32
     # (sqlHelpers.ts:41-43; temp.md:21 shows row_32 len 35 -> 32 chars).  We
     # chain as many md5 blocks as needed, so length > 32 is honored.
     blocks = []
     for b in range((spec.length + 31) // 32):
-        blocks.append(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    id_col.cast("string"),
-                    F.lit(name),
-                    F.lit(f"str{b}"),
-                    F.lit(str(seed)),
-                    *[c.cast("string") for c in extra],
-                )
-            )
-        )
-    return F.substring(F.concat(*blocks), 1, spec.length)
+        parts = [f"CAST({row_id} AS STRING)", _str(name), _str(f"str{b}"), _str(str(seed))]
+        parts += [f"CAST({c} AS STRING)" for c in extra]
+        blocks.append(f"md5(concat_ws('|', {', '.join(parts)}))")
+    return f"substring(concat({', '.join(blocks)}), 1, {spec.length})"
 
 
-def _enum_expr(spec: EnumSpec, u: Column) -> Column:
+def _enum_expr(spec: EnumSpec, u: str) -> str:
     # A5: uniform pick from the literal dictionary (sqlHelpers.ts:44-52).
     # u < 1 strictly, so the 1-based index is always within [1, n] — safe
     # under ANSI element_at.
-    n = len(spec.values)
-    arr = F.array(*[F.lit(v) for v in spec.values])
-    return F.element_at(arr, (F.floor(u * F.lit(n)) + F.lit(1)).cast("int"))
+    arr = ", ".join(_lit(v) for v in spec.values)
+    return f"element_at(array({arr}), CAST(floor({u} * {len(spec.values)}) + 1 AS INT))"
 
 
 def _parse_ts(s: str) -> _dt.datetime:
@@ -103,30 +119,30 @@ def _parse_ts(s: str) -> _dt.datetime:
     return d
 
 
-def _timestamp_expr(spec: TimestampSpec, u: Column) -> Column:
+def _timestamp_expr(spec: TimestampSpec, u: str) -> str:
     # A6: uniform whole-second timestamp in [start, end) (sqlHelpers.ts:58-60)
     s = int(_parse_ts(spec.start).timestamp())
     e = int(_parse_ts(spec.end).timestamp())
-    return F.timestamp_seconds(F.lit(s) + F.floor(u * F.lit(e - s)).cast("long"))
+    return f"timestamp_seconds({_lit(s)} + CAST(floor({u} * {_lit(e - s)}) AS BIGINT))"
 
 
-def _date_expr(spec: DateSpec, u: Column) -> Column:
+def _date_expr(spec: DateSpec, u: str) -> str:
     # A7: uniform date in [start, end] inclusive (sqlHelpers.ts:53-57,61-64);
     # day span computed host-side like the reference's daysBetween.
     start = _dt.date.fromisoformat(spec.start)
     end = _dt.date.fromisoformat(spec.end)
     dspan = (end - start).days
-    return F.date_add(F.lit(spec.start).cast("date"), F.floor(u * F.lit(dspan + 1)).cast("int"))
+    return f"date_add(CAST({_str(spec.start)} AS DATE), CAST(floor({u} * {_lit(dspan + 1)}) AS INT))"
 
 
-def _scalar_expr(spec: FieldSpec, id_col: Column, name: str, seed: int, *extra: Column) -> Column:
-    u = _uniform(id_col, name, "val", seed, *extra)
+def _scalar_expr(spec: FieldSpec, row_id: str, name: str, seed: int, *extra: str) -> str:
+    u = _uniform(row_id, name, "val", seed, *extra)
     if isinstance(spec, (IntSpec, BigintSpec)):
         return _int_expr(spec, u)
     if isinstance(spec, DoubleSpec):
         return _double_expr(spec, u)
     if isinstance(spec, StringSpec):
-        return _string_expr(spec, id_col, name, seed, *extra)
+        return _string_expr(spec, row_id, name, seed, *extra)
     if isinstance(spec, EnumSpec):
         return _enum_expr(spec, u)
     if isinstance(spec, TimestampSpec):
@@ -136,28 +152,32 @@ def _scalar_expr(spec: FieldSpec, id_col: Column, name: str, seed: int, *extra: 
     raise TypeError(f"unsupported scalar spec: {spec!r}")
 
 
-def column_expr(spec: FieldSpec, id_col: Column, name: str, seed: int = 1) -> Column:
-    """A10 dispatcher: compile one FieldSpec to a Column (sqlHelpers.ts:65-98)."""
+def column_sql(spec: FieldSpec, name: str, seed: int = 1, elem_id: str = _ID) -> str:
+    """A10 dispatcher: compile one FieldSpec to a SQL expression over the
+    ``id`` column (sqlHelpers.ts:65-98).  ``elem_id`` is the row id that
+    array elements draw from (see ``generate_df``)."""
     if isinstance(spec, ArraySpec):
         # A8: random-length array via sequence + transform (sqlHelpers.ts:87-94);
         # the element expression re-hashes with the lambda index so every slot
         # draws independently.
-        u_len = _uniform(id_col, name, "len", seed)
+        u_len = _uniform(_ID, name, "len", seed)
         span = spec.max_len - spec.min_len
-        n = (F.lit(spec.min_len) + F.floor(u_len * F.lit(span + 1))).cast("int")
-        expr: Column = F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: _scalar_expr(spec.element, id_col, name, seed, i),
-        )
+        n = f"CAST({_lit(spec.min_len)} + floor({u_len} * {_lit(span + 1)}) AS INT)"
+        elem = _scalar_expr(spec.element, elem_id, name, seed, _ELEM)
+        expr = f"transform(sequence(1, {n}), {_ELEM} -> {elem})"
     else:
-        expr = _scalar_expr(spec, id_col, name, seed)
+        expr = _scalar_expr(spec, _ID, name, seed)
 
     p = getattr(spec, "nullable", 0.0)
     if p and p > 0:
         # A9 wrapNullable (sqlHelpers.ts:28-32), with an independent draw
-        u_null = _uniform(id_col, name, "null", seed)
-        expr = F.when(u_null < F.lit(float(p)), F.lit(None)).otherwise(expr)
+        u_null = _uniform(_ID, name, "null", seed)
+        expr = f"CASE WHEN {u_null} < {_lit(float(p))} THEN NULL ELSE {expr} END"
     return expr
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def rows_df(
@@ -184,12 +204,19 @@ def generate_df(
 
     Parity: the SELECT list of buildInsertSQL (sqlHelpers.ts:160-212, C1).
     """
-    base = rows_df(spark, start_id, num_rows, num_partitions)
-    id_col = F.col("id")
-    cols = []
+    exprs = []
+    elem_id = _ID
     for name, spec in config.columns.items():
         if name == config.id_column:
-            cols.append(id_col.cast(spec.kind if spec.kind in ("int", "bigint") else "bigint").alias(name))
+            kind = spec.kind if spec.kind in ("int", "bigint") else "bigint"
+            sql = f"CAST({_ID} AS {kind.upper()})"
         else:
-            cols.append(column_expr(spec, id_col, name, seed).alias(name))
-    return base.select(*cols)
+            sql = column_sql(spec, name, seed, elem_id)
+        exprs.append(f"{sql} AS {_quote(name)}")
+        if name.lower() == _ID:
+            # Array elements after this item hash it, not the range column
+            # (an INT id hashes in 4 bytes): the Column-built generator's
+            # lambdas resolved `id` to it as a lateral column alias, and the
+            # golden pin in tests/test_generator_golden.py holds its values.
+            elem_id = sql
+    return rows_df(spark, start_id, num_rows, num_partitions).selectExpr(*exprs)

@@ -203,19 +203,12 @@ def _verified_near_dup_pairs(docs: DataFrame) -> DataFrame:
     than the saved trigram compute on a page-cached 5k-doc corpus; the
     pruning becomes the right shape when the corpus scan is remote and the
     candidate fraction is small)."""
+    # the 64 signature aggregates and the 16 band hashes are SQL text: as
+    # Column trees (a py4j round trip per node) they made a build of this
+    # query 6-8k py4j calls instead of about 1k
     sh = _shingle_df(docs)
-    aggs = [
-        F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}")
-        for i in range(MINHASH_PERMS)
-    ]
-    sig = (
-        sh.groupBy("doc_id")
-        .agg(*aggs)
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"h{i}") for i in range(MINHASH_PERMS)]).alias("sig"),
-        )
-    )
+    perms = ", ".join(f"min(xxhash64(sh, {i}))" for i in range(MINHASH_PERMS))
+    sig = sh.groupBy("doc_id").agg(F.expr(f"array({perms})").alias("sig"))
 
     rows_per_band = MINHASH_PERMS // LSH_BANDS
     # band bucket = ONE long: multi-arg xxhash64 of (band id, signature
@@ -231,23 +224,14 @@ def _verified_near_dup_pairs(docs: DataFrame) -> DataFrame:
     # result (same session): localCheckpoint'ing the bands frame before the
     # self-join is a WASH (2.243 s) — AQE reuses the signature exchange at
     # runtime, so the barrier buys nothing and costs the checkpoint write.
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.element_at(F.col("sig"), b * rows_per_band + r + 1)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(LSH_BANDS)
-                ]
-            )
-        ).alias("bkt"),
+    buckets = ", ".join(
+        "xxhash64({}, {})".format(
+            b,
+            ", ".join(f"element_at(sig, {b * rows_per_band + r + 1})" for r in range(rows_per_band)),
+        )
+        for b in range(LSH_BANDS)
     )
+    bands = sig.selectExpr("doc_id", f"explode(array({buckets})) AS bkt")
 
     a = bands.alias("a")
     b = bands.alias("b")

@@ -21,6 +21,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 from hands_on_iceberg_compression_spark.functions.generators import generate_df
@@ -131,9 +132,11 @@ def load_table(
         # their tasks (fair enough for local; on a cluster this pipelines
         # write commits against generation).  Each append writes its own
         # generation dir and CAS-commits, so batches never share a
-        # committer dir, partitioned or not.
+        # committer dir, partitioned or not.  The pool threads carry the
+        # caller's job group and local properties, as a pinned-thread
+        # PySpark thread does not inherit them.
         with ThreadPoolExecutor(max_workers=plan.concurrency) as pool:
-            for i, rows in enumerate(pool.map(run_batch, todo)):
+            for i, rows in enumerate(pool.map(inheritable_thread_target(run_batch), todo)):
                 loaded += rows
                 _progress(plan, i + 1, len(todo), t0)
     else:

@@ -2,7 +2,7 @@
 
 Parity: reference ``src/types.ts:1-40`` (FieldSpec union + TableConfig).
 The reference compiles these specs to Trino SQL strings
-(``src/sqlHelpers.ts:3-98``); we compile them to Spark ``Column`` expressions
+(``src/sqlHelpers.ts:3-98``); we compile them to Spark SQL expression text
 (functions/generators.py) and to Spark DDL types.
 
 Differences from the reference, on purpose:

@@ -18,6 +18,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's generated-class cache (a static conf, default 100).  One
+# pass of the 26 headline operator queries generates about 250 classes, so
+# the default cache evicted every class before its next use and each warm
+# pass recompiled them all (about 1.4 s of Janino time).  1000 holds a pass
+# plus the lake scans, ingest and view maintenance around it.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def make_session(
     app_name: str = "hands-on-iceberg-compression-spark",
@@ -63,6 +70,7 @@ def make_session(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)

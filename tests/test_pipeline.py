@@ -124,6 +124,31 @@ def test_load_checkpoint_and_metrology(spark, tmp_path):
     assert all(len(g) == 1 for g in gens.values())
 
 
+def test_load_pool_keeps_the_callers_job_group(spark, tmp_path):
+    """The batch pool's threads run their jobs in the caller's job group:
+    a 2-batch load on 2 threads puts at least as many jobs in the group as
+    the same load run batch by batch on the calling thread."""
+    cfg = narrow_example_config()
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    counts = {}
+    for concurrency in (1, 2):
+        table, group = f"jg_c{concurrency}", f"load-pool-c{concurrency}"
+        wh.create_table(cfg.schema, table, "zstd", 6)
+        plan = LoadPlan(
+            total_rows=400, batch_rows=200, concurrency=concurrency,
+            checkpoint_dir=str(tmp_path / f"ckpt{concurrency}"),
+            compact_after_load=False, partitions_per_batch=2, progress=False,
+        )
+        sc.setJobGroup(group, group)
+        try:
+            assert load_table(spark, wh, cfg, table, plan)["loaded_batches"] == 2
+        finally:
+            sc.setJobGroup("other", "other")
+        counts[concurrency] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert counts[2] >= counts[1] > 0
+
+
 def test_optimize_compacts_files(spark, tmp_path):
     cfg = narrow_example_config()
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
