@@ -98,35 +98,6 @@ def _cmd_log_report(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_catalog_report(args: argparse.Namespace) -> int:
-    """Catalog-level versioning report (r10): one line per catalog
-    version with its {schema.table: version} pins — the cross-table
-    time-travel ledger.  Pure metadata: no SparkSession is started."""
-    import datetime as _dt
-
-    from hands_on_iceberg_compression_spark.sources.warehouse import ParquetWarehouse
-
-    wh = ParquetWarehouse(None, args.warehouse)
-    versions = wh._catalog_versions()
-    if not versions:
-        print("no catalog commits (commit_catalog / publish_tables first)")
-        return 0
-    latest = wh.latest_catalog_version()
-    for v in versions:
-        try:
-            head = wh.catalog_head(v)
-        except ValueError:
-            continue  # expired between listdir and open
-
-        ts = _dt.datetime.fromtimestamp(head["ts"]).isoformat(" ", "seconds")
-        pins = "  ".join(
-            f"{k}@v{pv}" for k, pv in sorted(head["tables"].items())
-        )
-        mark = " <- head" if v == latest else ""
-        print(f"v{v:06d}  {ts}  {head.get('operation', '?'):>8}  {pins}{mark}")
-    return 0
-
-
 def _cmd_spec_report(args: argparse.Namespace) -> int:
     """Partition-spec evolution report (r12): the spec history and, per
     spec id, how many live files/rows/bytes still carry that layout —
@@ -697,13 +668,6 @@ def main(argv: list[str] | None = None) -> int:
         "(empty endpoint = open; ints auto-coerced)",
     )
     lr.set_defaults(fn=_cmd_log_report)
-
-    cr = sub.add_parser(
-        "catalog-report",
-        help="catalog-level versioning report: per-version table pins",
-    )
-    cr.add_argument("--warehouse", default="warehouse")
-    cr.set_defaults(fn=_cmd_catalog_report)
 
     sr = sub.add_parser(
         "spec-report",

@@ -5923,29 +5923,17 @@ class ParquetWarehouse:
         Read the hint, verify it, probe forward until the next version is
         absent; a stale hint costs probe steps, never a wrong answer, and
         a missing/expired hint falls back to the listing."""
-        return self._probe_latest(
-            self._ref_dir(schema, table, branch),
-            self._hint_path(schema, table, branch),
-            lambda: self._snapshot_versions(schema, table, branch),
-        )
-
-    @staticmethod
-    def _probe_latest(d: str, hint: str, versions_fn) -> int | None:
-        """Hint + forward-probe head discovery, shared by per-ref heads
-        and the catalog: read the hint, verify it, probe forward until
-        the next version is absent; a stale hint costs probe steps,
-        never a wrong answer; a missing/expired hint falls back to the
-        listing (one protocol — fixes land once)."""
+        d = self._ref_dir(schema, table, branch)
         v: int | None = None
         try:
-            with open(hint) as f:
+            with open(self._hint_path(schema, table, branch)) as f:
                 v = int(f.read().strip())
             if not os.path.isfile(os.path.join(d, f"v{v:06d}.json")):
                 v = None  # hint outlived expiry or belongs elsewhere
         except (OSError, ValueError):
             v = None
         if v is None:
-            versions = versions_fn()
+            versions = self._snapshot_versions(schema, table, branch)
             if not versions:
                 return None
             v = versions[-1]
@@ -6104,54 +6092,6 @@ class ParquetWarehouse:
     # --- snapshot refs (Iceberg tags) ------------------------------------
     _TAG_NAME_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9_\-\.]{0,63}")
 
-    # One tag-store protocol for table tags AND catalog tags (same
-    # validation, CAS publish, listing/concurrent-drop semantics — a
-    # protocol fix lands once, like _probe_latest/_write_hint_file).
-    @classmethod
-    def _tag_store_path(cls, d: str, name: str) -> str:
-        if not cls._TAG_NAME_RE.fullmatch(name):
-            raise ValueError(
-                f"invalid tag name {name!r}: alphanumeric start, then "
-                "[A-Za-z0-9_-.], max 64 chars"
-            )
-        return os.path.join(d, f"tag_{name}.json")
-
-    @classmethod
-    def _tag_store_create(cls, d: str, name: str, version: int, what: str) -> dict:
-        import time as _time
-
-        record = {"version": version, "ts": round(_time.time(), 3)}
-        if not cls._cas_link(record, cls._tag_store_path(d, name)):
-            raise ValueError(
-                f"{what} {name!r} already exists "
-                "(tags are immutable; drop first)"
-            )
-        return record
-
-    @classmethod
-    def _tag_store_drop(cls, d: str, name: str, what: str) -> None:
-        try:
-            os.unlink(cls._tag_store_path(d, name))
-        except FileNotFoundError:
-            raise ValueError(f"no {what} {name!r}") from None
-
-    @staticmethod
-    def _tag_store_list(d: str) -> dict[str, int]:
-        if not os.path.isdir(d):
-            return {}
-        out: dict[str, int] = {}
-        for fn in os.listdir(d):
-            if fn.startswith("tag_") and fn.endswith(".json"):
-                try:
-                    with open(os.path.join(d, fn)) as f:
-                        out[fn[4:-5]] = json.load(f)["version"]
-                except FileNotFoundError:
-                    # concurrent drop between listdir and open: the tag
-                    # is simply gone (ADVICE r7) — callers must see it
-                    # as absent, not crash
-                    continue
-        return out
-
     def create_tag(
         self, schema: str, table: str, name: str, version: int | None = None
     ) -> dict:
@@ -6166,19 +6106,52 @@ class ParquetWarehouse:
             if version is None:
                 raise ValueError(f"{schema}.{table} has no snapshot to tag")
         self._load_head_light(schema, table, version)  # must exist
-        return self._tag_store_create(
-            self._snap_dir(schema, table), name, version,
-            f"tag on {schema}.{table}",
-        )
+        if not self._TAG_NAME_RE.fullmatch(name):
+            raise ValueError(
+                f"invalid tag name {name!r}: alphanumeric start, then "
+                "[A-Za-z0-9_-.], max 64 chars"
+            )
+        import time as _time
+
+        record = {"version": version, "ts": round(_time.time(), 3)}
+        path = os.path.join(self._snap_dir(schema, table), f"tag_{name}.json")
+        if not self._cas_link(record, path):
+            raise ValueError(
+                f"tag on {schema}.{table} {name!r} already exists "
+                "(tags are immutable; drop first)"
+            )
+        return record
 
     def drop_tag(self, schema: str, table: str, name: str) -> None:
-        self._tag_store_drop(
-            self._snap_dir(schema, table), name, f"tag on {schema}.{table}"
-        )
+        if not self._TAG_NAME_RE.fullmatch(name):
+            raise ValueError(
+                f"invalid tag name {name!r}: alphanumeric start, then "
+                "[A-Za-z0-9_-.], max 64 chars"
+            )
+        try:
+            os.unlink(
+                os.path.join(self._snap_dir(schema, table), f"tag_{name}.json")
+            )
+        except FileNotFoundError:
+            raise ValueError(f"no tag on {schema}.{table} {name!r}") from None
 
     def tags(self, schema: str, table: str) -> dict[str, int]:
         """{tag name: pinned version}."""
-        return self._tag_store_list(self._snap_dir(schema, table))
+        d = self._snap_dir(schema, table)
+        if not os.path.isdir(d):
+            return {}
+        out: dict[str, int] = {}
+        for fn in os.listdir(d):
+            if fn.startswith("tag_") and fn.endswith(".json"):
+                try:
+                    with open(os.path.join(d, fn)) as f:
+                        out[fn[4:-5]] = json.load(f)["version"]
+                except FileNotFoundError:
+                    # concurrent drop between listdir and open: the tag
+                    # is simply gone (ADVICE r7) — callers must see it
+                    # as absent, not crash
+                    continue
+        return out
 
     # --- snapshot refs (Iceberg/Nessie BRANCHES: write-audit-publish) -----
     def create_branch(
@@ -6880,581 +6853,6 @@ class ParquetWarehouse:
         — both names ship for procedure parity with the reference's
         Trino connector."""
         return self.rollback_to_snapshot(schema, table, version, branch)
-
-    # --- catalog-level refs: ONE versioned view over MANY tables ---------
-    # Nessie's distinctive capability next to per-table branches (the
-    # catalog the reference deploys, compose/docker-compose.yaml:61-70):
-    # a catalog head pins {schema.table: version} so a pipeline writing
-    # two tables can publish them ATOMICALLY and any reader can time-
-    # travel the whole catalog to a consistent cross-table instant.
-    # Catalog heads are tiny JSON under <root>/_catalog/, published with
-    # the same hard-link CAS as every table commit — O(tables) bytes,
-    # independent of table size.
-
-    def _catalog_dir(self) -> str:
-        return os.path.join(self.root, "_catalog")
-
-    def _catalog_versions(self) -> list[int]:
-        d = self._catalog_dir()
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(fn[1:7])
-            for fn in os.listdir(d)
-            if fn.startswith("v") and fn.endswith(".json") and len(fn) == 12
-        )
-
-    def latest_catalog_version(self) -> int | None:
-        """LISTING max, not hint+probe: catalog tag retention makes
-        version GAPS normal, and a stale hint pointing below a gap would
-        stop the forward probe early — ``commit_catalog`` would then CAS
-        a new head INTO the gap, silently orphaning the real head and
-        every pin it carried.  The catalog dir stays tiny (publish
-        cadence + ``expire_catalog``), so O(listdir) is free here; table
-        refs keep the O(1) hint protocol and close the same hole with a
-        monotone hint + expiry refresh (see expire_snapshots)."""
-        versions = self._catalog_versions()
-        return versions[-1] if versions else None
-
-    def catalog_head(self, version: int | None = None) -> dict | None:
-        """The catalog manifest at ``version`` (default: latest); None
-        when no catalog commit exists yet."""
-        v = version if version is not None else self.latest_catalog_version()
-        if v is None:
-            return None
-        try:
-            with open(
-                os.path.join(self._catalog_dir(), f"v{v:06d}.json")
-            ) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            raise ValueError(
-                f"no catalog version {v} (expired or never committed)"
-            ) from None
-
-    @staticmethod
-    def _catalog_key(schema: str, table: str) -> str:
-        return f"{schema}.{table}"
-
-    def commit_catalog(self, tables, operation: str = "publish") -> dict:
-        """Record ONE catalog version pinning the given tables' snapshot
-        versions.  ``tables`` is a list of ``(schema, table)`` pairs
-        (pin each table's CURRENT head) or a dict ``{(schema, table):
-        version}`` (pin explicit versions — what ``publish_tables``
-        passes).  Tables pinned by EARLIER catalog commits and not
-        listed here carry forward unchanged, so each commit is a delta
-        over the registered set.  Every pinned version is validated to
-        exist before publishing.  CAS-retried like any table commit:
-        concurrent catalog committers linearize, both deltas land."""
-        pins: dict[str, int] = {}
-        if isinstance(tables, dict):
-            items = list(tables.items())
-        else:
-            items = [(k, None) for k in tables]
-        for key, v in items:
-            s, t = key if isinstance(key, tuple) else key.split(".", 1)
-            if v is None:
-                v = self._latest_version(s, t)
-                if v is None:
-                    raise ValueError(
-                        f"{s}.{t} has no committed snapshot to pin"
-                    )
-            self._load_head_light(s, t, v)  # must exist
-            pins[self._catalog_key(s, t)] = v
-        if not pins:
-            raise ValueError("commit_catalog needs at least one table")
-        import time as _time
-
-        d = self._catalog_dir()
-        os.makedirs(d, exist_ok=True)
-        while True:
-            head = self.catalog_head()
-            version = (head["version"] + 1) if head else 1
-            merged = dict(head["tables"]) if head else {}
-            merged.update(pins)
-            manifest = {
-                "version": version,
-                "parent": head["version"] if head else None,
-                "operation": operation,
-                "ts": round(_time.time(), 3),
-                "tables": merged,
-            }
-            if self._cas_link(
-                manifest, os.path.join(d, f"v{version:06d}.json")
-            ):
-                # deliberately NO version-hint protocol for the catalog:
-                # catalog tag retention leaves version gaps, and a hint
-                # below a gap would let a probe-based reader CAS into the
-                # gap and fork history (the table-ref bug fixed in r10).
-                # latest_catalog_version stays LISTING-authoritative —
-                # _catalog/ holds only heads, it stays tiny.  Do not wire
-                # _probe_latest to this directory.
-                return manifest
-            # lost the race: merge over the winner's table map and retry
-
-    def read_catalog_as_of(
-        self, version: int | None = None
-    ) -> dict[str, DataFrame]:
-        """A CONSISTENT cross-table view: {``schema.table``: DataFrame}
-        of every registered table at the versions one catalog commit
-        pinned together.  This is catalog-wide time travel — pass an
-        older catalog version to see the whole pipeline output as of an
-        earlier publish.  Pinned snapshots are retained by
-        ``expire_snapshots`` until the catalog versions naming them are
-        expired (``expire_catalog``), the tag-retention contract."""
-        head = self.catalog_head(version)
-        if head is None:
-            raise ValueError("no catalog commit yet — commit_catalog first")
-        out: dict[str, DataFrame] = {}
-        for name in sorted(head["tables"]):
-            s, t = name.split(".", 1)
-            out[name] = self.read_snapshot(s, t, head["tables"][name])
-        return out
-
-    def _find_publish(
-        self, schema: str, table: str, name: str, fork: int, bhead_v: int
-    ) -> int | None:
-        """The main version at which branch ``name``'s head ``bhead_v``
-        was already fast-forwarded, or None.  Walks main heads back to
-        the fork (O(commits since fork), heads are light) so a crashed
-        ``publish_tables`` resumes even after unrelated commits landed
-        on top of the published half."""
-        fid = self._load_head_light(schema, table, fork, name)["ts"]
-        v = self._latest_version(schema, table)
-        while v is not None and v > fork:
-            try:
-                h = self._load_head_light(schema, table, v)
-            except (FileNotFoundError, KeyError):
-                return None  # expired history: can't verify
-            if h.get("operation") == "rollback":
-                # a rollback UNDID everything recorded ABOVE its target
-                # — a publish found there would pin a state the user
-                # explicitly discarded (review r11 #3) — but a publish
-                # AT or BELOW the target is untouched and the retry must
-                # still find it (second pass: returning None here made a
-                # crashed publish_tables retry raise 'diverged' forever
-                # when an unrelated later commit was rolled back).  Jump
-                # to the restored version and keep walking.
-                rbt = h.get("rolled_back_to")
-                if rbt is None:
-                    return None  # malformed rollback head: conservative
-                v = rbt
-                continue
-            if (
-                h.get("operation") == "fast_forward"
-                and h.get("from_branch") == name
-                and h.get("branch_head") == bhead_v
-                and h.get("from_branch_ts") == fid
-            ):
-                return h["version"]
-            v = h.get("parent")
-        return None
-
-    def publish_tables(
-        self,
-        branches: dict,
-        operation: str = "publish",
-    ) -> dict:
-        """ATOMIC cross-table publish: fast-forward each table's staged
-        branch, then commit ONE catalog version pinning all the published
-        versions together.  ``branches`` maps ``(schema, table)`` to the
-        branch name staged on it.
-
-        The catalog CAS is the atomicity point: a crash AFTER some
-        tables fast-forwarded but BEFORE the catalog commit leaves the
-        catalog head pinning the old versions of EVERY table — catalog
-        readers never see a torn view (only direct per-table readers see
-        the already-forwarded halves, exactly Nessie's contract: the ref
-        is the consistency boundary).  The retry is idempotent: a branch
-        whose head main already published (the head commit records
-        ``from_branch``/``branch_head``) is skipped, not re-forwarded —
-        so re-running a crashed publish completes it."""
-        pins: dict[tuple[str, str], int] = {}
-        for (s, t), name in sorted(branches.items()):
-            versions = self._snapshot_versions(s, t, name)
-            if not versions:
-                raise ValueError(f"no branch {name!r} on {s}.{t}")
-            bhead_v = versions[-1]
-            done = self._find_publish(s, t, name, versions[0], bhead_v)
-            if done is not None:
-                # crash-retry: this table's half already published — even
-                # if OTHER commits landed on top since (walk, not just a
-                # head check, or the retry could never complete)
-                pins[(s, t)] = done
-            else:
-                pins[(s, t)] = self.fast_forward(s, t, name)["version"]
-        return self.commit_catalog(pins, operation=operation)
-
-    # --- catalog BRANCHES: ONE named ref staging a MULTI-TABLE pipeline --
-    # Completes the Nessie analogy (VERDICT r10 #4): before this, staging
-    # a two-table pipeline meant managing N per-table branches by hand
-    # plus one publish_tables call.  A catalog branch is a tiny head
-    # chain under _catalog/branch_<name>/ recording which tables are
-    # staged on it; the staged DATA lives on ordinary TABLE branches in a
-    # namespace the catalog branch owns ("catb_<name>"), so every
-    # existing branch mechanism — expiry retention of branch-referenced
-    # files, fast_forward, the _find_publish crash resume, DML branch
-    # threading — applies unchanged.  Publish = the existing
-    # publish_tables machinery + ONE catalog CAS commit: a crash midway
-    # never shows catalog readers a torn view, and the retry resumes.
-
-    def _catalog_branch_dir(self, name: str) -> str:
-        if not self._TAG_NAME_RE.fullmatch(name):
-            raise ValueError(
-                f"invalid catalog branch name {name!r}: alphanumeric "
-                "start, then [A-Za-z0-9_-.], max 64 chars"
-            )
-        return os.path.join(self._catalog_dir(), f"branch_{name}")
-
-    @staticmethod
-    def catalog_branch_table_ref(name: str) -> str:
-        """The TABLE-branch name a catalog branch stages writes on —
-        pass it as ``branch=`` to append/read/DML (``
-        stage_on_catalog_branch`` returns it after registering)."""
-        return f"catb_{name}"
-
-    def _catalog_branch_versions(self, name: str) -> list[int]:
-        d = self._catalog_branch_dir(name)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(fn[1:7])
-            for fn in os.listdir(d)
-            if fn.startswith("v") and fn.endswith(".json") and len(fn) == 12
-        )
-
-    def create_catalog_branch(self, name: str) -> dict:
-        """Fork a named catalog ref at the CURRENT catalog version.
-        Hard-link CAS: re-creating an existing branch raises.  The fork
-        pin is validated BEFORE publishing and RE-VALIDATED after: an
-        ``expire_catalog`` racing this create cannot see the branch yet,
-        so it may drop the fork version between computing it and the CAS
-        (review r11 second pass #3).  When that happens the create
-        REPINS IN PLACE (an ordinary CAS commit moving ``fork_catalog``
-        to the now-current live version) — it never deletes the branch
-        dir: a concurrent ``stage_on_catalog_branch`` that read the
-        transient v1 head may already have landed a stage record and
-        created the ``catb_`` table branch, and an rmtree would orphan
-        both (ADVICE r11).  Repinning is semantically what a
-        delete-and-retry would have produced anyway (the expired pin was
-        never readable), minus the data loss."""
-        d = self._catalog_branch_dir(name)
-        import time as _time
-
-        fc = self.latest_catalog_version()
-        for _ in range(10):
-            # pre-publish validation narrows the expiry race to the
-            # CAS instant; the post-publish re-check closes it
-            if fc is not None and fc not in self._catalog_versions():
-                fc = self.latest_catalog_version()
-                continue
-            os.makedirs(d, exist_ok=True)
-            record = {
-                "version": 1,
-                "parent": None,
-                "operation": "fork",
-                "ts": round(_time.time(), 3),
-                # the catalog version non-staged tables resolve through
-                # when reading the branch (None: no catalog commit yet)
-                "fork_catalog": fc,
-                "tables": [],
-            }
-            if self._catalog_branch_versions(name) or not self._cas_link(
-                record, os.path.join(d, "v000001.json")
-            ):
-                raise ValueError(
-                    f"catalog branch {name!r} already exists "
-                    "(drop_catalog_branch first)"
-                )
-            if fc is None or fc in self._catalog_versions():
-                return record
-            return self._repin_catalog_branch(name)
-        raise RuntimeError(
-            f"could not pin a fork catalog version for branch {name!r} "
-            "after 10 attempts (racing expire_catalog?) — retry"
-        )
-
-    def _repin_catalog_branch(self, name: str) -> dict:
-        """Move a live branch's ``fork_catalog`` to a currently-retained
-        catalog version — the recovery when ``expire_catalog`` raced
-        ``create_catalog_branch`` and dropped the fork pin before the
-        branch was visible to expiry's retention scan.  Ordinary CAS
-        commit on the branch's head chain: staged work already landed by
-        concurrent stagers is carried forward untouched.  Once this
-        commit publishes, the branch is listing-visible and expiry
-        retains the new pin like any other."""
-        import time as _time
-
-        d = self._catalog_branch_dir(name)
-        for _ in range(10):
-            head = self.catalog_branch_head(name)
-            fc = self.latest_catalog_version()
-            if fc is not None and fc not in self._catalog_versions():
-                continue  # expiry racing again — re-read the head
-            record = {
-                "version": head["version"] + 1,
-                "parent": head["version"],
-                "operation": "repin",
-                "ts": round(_time.time(), 3),
-                "fork_catalog": fc,
-                "tables": list(head["tables"]),
-            }
-            if not self._cas_link(
-                record,
-                os.path.join(d, f"v{record['version']:06d}.json"),
-            ):
-                continue  # lost the CAS (concurrent stage) — retry on top
-            if fc is None or fc in self._catalog_versions():
-                return record
-            # pin expired between this commit and the re-check: another
-            # repin lands on top (head now includes this one)
-        raise RuntimeError(
-            f"could not repin catalog branch {name!r} after 10 attempts "
-            "(racing expire_catalog?) — retry"
-        )
-
-    def catalog_branches(self) -> dict[str, dict]:
-        """{name: {head version, fork_catalog, staged tables}} for every
-        live catalog branch — head files only."""
-        d = self._catalog_dir()
-        out: dict[str, dict] = {}
-        if not os.path.isdir(d):
-            return out
-        for fn in os.listdir(d):
-            if fn.startswith("branch_") and os.path.isdir(
-                os.path.join(d, fn)
-            ):
-                name = fn[len("branch_"):]
-                if not self._catalog_branch_versions(name):
-                    # crashed create_catalog_branch leftover (dir made,
-                    # v1 never CAS-linked): skip, or every maintenance
-                    # path that lists branches bricks (review r11 #4)
-                    continue
-                h = self.catalog_branch_head(name)
-                out[name] = {
-                    "head": h["version"],
-                    "fork_catalog": h.get("fork_catalog"),
-                    "tables": list(h["tables"]),
-                }
-        return out
-
-    def catalog_branch_head(self, name: str) -> dict:
-        versions = self._catalog_branch_versions(name)
-        if not versions:
-            raise ValueError(f"no catalog branch {name!r}")
-        with open(
-            os.path.join(
-                self._catalog_branch_dir(name), f"v{versions[-1]:06d}.json"
-            )
-        ) as f:
-            return json.load(f)
-
-    def stage_on_catalog_branch(
-        self, name: str, schema: str, table: str
-    ) -> str:
-        """Register ``schema.table`` on catalog branch ``name`` and
-        return the TABLE-branch ref to write through (``catb_<name>``,
-        created on first use, forked from the table's CURRENT main head
-        — deliberately not from the fork-catalog pin: staging means
-        "new work on top of the table as it is now", and forking at an
-        older pinned version would make every publish refuse as
-        diverged whenever main moved between the catalog fork and the
-        first stage).  Idempotent; CAS-retried, so concurrent stagers
-        of different tables both land.  The table must have a main
-        snapshot (branches always fork FROM a snapshot)."""
-        d = self._catalog_branch_dir(name)
-        tref = self.catalog_branch_table_ref(name)
-        key = self._catalog_key(schema, table)
-        head = self.catalog_branch_head(name)  # raises if no branch
-        if not self._snapshot_versions(schema, table, tref):
-            try:
-                self.create_branch(schema, table, tref)
-            except ValueError:
-                # a concurrent stager of the SAME table won the branch
-                # create between our check and the CAS — staging is
-                # idempotent, so the loser proceeds on the winner's
-                # branch (ADVICE r11); re-raise anything else
-                if not self._snapshot_versions(schema, table, tref):
-                    raise
-        import time as _time
-
-        while True:
-            if key in head["tables"]:
-                return tref
-            manifest = {
-                "version": head["version"] + 1,
-                "parent": head["version"],
-                "operation": "stage",
-                "ts": round(_time.time(), 3),
-                "fork_catalog": head.get("fork_catalog"),
-                "tables": sorted(set(head["tables"]) | {key}),
-            }
-            if self._cas_link(
-                manifest,
-                os.path.join(d, f"v{manifest['version']:06d}.json"),
-            ):
-                return tref
-            head = self.catalog_branch_head(name)
-
-    def read_catalog_branch(self, name: str) -> dict[str, DataFrame]:
-        """The branch's multi-table view: STAGED tables read through
-        their staging branches — the table's main state at stage time
-        plus exactly this branch's writes (staging forks from the
-        CURRENT head, see ``stage_on_catalog_branch``); UNSTAGED tables
-        the fork-time catalog pinned read at their fork-pinned versions,
-        frozen however main moves.  Staged and unstaged tables thus
-        anchor at different instants — the consistency contract is
-        "fork view plus this branch's staged work", not a single
-        cross-table snapshot (that is ``read_catalog_as_of``)."""
-        head = self.catalog_branch_head(name)
-        tref = self.catalog_branch_table_ref(name)
-        out: dict[str, DataFrame] = {}
-        for key in head["tables"]:
-            s, t = key.split(".", 1)
-            out[key] = self.read(s, t, branch=tref)
-        if head.get("fork_catalog") is not None:
-            pinned = self.catalog_head(head["fork_catalog"])["tables"]
-            for key, v in pinned.items():
-                if key not in out:
-                    s, t = key.split(".", 1)
-                    out[key] = self.read_snapshot(s, t, v)
-        return out
-
-    def publish_catalog_branch(self, name: str) -> dict:
-        """Publish every table staged on the catalog branch: per-table
-        ``fast_forward`` (skipping halves an earlier crashed publish
-        already forwarded — the ``_find_publish`` walk inside
-        ``publish_tables``) then ONE catalog CAS commit pinning all the
-        published versions together.  The catalog commit is the
-        atomicity point: catalog readers never see a torn publish, and
-        re-running after any crash completes it.  Refuses (per table)
-        when main moved past the fork — resolve with per-table
-        ``merge_branch`` + ``commit_catalog``, the explicit-conflict
-        path.  The branch stays for inspection; ``drop_catalog_branch``
-        when done."""
-        head = self.catalog_branch_head(name)
-        if not head["tables"]:
-            raise ValueError(
-                f"catalog branch {name!r} has no staged tables"
-            )
-        tref = self.catalog_branch_table_ref(name)
-        branches = {
-            tuple(key.split(".", 1)): tref for key in head["tables"]
-        }
-        return self.publish_tables(
-            branches, operation=f"publish_branch:{name}"
-        )
-
-    def drop_catalog_branch(self, name: str) -> None:
-        """Remove the catalog branch AND its per-table staging branches.
-        Idempotent per table (a half-dropped branch re-drops cleanly,
-        and a crashed ``create_catalog_branch`` leftover — dir without a
-        head — just removes the dir); staged-only files become orphans
-        for the age-gated sweep, as with any ``drop_branch``."""
-        d = self._catalog_branch_dir(name)
-        if not self._catalog_branch_versions(name):
-            if not os.path.isdir(d):
-                raise ValueError(f"no catalog branch {name!r}")
-            # AGE-GATED leftover cleanup (the r06 orphan-sweep lesson:
-            # in-flight work has files on disk before its CAS) — a young
-            # headless dir may be a concurrent create about to link v1;
-            # rmtree'ing it would delete a live branch head or crash the
-            # create mid-link (review r11 second pass #3)
-            import time as _time
-
-            if _time.time() - os.stat(d).st_mtime < 60:
-                raise ValueError(
-                    f"catalog branch dir {name!r} has no head yet but is "
-                    "younger than 60s — possibly an in-flight "
-                    "create_catalog_branch; retry the drop later"
-                )
-            shutil.rmtree(d, ignore_errors=True)  # crashed-create leftover
-            return
-        head = self.catalog_branch_head(name)
-        tref = self.catalog_branch_table_ref(name)
-        for key in head["tables"]:
-            s, t = key.split(".", 1)
-            try:
-                self.drop_branch(s, t, tref)
-            except ValueError:
-                pass  # already gone (crashed earlier drop)
-        shutil.rmtree(self._catalog_branch_dir(name), ignore_errors=True)
-
-    def _catalog_pins(self, schema: str, table: str) -> set[int]:
-        """Every version of this table some live catalog head pins —
-        retained by ``expire_snapshots`` like tagged versions.
-        O(catalog history), paid only inside expiry."""
-        d = self._catalog_dir()
-        if not os.path.isdir(d):
-            return set()
-        key = self._catalog_key(schema, table)
-        pins: set[int] = set()
-        for v in self._catalog_versions():
-            try:
-                with open(os.path.join(d, f"v{v:06d}.json")) as f:
-                    pinned = json.load(f).get("tables", {}).get(key)
-            except FileNotFoundError:
-                continue  # concurrent expire_catalog
-            if pinned is not None:
-                pins.add(pinned)
-        return pins
-
-    def create_catalog_tag(self, name: str, version: int | None = None) -> dict:
-        """Named immutable ref over a CATALOG version ("the whole
-        pipeline as of release v1") — the cross-table analogue of table
-        tags, same hard-link CAS, same immutability.  ``expire_catalog``
-        retains tagged catalog versions (and therefore, transitively,
-        every table snapshot they pin) until ``drop_catalog_tag``."""
-        if version is None:
-            version = self.latest_catalog_version()
-            if version is None:
-                raise ValueError("no catalog version to tag")
-        self.catalog_head(version)  # must exist
-        return self._tag_store_create(
-            self._catalog_dir(), name, version, "catalog tag"
-        )
-
-    def drop_catalog_tag(self, name: str) -> None:
-        self._tag_store_drop(self._catalog_dir(), name, "catalog tag")
-
-    def catalog_tags(self) -> dict[str, int]:
-        return self._tag_store_list(self._catalog_dir())
-
-    def read_catalog_as_of_tag(self, name: str) -> dict[str, DataFrame]:
-        tags = self.catalog_tags()
-        if name not in tags:
-            raise ValueError(
-                f"no catalog tag {name!r} (tags: {sorted(tags)})"
-            )
-        return self.read_catalog_as_of(tags[name])
-
-    def expire_catalog(self, keep_last: int = 1) -> int:
-        """Drop all but the newest ``keep_last`` catalog versions;
-        returns removed count.  TAGGED catalog versions are retained
-        regardless of position until ``drop_catalog_tag``, and so is the
-        FORK version of every live catalog branch (``read_catalog_branch``
-        resolves unstaged tables through it) until ``drop_catalog_branch``
-        — the same ref-retention contract as table tags/branches.  Table
-        snapshots pinned ONLY by the dropped catalog versions become
-        expirable by the next per-table ``expire_snapshots``."""
-        if keep_last < 1:
-            raise ValueError("keep_last must be >= 1")
-        versions = self._catalog_versions()
-        victims = versions[:-keep_last]
-        tagged = set(self.catalog_tags().values())
-        for b in self.catalog_branches().values():
-            if b.get("fork_catalog") is not None:
-                tagged.add(b["fork_catalog"])
-        if tagged:
-            victims = [v for v in victims if v not in tagged]
-        for v in victims:
-            try:
-                os.unlink(
-                    os.path.join(self._catalog_dir(), f"v{v:06d}.json")
-                )
-            except FileNotFoundError:
-                pass
-        return len(victims)
 
     def _resolve_version(self, schema: str, table: str, version: int | str) -> int:
         """A version number, or a TAG name (Iceberg ``VERSION AS OF``
@@ -8380,9 +7778,11 @@ class ParquetWarehouse:
         """The ONE victim-selection used by ``expire_snapshots`` and
         ``expire_plan``: (victim manifests oldest-first, checkpoint
         floor or None, checkpoints parsed).  Applies every retention
-        kind — keep_last suffix, age gate, tags, catalog pins, the
-        consumer-checkpoint floor — and the keep_last>=1 guard, so a
-        dry-run plan can never disagree with the act."""
+        kind — keep_last suffix, age gate, tags, the consumer-checkpoint
+        floor — and the keep_last>=1 guard, so a dry-run plan can never
+        disagree with the act.  A root holding a ``_catalog`` directory
+        is refused: its heads may pin versions of this table, and
+        nothing reads them any more."""
         import time
 
         if keep_last < 1:
@@ -8392,6 +7792,13 @@ class ParquetWarehouse:
                 "truncation); keep_last must be >= 1 — use drop_table() "
                 "to remove the table"
             )
+        catalog_dir = os.path.join(self.root, "_catalog")
+        if os.path.isdir(catalog_dir):
+            raise ValueError(
+                f"{catalog_dir} holds catalog heads, an unsupported layout "
+                "whose pins expiry no longer reads — refusing to expire; "
+                "remove that directory first"
+            )
         snaps = self.snapshots(schema, table)
         victims = snaps[:-keep_last]
         if older_than_s is not None:
@@ -8400,12 +7807,7 @@ class ParquetWarehouse:
         # TAGGED snapshots are retained regardless of age/position
         # (Iceberg ref retention): the tag is the user's promise that this
         # snapshot — and its data files — stay reachable until drop_tag.
-        # CATALOG-pinned versions ride the same contract: a live catalog
-        # head naming this table's v must stay materializable for
-        # read_catalog_as_of until expire_catalog drops that head.
-        tagged = set(self.tags(schema, table).values()) | self._catalog_pins(
-            schema, table
-        )
+        tagged = set(self.tags(schema, table).values())
         if tagged:
             victims = [m for m in victims if m["version"] not in tagged]
         ckpt_floor, n_ckpts = self._checkpoint_floor(
@@ -8469,7 +7871,7 @@ class ParquetWarehouse:
         recovery costs a ``start_version`` skip-forward and a full
         reconcile).  The floor retains a CONTIGUOUS suffix, so this
         retention kind creates no new version gaps (the r10 gap/hint
-        class — tags/pins still gap as before, hints stay monotone).
+        class — tags still gap as before, hints stay monotone).
         An empty/missing registered checkpoint DIRECTORY refuses
         (VERDICT r17 #2); ``strict_checkpoints`` also refuses missing
         files.  ``dry_run`` (r18) computes and returns the victim COUNT
@@ -8489,7 +7891,7 @@ class ParquetWarehouse:
                 )
             )
         if victims:
-            # expiry is the moment version GAPS appear (tag/pin retention
+            # expiry is the moment version GAPS appear (tag retention
             # keeps old version files below removed ones): refresh the
             # hint to the true head so a stale hint can never strand the
             # forward probe below a gap — see _write_hint_file (monotone:

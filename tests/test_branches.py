@@ -16,7 +16,10 @@ Contracts pinned:
 - concurrent branch/main commit chains interleave without losing rows;
 - expiry and the orphan sweep treat branch-referenced files/segments
   as live until drop_branch;
-- pending merge-on-read deletes travel through fork and publish.
+- pending merge-on-read deletes travel through fork and publish;
+- ``read_snapshot(..., branch=)`` time-travels a branch's head chain;
+- the version hint stays monotone and expiry refreshes it, so a stale
+  hint below a tag's version gap cannot make a commit fork history.
 """
 
 from __future__ import annotations
@@ -389,3 +392,48 @@ def test_merge_branch_recreated_incarnation_not_skipped(br_table, spark):
     assert out["picked"], "new incarnation's commit was wrongly skipped"
     assert out["already_published"] == []
     assert wh.read("lab", "brt").filter(F.col("src") == "gen2").count() == 1
+
+
+def test_branch_time_travel(br_table, spark):
+    """``read_snapshot(..., branch=)`` reads a branch's own head chain:
+    the fork copy and the staged commit above it."""
+    wh = br_table
+    wh.create_branch("lab", "brt", "bt")
+    v0 = wh._snapshot_versions("lab", "brt", "bt")[-1]
+    wh.append(
+        "lab", "brt",
+        spark.createDataFrame([(700, "staged")], "id int, src string"),
+        batch_id="bt0", branch="bt",
+    )
+    v1 = wh._snapshot_versions("lab", "brt", "bt")[-1]
+    assert wh.read_snapshot("lab", "brt", v0, branch="bt").count() == 20
+    assert wh.read_snapshot("lab", "brt", v1, branch="bt").count() == 21
+
+
+def test_stale_hint_below_tag_gap_cannot_fork_history(br_table, spark):
+    """Review finding (r10 second pass): tag retention leaves version
+    GAPS after expiry; a stale hint at a retained old version must never
+    make the next commit CAS into the gap (which would orphan the real
+    head).  Table hints are monotone and refreshed by expiry."""
+    wh = br_table
+    wh.create_tag("lab", "brt", "keep", version=1)
+    for i in range(3):
+        wh.append(
+            "lab", "brt",
+            spark.createDataFrame([(800 + i, "x")], "id int, src string"),
+            batch_id=f"g{i}",
+        )
+    head_v = wh._latest_version("lab", "brt")
+    # adversarial stale hint at the tagged version, then expiry creates
+    # the gap AND refreshes the hint to the true head
+    with open(wh._hint_path("lab", "brt"), "w") as f:
+        f.write("1")
+    wh.expire_snapshots("lab", "brt", keep_last=1)
+    assert wh._snapshot_versions("lab", "brt") == [1, head_v]
+    with open(wh._hint_path("lab", "brt")) as f:
+        assert int(f.read().strip()) == head_v
+    assert wh._latest_version("lab", "brt") == head_v
+    # monotone: an older racing hint write never lands
+    wh._write_hint_file(wh._hint_path("lab", "brt"), 1)
+    with open(wh._hint_path("lab", "brt")) as f:
+        assert int(f.read().strip()) == head_v

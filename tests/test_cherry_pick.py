@@ -513,22 +513,6 @@ def test_merge_resumes_after_rollback_undid_the_picks(cp_table, spark):
     assert wh.read("lab", "cpt").filter(F.col("id") == 400).count() == 1
 
 
-def test_publish_retry_after_rollback_refuses_instead_of_pinning_undone(
-    cp_table, spark
-):
-    """_find_publish flavor of review r11 #3: a publish retry after the
-    user rolled the fast-forward back must NOT pin the undone version —
-    it surfaces the divergence instead."""
-    wh = cp_table
-    wh.create_branch("lab", "cpt", "pp")
-    _mk_branch_append(wh, spark, "pp", [(500, "s")], "bp0")
-    pre = wh._latest_version("lab", "cpt")
-    wh.publish_tables({("lab", "cpt"): "pp"})
-    wh.rollback_to_snapshot("lab", "cpt", pre)
-    with pytest.raises(RuntimeError, match="diverged"):
-        wh.publish_tables({("lab", "cpt"): "pp"})
-
-
 def test_cas_loop_duplicate_add_fence_says_already_published(cp_table):
     """Review r11 #6: the CAS-loop flavor of the duplicate-pick fence
     must carry the same 'already published' marker as the pre-check on

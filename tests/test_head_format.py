@@ -10,6 +10,8 @@ writers produce and refuses every other one at load.
 - A head or delete entry in any other layout raises ``ValueError``
   naming the table and the snapshot version, from reads, counts,
   appends, expiry and the orphan sweep alike — and nothing is deleted.
+- Expiry refuses a root that holds retired catalog heads
+  (``<root>/_catalog``), whose pins it no longer reads.
 - A raw first ``commit_snapshot`` (files, no ``schema_fields``) records
   the first file's footer schema (plus its hive partition columns) as
   schema 0.
@@ -362,3 +364,34 @@ def test_retired_shapes_are_refused_and_never_collected(spark, tmp_path, shape):
             call()
     assert before <= on_disk()  # no data, delete or segment file deleted
     assert wh._snapshot_versions("lab", "t") == [1, 2, 3, 4]
+
+
+def test_expiry_refuses_a_root_with_a_catalog_dir(spark, tmp_path):
+    """Catalog heads under ``<root>/_catalog`` pinned table versions that
+    expiry used to retain.  Nothing reads them any more, so expiry
+    refuses, naming the directory, rather than expire a pinned version."""
+    root = str(tmp_path / "wh")
+    wh = ParquetWarehouse(spark, root)
+    wh.create_table("lab", "t", "zstd", 1, properties={"snapshots": "true"})
+    for i in range(3):
+        wh.append(
+            "lab", "t",
+            spark.createDataFrame(
+                [(i * 10 + j,) for j in range(10)], "id int"
+            ).coalesce(1),
+            batch_id=f"b{i}",
+        )
+    catalog_dir = os.path.join(root, "_catalog")
+    os.makedirs(catalog_dir)
+    with open(os.path.join(catalog_dir, "v000001.json"), "w") as f:
+        json.dump(
+            {
+                "version": 1, "parent": None, "operation": "publish",
+                "ts": 0.0, "tables": {"lab.t": 1},
+            },
+            f,
+        )
+    with pytest.raises(ValueError, match=re.escape(catalog_dir)):
+        wh.expire_snapshots("lab", "t", keep_last=1)
+    assert wh._snapshot_versions("lab", "t") == [1, 2, 3]
+    assert wh.read_snapshot("lab", "t", 1).count() == 10
