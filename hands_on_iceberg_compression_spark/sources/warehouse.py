@@ -537,6 +537,53 @@ class ParquetWarehouse:
             opts[_ZSTD_LEVEL_KEY] = str(meta.level)
         return opts
 
+    def _write_data(
+        self, df: DataFrame, meta: TableMeta, head: dict | None, target: str
+    ) -> tuple[list[str], int]:
+        """THE data-file writer every warehouse write goes through: write
+        the already-shaped ``df`` as parquet under the fresh dir
+        ``target`` with the table's codec options, hive-partitioned by
+        ``head``'s CURRENT spec, and return (the sorted paths of the files
+        it wrote, their total rows).  A file with no rows is unlinked, not
+        returned — Spark writes one for an empty first task or an empty
+        frame — so no commit records a 0-row data file."""
+        import pyarrow.parquet as pq
+
+        writer = df.write.mode("error").options(**self._write_options(meta))
+        part = partition_transform_exprs(self._head_partitioning(meta, head))
+        if part:
+            writer = writer.partitionBy(*[n for n, _ in part])
+        writer.parquet(target)
+        paths, rows = [], 0
+        for base, _d, fns in os.walk(target):
+            for fn in fns:
+                if not fn.endswith(".parquet"):
+                    continue
+                p = os.path.join(base, fn)
+                n = pq.ParquetFile(p).metadata.num_rows
+                if n == 0:
+                    os.unlink(p)
+                    continue
+                paths.append(p)
+                rows += n
+        return sorted(paths), rows
+
+    @staticmethod
+    def _shape_rewrite(
+        df: DataFrame, meta: TableMeta, total_bytes: int, target_file_size_bytes: int
+    ) -> DataFrame:
+        """Lay a rewrite out toward ``target_file_size_bytes`` files: WRITE
+        ORDERED BY (range-partition + in-partition sort gives disjoint
+        per-file [min, max] on the sort keys, so range predicates skip
+        whole files) when the table has a sort order, else a coalesce."""
+        n_files = max(1, math.ceil(total_bytes / target_file_size_bytes))
+        if meta.sort_order:
+            sort_cols = [F.col(c) for c in meta.sort_order]
+            return df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
+                *sort_cols
+            )
+        return df.coalesce(n_files)
+
     def append(
         self,
         schema: str,
@@ -570,7 +617,7 @@ class ParquetWarehouse:
         # transforms new files are laid out by)
         head0 = self._head_light(schema, table, branch)
         part_spec = self._head_partitioning(meta, head0)
-        writer_df, part_cols = apply_partition_transforms(df, part_spec)
+        writer_df, _ = apply_partition_transforms(df, part_spec)
         # validate/conform against the recorded schema (schema evolution):
         # unknown columns error, omitted columns NULL-fill, the first
         # commit adopts this write's schema as schema 0
@@ -580,18 +627,9 @@ class ParquetWarehouse:
         if batch_id is None:
             batch_id = f"batch_{uuid.uuid4().hex[:12]}"
         batch_dir = os.path.join(self._live_data_dir(schema, table), batch_id)
-        target = os.path.join(batch_dir, f"g_{uuid.uuid4().hex[:8]}")
-        writer = writer_df.write.mode("error")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        for k, v in self._write_options(meta).items():
-            writer = writer.option(k, v)
-        writer.parquet(target)
-        new = sorted(
-            os.path.join(base, fn)
-            for base, _d, fns in os.walk(target)
-            for fn in fns
-            if fn.endswith(".parquet")
+        new, _rows = self._write_data(
+            writer_df, meta, head0,
+            os.path.join(batch_dir, f"g_{uuid.uuid4().hex[:8]}"),
         )
         self.commit_snapshot(
             schema,
@@ -1229,45 +1267,27 @@ class ParquetWarehouse:
         total = sum(e["bytes"] for e in head["files"])
         if total == 0:
             return 0
-        n_files = max(1, math.ceil(total / target_file_size_bytes))
         df = self.read(schema, table, branch=branch)
+        if zorder:
+            df = self._zorder_cluster(
+                df, zorder, max(1, math.ceil(total / target_file_size_bytes))
+            )
+        else:
+            df = self._shape_rewrite(df, meta, total, target_file_size_bytes)
         # compaction is a NEW generation + a commit — the superseded
         # generation stays on disk, so earlier snapshots keep
         # time-traveling until expire_snapshots garbage-collects them.  The
         # gen dir name is a uuid, not a version: the version is allocated
         # at commit time (CAS), so a concurrent writer can't collide on
-        # the path either.
-        gen_dir = os.path.join(
-            self._live_data_dir(schema, table), f"compact_{uuid.uuid4().hex[:8]}"
-        )
-        if zorder:
-            df = self._zorder_cluster(df, zorder, n_files)
-        elif meta.sort_order:
-            # WRITE ORDERED BY: range-partition + in-partition sort gives
-            # disjoint per-file [min,max] on the sort keys, so range
-            # predicates skip whole files/row-groups
-            sort_cols = [F.col(c) for c in meta.sort_order]
-            df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-                *sort_cols
-            )
-        else:
-            df = df.coalesce(n_files)
-        writer = df.write.mode("error")
-        # compaction rewrites under the CURRENT spec (Iceberg
+        # the path either.  It rewrites under the CURRENT spec (Iceberg
         # rewrite_data_files posture): spec-evolved tables converge to one
-        # layout as maintenance touches their files
-        cur_part = self._head_partitioning(meta, head)
-        if cur_part:
-            part_names = [n for n, _ in partition_transform_exprs(cur_part)]
-            writer = writer.partitionBy(*part_names)
-        for k, v in self._write_options(meta).items():
-            writer = writer.option(k, v)
-        writer.parquet(gen_dir)
-        new = sorted(
-            os.path.join(base, fn)
-            for base, _d, fns in os.walk(gen_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
+        # layout as maintenance touches their files.
+        new, _rows = self._write_data(
+            df, meta, head,
+            os.path.join(
+                self._live_data_dir(schema, table),
+                f"compact_{uuid.uuid4().hex[:8]}",
+            ),
         )
         self.commit_snapshot(
             schema, table, "optimize", file_paths=new,
@@ -1349,33 +1369,18 @@ class ParquetWarehouse:
         that was read.  Returns the new file paths."""
         tdir = self._tdir(schema, table)
         victim_paths = [os.path.join(tdir, e["path"]) for e in victims]
-        total = sum(e["bytes"] for e in victims)
-        n_files = max(1, math.ceil(total / target_file_size_bytes))
         # schema-aware read: victims written under older schemas project
         # to the current one, so the rewrite emits current-schema files
-        df = self._read_entries(schema, table, meta, head, victims)
-        data_dir = self._live_data_dir(schema, table)
-        gen_dir = os.path.join(data_dir, f"compact_{uuid.uuid4().hex[:8]}")
-        if meta.sort_order:
-            sort_cols = [F.col(c) for c in meta.sort_order]
-            df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-                *sort_cols
-            )
-            writer = df.write.mode("error")
-        else:
-            writer = df.coalesce(n_files).write.mode("error")
-        cur_part = self._head_partitioning(meta, head)
-        if cur_part:
-            part_names = [n for n, _ in partition_transform_exprs(cur_part)]
-            writer = writer.partitionBy(*part_names)
-        for k, v in self._write_options(meta).items():
-            writer = writer.option(k, v)
-        writer.parquet(gen_dir)
-        new = sorted(
-            os.path.join(base, fn)
-            for base, _d, fns in os.walk(gen_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
+        df = self._shape_rewrite(
+            self._read_entries(schema, table, meta, head, victims), meta,
+            sum(e["bytes"] for e in victims), target_file_size_bytes,
+        )
+        new, _rows = self._write_data(
+            df, meta, head,
+            os.path.join(
+                self._live_data_dir(schema, table),
+                f"compact_{uuid.uuid4().hex[:8]}",
+            ),
         )
         self.commit_snapshot(
             schema, table, "optimize", add_files=new, drop_files=victim_paths,
@@ -1509,7 +1514,7 @@ class ParquetWarehouse:
         return {"files": len(new), "victims": len(victims)}
 
     def _write_pos_deletes(
-        self, schema: str, table: str, tuples
+        self, schema: str, table: str, tuples, rv_seq: int
     ) -> tuple[str | None, list[dict]]:
         """Write collected position-delete tuples — a pyarrow table of
         ``file_path`` (manifest-relative) and ``pos`` (row ordinal) — as
@@ -1522,7 +1527,10 @@ class ParquetWarehouse:
         per-target tuple counts: one commit's victims are DISTINCT rows,
         so ``count_rows`` subtracts them without touching data (a dict,
         not an aligned list: folds prune ``targets`` and the dict stays
-        correct un-rewritten)."""
+        correct un-rewritten).  ``rv_seq`` is the read position: the
+        ``last_seq`` of the head whose delete-APPLIED read found the
+        tuples, so they are provably disjoint from every delete entry with
+        seq <= rv_seq — ``count_rows``' exact-subtraction proof."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -1557,6 +1565,7 @@ class ParquetWarehouse:
             "kind": "pos",
             "targets": sorted(counts),
             "target_counts": {k: counts[k] for k in sorted(counts)},
+            "rv_seq": rv_seq,
         }]
 
     def _pos_tuples(
@@ -2065,12 +2074,10 @@ class ParquetWarehouse:
                 schema, table, meta, head, targets, cols, local, kdf
             )
             del_root, del_entries = self._write_pos_deletes(
-                schema, table, victims
+                schema, table, victims, head["last_seq"]
             )
             if not del_entries:
                 return {**no_op, **found, "version": version}
-            for d in del_entries:
-                d["rv_seq"] = head["last_seq"]  # see delete_where
             try:
                 manifest = self.commit_snapshot(
                     schema, table, "delete",
@@ -2107,7 +2114,7 @@ class ParquetWarehouse:
             return []
         return [dict(d) for d in self._head_deletes(schema, table, head)]
 
-    # --- row-level DELETE (VERDICT r6 #3) --------------------------------
+    # --- row-level DELETE / UPDATE (VERDICT r6 #3) -----------------------
     def delete_where(
         self,
         schema: str,
@@ -2118,249 +2125,48 @@ class ParquetWarehouse:
         mode: str | None = None,
         branch: str = "main",
     ) -> dict:
-        """Row-level DELETE — Iceberg ``DELETE FROM ... WHERE`` parity,
-        copy-on-write flavor: rewrite ONLY the files that may hold matching
-        rows, drop the originals, and commit the swap as a DELTA
-        (add + drop_files).  Untouched files are never opened, statted, or
-        moved (their manifest entries carry over verbatim), and earlier
-        snapshots keep time-traveling to the pre-delete data until
-        ``expire_snapshots`` garbage-collects.  Completes the DML triad
-        next to ``merge_upsert`` and partition-scoped ``optimize``.
-
-        ``condition`` is a SQL boolean expression over the table's columns;
-        rows where it evaluates TRUE are deleted (SQL semantics: NULL
-        keeps the row).  ``ranges`` (same shapes as ``prune_files``:
-        column -> (lo, hi) range or discrete value set) selects victim
-        files from the manifest's partition values and column bounds
-        WITHOUT opening a footer; at 100 TB this is the difference between
-        rewriting one day's partition and rewriting the table.  The caller
-        owns coverage: ``ranges`` must be implied by ``condition`` (every
-        file that could match must intersect), the same contract
-        ``read_pruned`` documents.  When omitted, ranges are DERIVED from
-        the condition for the safe conjunctive-comparison subset
-        (``ranges_from_condition`` — Iceberg's DELETE derives its scan
-        filter the same way); conditions outside that subset make every
-        live file a candidate — still correct, full rewrite cost.
-
-        Concurrency (Iceberg optimistic-commit semantics, as in scoped
-        optimize): concurrent APPENDS retry-merge — their rows are not
-        subject to this delete (snapshot isolation, the delete evaluated
-        against the head it read); a concurrent rewrite of a victim file
-        RAISES instead of merging blindly (conflicting-rewrite
-        validation).
+        """Row-level DELETE — Iceberg ``DELETE FROM ... WHERE`` parity:
+        remove every row where ``condition`` (a SQL boolean expression
+        over the table's columns) evaluates TRUE; NULL keeps the row.  The
+        body is ``_dml_where``, shared with ``update_where``: a delete is
+        an update whose matched rows leave no image.  Victim selection
+        (``ranges``), the zero-match no-op and the concurrency fences are
+        documented there.
 
         ``mode`` selects the Iceberg write.delete.mode strategy (falls
         back to the ``delete_mode`` table property, then copy-on-write):
 
-        - ``"copy-on-write"``: rewrite victim files minus matching rows.
-          Best for broad deletes and read-heavy tables — reads stay plain
-          scans — but a 1-row delete rewrites its whole ~128 MB victim.
-        - ``"merge-on-read"``: write an Iceberg-v2-style POSITION DELETE
-          file — an O(matching rows) parquet of (file_path, row ordinal)
-          tuples keyed on the scan's ``_metadata.row_index`` — and leave
-          every data file untouched.  Reads anti-join the (broadcast)
-          tuples against only the targeted files; ``optimize()`` folds
-          the deletes into real rewrites.  At 100 TB this is the
-          difference between a GDPR single-document delete costing a
-          manifest commit + a few KB and costing a 128 MB rewrite.
+        - ``"copy-on-write"``: rewrite the victim files minus the matching
+          rows.  Best for broad deletes and read-heavy tables — reads stay
+          plain scans — but a 1-row delete rewrites its whole ~128 MB
+          victim.
+        - ``"merge-on-read"``: write ONE position-delete file of the
+          matching rows' (file_path, row ordinal) tuples and leave every
+          data file untouched, in one Spark job.  Reads anti-join the
+          (broadcast) tuples against only the targeted files;
+          ``optimize()`` and ``fold_pending_deletes`` fold them into
+          rewrites.  At 100 TB this is the difference between a GDPR
+          single-document delete costing a manifest commit + a few KB and
+          costing a 128 MB rewrite.
 
-        The partition-ALIGNED metadata-only fast path (zero data IO)
-        applies in both modes.
+        In both modes a victim whose PARTITION VALUES alone prove that
+        every row matches is dropped outright, with no read and no write
+        (Iceberg's partition-aligned metadata-only delete: ``DELETE WHERE
+        day = '2024-01-02'`` on a day-partitioned table touches zero data
+        bytes).
 
-        Count caveat (ADVICE r8): when pending merge-on-read deletes
-        already target the victims, ``rows_deleted`` can OVERCOUNT — files
-        dropped via the metadata-only path count their manifest PHYSICAL
-        rows, and the copy-on-write ``rows_before`` term is physical too,
-        while the rewrite's read applies the pending deletes (counting
-        exactly would require the data read those paths exist to avoid).
-        Merge-on-read SCANNED victims are exact (tuples come from a
-        delete-applied read)."""
-        meta = self.table_meta(schema, table)
-        if mode is None:
-            mode = str(meta.properties.get("delete_mode", "copy-on-write"))
-        if mode not in ("copy-on-write", "merge-on-read"):
-            raise ValueError(
-                f"unknown delete mode {mode!r}: expected 'copy-on-write' "
-                "or 'merge-on-read'"
-            )
-        import pyarrow.parquet as pq
-
-        version = self._latest_version(schema, table, branch)
-        if version is None:
-            return {"files_rewritten": 0, "files_kept": 0, "rows_deleted": 0}
-        head = self._load_snapshot(schema, table, version, branch)
-        tdir = self._tdir(schema, table)
-        entries_by_path = {e["path"]: e for e in head["files"]}
-        if ranges is None:
-            ranges = self._auto_ranges(condition, head)
-        if ranges is not None:
-            kept_abs, _total = self.prune_files(
-                schema, table, ranges, version=version, branch=branch
-            )
-            victim_rel = [os.path.relpath(p, tdir) for p in kept_abs]
-        else:
-            victim_rel = sorted(entries_by_path)
-        victims = [entries_by_path[p] for p in victim_rel]
-        n_cold = len(entries_by_path) - len(victims)
-        if not victims:
-            return {
-                "files_rewritten": 0,
-                "files_kept": n_cold,
-                "rows_deleted": 0,
-                "delete_files_added": 0,
-                "version": version,
-            }
-        victim_paths = [os.path.join(tdir, p) for p in victim_rel]
-        rows_before = sum(e["rows"] for e in victims)
-        # METADATA-ONLY fast path (Iceberg's partition-aligned DELETE): a
-        # file whose PARTITION VALUES alone prove that every row matches
-        # the condition is dropped outright — no read, no write, no footer
-        # open.  ``DELETE WHERE day = '2024-01-02'`` on a day-partitioned
-        # table touches zero data bytes however large the partition is.
-        conj = conjuncts_from_condition(condition)
-
-        def fully_matched(e: dict) -> bool:
-            if conj is None:
-                return False
-            parts = e.get("partitions")
-            if not parts:
-                return False
-            return all(
-                parts.get(col) is not None
-                and self._pv_definitely_satisfies(parts[col], spec)
-                for col, spec in conj
-            )
-
-        rewrite = [e for e in victims if not fully_matched(e)]
-        dropped_outright = len(victims) - len(rewrite)
-        if mode == "merge-on-read":
-            drop_paths = [
-                os.path.join(tdir, e["path"])
-                for e in victims
-                if fully_matched(e)
-            ]
-            rows_dropped = sum(e["rows"] for e in victims if fully_matched(e))
-            del_entries: list[dict] = []
-            rows_marked = 0
-            del_root = None
-            if rewrite:
-                # O(matching rows): scan ONLY candidate files, record each
-                # matching row's (manifest-relative path, row ordinal) —
-                # Iceberg v2's position-delete file schema.  The read
-                # applies EXISTING deletes, so an already-deleted row is
-                # never re-recorded (tuples stay disjoint across commits).
-                df = self._read_entries(
-                    schema, table, meta, head, rewrite, with_pos=True
-                )
-                tuples = df.filter(
-                    F.coalesce(F.expr(condition), F.lit(False))
-                ).select(
-                    F.col(self._POS_REL).alias("file_path"),
-                    F.col(self._POS_IDX).alias("pos"),
-                ).toArrow()
-                del_root, del_entries = self._write_pos_deletes(
-                    schema, table, tuples
-                )
-                # read-position stamp: victims were computed from the
-                # delete-APPLIED read at this head, so these tuples are
-                # provably disjoint from every delete entry with
-                # seq <= rv_seq — count_rows' exact-subtraction proof
-                rv = head["last_seq"]
-                for d in del_entries:
-                    d["rv_seq"] = rv
-                rows_marked = sum(e["rows"] for e in del_entries)
-            if not del_entries and not drop_paths:
-                # nothing matched: no commit (same no-op guarantee as the
-                # copy-on-write zero-match guard)
-                return {
-                    "files_rewritten": 0,
-                    "files_dropped_outright": 0,
-                    "files_kept": n_cold + len(victims),
-                    "rows_deleted": 0,
-                    "delete_files_added": 0,
-                    "version": version,
-                }
-            try:
-                manifest = self.commit_snapshot(
-                    schema, table, "delete",
-                    add_files=[],
-                    drop_files=drop_paths or None,
-                    add_deletes=del_entries or None,
-                    expected_schema_id=head["schema_id"],
-                    deletes_read_version=version,
-                    branch=branch,
-                )
-            except BaseException:
-                if del_root is not None:
-                    shutil.rmtree(del_root, ignore_errors=True)
-                raise
-            return {
-                "files_rewritten": 0,
-                "files_dropped_outright": len(drop_paths),
-                "files_kept": n_cold + len(rewrite),
-                "rows_deleted": rows_dropped + rows_marked,
-                "delete_files_added": len(del_entries),
-                "delete_bytes": sum(e["bytes"] for e in del_entries),
-                "version": manifest["version"],
-            }
-        new, rows_after = [], 0
-        if rewrite:
-            total_bytes = sum(e["bytes"] for e in rewrite)
-            n_files = max(1, math.ceil(total_bytes / target_file_size_bytes))
-            cond = F.expr(condition)
-            # NULL predicate keeps the row: survivors are NOT(cond IS
-            # TRUE).  Schema-aware read: the condition names CURRENT
-            # columns, and the rewrite emits current-schema files
-            # whatever sid the victims had.
-            df = self._read_entries(schema, table, meta, head, rewrite).filter(
-                ~F.coalesce(cond, F.lit(False))
-            )
-            data_dir = self._live_data_dir(schema, table)
-            gen_dir = os.path.join(data_dir, f"delete_{uuid.uuid4().hex[:8]}")
-            if meta.sort_order:
-                sort_cols = [F.col(c) for c in meta.sort_order]
-                df = df.repartitionByRange(
-                    n_files, *sort_cols
-                ).sortWithinPartitions(*sort_cols)
-                writer = df.write.mode("error")
-            else:
-                writer = df.coalesce(n_files).write.mode("error")
-            cur_part = self._head_partitioning(meta, head)
-            if cur_part:
-                part_names = [
-                    n for n, _ in partition_transform_exprs(cur_part)
-                ]
-                writer = writer.partitionBy(*part_names)
-            for k, v in self._write_options(meta).items():
-                writer = writer.option(k, v)
-            writer.parquet(gen_dir)
-            for base, _d, fns in os.walk(gen_dir):
-                for fn in fns:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    p = os.path.join(base, fn)
-                    n = pq.ParquetFile(p).metadata.num_rows
-                    if n == 0:
-                        os.unlink(p)  # a fully-emptied unpartitioned rewrite
-                        continue
-                    new.append(p)
-                    rows_after += n
-        manifest = self.commit_snapshot(
-            schema, table, "delete", add_files=sorted(new),
-            drop_files=victim_paths,
-            expected_schema_id=head["schema_id"],
-            expected_spec_id=head["spec_id"] if "specs" in head else 0,
-            rewrite_read_version=version,
-            branch=branch,
+        Returns {"files_rewritten", "files_dropped_outright",
+        "files_kept", "files_added", "rows_deleted",
+        "delete_files_added", "delete_bytes", "version"}.  Count caveat
+        (ADVICE r8): a file dropped outright counts its manifest PHYSICAL
+        rows, so ``rows_deleted`` OVERCOUNTS when pending merge-on-read
+        deletes already target it (counting it exactly would need the
+        read the metadata-only drop exists to avoid); every scanned row
+        is counted exactly off the delete-applied read."""
+        return self._dml_where(
+            schema, table, condition, None, ranges,
+            target_file_size_bytes, mode, branch,
         )
-        return {
-            "files_rewritten": len(rewrite),
-            "files_dropped_outright": dropped_outright,
-            "files_kept": n_cold,
-            "files_added": len(new),
-            "rows_deleted": rows_before - rows_after,
-            "version": manifest["version"],
-        }
 
     def update_where(
         self,
@@ -2370,285 +2176,267 @@ class ParquetWarehouse:
         assignments: dict[str, str],
         ranges: dict | None = None,
         target_file_size_bytes: int = 128 * 1024 * 1024,
-        count_matched: bool = True,
         mode: str | None = None,
         branch: str = "main",
     ) -> dict:
-        """Row-level UPDATE — Iceberg ``UPDATE ... SET ... WHERE``,
-        copy-on-write: only files that may hold matching rows are
-        rewritten (victim selection, pruning, and delta-commit semantics
-        are exactly ``delete_where``'s — explicit ``ranges`` or the
-        predicate-derived safe subset, concurrent appends retry-merge,
-        conflicting rewrites raise).  ``assignments`` maps column ->
-        SQL expression (may reference the row's columns); values cast to
-        the column's recorded type, so the table schema never drifts.
+        """Row-level UPDATE — Iceberg ``UPDATE ... SET ... WHERE``:
+        ``assignments`` maps column -> SQL expression over the row's
+        ORIGINAL values, cast to the column's recorded type so the table
+        schema never drifts; rows where ``condition`` is NULL are
+        untouched.  The body is ``_dml_where``, shared with
+        ``delete_where`` (victim selection, the zero-match no-op and the
+        concurrency fences are documented there).
 
         Partition correctness: an update that changes a partition SOURCE
-        column moves its rows — transform columns are RE-DERIVED after
-        the assignments and the rewrite writes hive dirs from the new
-        values (assigning directly to a derived transform column is
-        refused; update the source).  SQL NULL semantics: rows where the
-        condition is NULL are untouched.
-
-        ``count_matched=False`` skips the ``rows_matched`` report number,
-        saving one condition-column scan over the victims — worth passing
-        when the victim set is a large fraction of a huge table.
+        column moves its rows — transform columns are RE-DERIVED after the
+        assignments, so the new images land in their new hive dirs
+        (assigning directly to a derived transform column is refused;
+        update the source).
 
         ``mode`` selects the Iceberg write.update.mode strategy (falls
         back to the ``update_mode`` table property, then copy-on-write):
-        ``"merge-on-read"`` writes a position-delete file for the matched
-        rows plus NEW data files holding only their updated images —
-        O(matched rows) IO instead of a victim-file rewrite; reads merge
-        via the same anti-join as MoR deletes, and a partition-source
-        update still moves rows (the new images re-derive transforms)."""
-        meta = self.table_meta(schema, table)
+        ``"copy-on-write"`` rewrites the victim files with the matched
+        rows updated; ``"merge-on-read"`` writes a position-delete file
+        for the matched rows plus NEW data files holding only their
+        updated images, in two Spark jobs — O(matched rows) IO instead of
+        a victim-file rewrite.
+
+        Returns {"files_rewritten", "files_dropped_outright" (always 0),
+        "files_kept", "files_added", "rows_matched",
+        "delete_files_added", "delete_bytes", "version"}."""
         if not assignments:
             raise ValueError("no assignments")
+        return self._dml_where(
+            schema, table, condition, assignments, ranges,
+            target_file_size_bytes, mode, branch,
+        )
+
+    def _dml_where(
+        self,
+        schema: str,
+        table: str,
+        condition: str,
+        assignments: dict[str, str] | None,
+        ranges: dict | None,
+        target_file_size_bytes: int,
+        mode: str | None,
+        branch: str,
+    ) -> dict:
+        """The ONE row-level write path: ``delete_where`` (``assignments``
+        None) and ``update_where``.  Mode -> head -> victims -> matched
+        rows -> position deletes or a rewrite -> commit.
+
+        Victims are the files whose manifest partition values and column
+        bounds intersect ``ranges`` (same shapes as ``prune_files``),
+        selected WITHOUT opening a footer: untouched files are never
+        opened, statted or moved.  The caller owns coverage: ``ranges``
+        must be implied by ``condition`` (the ``read_pruned`` contract).
+        When omitted they are DERIVED from the condition's safe
+        conjunctive-comparison subset (``_auto_ranges``); a condition
+        outside it makes every live file a victim — still correct, full
+        cost.
+
+        Matched rows come from the delete-APPLIED read of the victims (an
+        already-deleted row never matches again): merge-on-read collects
+        their (file_path, pos) tuples in one ``toArrow()``, copy-on-write
+        counts them in one ``count()``.  Either is the exact match count,
+        and zero with nothing dropped outright is a no-op — no write and
+        no commit, so a zero-match DML never churns a snapshot or
+        invalidates a ``read_incremental`` window.  A merge-on-read update
+        then writes the images and aborts when their row count differs
+        from the tuple count: the condition or an assignment is
+        non-deterministic, and committing would lose or duplicate rows.
+
+        Concurrency (Iceberg optimistic commit): concurrent APPENDS
+        retry-merge — their rows are not subject to this DML, evaluated
+        against the head it read.  A concurrent rewrite of a victim
+        RAISES (``drop_files`` conflicts, ``deletes_read_version``), and
+        so does a concurrent merge-on-read delete under a rewrite or new
+        update images (``rewrite_read_version``: they re-materialize rows
+        read here).  Earlier snapshots keep time-traveling to the old
+        rows until ``expire_snapshots``."""
+        kind = "delete" if assignments is None else "update"
+        rows_key = "rows_deleted" if assignments is None else "rows_matched"
+        meta = self.table_meta(schema, table)
         if mode is None:
-            mode = str(meta.properties.get("update_mode", "copy-on-write"))
+            mode = str(meta.properties.get(f"{kind}_mode", "copy-on-write"))
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(
-                f"unknown update mode {mode!r}: expected 'copy-on-write' "
+                f"unknown {kind} mode {mode!r}: expected 'copy-on-write' "
                 "or 'merge-on-read'"
             )
-        import pyarrow.parquet as pq
-
+        mor = mode == "merge-on-read"
         version = self._latest_version(schema, table, branch)
         if version is None:
-            return {"files_rewritten": 0, "files_kept": 0, "rows_matched": 0}
+            return {"files_rewritten": 0, "files_kept": 0, rows_key: 0}
         head = self._load_snapshot(schema, table, version, branch)
-        rec_types = {
-            f["name"]: f["type"]
-            for f in head["schemas"][str(head["schema_id"])]
-        }
-        # transforms of the CURRENT spec drive re-derivation and the
-        # rewrite's hive layout; the assignment guard covers EVERY
-        # recorded spec's derived columns (an old spec's derived column
-        # still lives in old files' dirs — assigning to it would desync
-        # the stored column from the dirs for rewritten rows)
-        specs = partition_transform_exprs(self._head_partitioning(meta, head))
-        derived = {
-            n
-            for n, b in partition_transform_exprs(
-                self._all_partitioning(meta, head)
-            )
-            if b is not None
-        }
-        for c in assignments:
-            if c in derived:
-                raise ValueError(
-                    f"cannot assign to derived partition column {c!r}; "
-                    "update its source column and the transform re-derives"
+        hit = F.coalesce(F.expr(condition), F.lit(False))
+        if assignments is not None:
+            rec_types = {
+                f["name"]: f["type"]
+                for f in head["schemas"][str(head["schema_id"])]
+            }
+            # transforms of the CURRENT spec are re-derived; the guard
+            # covers EVERY recorded spec's derived columns (an old spec's
+            # derived column still lives in old files' dirs — assigning to
+            # it would desync the stored column from the dirs)
+            specs = partition_transform_exprs(self._head_partitioning(meta, head))
+            derived = {
+                n
+                for n, b in partition_transform_exprs(
+                    self._all_partitioning(meta, head)
                 )
-            if c not in rec_types:
-                raise ValueError(f"no column {c!r} in {schema}.{table}")
+                if b is not None
+            }
+            for c in assignments:
+                if c in derived:
+                    raise ValueError(
+                        f"cannot assign to derived partition column {c!r}; "
+                        "update its source column and the transform re-derives"
+                    )
+                if c not in rec_types:
+                    raise ValueError(f"no column {c!r} in {schema}.{table}")
+
+        def image(rows: DataFrame) -> DataFrame:
+            # ONE select, every expression bound to the ORIGINAL row: SQL
+            # UPDATE evaluates the condition and all SET expressions
+            # against the pre-update values (sequential withColumn would
+            # let later assignments see earlier ones — a swap {a: b, b: a}
+            # or a condition on an assigned column would corrupt silently)
+            cols = []
+            for name in rows.columns:
+                if name in (self._POS_FILE, self._POS_IDX, self._POS_REL):
+                    continue
+                col = F.col(name)
+                if name in assignments:
+                    val = F.expr(assignments[name]).cast(rec_types[name])
+                    col = F.when(hit, val).otherwise(col)
+                cols.append(col.alias(name))
+            rows = rows.select(*cols)
+            for name, build in specs:
+                if build is not None:
+                    rows = rows.withColumn(name, build())
+            return rows
+
         tdir = self._tdir(schema, table)
         entries_by_path = {e["path"]: e for e in head["files"]}
         if ranges is None:
             ranges = self._auto_ranges(condition, head)
-        if ranges is not None:
+        if ranges is None:
+            victims = [entries_by_path[p] for p in sorted(entries_by_path)]
+        else:
             kept_abs, _total = self.prune_files(
                 schema, table, ranges, version=version, branch=branch
             )
-            victim_rel = [os.path.relpath(p, tdir) for p in kept_abs]
-        else:
-            victim_rel = sorted(entries_by_path)
-        victims = [entries_by_path[p] for p in victim_rel]
-        n_cold = len(entries_by_path) - len(victims)
-        if not victims:
-            return {
-                "files_rewritten": 0,
-                "files_kept": n_cold,
-                "rows_matched": 0,
-                "version": version,
-            }
-        victim_paths = [os.path.join(tdir, p) for p in victim_rel]
-        total_bytes = sum(e["bytes"] for e in victims)
-        n_files = max(1, math.ceil(total_bytes / target_file_size_bytes))
-        hit = F.coalesce(F.expr(condition), F.lit(False))
-        mor = mode == "merge-on-read"
-        df = self._read_entries(
-            schema, table, meta, head, victims, with_pos=mor
+            victims = [
+                entries_by_path[os.path.relpath(p, tdir)] for p in kept_abs
+            ]
+        # METADATA-ONLY drop (a delete's partition-aligned fast path): a
+        # victim whose PARTITION VALUES alone prove every row matches
+        conj = (
+            conjuncts_from_condition(condition) if assignments is None else None
         )
-        if count_matched:
-            rows_matched = df.filter(hit).count()
-            no_match = rows_matched == 0
-        else:
-            # count skipped, but the zero-match guard must still hold: a
-            # no-match update that rewrote every victim would churn a
-            # byte-equivalent snapshot AND make read_incremental refuse
-            # the window (files "rewritten").  A limit(1) existence probe
-            # is near-free and keeps the no-op guarantee (VERDICT r7 #1).
-            rows_matched = None
-            no_match = df.filter(hit).limit(1).count() == 0
-        if no_match:
-            # nothing matches: skip the rewrite AND the commit — a
-            # byte-equivalent rewrite would churn a snapshot for nothing
-            # and invalidate incremental-scan checkpoints
-            return {
-                "files_rewritten": 0,
-                "files_kept": n_cold + len(victims),
-                "files_added": 0,
-                "rows_matched": 0,
-                "version": version,
-            }
-        if mor:
-            # MERGE-ON-READ update (Iceberg v2 write.update.mode):
-            # position-delete the matched rows, append ONLY their updated
-            # images as new files — O(matched rows) IO, untouched victims
-            # never rewritten.  Assignments bind to the original row by
-            # construction (the select reads the matched scan, not its
-            # own output); partition-source updates land the new images
-            # in their re-derived dirs while the position delete removes
-            # the old ones, so rows MOVE exactly as in copy-on-write.
-            matched = df.filter(hit)
-            pos_cols = {self._POS_FILE, self._POS_IDX, self._POS_REL}
-            out_cols = []
-            for name in df.columns:
-                if name in pos_cols:
-                    continue
-                if name in assignments:
-                    val = F.expr(assignments[name]).cast(rec_types[name])
-                    out_cols.append(val.alias(name))
-                else:
-                    out_cols.append(F.col(name))
-            updated = matched.select(*out_cols)
-            for name, build in specs:
-                if build is not None:
-                    updated = updated.withColumn(name, build())
-            data_dir = self._live_data_dir(schema, table)
-            gen_dir = os.path.join(data_dir, f"update_{uuid.uuid4().hex[:8]}")
-            total_bytes = sum(e["bytes"] for e in victims)
-            n_files = max(1, math.ceil(total_bytes / target_file_size_bytes))
-            writer = updated.coalesce(n_files).write.mode("error")
-            if specs:
-                writer = writer.partitionBy(*[n for n, _ in specs])
-            for k, v in self._write_options(meta).items():
-                writer = writer.option(k, v)
-            writer.parquet(gen_dir)
-            new, rows_new = [], 0
-            for base, _d, fns in os.walk(gen_dir):
-                for fn in fns:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    p = os.path.join(base, fn)
-                    n = pq.ParquetFile(p).metadata.num_rows
-                    if n == 0:
-                        os.unlink(p)
-                        continue
-                    new.append(p)
-                    rows_new += n
-            tuples = matched.select(
-                F.col(self._POS_REL).alias("file_path"),
-                F.col(self._POS_IDX).alias("pos"),
-            ).toArrow()
-            del_root, del_entries = self._write_pos_deletes(
-                schema, table, tuples
+
+        def fully_matched(e: dict) -> bool:
+            parts = e.get("partitions")
+            return bool(conj and parts) and all(
+                parts.get(col) is not None
+                and self._pv_definitely_satisfies(parts[col], spec)
+                for col, spec in conj
             )
-            rv = head["last_seq"]  # see delete_where
-            for d in del_entries:
-                d["rv_seq"] = rv
-            rows_marked = sum(e["rows"] for e in del_entries)
-            if rows_marked != rows_new:
-                # the two scans disagreeing means the predicate or an
-                # assignment is non-deterministic — committing would
-                # corrupt (rows vanish or duplicate); abort and clean up
-                shutil.rmtree(gen_dir, ignore_errors=True)
-                if del_root is not None:
-                    shutil.rmtree(del_root, ignore_errors=True)
-                raise RuntimeError(
-                    f"non-deterministic update on {schema}.{table}: the "
-                    f"delete scan matched {rows_marked} rows but the "
-                    f"update scan wrote {rows_new} — condition and "
-                    "assignments must be deterministic for merge-on-read"
-                )
-            if not del_entries:
-                shutil.rmtree(gen_dir, ignore_errors=True)
-                return {
-                    "files_rewritten": 0,
-                    "files_kept": n_cold + len(victims),
-                    "files_added": 0,
-                    "rows_matched": 0,
-                    "version": version,
-                }
-            try:
-                manifest = self.commit_snapshot(
-                    schema, table, "update",
-                    add_files=sorted(new),
-                    add_deletes=del_entries,
-                    expected_schema_id=head["schema_id"],
-                    expected_spec_id=head["spec_id"] if "specs" in head else 0,
-                    deletes_read_version=version,
-                    # the updated IMAGES re-materialize rows read at
-                    # ``version`` — a concurrent MoR delete in between
-                    # would not apply to them (higher seq); fence it
-                    rewrite_read_version=version,
-                    branch=branch,
-                )
-            except BaseException:
-                shutil.rmtree(gen_dir, ignore_errors=True)
-                shutil.rmtree(del_root, ignore_errors=True)
-                raise
-            return {
-                "files_rewritten": 0,
-                "files_kept": n_cold + len(victims),
-                "files_added": len(new),
-                "rows_matched": rows_marked if count_matched else None,
-                "delete_files_added": len(del_entries),
-                "delete_bytes": sum(e["bytes"] for e in del_entries),
-                "version": manifest["version"],
-            }
-        # ONE select, every expression bound to the ORIGINAL row: SQL
-        # UPDATE evaluates the condition and all SET expressions against
-        # the pre-update values (sequential withColumn would let later
-        # assignments see earlier ones — a swap {a: b, b: a} or a
-        # condition on an assigned column would corrupt silently)
-        out_cols = []
-        for name in df.columns:
-            if name in assignments:
-                val = F.expr(assignments[name]).cast(rec_types[name])
-                out_cols.append(F.when(hit, val).otherwise(F.col(name)).alias(name))
+
+        dropped = [e for e in victims if fully_matched(e)]
+        scan = [e for e in victims if not fully_matched(e)]
+        n_matched = 0
+        if scan:
+            df = self._read_entries(
+                schema, table, meta, head, scan, with_pos=mor
+            )
+            if mor:
+                tuples = df.filter(hit).select(
+                    F.col(self._POS_REL).alias("file_path"),
+                    F.col(self._POS_IDX).alias("pos"),
+                ).toArrow()
+                n_matched = tuples.num_rows
             else:
-                out_cols.append(F.col(name))
-        df = df.select(*out_cols)
-        for name, build in specs:
-            if build is not None:
-                # re-derive: updated source values must land their rows in
-                # the right partition dirs
-                df = df.withColumn(name, build())
-        data_dir = self._live_data_dir(schema, table)
-        gen_dir = os.path.join(data_dir, f"update_{uuid.uuid4().hex[:8]}")
-        if meta.sort_order:
-            sort_cols = [F.col(c) for c in meta.sort_order]
-            df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-                *sort_cols
+                n_matched = df.filter(hit).count()
+        if not n_matched and not dropped:
+            return {
+                "files_rewritten": 0,
+                "files_dropped_outright": 0,
+                "files_kept": len(entries_by_path),
+                "files_added": 0,
+                rows_key: 0,
+                "delete_files_added": 0,
+                "delete_bytes": 0,
+                "version": version,
+            }
+        new: list[str] = []
+        rewritten: list[dict] = []
+        del_root, del_entries = None, []
+        gen_dir = os.path.join(
+            self._live_data_dir(schema, table), f"{kind}_{uuid.uuid4().hex[:8]}"
+        )
+        scan_bytes = sum(e["bytes"] for e in scan)
+        if n_matched and not mor:
+            # ~hit keeps the rows whose condition is NULL
+            rows = df.filter(~hit) if assignments is None else image(df)
+            new, _rows = self._write_data(
+                self._shape_rewrite(rows, meta, scan_bytes, target_file_size_bytes),
+                meta, head, gen_dir,
             )
-            writer = df.write.mode("error")
-        else:
-            writer = df.coalesce(n_files).write.mode("error")
-        if specs:
-            writer = writer.partitionBy(*[n for n, _ in specs])
-        for k, v in self._write_options(meta).items():
-            writer = writer.option(k, v)
-        writer.parquet(gen_dir)
-        new = sorted(
-            os.path.join(base, fn)
-            for base, _d, fns in os.walk(gen_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
-        manifest = self.commit_snapshot(
-            schema, table, "update", add_files=new, drop_files=victim_paths,
-            expected_schema_id=head["schema_id"],
-            expected_spec_id=head["spec_id"] if "specs" in head else 0,
-            rewrite_read_version=version,
-            branch=branch,
-        )
+            rewritten = scan
+        elif n_matched:
+            if assignments is not None:
+                n_files = max(1, math.ceil(scan_bytes / target_file_size_bytes))
+                new, rows_new = self._write_data(
+                    image(df.filter(hit)).coalesce(n_files), meta, head, gen_dir
+                )
+                if rows_new != n_matched:
+                    shutil.rmtree(gen_dir, ignore_errors=True)
+                    raise RuntimeError(
+                        f"non-deterministic update on {schema}.{table}: the "
+                        f"delete scan matched {n_matched} rows but the "
+                        f"update scan wrote {rows_new} — condition and "
+                        "assignments must be deterministic for merge-on-read"
+                    )
+            del_root, del_entries = self._write_pos_deletes(
+                schema, table, tuples, head["last_seq"]
+            )
+        # a rewrite and new update images re-materialize rows read at
+        # ``version``: fence the schema/spec they were written under and
+        # any merge-on-read delete that lands in between
+        fenced = not mor or bool(new)
+        try:
+            manifest = self.commit_snapshot(
+                schema, table, kind,
+                add_files=new,
+                drop_files=[
+                    os.path.join(tdir, e["path"]) for e in dropped + rewritten
+                ] or None,
+                add_deletes=del_entries or None,
+                expected_schema_id=head["schema_id"],
+                expected_spec_id=(
+                    (head["spec_id"] if "specs" in head else 0)
+                    if fenced else None
+                ),
+                deletes_read_version=version if mor else None,
+                rewrite_read_version=version if fenced else None,
+                branch=branch,
+            )
+        except BaseException:
+            shutil.rmtree(gen_dir, ignore_errors=True)
+            if del_root is not None:
+                shutil.rmtree(del_root, ignore_errors=True)
+            raise
         return {
-            "files_rewritten": len(victims),
-            "files_kept": n_cold,
+            "files_rewritten": len(rewritten),
+            "files_dropped_outright": len(dropped),
+            "files_kept": len(entries_by_path) - len(rewritten) - len(dropped),
             "files_added": len(new),
-            "rows_matched": rows_matched,
+            rows_key: n_matched + sum(e["rows"] for e in dropped),
+            "delete_files_added": len(del_entries),
+            "delete_bytes": sum(e["bytes"] for e in del_entries),
             "version": manifest["version"],
         }
 
@@ -8328,8 +8116,6 @@ class ParquetWarehouse:
             return result
 
         if mode == "merge-on-read":
-            import pyarrow.parquet as pq
-
             # ONE head capture (head0) anchors version, schema resolution,
             # the key cast, and the pruning envelope — the r12 CoW
             # discipline extended to MoR; commit_snapshot's schema/spec
@@ -8392,38 +8178,22 @@ class ParquetWarehouse:
                 gen_dir = os.path.join(
                     data_dir, f"merge_{uuid.uuid4().hex[:8]}"
                 )
-                writer = ups.write.mode("error")
-                if part_specs:
-                    writer = writer.partitionBy(*[n for n, _ in part_specs])
-                for k, v in self._write_options(meta).items():
-                    writer = writer.option(k, v)
-                writer.parquet(gen_dir)
-                for base, _d, fns in os.walk(gen_dir):
-                    for fn in fns:
-                        if not fn.endswith(".parquet"):
-                            continue
-                        p = os.path.join(base, fn)
-                        if pq.ParquetFile(p).metadata.num_rows == 0:
-                            os.unlink(p)
-                            continue
-                        new.append(p)
+                new, _rows = self._write_data(ups, meta, head0, gen_dir)
             del_root, del_entries = (None, [])
             if target_entries:
                 # victims: the live rows of the files the key envelope
                 # admits whose keys the batch carries, found on the
                 # driver for small batches (their post-cast keys came
-                # back with the stats probe); ONE position-delete file.
-                # Its victims were computed at head0 with head0's pending
-                # deletes applied: read-position stamp, as delete_where
+                # back with the stats probe); ONE position-delete file,
+                # read-position stamped at head0 (its victims were
+                # computed with head0's pending deletes applied)
                 victims = self._key_victims(
                     schema, table, meta, head0, target_entries, key_cols,
                     key_rows_local, kdf,
                 )
                 del_root, del_entries = self._write_pos_deletes(
-                    schema, table, victims
+                    schema, table, victims, head0["last_seq"]
                 )
-                for d in del_entries:
-                    d["rv_seq"] = head0["last_seq"]
             if not new and not del_entries:
                 return {**result, "mode": "merge-on-read",
                         "delete_files_added": 0}
@@ -8518,18 +8288,7 @@ class ParquetWarehouse:
                 ).join(changed_keys, key_cols, "left_anti")
                 merged = kept.select(*table_cols).unionByName(merged)
         gen_dir = os.path.join(data_dir, f"merge_{uuid.uuid4().hex[:8]}")
-        writer = merged.write.mode("error")
-        if part_names:
-            writer = writer.partitionBy(*part_names)
-        for k, v in self._write_options(meta).items():
-            writer = writer.option(k, v)
-        writer.parquet(gen_dir)
-        new = sorted(
-            os.path.join(base, fn)
-            for base, _d, fns in os.walk(gen_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
+        new, _rows = self._write_data(merged, meta, head0, gen_dir)
         if not part_names:
             self.commit_snapshot(
                 schema, table, "merge_upsert", file_paths=new,
@@ -8537,12 +8296,6 @@ class ParquetWarehouse:
                 extra_meta=extra_meta,
             )
             return result
-        import pyarrow.parquet as pq
-
-        for p in list(new):
-            if pq.ParquetFile(p).metadata.num_rows == 0:
-                os.unlink(p)  # every victim row deleted, no new image
-                new.remove(p)
         tdir = self._tdir(schema, table)
         try:
             self.commit_snapshot(

@@ -402,7 +402,8 @@ def test_auto_mode_picks_cow_for_small_mv(spark, tmp_path):
     assert wh.count_rows("lab", "mv", fallback=False) is not None
     (d,) = wh.delete_files_report("lab", "mv")
     tuples = pq.read_table(os.path.join(wh._tdir("lab", "mv"), d["path"]))
-    _root, dels = wh._write_pos_deletes("lab", "mv", tuples)
+    _root, dels = wh._write_pos_deletes("lab", "mv", tuples, 0)
+    dels[0].pop("rv_seq")
     wh.commit_snapshot("lab", "mv", "delete", add_files=[], add_deletes=dels)
     assert wh.count_rows("lab", "mv", fallback=False) is None
     assert _resolve_agg_mv_mode(wh, "lab", "mv", "auto") == "merge-on-read"

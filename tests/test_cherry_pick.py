@@ -197,7 +197,7 @@ def test_pick_pos_delete_target_gone_raises(cp_table, spark):
         "file_path": pa.array([target], pa.string()),
         "pos": pa.array([0], pa.int64()),
     })
-    _root, dels = wh._write_pos_deletes("lab", "cpt", tuples)
+    _root, dels = wh._write_pos_deletes("lab", "cpt", tuples, bhead["last_seq"])
     wh.commit_snapshot(
         "lab", "cpt", "delete", add_files=[], add_deletes=dels,
         expected_schema_id=bhead.get("schema_id"), branch="pos",

@@ -448,7 +448,8 @@ def test_count_rows_metadata_only_mode_and_log_report(day_table, monkeypatch):
     # (no rv_seq, as cherry_pick leaves a picked delete): unprovable now
     (d,) = wh.delete_files_report("lab", "deltab")
     tuples = pq.read_table(os.path.join(wh._tdir("lab", "deltab"), d["path"]))
-    _root, dels = wh._write_pos_deletes("lab", "deltab", tuples)
+    _root, dels = wh._write_pos_deletes("lab", "deltab", tuples, 0)
+    dels[0].pop("rv_seq")
     wh.commit_snapshot("lab", "deltab", "delete", add_files=[], add_deletes=dels)
     _no_read(wh, monkeypatch)
     assert wh.count_rows("lab", "deltab", fallback=False) is None

@@ -421,7 +421,9 @@ def test_concurrent_rewrite_of_pos_targets_still_raises(eq_table):
         F.col(wh._POS_REL).alias("file_path"),
         F.col(wh._POS_IDX).alias("pos"),
     ).toArrow()
-    _root, del_entries = wh._write_pos_deletes("lab", "eqt", tuples)
+    _root, del_entries = wh._write_pos_deletes(
+        "lab", "eqt", tuples, head["last_seq"]
+    )
     wh.optimize("lab", "eqt")  # rewrites every targeted file
     with pytest.raises(RuntimeError, match="rewritten between read and commit"):
         wh.commit_snapshot(

@@ -114,7 +114,7 @@ def test_fold_inert_entries_metadata_only(spark, tmp_path):
     _root, dels = wh._write_pos_deletes("lab", "t", pa.table({
         "file_path": pa.array(["data/gone/part-0.parquet"], pa.string()),
         "pos": pa.array([0], pa.int64()),
-    }))
+    }), 0)
     wh.commit_snapshot("lab", "t", "delete", add_files=[], add_deletes=dels)
     expected = _rows(wh)
     assert wh.pending_delete_stats("lab", "t")["entries"] == 1

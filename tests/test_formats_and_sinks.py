@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,6 +52,29 @@ def test_format_roundtrip_avro(spark, tmp_path):
     path = str(tmp_path / "avro")
     write_table(src, path, "avro")
     assert read_table(spark, path, "avro", schema=src.schema).count() == 500
+
+
+def test_append_commits_no_empty_files(spark, tmp_path):
+    """Writes keep only files that hold rows: a 1-row frame over two
+    partitions (Spark writes an empty file for the empty first task)
+    commits one data file, and a first append of an empty frame commits
+    none yet records its schema."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
+    wh.create_table("lab", "one", "zstd", 1)
+    df = spark.range(0, 1, 1, 2).selectExpr("CAST(id AS INT) AS id", "'x' AS s")
+    wh.append("lab", "one", df)
+    (entry,) = wh.head_snapshot("lab", "one")["files"]
+    assert entry["rows"] == 1
+    path = os.path.join(wh._tdir("lab", "one"), entry["path"])
+    assert [
+        f for f in os.listdir(os.path.dirname(path)) if f.endswith(".parquet")
+    ] == [os.path.basename(path)]
+
+    wh.create_table("lab", "empty", "zstd", 1)
+    wh.append("lab", "empty", spark.createDataFrame([], "id int, s string"))
+    back = wh.read("lab", "empty")
+    assert back.schema.simpleString() == "struct<id:int,s:string>"
+    assert back.count() == 0
 
 
 def test_stream_into_warehouse(spark, tmp_path):

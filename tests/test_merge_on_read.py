@@ -554,6 +554,41 @@ def test_mor_delete_read_and_count_job_budgets(mor_table, spark):
     assert got == 8 and n <= 3
 
 
+def test_dml_job_budgets(mor_table, spark, tmp_path):
+    """One Spark job budget per row-level DML: on one victim file a
+    copy-on-write ``delete_where`` and ``update_where`` each launch 3 (the
+    match count's two adaptive stages, then the rewrite), and a
+    merge-on-read ``update_where`` on files no pending delete targets
+    launches 2 (the matched positions, then the images)."""
+    wh = ParquetWarehouse(spark, str(tmp_path / "cow"))
+    wh.create_table("lab", "cow", "zstd", 1)
+    for i in range(3):  # one file per batch, disjoint id ranges
+        wh.append("lab", "cow", spark.range(20 * i, 20 * i + 20, 1, 1).selectExpr(
+            "CAST(id AS INT) AS id", "CAST(id % 4 AS INT) AS k"
+        ))
+    out, n = _jobs_in_group(spark, "cow_delete", lambda: wh.delete_where(
+        "lab", "cow", "id BETWEEN 30 AND 34", mode="copy-on-write",
+    ))
+    assert out["files_rewritten"] == 1 and out["rows_deleted"] == 5 and n == 3
+    out, n = _jobs_in_group(spark, "cow_update", lambda: wh.update_where(
+        "lab", "cow", "id BETWEEN 40 AND 44", {"k": "9"}, mode="copy-on-write",
+    ))
+    assert out["files_rewritten"] == 1 and out["rows_matched"] == 5 and n == 3
+    assert wh.read("lab", "cow").filter("k = 9").count() == 5
+
+    wh = mor_table
+    wh.merge_upsert("lab", "mor", spark.range(10, 18).selectExpr(
+        "CAST(id AS INT) AS id", "9 AS k", "'up' AS u"
+    ), ["id"], mode="merge-on-read")
+    wh.read("lab", "mor").count()  # the once-per-instance URI probe
+    out, n = _jobs_in_group(spark, "mor_update", lambda: wh.update_where(
+        "lab", "mor", "id BETWEEN 40 AND 44", {"u": "'x'"},
+        mode="merge-on-read",
+    ))
+    assert out["rows_matched"] == 5 and n == 2
+    assert wh.read("lab", "mor").filter("u = 'x'").count() == 5
+
+
 def test_rewrite_read_version_fences_concurrent_mor_delete(mor_table, spark):
     """Reverse lost-delete race (ADVICE r8): a rewrite that drops files it
     READ before a concurrent MoR delete committed must RAISE — its output
