@@ -98,47 +98,6 @@ def _cmd_log_report(args: argparse.Namespace) -> int:
     return 0
 
 
-def _cmd_spec_report(args: argparse.Namespace) -> int:
-    """Partition-spec evolution report (r12): the spec history and, per
-    spec id, how many live files/rows/bytes still carry that layout —
-    the "has maintenance converged the table yet?" ledger.  Pure
-    metadata: no SparkSession is started."""
-    from hands_on_iceberg_compression_spark.sources.warehouse import ParquetWarehouse
-
-    wh = ParquetWarehouse(None, args.warehouse)
-    sp = wh.partition_spec(args.schema_name, args.table)
-    # partitions_report is the single per-(spec, partition) aggregation
-    agg: dict[int, dict] = {}
-    for row in wh.partitions_report(args.schema_name, args.table):
-        a = agg.setdefault(
-            row["spec_id"], {"files": 0, "rows": 0, "bytes": 0}
-        )
-        a["files"] += row["files"]
-        a["rows"] += row["rows"]
-        a["bytes"] += row["bytes"]
-    for pid_s in sorted(sp["specs"], key=int):
-        pid = int(pid_s)
-        t = sp["specs"][pid_s]
-        lay = f"PARTITIONED BY ({', '.join(t)})" if t else "unpartitioned"
-        a = agg.get(pid, {"files": 0, "rows": 0, "bytes": 0})
-        mark = " <- current" if pid == sp["spec_id"] else ""
-        print(
-            f"spec {pid}: {lay}  files={a['files']} "
-            f"rows={a['rows']} bytes={a['bytes']}{mark}"
-        )
-    stale = sum(v["files"] for k, v in agg.items() if k != sp["spec_id"])
-    if stale:
-        print(f"{stale} file(s) on older specs — optimize() converges them")
-    head = wh.head_snapshot(args.schema_name, args.table)
-    if head and (head.get("deletes") or head.get("delete_segments")):
-        print(
-            "note: rows are write-time counts; pending merge-on-read "
-            "deletes are not subtracted (log-report subtracts their "
-            "recorded per-file counts and shows live rows)"
-        )
-    return 0
-
-
 def _cmd_ndv_report(args: argparse.Namespace) -> int:
     """Manifest-only NDV report (r14): the table-level distinct-count
     estimate for a bloom column — per-file fill-derived estimates give
@@ -668,15 +627,6 @@ def main(argv: list[str] | None = None) -> int:
         "(empty endpoint = open; ints auto-coerced)",
     )
     lr.set_defaults(fn=_cmd_log_report)
-
-    sr = sub.add_parser(
-        "spec-report",
-        help="partition-spec evolution report: per-spec live files",
-    )
-    sr.add_argument("--warehouse", default="warehouse")
-    sr.add_argument("--schema", dest="schema_name", required=True)
-    sr.add_argument("--table", required=True)
-    sr.set_defaults(fn=_cmd_spec_report)
 
     op = sub.add_parser(
         "optimize",

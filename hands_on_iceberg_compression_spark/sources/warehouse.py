@@ -287,31 +287,6 @@ def partition_source_columns(partitioning: list[str]) -> set[str]:
     return out
 
 
-def transform_out_name(transform: str) -> str:
-    """The derived (or identity) partition column name one transform
-    produces — ``days(ts)`` -> ``ts_day``, ``bucket(4, k)`` ->
-    ``k_bucket``, ``country`` -> ``country``."""
-    return partition_transform_exprs([transform])[0][0]
-
-
-# Derived-column types as _conform_log_schema records them (the pmod/
-# xxhash64 bucket expr is bigint; date_format is string; F.year int).
-_TRANSFORM_SCHEMA_TYPES = {
-    "days": "date", "months": "string", "years": "int",
-    "hours": "string", "bucket": "bigint",
-}
-
-
-def transform_fn_name(transform: str) -> str | None:
-    """The transform's function name (``days``/``bucket``/...), or None
-    for an identity transform."""
-    m = _TRANSFORM_RE.match(transform.strip())
-    if not m:
-        raise ValueError(f"unsupported partition transform {transform!r}")
-    fn, _col, n, _bcol, _ident = m.groups()
-    return fn or ("bucket" if n else None)
-
-
 class AlreadyPublishedError(RuntimeError):
     """A cherry-pick whose ADDED files are all already live on the
     target ref — the commit was already picked/published.  Raised by
@@ -538,19 +513,19 @@ class ParquetWarehouse:
         return opts
 
     def _write_data(
-        self, df: DataFrame, meta: TableMeta, head: dict | None, target: str
+        self, df: DataFrame, meta: TableMeta, target: str
     ) -> tuple[list[str], int]:
         """THE data-file writer every warehouse write goes through: write
         the already-shaped ``df`` as parquet under the fresh dir
         ``target`` with the table's codec options, hive-partitioned by
-        ``head``'s CURRENT spec, and return (the sorted paths of the files
+        the table's spec, and return (the sorted paths of the files
         it wrote, their total rows).  A file with no rows is unlinked, not
         returned — Spark writes one for an empty first task or an empty
         frame — so no commit records a 0-row data file."""
         import pyarrow.parquet as pq
 
         writer = df.write.mode("error").options(**self._write_options(meta))
-        part = partition_transform_exprs(self._head_partitioning(meta, head))
+        part = partition_transform_exprs(self._partitioning(meta))
         if part:
             writer = writer.partitionBy(*[n for n, _ in part])
         writer.parquet(target)
@@ -612,12 +587,8 @@ class ParquetWarehouse:
         manifest records each file's partition values (Iceberg-manifest
         parity)."""
         meta = self.table_meta(schema, table)
-        # derive partition columns under the CURRENT spec (partition-spec
-        # evolution: the head, not the create-time meta, names the
-        # transforms new files are laid out by)
         head0 = self._head_light(schema, table, branch)
-        part_spec = self._head_partitioning(meta, head0)
-        writer_df, _ = apply_partition_transforms(df, part_spec)
+        writer_df, _ = apply_partition_transforms(df, self._partitioning(meta))
         # validate/conform against the recorded schema (schema evolution):
         # unknown columns error, omitted columns NULL-fill, the first
         # commit adopts this write's schema as schema 0
@@ -628,8 +599,7 @@ class ParquetWarehouse:
             batch_id = f"batch_{uuid.uuid4().hex[:12]}"
         batch_dir = os.path.join(self._live_data_dir(schema, table), batch_id)
         new, _rows = self._write_data(
-            writer_df, meta, head0,
-            os.path.join(batch_dir, f"g_{uuid.uuid4().hex[:8]}"),
+            writer_df, meta, os.path.join(batch_dir, f"g_{uuid.uuid4().hex[:8]}"),
         )
         self.commit_snapshot(
             schema,
@@ -638,7 +608,6 @@ class ParquetWarehouse:
             add_files=new,
             drop_prefix=batch_dir + os.sep,
             schema_fields=schema_fields,
-            spec_transforms=part_spec,
             branch=branch,
             extra_meta=extra_meta,
         )
@@ -749,73 +718,11 @@ class ParquetWarehouse:
         until expire_snapshots GCs them."""
         return os.path.join(self._tdir(schema, table), "data")
 
-    # --- partition-spec evolution (Iceberg spec-id model) ---------------
-    # Heads carry ALL partition specs the table has ever had
-    # ({spec_id: [transform, ...]}) plus the current ``spec_id``; every
-    # manifest entry records the spec its file was written under
-    # (``pid``, absent = 0 = the create-time meta spec).  add/drop
-    # partition field are METADATA-ONLY commits; old files are NEVER
-    # rewritten — reads group them by (sid, pid) and give each group its
-    # own hive layout, pruning consults each file's OWN spec's values.
-
     @classmethod
-    def _head_partitioning(
-        cls, meta: TableMeta, head: dict | None
-    ) -> list[str]:
-        """The CURRENT spec's transforms (CANONICALIZED — the meta
-        fallback may carry whitespace variants, and cross-ref fences
-        compare these lists): the head's specs dict when the table has
-        spec-evolved, else the create-time meta spec."""
-        if head is not None and "specs" in head:
-            sp = head["specs"][str(head["spec_id"])]
-        else:
-            sp = meta.partitioning or []
-        return [cls._canon_transform(t) for t in sp]
-
-    @classmethod
-    def _spec_transforms(
-        cls, meta: TableMeta, head: dict | None, pid: int
-    ) -> list[str]:
-        """The transforms of spec ``pid`` (0 = create-time meta spec,
-        also the implicit '0' entry of an evolved specs dict) —
-        canonicalized, so a ref whose specs dict was seeded by spec DDL
-        compares equal to a ref still on the verbatim meta fallback
-        (review r12: the cherry-pick pid-0 fence otherwise refuses
-        forever over a whitespace variant)."""
-        if head is not None and "specs" in head:
-            sp = head["specs"].get(str(pid))
-            if sp is not None:
-                return [cls._canon_transform(t) for t in sp]
-        if pid == 0:
-            return [cls._canon_transform(t) for t in (meta.partitioning or [])]
-        raise KeyError(f"no partition spec {pid} recorded")
-
-    @classmethod
-    def _all_partitioning(
-        cls, meta: TableMeta, head: dict | None
-    ) -> list[str]:
-        """Union of every spec's transforms ever recorded (insertion-
-        ordered, canon-deduped) — what static-type lookups and the
-        schema-change guard must consider: old specs' dir names live on
-        in old files however the current spec moved.  Two different
-        transforms can never share an output column name
-        (add_partition_field refuses the collision), so the union is
-        unambiguous."""
-        seen: set[str] = set()
-        out: list[str] = []
-        for t in meta.partitioning or []:
-            c = cls._canon_transform(t)
-            if c not in seen:
-                seen.add(c)
-                out.append(c)
-        if head is not None and "specs" in head:
-            for sid in sorted(head["specs"], key=int):
-                for t in head["specs"][sid]:
-                    c = cls._canon_transform(t)
-                    if c not in seen:
-                        seen.add(c)
-                        out.append(c)
-        return out
+    def _partitioning(cls, meta: TableMeta) -> list[str]:
+        """The table's partition spec, fixed at create time, canonicalized
+        so whitespace variants of one transform read the same."""
+        return [cls._canon_transform(t) for t in meta.partitioning or []]
 
     @staticmethod
     def _generation_root(path: str) -> str:
@@ -972,7 +879,6 @@ class ParquetWarehouse:
         files: list[str],
         fields: list[dict],
         with_pos: bool = False,
-        partitioning: list[str] | None = None,
     ) -> DataFrame:
         """Read an explicit manifest file list.  Partitioned tables group
         files by generation root and give each group its own ``basePath`` so
@@ -1008,8 +914,7 @@ class ParquetWarehouse:
                 ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
             )
 
-        if partitioning is None:
-            partitioning = meta.partitioning
+        partitioning = meta.partitioning
         if not partitioning:
             df = self.spark.read.schema(read_schema()).parquet(*files)
             return self._with_pos_cols(df) if with_pos else df
@@ -1279,11 +1184,9 @@ class ParquetWarehouse:
         # time-traveling until expire_snapshots garbage-collects them.  The
         # gen dir name is a uuid, not a version: the version is allocated
         # at commit time (CAS), so a concurrent writer can't collide on
-        # the path either.  It rewrites under the CURRENT spec (Iceberg
-        # rewrite_data_files posture): spec-evolved tables converge to one
-        # layout as maintenance touches their files.
+        # the path either.
         new, _rows = self._write_data(
-            df, meta, head,
+            df, meta,
             os.path.join(
                 self._live_data_dir(schema, table),
                 f"compact_{uuid.uuid4().hex[:8]}",
@@ -1314,9 +1217,7 @@ class ParquetWarehouse:
         if version is None:
             return 0
         head = self._load_head_light(schema, table, version, branch)
-        static_types = self._partition_static_types(
-            self._all_partitioning(meta, head)
-        )
+        static_types = self._partition_static_types(self._partitioning(meta))
         norm = self._norm_filter(partition_filter)
 
         def is_victim(e: dict) -> bool:
@@ -1363,9 +1264,9 @@ class ParquetWarehouse:
         """The ONE scoped-rewrite body (r19 factoring — partition-scoped
         optimize, the delete-scoped fold, and small-file compaction all
         share it): read the victim entries DELETE-APPLIED under the
-        current schema, write one new generation under the CURRENT
-        spec/sort order, and publish an add+drop delta fenced by
-        ``rewrite_read_version`` and the schema/spec ids of the head
+        current schema, write one new generation under the table's
+        spec and sort order, and publish an add+drop delta fenced by
+        ``rewrite_read_version`` and the schema id of the head
         that was read.  Returns the new file paths."""
         tdir = self._tdir(schema, table)
         victim_paths = [os.path.join(tdir, e["path"]) for e in victims]
@@ -1376,7 +1277,7 @@ class ParquetWarehouse:
             sum(e["bytes"] for e in victims), target_file_size_bytes,
         )
         new, _rows = self._write_data(
-            df, meta, head,
+            df, meta,
             os.path.join(
                 self._live_data_dir(schema, table),
                 f"compact_{uuid.uuid4().hex[:8]}",
@@ -1385,7 +1286,6 @@ class ParquetWarehouse:
         self.commit_snapshot(
             schema, table, "optimize", add_files=new, drop_files=victim_paths,
             expected_schema_id=head["schema_id"],
-            expected_spec_id=head["spec_id"] if "specs" in head else 0,
             rewrite_read_version=version,
             retire_deletes=retire_deletes,
             branch=branch,
@@ -1851,259 +1751,6 @@ class ParquetWarehouse:
             "pos": pa.array(out_pos, pa.int64()),
         })
 
-    _INT_BITS = {"tinyint": 7, "smallint": 15, "int": 31, "bigint": 63}
-
-    @classmethod
-    def _cast_local_key(cls, v, sql_type: str):
-        """ONE local key value cast to its recorded ``_PA_TYPES`` column
-        type the way Spark casts a key frame's value, so a list and a
-        DataFrame of the same keys delete the same rows: a float for an
-        integer column truncates toward zero (19.5 -> 19) and an integer
-        string parses; NaN, infinities, overflows and unparsable values
-        raise ValueError where the frame's cast yields NULL, which
-        ``delete_by_keys`` refuses.  A float for a string column raises
-        too: Python renders floats unlike Spark (1.0 vs "1.0", 1e20 vs
-        "1.0E20"), so such a key could quietly match the wrong rows —
-        pass the string."""
-        import datetime as _dt
-        import math
-
-        bad = ValueError(
-            f"key value {v!r} ({type(v).__name__}) is not representable "
-            f"as {sql_type}"
-        )
-        if sql_type in cls._INT_BITS:
-            if isinstance(v, int):  # bool too: Spark casts true to 1
-                out = int(v)
-            elif isinstance(v, float) and math.isfinite(v):
-                out = int(v)  # truncation toward zero, as Spark cast does
-            elif isinstance(v, str):
-                try:
-                    out = int(v.strip())
-                except ValueError:
-                    raise bad from None
-            else:
-                raise bad
-            lim = 1 << cls._INT_BITS[sql_type]
-            if not -lim <= out < lim:
-                raise ValueError(f"key value {v!r} overflows {sql_type}")
-            return out
-        if sql_type == "string":
-            if isinstance(v, str):
-                return v
-            if isinstance(v, bool):
-                return "true" if v else "false"  # Spark cast rendering
-            if isinstance(v, int):
-                return str(v)
-            raise bad
-        if sql_type == "boolean":
-            if isinstance(v, bool):
-                return v
-            raise bad
-        # date
-        if isinstance(v, _dt.datetime):
-            return v.date()
-        if isinstance(v, _dt.date):
-            return v
-        if isinstance(v, str):
-            try:
-                return _dt.date.fromisoformat(v.strip())
-            except ValueError:
-                raise bad from None
-        raise bad
-
-    # A key delete that loses its commit race to a rewrite of one of its
-    # target files rescans from the new head, at most this many times.
-    KEY_DELETE_ATTEMPTS = 8
-
-    def delete_by_keys(
-        self,
-        schema: str,
-        table: str,
-        keys,
-        eq_cols: list[str] | None = None,
-        branch: str = "main",
-    ) -> dict:
-        """Merge-on-read DELETE by key: remove every row whose key columns
-        equal one of ``keys``.  The victims come from ``merge_upsert``'s
-        key scan (``_key_victims``) over only the files whose manifest
-        bounds, partition values and blooms admit the keys, and ONE
-        position-delete file records them; no data file is rewritten.
-
-        ``keys`` is a list of dicts ({col: value}), a list of tuples
-        (with ``eq_cols`` naming the columns), a flat list of scalars
-        (single-column key), or a DataFrame of key rows.  Keys cast to the
-        recorded column types with one rule, Spark's: a float for an
-        integer column truncates, and a value the type cannot hold (NaN,
-        an overflow, an unparsable string) raises ValueError.  Local keys
-        of ``_PA_TYPES`` types cast on the driver (``_cast_local_key``,
-        which also refuses a float for a string column) and, up to the
-        driver-scan bounds, need no SparkSession and launch no Spark job.
-        DataFrame keys (and local keys of other types) stay in Spark: they
-        cast with ``try_cast``, one aggregate yields their count and
-        pruning envelope, and the victim scan semi-joins them.  NULL keys
-        raise: SQL equality never matches NULL.
-
-        Concurrency is ``delete_where``'s: a concurrent append merges (its
-        rows are not subject to this delete), and when a concurrent commit
-        rewrote a target file between the scan and the publish, the
-        delete rescans from the new head (``KEY_DELETE_ATTEMPTS``).  When
-        the manifest proves no live file can match, nothing is committed.
-
-        Returns {"rows_deleted" (exact), "keys", "delete_files_added",
-        "delete_bytes", "targets", "files_pruned", "version"}."""
-        import pyarrow as pa
-
-        version = self._latest_version(schema, table, branch)
-        no_op = {
-            "rows_deleted": 0,
-            "delete_files_added": 0,
-            "targets": 0,
-            "version": version,
-        }
-        if version is None:
-            return no_op
-        head = self._load_head_light(schema, table, version, branch)
-        kdf: DataFrame | None = None
-        if isinstance(keys, DataFrame):
-            cols = list(eq_cols) if eq_cols else list(keys.columns)
-            kdf = keys.select(*cols)
-            local = None
-        else:
-            rows = list(keys)
-            if not rows:
-                return no_op
-            first = rows[0]
-            if isinstance(first, dict):
-                cols = list(eq_cols) if eq_cols else sorted(first)
-                local = [tuple(r[c] for c in cols) for r in rows]
-            elif isinstance(first, (tuple, list)):
-                if not eq_cols:
-                    raise ValueError("tuple keys require eq_cols")
-                cols = list(eq_cols)
-                local = [tuple(r) for r in rows]
-            else:
-                if not eq_cols or len(eq_cols) != 1:
-                    raise ValueError("scalar keys require a 1-column eq_cols")
-                cols = list(eq_cols)
-                local = [(v,) for v in rows]
-            if any(len(t) != len(cols) for t in local):
-                raise ValueError("key tuple arity does not match eq_cols")
-        cur = {f["name"]: f for f in head["schemas"][str(head["schema_id"])]}
-        missing = [c for c in cols if c not in cur]
-        if missing:
-            raise ValueError(f"no column(s) {missing} in {schema}.{table}")
-        rec_types = {c: cur[c]["type"] for c in cols}
-        null_msg = (
-            "NULL key values are not supported: SQL equality never "
-            "matches NULL, so such a delete row is dead"
-        )
-        if local is not None and any(v is None for t in local for v in t):
-            raise ValueError(null_msg)
-        if local is not None and all(
-            t in self._PA_TYPES for t in rec_types.values()
-        ):
-            # re-dedup: casting can collide distinct raw keys (10, 10.5)
-            local = sorted(
-                {
-                    tuple(
-                        self._cast_local_key(v, rec_types[c])
-                        for v, c in zip(t, cols)
-                    )
-                    for t in local
-                },
-                key=repr,
-            )
-            n_keys = len(local)
-            if n_keys <= self.MERGE_DISCRETE_KEYS_MAX:
-                ranges = {
-                    c: sorted({t[i] for t in local}, key=repr)
-                    for i, c in enumerate(cols)
-                }
-            else:
-                ranges = {
-                    c: (min(t[i] for t in local), max(t[i] for t in local))
-                    for i, c in enumerate(cols)
-                }
-        else:
-            # key frame: the keys stay in Spark; one aggregate over the
-            # CAST keys yields their count, NULLs and pruning envelope
-            if local is not None:
-                try:
-                    raw = pa.table({
-                        c: pa.array([k[i] for k in local])
-                        for i, c in enumerate(cols)
-                    })
-                except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
-                    raise ValueError(f"mixed-type key values: {e}") from None
-                kdf = self.spark.createDataFrame(raw)
-                local = None
-            kdf = kdf.select(
-                *[F.col(c).try_cast(rec_types[c]).alias(c) for c in cols]
-            ).distinct()
-            aggs = [F.count(F.lit(1)).alias("__n")]
-            for c in cols:
-                aggs += [
-                    F.sum(F.col(c).isNull().cast("int")).alias(f"n_{c}"),
-                    F.min(c).alias(f"lo_{c}"),
-                    F.max(c).alias(f"hi_{c}"),
-                ]
-            env = kdf.agg(*aggs).collect()[0]
-            if any((env[f"n_{c}"] or 0) > 0 for c in cols):
-                raise ValueError(
-                    null_msg + " (a key value the recorded column type "
-                    "cannot represent casts to NULL and is rejected too)"
-                )
-            n_keys = env["__n"]
-            ranges = {c: (env[f"lo_{c}"], env[f"hi_{c}"]) for c in cols}
-        if not n_keys:
-            return no_op
-        meta = self.table_meta(schema, table)
-        for attempt in range(self.KEY_DELETE_ATTEMPTS):
-            targets, total, head = self._prune_entries(
-                schema, table, ranges, version=version, branch=branch
-            )
-            found = {
-                "keys": n_keys,
-                "targets": len(targets),
-                "files_pruned": total - len(targets),
-            }
-            if not targets:
-                return {**no_op, **found, "version": version}
-            victims = self._key_victims(
-                schema, table, meta, head, targets, cols, local, kdf
-            )
-            del_root, del_entries = self._write_pos_deletes(
-                schema, table, victims, head["last_seq"]
-            )
-            if not del_entries:
-                return {**no_op, **found, "version": version}
-            try:
-                manifest = self.commit_snapshot(
-                    schema, table, "delete",
-                    add_files=[],
-                    add_deletes=del_entries,
-                    expected_schema_id=head["schema_id"],
-                    deletes_read_version=version,
-                    branch=branch,
-                )
-            except DeleteTargetsRewrittenError:
-                shutil.rmtree(del_root, ignore_errors=True)
-                if attempt + 1 == self.KEY_DELETE_ATTEMPTS:
-                    raise
-                version = self._latest_version(schema, table, branch)
-                continue
-            except BaseException:
-                shutil.rmtree(del_root, ignore_errors=True)
-                raise
-            return {
-                **found,
-                "rows_deleted": victims.num_rows,
-                "delete_files_added": 1,
-                "delete_bytes": del_entries[0]["bytes"],
-                "version": manifest["version"],
-            }
-
     def delete_files_report(self, schema: str, table: str) -> list[dict]:
         """Iceberg ``$delete_files`` metadata table: the head's live
         position-delete entries (path, rows, bytes, kind, target files) —
@@ -2114,7 +1761,7 @@ class ParquetWarehouse:
             return []
         return [dict(d) for d in self._head_deletes(schema, table, head)]
 
-    # --- row-level DELETE / UPDATE (VERDICT r6 #3) -----------------------
+    # --- row-level DELETE (VERDICT r6 #3) --------------------------------
     def delete_where(
         self,
         schema: str,
@@ -2128,10 +1775,15 @@ class ParquetWarehouse:
         """Row-level DELETE — Iceberg ``DELETE FROM ... WHERE`` parity:
         remove every row where ``condition`` (a SQL boolean expression
         over the table's columns) evaluates TRUE; NULL keeps the row.  The
-        body is ``_dml_where``, shared with ``update_where``: a delete is
-        an update whose matched rows leave no image.  Victim selection
-        (``ranges``), the zero-match no-op and the concurrency fences are
-        documented there.
+        victims are the files whose manifest partition values and column
+        bounds intersect ``ranges`` (same shapes as ``prune_files``),
+        selected WITHOUT opening a footer: untouched files are never
+        opened, statted or moved.  The caller owns coverage: ``ranges``
+        must be implied by ``condition`` (the ``read_pruned`` contract).
+        When omitted they are DERIVED from the condition's safe
+        conjunctive-comparison subset (``_auto_ranges``); a condition
+        outside it makes every live file a victim — still correct, full
+        cost.
 
         ``mode`` selects the Iceberg write.delete.mode strategy (falls
         back to the ``delete_mode`` table property, then copy-on-write):
@@ -2149,11 +1801,27 @@ class ParquetWarehouse:
           single-document delete costing a manifest commit + a few KB and
           costing a 128 MB rewrite.
 
+        Matched rows come from the delete-APPLIED read of the victims (an
+        already-deleted row never matches again): merge-on-read collects
+        their (file_path, pos) tuples in one ``toArrow()``, copy-on-write
+        counts them in one ``count()``.  Either is the exact match count,
+        and zero with nothing dropped outright is a no-op — no write and
+        no commit, so a zero-match delete never churns a snapshot.
+
         In both modes a victim whose PARTITION VALUES alone prove that
         every row matches is dropped outright, with no read and no write
         (Iceberg's partition-aligned metadata-only delete: ``DELETE WHERE
         day = '2024-01-02'`` on a day-partitioned table touches zero data
         bytes).
+
+        Concurrency (Iceberg optimistic commit): concurrent APPENDS
+        retry-merge — their rows are not subject to this delete,
+        evaluated against the head it read.  A concurrent rewrite of a
+        victim RAISES (``drop_files`` conflicts, ``deletes_read_version``),
+        and so does a concurrent merge-on-read delete under a
+        copy-on-write rewrite (``rewrite_read_version``: it
+        re-materializes rows read here).  Earlier snapshots keep
+        time-traveling to the old rows until ``expire_snapshots``.
 
         Returns {"files_rewritten", "files_dropped_outright",
         "files_kept", "files_added", "rows_deleted",
@@ -2163,160 +1831,20 @@ class ParquetWarehouse:
         deletes already target it (counting it exactly would need the
         read the metadata-only drop exists to avoid); every scanned row
         is counted exactly off the delete-applied read."""
-        return self._dml_where(
-            schema, table, condition, None, ranges,
-            target_file_size_bytes, mode, branch,
-        )
-
-    def update_where(
-        self,
-        schema: str,
-        table: str,
-        condition: str,
-        assignments: dict[str, str],
-        ranges: dict | None = None,
-        target_file_size_bytes: int = 128 * 1024 * 1024,
-        mode: str | None = None,
-        branch: str = "main",
-    ) -> dict:
-        """Row-level UPDATE — Iceberg ``UPDATE ... SET ... WHERE``:
-        ``assignments`` maps column -> SQL expression over the row's
-        ORIGINAL values, cast to the column's recorded type so the table
-        schema never drifts; rows where ``condition`` is NULL are
-        untouched.  The body is ``_dml_where``, shared with
-        ``delete_where`` (victim selection, the zero-match no-op and the
-        concurrency fences are documented there).
-
-        Partition correctness: an update that changes a partition SOURCE
-        column moves its rows — transform columns are RE-DERIVED after the
-        assignments, so the new images land in their new hive dirs
-        (assigning directly to a derived transform column is refused;
-        update the source).
-
-        ``mode`` selects the Iceberg write.update.mode strategy (falls
-        back to the ``update_mode`` table property, then copy-on-write):
-        ``"copy-on-write"`` rewrites the victim files with the matched
-        rows updated; ``"merge-on-read"`` writes a position-delete file
-        for the matched rows plus NEW data files holding only their
-        updated images, in two Spark jobs — O(matched rows) IO instead of
-        a victim-file rewrite.
-
-        Returns {"files_rewritten", "files_dropped_outright" (always 0),
-        "files_kept", "files_added", "rows_matched",
-        "delete_files_added", "delete_bytes", "version"}."""
-        if not assignments:
-            raise ValueError("no assignments")
-        return self._dml_where(
-            schema, table, condition, assignments, ranges,
-            target_file_size_bytes, mode, branch,
-        )
-
-    def _dml_where(
-        self,
-        schema: str,
-        table: str,
-        condition: str,
-        assignments: dict[str, str] | None,
-        ranges: dict | None,
-        target_file_size_bytes: int,
-        mode: str | None,
-        branch: str,
-    ) -> dict:
-        """The ONE row-level write path: ``delete_where`` (``assignments``
-        None) and ``update_where``.  Mode -> head -> victims -> matched
-        rows -> position deletes or a rewrite -> commit.
-
-        Victims are the files whose manifest partition values and column
-        bounds intersect ``ranges`` (same shapes as ``prune_files``),
-        selected WITHOUT opening a footer: untouched files are never
-        opened, statted or moved.  The caller owns coverage: ``ranges``
-        must be implied by ``condition`` (the ``read_pruned`` contract).
-        When omitted they are DERIVED from the condition's safe
-        conjunctive-comparison subset (``_auto_ranges``); a condition
-        outside it makes every live file a victim — still correct, full
-        cost.
-
-        Matched rows come from the delete-APPLIED read of the victims (an
-        already-deleted row never matches again): merge-on-read collects
-        their (file_path, pos) tuples in one ``toArrow()``, copy-on-write
-        counts them in one ``count()``.  Either is the exact match count,
-        and zero with nothing dropped outright is a no-op — no write and
-        no commit, so a zero-match DML never churns a snapshot or
-        invalidates a ``read_incremental`` window.  A merge-on-read update
-        then writes the images and aborts when their row count differs
-        from the tuple count: the condition or an assignment is
-        non-deterministic, and committing would lose or duplicate rows.
-
-        Concurrency (Iceberg optimistic commit): concurrent APPENDS
-        retry-merge — their rows are not subject to this DML, evaluated
-        against the head it read.  A concurrent rewrite of a victim
-        RAISES (``drop_files`` conflicts, ``deletes_read_version``), and
-        so does a concurrent merge-on-read delete under a rewrite or new
-        update images (``rewrite_read_version``: they re-materialize rows
-        read here).  Earlier snapshots keep time-traveling to the old
-        rows until ``expire_snapshots``."""
-        kind = "delete" if assignments is None else "update"
-        rows_key = "rows_deleted" if assignments is None else "rows_matched"
         meta = self.table_meta(schema, table)
         if mode is None:
-            mode = str(meta.properties.get(f"{kind}_mode", "copy-on-write"))
+            mode = str(meta.properties.get("delete_mode", "copy-on-write"))
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(
-                f"unknown {kind} mode {mode!r}: expected 'copy-on-write' "
+                f"unknown delete mode {mode!r}: expected 'copy-on-write' "
                 "or 'merge-on-read'"
             )
         mor = mode == "merge-on-read"
         version = self._latest_version(schema, table, branch)
         if version is None:
-            return {"files_rewritten": 0, "files_kept": 0, rows_key: 0}
+            return {"files_rewritten": 0, "files_kept": 0, "rows_deleted": 0}
         head = self._load_snapshot(schema, table, version, branch)
         hit = F.coalesce(F.expr(condition), F.lit(False))
-        if assignments is not None:
-            rec_types = {
-                f["name"]: f["type"]
-                for f in head["schemas"][str(head["schema_id"])]
-            }
-            # transforms of the CURRENT spec are re-derived; the guard
-            # covers EVERY recorded spec's derived columns (an old spec's
-            # derived column still lives in old files' dirs — assigning to
-            # it would desync the stored column from the dirs)
-            specs = partition_transform_exprs(self._head_partitioning(meta, head))
-            derived = {
-                n
-                for n, b in partition_transform_exprs(
-                    self._all_partitioning(meta, head)
-                )
-                if b is not None
-            }
-            for c in assignments:
-                if c in derived:
-                    raise ValueError(
-                        f"cannot assign to derived partition column {c!r}; "
-                        "update its source column and the transform re-derives"
-                    )
-                if c not in rec_types:
-                    raise ValueError(f"no column {c!r} in {schema}.{table}")
-
-        def image(rows: DataFrame) -> DataFrame:
-            # ONE select, every expression bound to the ORIGINAL row: SQL
-            # UPDATE evaluates the condition and all SET expressions
-            # against the pre-update values (sequential withColumn would
-            # let later assignments see earlier ones — a swap {a: b, b: a}
-            # or a condition on an assigned column would corrupt silently)
-            cols = []
-            for name in rows.columns:
-                if name in (self._POS_FILE, self._POS_IDX, self._POS_REL):
-                    continue
-                col = F.col(name)
-                if name in assignments:
-                    val = F.expr(assignments[name]).cast(rec_types[name])
-                    col = F.when(hit, val).otherwise(col)
-                cols.append(col.alias(name))
-            rows = rows.select(*cols)
-            for name, build in specs:
-                if build is not None:
-                    rows = rows.withColumn(name, build())
-            return rows
 
         tdir = self._tdir(schema, table)
         entries_by_path = {e["path"]: e for e in head["files"]}
@@ -2333,9 +1861,7 @@ class ParquetWarehouse:
             ]
         # METADATA-ONLY drop (a delete's partition-aligned fast path): a
         # victim whose PARTITION VALUES alone prove every row matches
-        conj = (
-            conjuncts_from_condition(condition) if assignments is None else None
-        )
+        conj = conjuncts_from_condition(condition)
 
         def fully_matched(e: dict) -> bool:
             parts = e.get("partitions")
@@ -2366,7 +1892,7 @@ class ParquetWarehouse:
                 "files_dropped_outright": 0,
                 "files_kept": len(entries_by_path),
                 "files_added": 0,
-                rows_key: 0,
+                "rows_deleted": 0,
                 "delete_files_added": 0,
                 "delete_bytes": 0,
                 "version": version,
@@ -2375,53 +1901,35 @@ class ParquetWarehouse:
         rewritten: list[dict] = []
         del_root, del_entries = None, []
         gen_dir = os.path.join(
-            self._live_data_dir(schema, table), f"{kind}_{uuid.uuid4().hex[:8]}"
+            self._live_data_dir(schema, table), f"delete_{uuid.uuid4().hex[:8]}"
         )
-        scan_bytes = sum(e["bytes"] for e in scan)
         if n_matched and not mor:
             # ~hit keeps the rows whose condition is NULL
-            rows = df.filter(~hit) if assignments is None else image(df)
             new, _rows = self._write_data(
-                self._shape_rewrite(rows, meta, scan_bytes, target_file_size_bytes),
-                meta, head, gen_dir,
+                self._shape_rewrite(
+                    df.filter(~hit), meta, sum(e["bytes"] for e in scan),
+                    target_file_size_bytes,
+                ),
+                meta, gen_dir,
             )
             rewritten = scan
         elif n_matched:
-            if assignments is not None:
-                n_files = max(1, math.ceil(scan_bytes / target_file_size_bytes))
-                new, rows_new = self._write_data(
-                    image(df.filter(hit)).coalesce(n_files), meta, head, gen_dir
-                )
-                if rows_new != n_matched:
-                    shutil.rmtree(gen_dir, ignore_errors=True)
-                    raise RuntimeError(
-                        f"non-deterministic update on {schema}.{table}: the "
-                        f"delete scan matched {n_matched} rows but the "
-                        f"update scan wrote {rows_new} — condition and "
-                        "assignments must be deterministic for merge-on-read"
-                    )
             del_root, del_entries = self._write_pos_deletes(
                 schema, table, tuples, head["last_seq"]
             )
-        # a rewrite and new update images re-materialize rows read at
-        # ``version``: fence the schema/spec they were written under and
-        # any merge-on-read delete that lands in between
-        fenced = not mor or bool(new)
+        # a rewrite re-materializes rows read at ``version``: fence any
+        # merge-on-read delete that lands in between
         try:
             manifest = self.commit_snapshot(
-                schema, table, kind,
+                schema, table, "delete",
                 add_files=new,
                 drop_files=[
                     os.path.join(tdir, e["path"]) for e in dropped + rewritten
                 ] or None,
                 add_deletes=del_entries or None,
                 expected_schema_id=head["schema_id"],
-                expected_spec_id=(
-                    (head["spec_id"] if "specs" in head else 0)
-                    if fenced else None
-                ),
                 deletes_read_version=version if mor else None,
-                rewrite_read_version=version if fenced else None,
+                rewrite_read_version=None if mor else version,
                 branch=branch,
             )
         except BaseException:
@@ -2434,7 +1942,7 @@ class ParquetWarehouse:
             "files_dropped_outright": len(dropped),
             "files_kept": len(entries_by_path) - len(rewritten) - len(dropped),
             "files_added": len(new),
-            rows_key: n_matched + sum(e["rows"] for e in dropped),
+            "rows_deleted": n_matched + sum(e["rows"] for e in dropped),
             "delete_files_added": len(del_entries),
             "delete_bytes": sum(e["bytes"] for e in del_entries),
             "version": manifest["version"],
@@ -2671,76 +2179,42 @@ class ParquetWarehouse:
         entries: list[dict],
         with_pos: bool = False,
     ) -> DataFrame:
-        """Read manifest entries under ``head``'s schema AND partition
-        spec (the snapshot's own — time travel passes an old head and
-        gets the old shape).  Entries written under other (schema id,
-        spec id) pairs are read in per-(sid, pid) groups — each group
-        gets ITS OWN hive layout — and projected through the field-id
-        mapping; transform-derived columns of the CURRENT spec that a
-        group's schema predates are COMPUTED from their source column
-        (never NULL-filled: the transform is deterministic, so
-        predicates on e.g. ``ts_day`` stay correct across a spec
-        boundary).  The single-(schema, spec) table takes one straight
-        ``_read_file_list`` with zero projection overhead.  ``with_pos``
-        threads the (file, row ordinal, manifest-relative path) position
-        columns through every shape — the merge-on-read substrate."""
+        """Read manifest entries under ``head``'s schema (the snapshot's
+        own — time travel passes an old head and gets the old shape).
+        Entries written under other schema ids are read in per-sid
+        groups and projected through the field-id mapping.  The
+        single-schema table takes one straight ``_read_file_list`` with
+        zero projection overhead.  ``with_pos`` threads the (file, row
+        ordinal, manifest-relative path) position columns through every
+        shape — the merge-on-read substrate."""
         tdir = self._tdir(schema, table)
         extras = (self._POS_FILE, self._POS_IDX) if with_pos else ()
         schemas = head["schemas"]
-        cur_pid = int(head["spec_id"]) if "specs" in head else 0
-        cur_part = self._head_partitioning(meta, head)
-        target_sid = head["schema_id"]
+        target_sid = int(head["schema_id"])
         tgt = schemas[str(target_sid)]
-        keys = {
-            (int(e.get("sid", 0)), int(e.get("pid", 0))) for e in entries
-        }
-        if keys <= {(int(target_sid), cur_pid)}:
+        groups: dict[int, list[str]] = {}
+        for e in entries:
+            groups.setdefault(int(e.get("sid", 0)), []).append(
+                os.path.join(tdir, e["path"])
+            )
+        if set(groups) <= {target_sid}:
             df = self._read_file_list(
-                meta,
-                [os.path.join(tdir, e["path"]) for e in entries],
-                fields=tgt,
-                with_pos=with_pos,
-                partitioning=cur_part,
+                meta, groups.get(target_sid, []), fields=tgt, with_pos=with_pos
             )
         else:
             from functools import reduce
 
-            groups: dict[tuple[int, int], list[str]] = {}
-            for e in entries:
-                groups.setdefault(
-                    (int(e.get("sid", 0)), int(e.get("pid", 0))), []
-                ).append(os.path.join(tdir, e["path"]))
-            derived = {
-                n: b
-                for n, b in partition_transform_exprs(cur_part)
-                if b is not None
-            }
-            tgt_by_name = {f["name"]: f for f in tgt}
             frames = []
-            for sid, pid in sorted(groups):
+            for sid in sorted(groups):
                 src = schemas[str(sid)]
                 g = self._read_file_list(
-                    meta,
-                    groups[(sid, pid)],
-                    fields=src,
-                    with_pos=with_pos,
-                    partitioning=self._spec_transforms(meta, head, pid),
+                    meta, groups[sid], fields=src, with_pos=with_pos
                 )
-                if sid == int(target_sid) and pid == cur_pid:
-                    # current-(schema, spec) group: no projection —
-                    # keeps parquet metadata-only count and the
-                    # narrowest possible plan for the files that
-                    # dominate a maintained table
-                    frames.append(g)
-                    continue
-                g = self._project_to_schema(g, src, tgt, extras)
-                # computed fill: a current-spec derived column whose
-                # field id predates this group's schema
-                src_ids = {f["id"] for f in src}
-                for n, build in derived.items():
-                    f = tgt_by_name.get(n)
-                    if f is not None and f["id"] not in src_ids:
-                        g = g.withColumn(n, build().cast(f["type"]))
+                if sid != target_sid:
+                    # the current-schema group skips projection — keeps
+                    # parquet metadata-only count and the narrowest plan
+                    # for the files that dominate a maintained table
+                    g = self._project_to_schema(g, src, tgt, extras)
                 frames.append(g)
             df = reduce(lambda a, b: a.unionByName(b), frames)
         if with_pos:
@@ -3026,7 +2500,7 @@ class ParquetWarehouse:
                 )
             schemas = {k: [dict(f) for f in v] for k, v in head["schemas"].items()}
             cur = [dict(f) for f in schemas[str(head["schema_id"])]]
-            new_fields = mutate(cur, schemas, meta, head)
+            new_fields = mutate(cur, schemas, meta)
             new_sid = max(int(k) for k in schemas) + 1
             schemas[str(new_sid)] = new_fields
             version = head["version"] + 1
@@ -3043,10 +2517,6 @@ class ParquetWarehouse:
                 "schemas": schemas,
                 "schema_id": new_sid,
             }
-            if "specs" in head:
-                # partition-spec carry (every-head-writer discipline)
-                manifest["specs"] = head["specs"]
-                manifest["spec_id"] = head["spec_id"]
             path = os.path.join(snap_dir, f"v{version:06d}.json")
             if self._cas_link(manifest, path):
                 self._write_version_hint(schema, table, version, branch)
@@ -3054,24 +2524,19 @@ class ParquetWarehouse:
             # lost the race — re-derive from the winner's head
 
     def _schema_change_guard(
-        self, meta: TableMeta, name: str, verb: str, head: dict | None = None,
+        self, meta: TableMeta, name: str, verb: str
     ) -> None:
         """Columns the hive dir layout or sort contract embeds by NAME
         cannot be renamed/dropped (Iceberg carries partition specs by
-        field id; dir-encoded paths cannot).  EVERY spec the table has
-        ever had guards its sources and outputs — a spec dropped by
-        partition-spec evolution still has live files whose dirs embed
-        the old names (reads parse them by name; VERDICT r11's
-        rename-of-a-new-spec's-source interplay is refused here too)."""
-        allp = self._all_partitioning(meta, head)
-        guarded = partition_source_columns(allp) | {
-            n for n, _ in partition_transform_exprs(allp)
+        field id; dir-encoded paths cannot)."""
+        part = self._partitioning(meta)
+        guarded = partition_source_columns(part) | {
+            n for n, _ in partition_transform_exprs(part)
         }
         if name in guarded:
             raise ValueError(
-                f"cannot {verb} column {name!r}: it is referenced by a "
-                f"recorded partitioning spec (current or historical — "
-                "partition dir names embed it)"
+                f"cannot {verb} column {name!r}: it is referenced by the "
+                "partitioning spec (partition dir names embed it)"
             )
         if name in (meta.sort_order or []):
             raise ValueError(
@@ -3097,7 +2562,7 @@ class ParquetWarehouse:
             except Exception as exc:
                 raise ValueError(f"invalid column type {dtype!r}") from exc
 
-        def mutate(cur: list[dict], schemas: dict, meta: TableMeta, head: dict) -> list[dict]:
+        def mutate(cur: list[dict], schemas: dict, meta: TableMeta) -> list[dict]:
             if any(f["name"] == name for f in cur):
                 raise ValueError(
                     f"column {name!r} already exists in {schema}.{table}"
@@ -3123,13 +2588,13 @@ class ParquetWarehouse:
         id is unchanged, so files written under the old name keep
         resolving — reads alias through the id mapping, no rewrite."""
 
-        def mutate(cur: list[dict], schemas: dict, meta: TableMeta, head: dict) -> list[dict]:
+        def mutate(cur: list[dict], schemas: dict, meta: TableMeta) -> list[dict]:
             names = {f["name"] for f in cur}
             if old not in names:
                 raise ValueError(f"no column {old!r} in {schema}.{table}")
             if new in names:
                 raise ValueError(f"column {new!r} already exists in {schema}.{table}")
-            self._schema_change_guard(meta, old, "rename", head)
+            self._schema_change_guard(meta, old, "rename")
             return [
                 {**f, "name": new} if f["name"] == old else f for f in cur
             ]
@@ -3211,7 +2676,7 @@ class ParquetWarehouse:
             except Exception as exc:
                 raise ValueError(f"invalid column type {new_type!r}") from exc
 
-        def mutate(cur: list[dict], schemas: dict, meta: TableMeta, head: dict) -> list[dict]:
+        def mutate(cur: list[dict], schemas: dict, meta: TableMeta) -> list[dict]:
             old = next((f for f in cur if f["name"] == name), None)
             if old is None:
                 raise ValueError(f"no column {name!r} in {schema}.{table}")
@@ -3244,19 +2709,18 @@ class ParquetWarehouse:
         in the files (old snapshots still present it); the current schema
         simply stops selecting the field."""
 
-        def mutate(cur: list[dict], schemas: dict, meta: TableMeta, head: dict) -> list[dict]:
+        def mutate(cur: list[dict], schemas: dict, meta: TableMeta) -> list[dict]:
             if not any(f["name"] == name for f in cur):
                 raise ValueError(f"no column {name!r} in {schema}.{table}")
             if len(cur) == 1:
                 raise ValueError("cannot drop the only column")
-            self._schema_change_guard(meta, name, "drop", head)
+            self._schema_change_guard(meta, name, "drop")
             return [f for f in cur if f["name"] != name]
 
         return self._commit_schema_change(
             schema, table, "drop_column", mutate, branch
         )
 
-    # --- partition-spec evolution DDL (VERDICT r11 #1) -------------------
     @staticmethod
     def _canon_transform(transform: str) -> str:
         """Canonical serialization of one transform spec, so whitespace
@@ -3271,244 +2735,6 @@ class ParquetWarehouse:
         if n:
             return f"bucket({int(n)}, {bcol})"
         return ident
-
-    def add_partition_field(
-        self, schema: str, table: str, transform: str, branch: str = "main",
-    ) -> dict:
-        """Iceberg ``ALTER TABLE ... ADD PARTITION FIELD`` — a METADATA-
-        ONLY CAS commit: the head gains a new spec (current spec plus
-        ``transform``) under a fresh ``spec_id``; NO data file is touched
-        or rewritten.  Files keep the spec they were written under
-        (entries record ``pid``); new appends lay out by the new spec;
-        reads group files by spec and pruning consults each file's OWN
-        spec's partition values (the daily -> hourly repartitioning story
-        a long-lived table's owner hits as volume grows — reference
-        README.md:85-86 is the fixed-spec starting point).
-
-        A non-identity transform (``days``/``months``/``years``/
-        ``hours``/``bucket``) also ADDS its derived column to the table
-        schema in the SAME commit (this model exposes transform columns
-        — they are schema columns from table creation on); rows written
-        before the spec change read the derived value COMPUTED from the
-        source column, never NULL, so predicates on it stay correct
-        across the spec boundary.  Refused: a transform already in the
-        current spec; an output-column name another recorded transform
-        produces (hive dirs resolve by name — two transforms sharing one
-        name would be unreadable); a non-identity output name already in
-        the schema as an ordinary column; a source column absent from
-        the current schema."""
-        canon = self._canon_transform(transform)
-        out_name = transform_out_name(canon)
-        fn = transform_fn_name(canon)
-        src_col = next(iter(partition_source_columns([canon])))
-
-        def mutate_specs(head, meta, schemas):
-            cur_schema = schemas[str(head["schema_id"])]
-            names = {f["name"] for f in cur_schema}
-            if src_col not in names:
-                raise ValueError(
-                    f"cannot add partition field {canon!r}: source column "
-                    f"{src_col!r} is not in the current schema of "
-                    f"{schema}.{table}"
-                )
-            specs = {
-                k: [self._canon_transform(t) for t in v]
-                for k, v in (
-                    head.get("specs")
-                    or {"0": list(meta.partitioning or [])}
-                ).items()
-            }
-            cur_spec = specs[str(head.get("spec_id", 0))]
-            if canon in cur_spec:
-                raise ValueError(
-                    f"{canon!r} is already a partition field of "
-                    f"{schema}.{table}"
-                )
-            for sp in specs.values():
-                for t in sp:
-                    if t != canon and transform_out_name(t) == out_name:
-                        raise ValueError(
-                            f"cannot add partition field {canon!r}: its "
-                            f"output column {out_name!r} collides with "
-                            f"recorded transform {t!r} (hive dirs resolve "
-                            "by name)"
-                        )
-            schema_bump = None
-            if fn is not None:  # non-identity: derived column joins the schema
-                if out_name in names:
-                    raise ValueError(
-                        f"cannot add partition field {canon!r}: column "
-                        f"{out_name!r} already exists in the schema — it "
-                        "would be overwritten by the transform on every "
-                        "write; rename or drop it first"
-                    )
-                next_id = (
-                    max(
-                        (f["id"] for flds in schemas.values() for f in flds),
-                        default=0,
-                    )
-                    + 1
-                )
-                schema_bump = cur_schema + [{
-                    "id": next_id,
-                    "name": out_name,
-                    "type": _TRANSFORM_SCHEMA_TYPES[fn],
-                }]
-            new_pid = max(int(k) for k in specs) + 1
-            specs[str(new_pid)] = cur_spec + [canon]
-            return specs, new_pid, schema_bump
-
-        return self._commit_spec_change(
-            schema, table, "add_partition_field", mutate_specs, branch
-        )
-
-    def drop_partition_field(
-        self, schema: str, table: str, transform: str, branch: str = "main",
-    ) -> dict:
-        """Iceberg ``ALTER TABLE ... DROP PARTITION FIELD`` — metadata-
-        only: the head gains a new spec WITHOUT ``transform``; files
-        written under older specs keep their layout and their recorded
-        partition values (still pruned by them); new appends stop laying
-        out by it.  A non-identity transform's derived column is DROPPED
-        from the schema in the same commit (it existed only as the
-        transform's output); identity fields are ordinary data columns
-        and the schema is untouched.  Refused when the derived column is
-        in the sort order."""
-        canon = self._canon_transform(transform)
-        out_name = transform_out_name(canon)
-        fn = transform_fn_name(canon)
-
-        def mutate_specs(head, meta, schemas):
-            specs = {
-                k: [self._canon_transform(t) for t in v]
-                for k, v in (
-                    head.get("specs")
-                    or {"0": list(meta.partitioning or [])}
-                ).items()
-            }
-            cur_spec = specs[str(head.get("spec_id", 0))]
-            if canon not in cur_spec:
-                raise ValueError(
-                    f"{canon!r} is not a partition field of the current "
-                    f"spec of {schema}.{table} (spec: {cur_spec})"
-                )
-            new_spec = [t for t in cur_spec if t != canon]
-            schema_bump = None
-            if fn is not None:
-                cur_schema = schemas[str(head["schema_id"])]
-                if out_name in (meta.sort_order or []):
-                    raise ValueError(
-                        f"cannot drop partition field {canon!r}: its "
-                        f"column {out_name!r} is in the table sort order"
-                    )
-                # dropping the derived column would wedge every append
-                # if another transform still in the spec derives FROM it
-                # (review r12: add days(ts) -> add bucket(4, ts_day) ->
-                # drop days(ts) left a spec sourcing a column the schema
-                # no longer had)
-                dependents = [
-                    t
-                    for t in new_spec
-                    if out_name in partition_source_columns([t])
-                ]
-                if dependents:
-                    raise ValueError(
-                        f"cannot drop partition field {canon!r}: its "
-                        f"column {out_name!r} is the source of remaining "
-                        f"partition field(s) {dependents} — drop those "
-                        "first"
-                    )
-                if len(cur_schema) == 1:
-                    raise ValueError("cannot drop the only column")
-                schema_bump = [
-                    f for f in cur_schema if f["name"] != out_name
-                ]
-            new_pid = max(int(k) for k in specs) + 1
-            specs[str(new_pid)] = new_spec
-            return specs, new_pid, schema_bump
-
-        return self._commit_spec_change(
-            schema, table, "drop_partition_field", mutate_specs, branch
-        )
-
-    def _commit_spec_change(
-        self, schema: str, table: str, operation: str, mutate_specs, branch: str,
-    ) -> dict:
-        """CAS-commit a METADATA-ONLY partition-spec change (optionally
-        bumping the schema in the SAME commit when a derived column joins
-        or leaves): segment refs, totals, and the merge-on-read delete
-        set carry verbatim; old spec ids are never removed or reused —
-        live files written under them resolve forever.  The same commit
-        loop and head-carry discipline as ``_commit_schema_change``."""
-        meta = self.table_meta(schema, table)
-        snap_dir = self._ref_dir(schema, table, branch)
-        import time as _time
-
-        while True:
-            head = self._head_light(schema, table, branch)
-            if head is None and branch != "main":
-                raise ValueError(
-                    f"no branch {branch!r} on {schema}.{table} — "
-                    "create_branch() first"
-                )
-            if head is None:
-                raise ValueError(
-                    f"{schema}.{table} has no recorded schema — partition-"
-                    "spec evolution needs one (append first)"
-                )
-            schemas = {
-                k: [dict(f) for f in v] for k, v in head["schemas"].items()
-            }
-            specs, new_pid, schema_bump = mutate_specs(head, meta, schemas)
-            manifest = {
-                "version": head["version"] + 1,
-                "parent": head["version"],
-                "operation": operation,
-                "ts": round(_time.time(), 3),
-                "last_seq": head["last_seq"],
-                **self._carried_state(head),
-                "specs": specs,
-                "spec_id": new_pid,
-            }
-            if schema_bump is not None:
-                # dual mutation, one commit: the derived column and its
-                # spec land/leave atomically
-                new_sid = max(int(k) for k in schemas) + 1
-                schemas[str(new_sid)] = schema_bump
-                manifest["schemas"] = schemas
-                manifest["schema_id"] = new_sid
-            else:
-                manifest["schemas"] = head["schemas"]
-                manifest["schema_id"] = head["schema_id"]
-            path = os.path.join(snap_dir, f"v{manifest['version']:06d}.json")
-            if self._cas_link(manifest, path):
-                self._write_version_hint(
-                    schema, table, manifest["version"], branch
-                )
-                return manifest
-            # lost the race — re-derive from the winner's head
-
-    def partition_spec(
-        self, schema: str, table: str, branch: str = "main"
-    ) -> dict:
-        """The current spec and the full spec history —
-        ``{"spec_id", "transforms", "specs"}`` (Iceberg ``$partitions``
-        spec metadata / ``table.spec()``)."""
-        meta = self.table_meta(schema, table)
-        head = self._head_light(schema, table, branch)
-        cur = self._head_partitioning(meta, head)
-        specs = (
-            {k: list(v) for k, v in head["specs"].items()}
-            if head is not None and "specs" in head
-            else {"0": list(meta.partitioning or [])}
-        )
-        return {
-            "spec_id": (
-                head["spec_id"] if head is not None and "specs" in head else 0
-            ),
-            "transforms": cur,
-            "specs": specs,
-        }
 
     # --- snapshot/manifest log (Iceberg-manifest analogue) ----------------
     def _snap_dir(self, schema: str, table: str) -> str:
@@ -4081,7 +3307,7 @@ class ParquetWarehouse:
         ~200 KB typical — sidecar writes stay driver-side like every
         other manifest artifact).  Falls back to the in-process build
         when no session is attached (spark=None warehouses: the
-        zero-Spark delete_by_keys/multiprocess-CAS paths), for a single
+        zero-Spark multiprocess-CAS paths), for a single
         file (job overhead > decode), or if the job itself fails (bloom
         errors never fail a commit)."""
         if not pending or not cols:
@@ -4327,9 +3553,7 @@ class ParquetWarehouse:
                 )
         head = self._load_head_light(schema, table, version, branch)
         norm = self._norm_filter(ranges)
-        static_types = self._partition_static_types(
-            self._all_partitioning(meta, head)
-        )
+        static_types = self._partition_static_types(self._partitioning(meta))
         bmaps = self._bounds_maps(head)
         bloom_memo: dict = {}  # one hash pass per column per prune call
         kept: list[dict] = []
@@ -4840,8 +4064,6 @@ class ParquetWarehouse:
         expected_parent: int | None = None,
         schema_fields: list[dict] | None = None,
         expected_schema_id: int | None = None,
-        spec_transforms: list[str] | None = None,
-        expected_spec_id: int | None = None,
         add_deletes: list[dict] | None = None,
         retire_deletes: list[str] | None = None,
         deletes_read_version: int | None = None,
@@ -5005,33 +4227,13 @@ class ParquetWarehouse:
                     )
                 fields0 = self._footer_schema_fields(tdir, paths[0])
             new_schema0 = [{"id": i + 1, **f} for i, f in enumerate(fields0)]
-        # partition-spec-id resolution mirrors the schema id: fresh data
-        # entries stamp the CURRENT spec (what their writer laid dirs out
-        # by — the spec_transforms/expected_spec_id fences below abort a
-        # publish when the spec moved between write and commit)
-        pid: int | None = (
-            head["spec_id"]
-            if head is not None and "specs" in head
-            else None
-        )
-
-        meta_for_spec = (
-            self.table_meta(schema, table)
-            if spec_transforms is not None
-            else None
-        )
         # per-file key bloom filters (VERDICT r12 #1): configured columns
         # get a membership sidecar recorded at the same place bounds are —
         # the single choke point every writer's fresh entries pass through
         # (append, CoW rewrites, optimize, merge), so rewritten files
         # re-derive their filters automatically
         bloom_cols = self._resolve_bloom_columns(
-            self._bloom_columns(
-                meta_for_spec
-                if meta_for_spec is not None
-                else self.table_meta(schema, table)
-            ),
-            head,
+            self._bloom_columns(self.table_meta(schema, table)), head
         )
         created_blooms: list[str] = []  # blob abspaths, GC'd on abort
         bloom_warned = [False]
@@ -5059,8 +4261,6 @@ class ParquetWarehouse:
                 "mtime_ns": st.st_mtime_ns,
                 "sid": sid,
             }
-            if pid is not None:
-                entry["pid"] = pid
             nulls = self._file_null_counts(pf)
             if nulls:
                 entry["nulls"] = nulls
@@ -5193,8 +4393,8 @@ class ParquetWarehouse:
                         )
                         created.append(dseg_new_ref["path"])
                     seg_stamp_v = seq
-                # Delta-rewrite schema fence (ADVICE r7): delete_where/
-                # update_where/scoped-optimize rewrites pass the schema_id
+                # Delta-rewrite schema fence (ADVICE r7): delete_where and
+                # scoped-optimize rewrites pass the schema_id
                 # of the head they READ; their new files physically carry
                 # that schema.  A DDL committing between read and publish
                 # would otherwise stamp them with the post-DDL sid and the
@@ -5211,38 +4411,6 @@ class ParquetWarehouse:
                         f"rewrite read schema id {expected_schema_id}, head "
                         f"now has {head['schema_id']} — redo the "
                         "rewrite from the new head"
-                    )
-                # Partition-spec fences (mirror of the schema fences):
-                # a writer's files are laid out by the spec it READ — a
-                # spec change committing between write and publish would
-                # stamp them with a pid whose layout they don't have,
-                # and the per-pid read would mis-parse their dirs.
-                if (
-                    spec_transforms is not None
-                    and head is not None
-                    and self._head_partitioning(meta_for_spec, head)
-                    != list(spec_transforms)
-                ):
-                    raise RuntimeError(
-                        f"concurrent partition-spec change on "
-                        f"{schema}.{table}: this write derived partition "
-                        f"columns under {list(spec_transforms)} but the "
-                        "head's current spec moved — re-derive against "
-                        "the new spec and retry"
-                    )
-                if (
-                    expected_spec_id is not None
-                    and head is not None
-                    and (
-                        head["spec_id"] if "specs" in head else 0
-                    ) != expected_spec_id
-                ):
-                    raise RuntimeError(
-                        f"concurrent partition-spec change on "
-                        f"{schema}.{table}: rewrite read spec id "
-                        f"{expected_spec_id}, head now has "
-                        f"{head.get('spec_id', 0)} — redo the rewrite "
-                        "from the new head"
                     )
                 if expected_parent is not None and version != expected_parent + 1:
                     raise RuntimeError(
@@ -5482,12 +4650,6 @@ class ParquetWarehouse:
                         )
                     manifest["schemas"] = head["schemas"]
                     manifest["schema_id"] = head["schema_id"]
-                # partition-spec carry (same every-head-writer discipline
-                # as schemas: entries keep their pids, so a head without
-                # the specs dict would silently un-evolve the layout)
-                if head is not None and "specs" in head:
-                    manifest["specs"] = head["specs"]
-                    manifest["spec_id"] = head["spec_id"]
                 if dseg_new_ref is not None:
                     dseg_refs = dseg_refs + [dseg_new_ref]
                 if len(dseg_refs) > self.DSEG_MERGE_MAX:
@@ -5609,10 +4771,16 @@ class ParquetWarehouse:
     @classmethod
     def _check_head(cls, schema: str, table: str, version: int, head: dict) -> None:
         """Refuse a head file in any layout but the current one: a missing
-        required key, or inline ``files``/``deletes``.  Nothing reads,
-        migrates or garbage-collects such a table."""
+        required key, inline ``files``/``deletes``, or a partition spec
+        other than the create-time spec 0 (a table is partitioned one way
+        for life).  Nothing reads, migrates or garbage-collects such a
+        table."""
         bad = [f"no {k!r}" for k in cls._HEAD_KEYS if k not in head] + [
             f"inline {k!r}" for k in ("files", "deletes") if k in head
+        ] + [
+            f"partition spec {k!r}"
+            for k in sorted(head.get("specs", ()))
+            if str(k) != "0"
         ]
         if bad:
             raise ValueError(
@@ -5752,6 +4920,14 @@ class ParquetWarehouse:
         for ref in head["segments"]:
             for e in self._load_segment(schema, table, ref["path"]):
                 by_path[e["path"]] = e
+        bad = [e for e in by_path.values() if e.get("pid", 0) != 0]
+        if bad:
+            raise ValueError(
+                f"{schema}.{table} snapshot v{head['version']}: data entry "
+                f"{bad[0]['path']!r} has an unsupported layout (partition "
+                f"spec {bad[0]['pid']!r}; only the create-time spec 0 is "
+                "read)"
+            )
         out = dict(head)
         out["files"] = [by_path[p] for p in sorted(by_path)]
         if dels:
@@ -5849,8 +5025,8 @@ class ParquetWarehouse:
                 "operation": "rewrite_manifests",
                 "ts": round(_time.time(), 3),
                 "last_seq": head["last_seq"],
-                # schema record, merge-on-read delete refs and spec record
-                # carry through metadata rewrites (the randomized model
+                # schema record and merge-on-read delete refs carry
+                # through metadata rewrites (the randomized model
                 # test caught the schema dropping: entries keep their
                 # sids, so a head without the schema list would silently
                 # un-evolve the table)
@@ -5861,9 +5037,6 @@ class ParquetWarehouse:
                 "schemas": head["schemas"],
                 "schema_id": head["schema_id"],
             }
-            if "specs" in head:
-                manifest["specs"] = head["specs"]
-                manifest["spec_id"] = head["spec_id"]
             path = os.path.join(snap_dir, f"v{version:06d}.json")
             if self._cas_link(manifest, path):
                 self._write_version_hint(schema, table, version)
@@ -6063,11 +5236,8 @@ class ParquetWarehouse:
                 )
             manifest = {
                 **self._carried_state(bhead),
-                **{
-                    k: bhead[k]
-                    for k in ("schemas", "schema_id", "specs", "spec_id")
-                    if k in bhead
-                },
+                "schemas": bhead["schemas"],
+                "schema_id": bhead["schema_id"],
             }
             manifest.update({
                 "version": main_v + 1,
@@ -6203,25 +5373,6 @@ class ParquetWarehouse:
                     "entries is absent or diverged on main (DDL since "
                     "the fork) — re-stage on a fresh branch"
                 )
-        # partition-spec fence (mirror of the sid fence): every spec id
-        # the picked entries carry must resolve to the SAME transform
-        # list on main, or the per-pid read would parse their dirs under
-        # the wrong layout
-        meta_cp = self.table_meta(schema, table)
-        for p in sorted({int(e.get("pid", 0)) for e in added}):
-            try:
-                b_sp = self._spec_transforms(meta_cp, bhead, p)
-                m_sp = self._spec_transforms(meta_cp, mhead, p)
-            except KeyError:
-                m_sp, b_sp = None, object()
-            if m_sp != b_sp:
-                raise RuntimeError(
-                    f"cannot cherry-pick {schema}.{table} "
-                    f"{name}@v{version}: partition spec id {p} of the "
-                    "picked entries is absent or diverged on main (spec "
-                    "DDL since the fork) — merge_branch adopts branch-"
-                    "only spec evolution first, or re-stage"
-                )
         pos_targets = {t for d in added_dels for t in d["targets"]}
         mlive: set[str] | None = None
         if added or pos_targets:
@@ -6344,13 +5495,7 @@ class ParquetWarehouse:
           collided; even same-shaped changes would alias distinct ids).
         """
         def ddl_state(h):
-            # schema AND partition-spec record — branch-only evolution of
-            # EITHER adopts; both-sides changes of either refuse (spec
-            # ids would alias exactly like field ids)
-            return (
-                h["schemas"], h["schema_id"],
-                h.get("specs"), h.get("spec_id"),
-            )
+            return h["schemas"], h["schema_id"]
 
         bsch = bhead["schemas"]
         if ddl_state(bhead) == ddl_state(fork_rec):
@@ -6364,7 +5509,7 @@ class ParquetWarehouse:
             if ddl_state(mhead) != ddl_state(fork_rec):
                 raise RuntimeError(
                     f"cannot merge branch {name!r} of {schema}.{table}: "
-                    "schema or partition-spec DDL happened on BOTH sides "
+                    "schema DDL happened on BOTH sides "
                     "since the fork — ids would alias; re-stage on a "
                     "fresh branch"
                 )
@@ -6378,10 +5523,6 @@ class ParquetWarehouse:
                 "schemas": bsch,
                 "schema_id": bhead["schema_id"],
             }
-            if "specs" in bhead:
-                # branch-side spec evolution adopts ID-faithfully too
-                manifest["specs"] = bhead["specs"]
-                manifest["spec_id"] = bhead["spec_id"]
             # the data and delete state carries from MAIN verbatim
             manifest.update(self._carried_state(mhead))
             path = os.path.join(
@@ -6558,8 +5699,8 @@ class ParquetWarehouse:
 
         Within one ref our history is strictly linear (every commit's
         parent is the previous head), so any retained version below the
-        head IS an ancestor — ``set_current_snapshot`` is the same
-        operation under Iceberg's other procedure name."""
+        head IS an ancestor: this also covers Iceberg's other recovery
+        procedure, which sets the current snapshot to an ancestor."""
         if isinstance(version, str):
             if branch != "main":
                 raise ValueError(
@@ -6612,11 +5753,6 @@ class ParquetWarehouse:
                 "schemas": head["schemas"],
                 "schema_id": head["schema_id"],
             }
-            # partition-spec carry, same rule: spec DDL is not reverted,
-            # restored entries resolve through their recorded pids
-            if "specs" in head:
-                manifest["specs"] = head["specs"]
-                manifest["spec_id"] = head["spec_id"]
             path = os.path.join(
                 self._ref_dir(schema, table, branch),
                 f"v{manifest['version']:06d}.json",
@@ -6630,17 +5766,6 @@ class ParquetWarehouse:
             # user asked "make current = v{version}"; a commit that slid
             # in between is exactly what rollback discards)
             cur_v = self._latest_version(schema, table, branch)
-
-    def set_current_snapshot(
-        self, schema: str, table: str, version: int | str, branch: str = "main"
-    ) -> dict:
-        """Iceberg's other recovery procedure name
-        (``CALL system.set_current_snapshot``).  Within one ref our
-        history is strictly LINEAR, so every retained snapshot below the
-        head is an ancestor and this is exactly ``rollback_to_snapshot``
-        — both names ship for procedure parity with the reference's
-        Trino connector."""
-        return self.rollback_to_snapshot(schema, table, version, branch)
 
     def _resolve_version(self, schema: str, table: str, version: int | str) -> int:
         """A version number, or a TAG name (Iceberg ``VERSION AS OF``
@@ -6662,7 +5787,6 @@ class ParquetWarehouse:
         "optimize", "rewrite", "rewrite_manifests", "merge_schema",
         "add_column", "rename_column", "drop_column",
         "update_column_type",
-        "add_partition_field", "drop_partition_field",
     }
 
     def read_changes(
@@ -6683,8 +5807,7 @@ class ParquetWarehouse:
         - ``_commit_version`` the committing snapshot
         - ``_change_ordinal`` dense per-logical-commit index in-window
 
-        Where ``read_incremental`` REFUSES windows containing deletes or
-        rewrites, this emits them.  Semantics, per commit kind:
+        Semantics, per commit kind:
 
         - appends / replays / CoW rewrites: FILE-level — added files'
           rows are inserts, dropped files' rows (as VISIBLE at the
@@ -6692,7 +5815,7 @@ class ParquetWarehouse:
           rewrite thus emits unchanged rewritten rows as delete+insert
           pairs, exactly like Iceberg's changelog on overwrite
           snapshots (net-change collapsing is the consumer's business).
-        - merge-on-read delete/update commits: ROW-level EXACT — the
+        - merge-on-read delete and upsert commits: ROW-level EXACT — the
           deleted rows are computed as visible-before MINUS
           visible-after over the rows the commit's position tuples name,
           using the production delete application itself (one code
@@ -6717,8 +5840,7 @@ class ParquetWarehouse:
         ``net``.  Every commit in the window must still be retained
         (dense versions; expiring mid-window history raises).  Plan
         width is O(logical commits in window) — the CDC consumer
-        pattern is frequent small pulls with a checkpointed version,
-        same as ``read_incremental``."""
+        pattern is frequent small pulls with a checkpointed version."""
         meta = self.table_meta(schema, table)
         if branch != "main" and (
             isinstance(from_version, str) or isinstance(to_version, str)
@@ -7295,78 +6417,6 @@ class ParquetWarehouse:
         except KeyError:
             return False
 
-    def read_incremental(
-        self,
-        schema: str,
-        table: str,
-        from_version: int | str,
-        to_version: int | str | None = None,
-        ignore_deletes: bool = False,
-    ) -> DataFrame:
-        """Iceberg incremental APPEND scan: the rows added AFTER
-        ``from_version`` up to ``to_version`` (default: head) — the files
-        present in the newer snapshot but not the older, read under the
-        newer snapshot's schema.  This is the CDC consumer pattern at
-        100 TB: checkpoint the head version after each pull and never
-        rescan the table.  Versions may be tag names.
-
-        Raises if any of ``from_version``'s files is GONE from
-        ``to_version``: a rewrite (optimize/merge/delete/update) or a
-        batch replay in between means a pure file diff would misattribute
-        rewritten rows as new data — Iceberg's incremental scan refuses
-        non-append history the same way.  Metadata-only commits (DDL,
-        rewrite_manifests) do not move data files and pass freely.
-
-        MERGE-ON-READ deletes committed inside the window also raise by
-        default (Iceberg's streaming read refuses delete snapshots unless
-        skip-delete-snapshots is set): a file diff cannot express "row N
-        of an already-emitted file is now gone", and a delete targeting a
-        file appended IN-window would silently shrink this scan's own
-        output.  ``ignore_deletes=True`` opts into append-only semantics:
-        new files are read as committed (the window-end head's delete set
-        applies to them)."""
-        meta = self.table_meta(schema, table)
-        fv = self._resolve_version(schema, table, from_version)
-        if to_version is None:
-            tv = self._latest_version(schema, table)
-            if tv is None:
-                raise ValueError(f"{schema}.{table} has no snapshot")
-        else:
-            tv = self._resolve_version(schema, table, to_version)
-        if tv < fv:
-            raise ValueError(f"to_version v{tv} precedes from_version v{fv}")
-        mf_from = self._load_snapshot(schema, table, fv)
-        mf_to = self._load_snapshot(schema, table, tv)
-        from_paths = {e["path"] for e in mf_from["files"]}
-        to_paths = {e["path"] for e in mf_to["files"]}
-        removed = from_paths - to_paths
-        if removed:
-            raise ValueError(
-                f"cannot incrementally scan {schema}.{table} "
-                f"v{fv}..v{tv}: {len(removed)} files were rewritten or "
-                f"replaced in between (e.g. {sorted(removed)[0]}) — "
-                "non-append history; full-scan or restart the checkpoint"
-            )
-        if not ignore_deletes:
-            del_from = {d["path"] for d in mf_from.get("deletes", [])}
-            new_dels = [
-                d for d in mf_to.get("deletes", [])
-                if d["path"] not in del_from
-            ]
-            if new_dels:
-                raise ValueError(
-                    f"cannot incrementally scan {schema}.{table} "
-                    f"v{fv}..v{tv}: {len(new_dels)} merge-on-read delete "
-                    "file(s) were committed in the window — a file diff "
-                    "cannot express row-level removals; full-scan, "
-                    "restart the checkpoint, or pass ignore_deletes=True "
-                    "for append-only semantics"
-                )
-        new_entries = [e for e in mf_to["files"] if e["path"] not in from_paths]
-        if not new_entries:
-            return self._empty_frame(mf_to["schemas"][str(mf_to["schema_id"])])
-        return self._read_entries(schema, table, meta, mf_to, new_entries)
-
     def partitions_report(self, schema: str, table: str) -> list[dict]:
         """Iceberg ``$partitions`` metadata table: per-partition-tuple
         file/row/byte counts served ENTIRELY from the head manifest —
@@ -7376,21 +6426,10 @@ class ParquetWarehouse:
             return []
         agg: dict[tuple, dict] = {}
         for e in head["files"]:
-            # spec-evolved tables report per (spec, partition tuple) —
-            # Iceberg $partitions carries spec_id the same way
-            key = (
-                int(e.get("pid", 0)),
-                tuple(sorted(e.get("partitions", {}).items())),
-            )
+            key = tuple(sorted(e.get("partitions", {}).items()))
             a = agg.setdefault(
                 key,
-                {
-                    "partition": dict(key[1]),
-                    "spec_id": key[0],
-                    "files": 0,
-                    "rows": 0,
-                    "bytes": 0,
-                },
+                {"partition": dict(key), "files": 0, "rows": 0, "bytes": 0},
             )
             a["files"] += 1
             a["rows"] += e["rows"]
@@ -7448,29 +6487,6 @@ class ParquetWarehouse:
             schema, table, self.table_meta(schema, table), manifest,
             manifest["files"],
         )
-
-    def read_snapshot_as_of(self, schema: str, table: str, ts) -> DataFrame:
-        """``FOR TIMESTAMP AS OF`` time travel (Iceberg SQL parity): read
-        the newest snapshot whose commit time is <= ``ts`` (a unix-seconds
-        float or a datetime; naive datetimes are treated as UTC, matching
-        the repo's session pin).  Head-light scan — one small parse per
-        version, no entries.  Raises if no snapshot is old enough."""
-        import datetime as _dt
-
-        if isinstance(ts, _dt.datetime):
-            if ts.tzinfo is None:
-                ts = ts.replace(tzinfo=_dt.timezone.utc)
-            ts = ts.timestamp()
-        best: int | None = None
-        for v in self._snapshot_versions(schema, table):
-            if self._load_head_light(schema, table, v)["ts"] <= ts:
-                best = v if best is None or v > best else best
-        if best is None:
-            raise ValueError(
-                f"no snapshot of {schema}.{table} committed at or before "
-                f"timestamp {ts}"
-            )
-        return self.read_snapshot(schema, table, best)
 
     def _checkpoint_floor(
         self, retain_checkpoints: list[str] | None, strict: bool = False
@@ -7946,11 +6962,10 @@ class ParquetWarehouse:
                 "or 'merge-on-read'"
             )
         # ONE head capture anchors the whole merge (review r12 #1): the
-        # column set, the current partition spec, and the copy-on-write
-        # replace's expected_parent all derive from head0, so a schema
-        # or spec DDL landing anywhere during the merge aborts the
-        # publish instead of mislabeling old-layout files with the
-        # post-DDL sid/pid
+        # column set and the copy-on-write replace's expected_parent both
+        # derive from head0, so a schema DDL landing anywhere during the
+        # merge aborts the publish instead of mislabeling old-layout files
+        # with the post-DDL sid
         head0 = self._head_light(schema, table, branch)
         if head0 is not None:
             table_cols = [
@@ -8102,9 +7117,7 @@ class ParquetWarehouse:
         )
 
         data_dir = self._live_data_dir(schema, table)
-        # new row images lay out by head0's CURRENT spec (partition-spec
-        # evolution)
-        cur_part = self._head_partitioning(meta, head0)
+        cur_part = self._partitioning(meta)
         part_specs = partition_transform_exprs(cur_part)
         n_deleted = int(mstats["n_del"])
         result = {
@@ -8118,8 +7131,8 @@ class ParquetWarehouse:
         if mode == "merge-on-read":
             # ONE head capture (head0) anchors version, schema resolution,
             # the key cast, and the pruning envelope — the r12 CoW
-            # discipline extended to MoR; commit_snapshot's schema/spec
-            # fences re-validate against a moved head at publish
+            # discipline extended to MoR; commit_snapshot's schema
+            # fence re-validates against a moved head at publish
             version = None if head0 is None else head0.get("version")
             if version is None:
                 # empty table: a MoR upsert batch is just an append
@@ -8178,7 +7191,7 @@ class ParquetWarehouse:
                 gen_dir = os.path.join(
                     data_dir, f"merge_{uuid.uuid4().hex[:8]}"
                 )
-                new, _rows = self._write_data(ups, meta, head0, gen_dir)
+                new, _rows = self._write_data(ups, meta, gen_dir)
             del_root, del_entries = (None, [])
             if target_entries:
                 # victims: the live rows of the files the key envelope
@@ -8210,7 +7223,6 @@ class ParquetWarehouse:
                     expected_schema_id=(
                         head0["schema_id"] if schema_fields is None else None
                     ),
-                    spec_transforms=cur_part if new else None,
                     expected_parent=version,
                     branch=branch,
                     extra_meta=extra_meta,
@@ -8235,11 +7247,11 @@ class ParquetWarehouse:
 
         # copy-on-write: the merged rows are a new generation + commit
         # (same retention story as optimize).  expected_parent is the head
-        # cur_part/table_cols were derived from — NOT a fresh read — so a
-        # spec/schema DDL that slid in during the batch stats aborts the
-        # publish instead of stamping old-layout files with the new
-        # pid/sid (review r12 #1); a concurrent append aborts too, since
-        # it may carry one of the batch's keys
+        # table_cols were derived from — NOT a fresh read — so a schema
+        # DDL that slid in during the batch stats aborts the publish
+        # instead of stamping old-layout files with the new sid (review
+        # r12 #1); a concurrent append aborts too, since it may carry one
+        # of the batch's keys
         if head0 is None:
             raise ValueError(
                 f"merge_upsert on {schema}.{table}: no committed "
@@ -8288,7 +7300,7 @@ class ParquetWarehouse:
                 ).join(changed_keys, key_cols, "left_anti")
                 merged = kept.select(*table_cols).unionByName(merged)
         gen_dir = os.path.join(data_dir, f"merge_{uuid.uuid4().hex[:8]}")
-        new, _rows = self._write_data(merged, meta, head0, gen_dir)
+        new, _rows = self._write_data(merged, meta, gen_dir)
         if not part_names:
             self.commit_snapshot(
                 schema, table, "merge_upsert", file_paths=new,
@@ -8364,12 +7376,13 @@ class ParquetWarehouse:
         target (Catalyst column-prunes the target scan to the key +
         condition columns — the same touched-row discovery every
         transaction-log MERGE performs), then reusing its entire
-        machinery: copy-on-write AND merge-on-read modes, partition-spec-
-        current layouts, branches, and the O(batch) MoR commit shape all
+        machinery: copy-on-write AND merge-on-read modes, partition
+        layouts, branches, and the O(batch) MoR commit shape all
         compose unchanged.  Binding discipline: every condition is
         evaluated against the ORIGINAL target row in the one join —
-        never against post-assignment values (the update_where r07
-        lesson).  Returns ``merge_upsert``'s result plus per-clause
+        never against post-assignment values (a swap {a: b, b: a} or a
+        condition on an assigned column would otherwise corrupt
+        silently).  Returns ``merge_upsert``'s result plus per-clause
         counts."""
         from functools import reduce as _reduce
 
@@ -8564,7 +7577,7 @@ class ParquetWarehouse:
         )
         false = F.lit(False)
         # evaluate every t./s. condition in ONE aliased select against
-        # the ORIGINAL target row (the update_where binding lesson), then
+        # the ORIGINAL target row (SQL UPDATE binding), then
         # checkpoint the flat result — the flag projections and
         # merge_upsert all re-drive it, and post-checkpoint the alias
         # scoping is gone anyway
@@ -8810,8 +7823,7 @@ class ParquetWarehouse:
         # metadata-only: the recorded CURRENT schema (reflects
         # add/rename/drop/widen), zero data IO
         fields = [(f["name"], f["type"]) for f in self.table_schema(schema, table)]
-        head = self._head_light(schema, table)
-        part_list = self._head_partitioning(meta, head)
+        part_list = self._partitioning(meta)
         cols = ",\n  ".join(f"{n} {t}" for n, t in fields)
         props = {
             "write.parquet.compression-codec": meta.codec,

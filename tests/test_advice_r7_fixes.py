@@ -6,17 +6,16 @@
   row in non-ANSI, CAST error in ANSI) — a string member match is not a
   row-level proof and the metadata-only delete path must fall through
   to the rewrite (which evaluates the real predicate).
-- Delta rewrites (delete_where / update_where / scoped optimize) carry
+- Delta rewrites (delete_where / scoped optimize) carry
   an ``expected_schema_id`` fence into ``commit_snapshot`` (ADVICE r7
   medium): a concurrent DDL between the rewrite's read and its CAS
   publish now RAISES instead of stamping old-name files with the
   post-rename schema id (which would silently NULL-fill on read).
 - ``tags()`` skips a tag file deleted by a concurrent ``drop_tag``
   between listdir and open (ADVICE r7 low).
-- A DML whose condition matches no row (``delete_where`` and
-  ``update_where``, copy-on-write and merge-on-read) leaves the version
-  untouched instead of rewriting every victim and invalidating
-  incremental-scan windows (VERDICT r7 what's-wrong #1).
+- A ``delete_where`` whose condition matches no row (copy-on-write and
+  merge-on-read) leaves the version untouched instead of rewriting every
+  victim (VERDICT r7 what's-wrong #1).
 """
 
 from __future__ import annotations
@@ -129,13 +128,6 @@ def test_delete_where_raises_on_concurrent_ddl(fence_table, monkeypatch):
     assert "val" in df.columns and df.count() == 30
 
 
-def test_update_where_raises_on_concurrent_ddl(fence_table, monkeypatch):
-    _ddl_mid_rewrite(monkeypatch)
-    with pytest.raises(RuntimeError, match="concurrent schema change"):
-        fence_table.update_where("lab", "fence", "k = 1", {"k": "9"})
-    assert fence_table.read("lab", "fence").count() == 30
-
-
 def test_scoped_optimize_raises_on_concurrent_ddl(spark, tmp_path, monkeypatch):
     wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
     wh.create_table(
@@ -186,21 +178,11 @@ def test_tags_skip_concurrently_dropped_tag(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
-@pytest.mark.parametrize("op", ["delete", "update"])
-def test_no_match_dml_skips_commit(fence_table, op, mode):
+def test_no_match_dml_skips_commit(fence_table, mode):
     v0 = fence_table._head_light("lab", "fence")["version"]
     # out-of-grammar condition -> no prune ranges -> every file is a
     # victim and ONLY the match count stands between a no-match DML and
     # a full churn rewrite
-    if op == "delete":
-        out = fence_table.delete_where(
-            "lab", "fence", "k * 7 = 99999", mode=mode
-        )
-    else:
-        out = fence_table.update_where(
-            "lab", "fence", "k * 7 = 99999", {"v": "0"}, mode=mode
-        )
+    out = fence_table.delete_where("lab", "fence", "k * 7 = 99999", mode=mode)
     assert out["files_rewritten"] == 0 and out["files_added"] == 0
     assert fence_table._head_light("lab", "fence")["version"] == v0
-    # incremental windows over the no-op stay valid trivially
-    assert fence_table.read_incremental("lab", "fence", v0).count() == 0

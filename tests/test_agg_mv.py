@@ -352,8 +352,13 @@ def test_randomized_dml_converges(spark, tmp_path_factory, ops):
         elif op == "update":
             if wh.is_empty("lab", "src"):
                 continue
-            wh.update_where(
-                "lab", "src", f"k = {pick % 5}", {"v": "v + 1000"}
+            # UPDATE v = v + 1000 WHERE k = pick % 5, as a keyed upsert
+            wh.merge_upsert(
+                "lab", "src",
+                wh.read("lab", "src")
+                .filter(F.col("k") == pick % 5)
+                .withColumn("v", F.col("v") + 1000),
+                ["k", "ts", "eid"],
             )
         elif op == "optimize":
             wh.optimize("lab", "src")
@@ -398,7 +403,7 @@ def test_auto_mode_picks_cow_for_small_mv(spark, tmp_path):
     # unknowable size -> merge-on-read: a second entry over the same
     # rows whose read position is unknown (no rv_seq, as cherry_pick
     # leaves a picked delete) cannot be proven disjoint from the first
-    wh.delete_by_keys("lab", "mv", [0], eq_cols=["k"])
+    wh.delete_where("lab", "mv", "k = 0", mode="merge-on-read")
     assert wh.count_rows("lab", "mv", fallback=False) is not None
     (d,) = wh.delete_files_report("lab", "mv")
     tuples = pq.read_table(os.path.join(wh._tdir("lab", "mv"), d["path"]))

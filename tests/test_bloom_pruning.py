@@ -13,7 +13,7 @@ Design under test (sources/warehouse.py):
   the measured 2-3 KB/commit head IO);
 - ``_entry_excluded`` consults them for membership-shaped specs (discrete
   value lists, point ranges), so prune_files / read_pruned / read_where /
-  delete_by_keys narrowing / equality-delete read-time narrowing all
+  delete_where victim narrowing / merge-on-read key narrowing all
   inherit the skipping;
 - conservative everywhere: absent property, absent blob, unsupported
   type, or mismatched probe type keep the file;
@@ -215,20 +215,30 @@ def test_rename_resolution_and_rewrite_rebuild(spark, tmp_path):
     assert got == [11]
 
 
-def test_delete_by_keys_narrowing_uses_blooms(spark, tmp_path):
-    """delete_by_keys' commit-time target pruning passes the EXACT
-    discrete key set — with blooms on a uniform-key table it prunes
-    files the bounds envelope cannot, and the read stays exact."""
+def test_delete_where_narrowing_uses_blooms(spark, tmp_path, monkeypatch):
+    """A merge-on-read ``delete_where`` on an IN list prunes its victims
+    with the EXACT discrete key set — with blooms on a uniform-key table
+    it prunes files the bounds envelope cannot, and the read stays
+    exact."""
+    kept = []
+    real = ParquetWarehouse.prune_files
+
+    def spy(self, *a, **k):
+        out = real(self, *a, **k)
+        kept.append(len(out[0]))
+        return out
+
+    monkeypatch.setattr(ParquetWarehouse, "prune_files", spy)
     wh = _mk_uniform(spark, tmp_path, "dk", props={"bloom_columns": "id"})
-    out = wh.delete_by_keys("lab", "dk", [3, 11], eq_cols=["id"])
-    assert out["files_pruned"] == N_FILES - 1  # membership-pruned
+    wh.delete_where("lab", "dk", "id IN (3, 11)", mode="merge-on-read")
+    assert kept == [1]  # membership-pruned to the one file holding both
     ids = {r["id"] for r in wh.read("lab", "dk").collect()}
     assert 3 not in ids and 11 not in ids
     assert len(ids) == N_FILES * ROWS_PER_FILE - 2
     # the blind-spot A/B: same table without blooms prunes nothing
     wh0 = _mk_uniform(spark, tmp_path, "dk0")
-    out0 = wh0.delete_by_keys("lab", "dk0", [3, 11], eq_cols=["id"])
-    assert out0["files_pruned"] == 0
+    wh0.delete_where("lab", "dk0", "id IN (3, 11)", mode="merge-on-read")
+    assert kept[-1] == N_FILES
 
 
 def test_abort_gc_unlinks_commit_blobs(spark, tmp_path):

@@ -188,12 +188,10 @@ def test_pending_mor_deletes_travel_through_publish(br_table, spark):
     the fast-forwarded main head carries the delete set verbatim."""
     wh = br_table
     wh.create_branch("lab", "brt", "gdpr")
-    # stage on the branch: one append + one equality delete... the local
-    # delete_by_keys path is main-only, so stage a branch append and
-    # delete on MAIN before forking instead: deletes pending at fork
-    # must survive fork AND publish
+    # deletes pending at the fork must survive the fork AND the publish:
+    # delete on MAIN before forking, then stage a branch append
     wh.drop_branch("lab", "brt", "gdpr")
-    wh.delete_by_keys("lab", "brt", [3, 14], eq_cols=["id"])
+    wh.delete_where("lab", "brt", "id IN (3, 14)", mode="merge-on-read")
     wh.create_branch("lab", "brt", "gdpr")
     wh.append(
         "lab", "brt",
@@ -239,13 +237,24 @@ def test_full_dml_on_branch_stays_isolated(br_table, spark):
     wh = br_table
     fork = wh._latest_version("lab", "brt")
     wh.create_branch("lab", "brt", "dml")
-    # equality delete (zero data IO) on the branch
-    out = wh.delete_by_keys("lab", "brt", [0, 1], eq_cols=["id"], branch="dml")
+    # MoR key delete (tombstones, zero data-file IO) on the branch
+    out = wh.merge_upsert(
+        "lab", "brt",
+        spark.createDataFrame(
+            [(0, None, True), (1, None, True)],
+            "id int, src string, dead boolean",
+        ),
+        ["id"], delete_col="dead", mode="merge-on-read", branch="dml",
+    )
     assert out["delete_files_added"] == 1
     # MoR position delete on the branch
     wh.delete_where("lab", "brt", "id = 2", mode="merge-on-read", branch="dml")
-    # CoW update on the branch
-    wh.update_where("lab", "brt", "id = 3", {"src": "'patched'"}, branch="dml")
+    # CoW upsert of one key on the branch
+    wh.merge_upsert(
+        "lab", "brt",
+        spark.createDataFrame([(3, "patched")], "id int, src string"),
+        ["id"], mode="copy-on-write", branch="dml",
+    )
     # MoR upsert batch (update one key + insert one) on the branch
     wh.merge_upsert(
         "lab", "brt",
@@ -347,7 +356,7 @@ def test_post_publish_eq_delete_reaches_all_branch_commits(br_table, spark):
     wh.fast_forward("lab", "brt", "two")
     assert wh.read("lab", "brt").filter(F.col("id") == 951).count() == 1
     # the very next main commit must out-sequence EVERY carried entry
-    out = wh.delete_by_keys("lab", "brt", [951], eq_cols=["id"])
+    out = wh.delete_where("lab", "brt", "id = 951", mode="merge-on-read")
     assert out["delete_files_added"] == 1
     assert wh.read("lab", "brt").filter(F.col("id") == 951).count() == 0
     # and the same through a MoR CDC upsert (the streaming shape): the

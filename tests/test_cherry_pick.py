@@ -299,7 +299,7 @@ def test_pick_rewrite_refused_when_main_has_unseen_pending_deletes(
     # main commits a pending MoR key delete the branch never saw, on a
     # row of the file the picked rewrite drops
     kept = vdf.orderBy("id").collect()[1].id
-    wh.delete_by_keys("lab", "cpt", [kept], eq_cols=["id"])
+    wh.delete_where("lab", "cpt", f"id = {kept}", mode="merge-on-read")
     assert wh.read("lab", "cpt").filter(F.col("id") == kept).count() == 0
     with pytest.raises(RuntimeError, match="resurrect"):
         wh.cherry_pick("lab", "cpt", "rw", picked_v)
@@ -362,7 +362,7 @@ def test_pick_rewrite_fence_closes_commit_race(cp_table, spark, monkeypatch):
     def racing_commit(schema, table, operation, **kw):
         if state["armed"] and operation == "cherry_pick":
             state["armed"] = False  # the racing delete commits FIRST
-            wh.delete_by_keys("lab", "cpt", [15], eq_cols=["id"])
+            wh.delete_where("lab", "cpt", "id = 15", mode="merge-on-read")
         return real_commit(schema, table, operation, **kw)
 
     monkeypatch.setattr(wh, "commit_snapshot", racing_commit)
@@ -390,7 +390,7 @@ def test_duplicate_pick_refused_no_resurrection(cp_table, spark):
     wh.cherry_pick("lab", "cpt", "dup", picked_v)
     assert wh.read("lab", "cpt").count() == 26
     # a key delete lands on main AFTER the first pick
-    wh.delete_by_keys("lab", "cpt", [(101,)], ["id"])
+    wh.delete_where("lab", "cpt", "id = 101", mode="merge-on-read")
     assert wh.read("lab", "cpt").count() == 25
     # the duplicate pick refuses instead of resurrecting id=101
     with pytest.raises(RuntimeError, match="already published"):
@@ -536,7 +536,7 @@ def test_rollback_of_unrelated_commit_keeps_pick_provenance(cp_table, spark):
     legitimately survived the first pick."""
     wh = cp_table
     wh.create_branch("lab", "cpt", "sd")
-    wh.delete_by_keys("lab", "cpt", [(5,)], ["id"], branch="sd")
+    wh.delete_where("lab", "cpt", "id = 5", mode="merge-on-read", branch="sd")
     bdel_v = wh._snapshot_versions("lab", "cpt", "sd")[-1]
     wh.append(  # diverge main
         "lab", "cpt",

@@ -379,8 +379,8 @@ def test_count_rows_sequential_overlap_stays_exact(day_table, monkeypatch):
 
 def test_count_rows_falls_back_when_arithmetic_could_lie(day_table, monkeypatch):
     """A BROKEN rv_seq chain (racing overlapping deletes may tuple the
-    same row twice) and pending EQUALITY deletes both fall back to the
-    delete-applied read — never a wrong number."""
+    same row twice) falls back to the delete-applied read — never a
+    wrong number."""
     import json
 
     wh = day_table
@@ -408,12 +408,6 @@ def test_count_rows_falls_back_when_arithmetic_could_lie(day_table, monkeypatch)
     monkeypatch.setattr(type(wh), "read", counting_read)
     assert wh.count_rows("lab", "deltab") == 24
     assert calls, "broken rv_seq chain must fall back to the read"
-    calls.clear()
-    # pending eq delete: matched-row count unknowable from metadata
-    wh.optimize("lab", "deltab")
-    wh.delete_by_keys("lab", "deltab", [(100,)], ["v"])
-    assert wh.count_rows("lab", "deltab") == 21
-    assert calls, "pending eq delete must fall back to the read"
 
 
 def test_count_rows_branch_and_empty(day_table, spark):

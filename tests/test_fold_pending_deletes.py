@@ -58,7 +58,7 @@ def test_fold_rewrites_only_touched_files(spark, tmp_path):
     wh = _mk(spark, tmp_path, "scoped")
     before_paths = _live_paths(wh)
     assert len(before_paths) == 3
-    wh.delete_by_keys("lab", "t", [5, 7], ["k"])  # bounds confine it to file 1
+    wh.delete_where("lab", "t", "k IN (5, 7)", mode="merge-on-read")  # bounds: file 1
     expected = _rows(wh)
     assert len(expected) == 298
     assert wh.pending_delete_stats("lab", "t")["entries"] == 1
@@ -137,7 +137,7 @@ def test_fold_race_fence(spark, tmp_path):
     must RAISE (rewrite_read_version fence) — publishing would
     resurrect the concurrent delete's rows in the rewritten files."""
     wh = _mk(spark, tmp_path, "race")
-    wh.delete_by_keys("lab", "t", [5], ["k"])
+    wh.delete_where("lab", "t", "k = 5", mode="merge-on-read")
     plain = ParquetWarehouse(spark, wh.root)
 
     class Racer(ParquetWarehouse):
@@ -146,7 +146,7 @@ def test_fold_race_fence(spark, tmp_path):
         def _read_entries(self, *a, **kw):
             if Racer.armed:
                 Racer.armed = False
-                plain.delete_by_keys("lab", "t", [205], ["k"])
+                plain.delete_where("lab", "t", "k = 205", mode="merge-on-read")
             return super()._read_entries(*a, **kw)
 
     racer = Racer(spark, wh.root)
@@ -256,8 +256,8 @@ def test_compact_small_files_scoped(spark, tmp_path):
     big_path = max(head["files"], key=lambda e: e["bytes"])["path"]
     big_bytes = max(e["bytes"] for e in head["files"])
     # pending deletes on a tiny file and on the big one
-    wh.delete_by_keys("lab", "t", [100000], ["k"])
-    wh.delete_by_keys("lab", "t", [7], ["k"])
+    wh.delete_where("lab", "t", "k = 100000", mode="merge-on-read")
+    wh.delete_where("lab", "t", "k = 7", mode="merge-on-read")
     expected = _rows(wh)
     out = wh.compact_small_files(
         "lab", "t", small_file_bytes=big_bytes

@@ -7,7 +7,10 @@ writers produce and refuses every other one at load.
 - A delete entry is a position delete recording ``targets`` and
   ``target_counts``; equality-delete entries (``kind == "eq"``, the
   retired key-valued shape) are refused.
-- A head or delete entry in any other layout raises ``ValueError``
+- A table has one partition spec, fixed at create time: a head
+  recording any spec other than ``0`` and a data entry written under
+  one (``pid``) are refused.
+- A head, data entry or delete entry in any other layout raises ``ValueError``
   naming the table and the snapshot version, from reads, counts,
   appends, expiry and the orphan sweep alike — and nothing is deleted.
 - Expiry refuses a root that holds retired catalog heads
@@ -100,11 +103,17 @@ def test_every_head_writer_writes_the_current_layout(spark, tmp_path):
     wh.delete_where("lab", "hf", "v = 20", mode="merge-on-read")
     did("delete_where(merge-on-read)", v)
     v = wh._latest_version("lab", "hf")
-    wh.delete_by_keys("lab", "hf", [5], eq_cols=["id"])
-    did("delete_by_keys", v)
+    wh.merge_upsert(
+        "lab", "hf",
+        spark.createDataFrame(
+            [(5, "g2", None, True)], "id int, grp string, v int, dead boolean"
+        ),
+        ["id"], delete_col="dead", mode="merge-on-read",
+    )
+    did("merge_upsert(merge-on-read)", v)
     v = wh._latest_version("lab", "hf")
-    wh.update_where("lab", "hf", "id = 7", {"v": "v + 1"}, mode="copy-on-write")
-    did("update_where(copy-on-write)", v)
+    wh.delete_where("lab", "hf", "id = 7", mode="copy-on-write")
+    did("delete_where(copy-on-write)", v)
     wh.append("lab", "hf", batch(30, 30), batch_id="b1")
     assert len(wh._head_light("lab", "hf")["segments"]) > 1
     v = wh._latest_version("lab", "hf")
@@ -116,9 +125,6 @@ def test_every_head_writer_writes_the_current_layout(spark, tmp_path):
     v = wh._latest_version("lab", "hf")
     wh.add_column("lab", "hf", "x", "int")
     did("add_column", v)
-    v = wh._latest_version("lab", "hf")
-    wh.add_partition_field("lab", "hf", "bucket(2, id)")
-    did("add_partition_field", v)
 
     # fast_forward: stage on a fresh branch, publish at the fork
     wh.create_branch("lab", "hf", "ff")
@@ -158,9 +164,9 @@ def test_every_head_writer_writes_the_current_layout(spark, tmp_path):
     did("rollback_to_snapshot", v)
 
     assert ops == [
-        "append", "delete_where(merge-on-read)", "delete_by_keys",
-        "update_where(copy-on-write)", "rewrite_manifests", "optimize",
-        "add_column", "add_partition_field", "create_branch",
+        "append", "delete_where(merge-on-read)",
+        "merge_upsert(merge-on-read)", "delete_where(copy-on-write)",
+        "rewrite_manifests", "optimize", "add_column", "create_branch",
         "fast_forward", "cherry_pick", "merge_branch",
         "rollback_to_snapshot",
     ]
@@ -283,6 +289,13 @@ def _inline_deletes(wh):
     return m
 
 
+def _second_spec(_wh):
+    def m(h):
+        h["specs"] = {"0": [], "1": ["bucket(2, id)"]}
+        h["spec_id"] = 1
+    return m
+
+
 def _drop(*keys):
     def m(_wh):
         def f(h):
@@ -299,6 +312,7 @@ RETIRED_SHAPES = {
     "no_total_rows": _head_shape(_drop("total_rows")),
     "no_ts": _head_shape(_drop("ts")),
     "no_schemas": _head_shape(_drop("schemas", "schema_id")),
+    "second_spec": _head_shape(_second_spec),
     "pos_without_target_counts": _entry_shape(
         "pos", lambda d: d.pop("target_counts")
     ),
@@ -332,7 +346,7 @@ def test_retired_shapes_are_refused_and_never_collected(spark, tmp_path, shape):
             batch_id=f"b{i}",
         )
     wh.delete_where("lab", "t", "id = 3", mode="merge-on-read")  # pos, v3
-    wh.delete_by_keys("lab", "t", [14], eq_cols=["id"])  # pos, v4
+    wh.delete_where("lab", "t", "id = 14", mode="merge-on-read")  # pos, v4
     head_v = wh._latest_version("lab", "t")
     assert head_v == 4
     head_path = os.path.join(wh._snap_dir("lab", "t"), f"v{head_v:06d}.json")
@@ -395,3 +409,33 @@ def test_expiry_refuses_a_root_with_a_catalog_dir(spark, tmp_path):
         wh.expire_snapshots("lab", "t", keep_last=1)
     assert wh._snapshot_versions("lab", "t") == [1, 2, 3]
     assert wh.read_snapshot("lab", "t", 1).count() == 10
+
+
+def test_data_entry_under_another_spec_is_refused(spark, tmp_path):
+    """A data entry recording a partition spec other than 0 (``pid``) is
+    refused when a snapshot's entries are resolved, naming the table and
+    the version — and nothing is deleted."""
+    root = str(tmp_path / "wh")
+    wh = ParquetWarehouse(spark, root)
+    wh.create_table("lab", "t", "zstd", 1, properties={"snapshots": "true"})
+    wh.append(
+        "lab", "t",
+        spark.createDataFrame([(j,) for j in range(10)], "id int").coalesce(1),
+        batch_id="b0",
+    )
+    (ref,) = wh._head_light("lab", "t")["segments"]
+
+    def edit(obj):
+        obj["files"][0]["pid"] = 1
+
+    _rewrite_json(os.path.join(wh._snap_dir("lab", "t"), ref["path"]), edit)
+    wh = ParquetWarehouse(spark, root)  # fresh segment cache
+    err = r"lab\.t snapshot v1\b.*unsupported layout \(partition spec 1"
+    for call in (
+        lambda: wh.read("lab", "t").collect(),
+        lambda: wh.read_snapshot("lab", "t", 1).collect(),
+        lambda: wh.expire_snapshots("lab", "t", keep_last=1),
+    ):
+        with pytest.raises(ValueError, match=err):
+            call()
+    assert wh._snapshot_versions("lab", "t") == [1]

@@ -258,8 +258,13 @@ def test_randomized_dml_converges(spark, tmp_path_factory, ops):
         elif op == "update":
             if wh.is_empty("lab", "src"):
                 continue
-            wh.update_where(
-                "lab", "src", f"k = {pick % 5}", {"v": "v + 1000"}
+            # UPDATE v = v + 1000 WHERE k = pick % 5, as a keyed upsert
+            wh.merge_upsert(
+                "lab", "src",
+                wh.read("lab", "src")
+                .filter(F.col("k") == pick % 5)
+                .withColumn("v", F.col("v") + 1000),
+                ["k", "ts", "eid"],
             )
         elif op == "upsert":
             wh.merge_upsert(

@@ -196,7 +196,7 @@ def test_mixed_dml_drain_converges(spark, tmp_path):
         ["k"], mode="merge-on-read",
     )
     wh.delete_where("lab", "l", "k = 3", mode="merge-on-read")
-    wh.delete_by_keys("lab", "r", [5], eq_cols=["k"])
+    wh.delete_where("lab", "r", "k = 5", mode="merge-on-read")
     wh.optimize("lab", "l")
     _tick(wh, d)
     assert _mv_rows(wh) == _expected(wh)
@@ -255,7 +255,7 @@ def test_randomized_two_sided_dml_converges(spark, tmp_path_factory, ops):
                 "lab", "l", f"k = {pick % 8}", mode="merge-on-read"
             )
         elif op == "r_delete":
-            wh.delete_by_keys("lab", "r", [pick % 8], eq_cols=["k"])
+            wh.delete_where("lab", "r", f"k = {pick % 8}", mode="merge-on-read")
         elif op == "optimize":
             wh.optimize("lab", "l" if pick % 2 else "r")
         else:
@@ -427,7 +427,7 @@ def test_randomized_dml_with_crashes_converges(
                 "lab", "l", f"k = {pick % 8}", mode="merge-on-read"
             )
         elif op == "r_delete":
-            wh.delete_by_keys("lab", "r", [pick % 8], eq_cols=["k"])
+            wh.delete_where("lab", "r", f"k = {pick % 8}", mode="merge-on-read")
         elif op == "optimize":
             wh.optimize("lab", "l" if pick % 2 else "r")
         elif op == "crash_tick":
@@ -505,7 +505,7 @@ def test_right_key_cols_renamed_join(spark, tmp_path):
     assert got[3] == (30, "R3") and got[1] == (10, "R1")
 
     # right row vanishing reverts to NULL under the left shape
-    wh.delete_by_keys("lab", "r", [2], eq_cols=["rid"])
+    wh.delete_where("lab", "r", "rid = 2", mode="merge-on-read")
     tick()
     got = {
         r["k"]: (r["lv"], r["rv"]) for r in wh.read("lab", "mv").collect()

@@ -1,5 +1,5 @@
-"""The key-victim scan behind ``delete_by_keys`` and merge-on-read
-``merge_upsert``: its driver-side half (pyarrow reads the key columns of
+"""The key-victim scan behind merge-on-read ``merge_upsert``: its
+driver-side half (pyarrow reads the key columns of
 the target files, physical row order = ``_metadata.row_index``) must
 yield EXACTLY the (file_path, pos) tuples of the Spark half (the
 delete-applied ``with_pos`` scan semi-joined with the keys), across the
@@ -15,8 +15,8 @@ shapes where the two could drift:
   never victims again);
 - key types outside ``_PA_TYPES`` (timestamp, double, decimal), which
   must route to the Spark scan;
-- batches past the driver-scan bounds (too many candidate rows or keys)
-  and DataFrame keys, which route to the Spark scan too.
+- batches past the driver-scan bounds (too many candidate rows or keys),
+  which route to the Spark scan too, their keys never on the driver.
 """
 
 from __future__ import annotations
@@ -51,6 +51,21 @@ def _both(wh, table: str, key_cols: list[str], keys: list[tuple]):
         None, kdf,
     )
     return (None if driver is None else _tuples(driver)), _tuples(spark_side)
+
+
+def _delete_keys(wh, table: str, col: str, vals: list) -> dict:
+    """Merge-on-read delete by key: an upsert batch of tombstones only,
+    keyed on ``col``."""
+    fields = wh.table_schema("lab", table)
+    ddl = ", ".join(f"{f['name']} {f['type']}" for f in fields)
+    rows = [
+        tuple(v if f["name"] == col else None for f in fields) + (True,)
+        for v in vals
+    ]
+    return wh.merge_upsert(
+        "lab", table, wh.spark.createDataFrame(rows, ddl + ", dead boolean"),
+        [col], delete_col="dead", mode="merge-on-read",
+    )
 
 
 def _table(spark, tmp_path, name, rows, ddl, partitioning=None):
@@ -135,7 +150,7 @@ def test_special_char_partitions_and_partition_keys(spark, tmp_path):
     driver, spark_side = _both(wh, "sp", ["grp"], [("a b",), ("p%q",)])
     assert driver is None
     assert len(spark_side) == 10  # 12 rows, ids 0 and 7 already deleted
-    out = wh.delete_by_keys("lab", "sp", ["a b", "p%q"], eq_cols=["grp"])
+    out = _delete_keys(wh, "sp", "grp", ["a b", "p%q"])
     assert out["rows_deleted"] == 10
     got = {r["grp"] for r in wh.read("lab", "sp").collect()}
     assert got == {"x+y", "k=v", "c:d", "plain"}
@@ -161,7 +176,7 @@ def test_unmapped_key_types_take_the_spark_scan(spark, tmp_path, monkeypatch):
         ("x", [0.5, 2.5]),
         ("m", [Decimal("0.40"), Decimal("1.50")]),
     ):
-        out = wh.delete_by_keys("lab", "um", vals, eq_cols=[col])
+        out = _delete_keys(wh, "um", col, vals)
         assert out["rows_deleted"] == 2, col
     got = sorted(r["id"] for r in wh.read("lab", "um").collect())
     assert got == sorted(set(range(20)) - {3, 11, 2, 10, 4, 15})
@@ -171,8 +186,8 @@ def test_bounds_and_key_frames_take_the_spark_scan(spark, tmp_path, monkeypatch)
     """Candidate files holding more than ``MOR_LOCAL_SCAN_ROWS_MAX`` rows
     (keys spread over a large table) or more than
     ``MOR_LOCAL_DELETE_KEYS_MAX`` keys send the victim scan to the Spark
-    semi-join, for ``delete_by_keys`` and the merge-on-read upsert alike;
-    DataFrame keys never come to the driver.  Same rows either way."""
+    semi-join, for tombstones and replaced keys alike; past the key bound
+    the keys never come to the driver.  Same rows either way."""
     wh = _table(
         spark, tmp_path, "bd", [(i, i % 3) for i in range(40)], "id int, k int"
     )
@@ -190,9 +205,7 @@ def test_bounds_and_key_frames_take_the_spark_scan(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(ParquetWarehouse, "_local_key_victims", refuse)
     with monkeypatch.context() as m:
         m.setattr(ParquetWarehouse, "MOR_LOCAL_SCAN_ROWS_MAX", 0)
-        assert wh.delete_by_keys("lab", "bd", [1, 21], eq_cols=["id"])[
-            "rows_deleted"
-        ] == 2
+        assert _delete_keys(wh, "bd", "id", [1, 21])["rows_deleted"] == 2
         wh.merge_upsert(
             "lab", "bd",
             spark.createDataFrame([(5, 9), (6, 9), (77, 9)], "id int, k int"),
@@ -200,14 +213,11 @@ def test_bounds_and_key_frames_take_the_spark_scan(spark, tmp_path, monkeypatch)
         )
     with monkeypatch.context() as m:
         m.setattr(ParquetWarehouse, "MOR_LOCAL_DELETE_KEYS_MAX", 1)
-        assert wh.delete_by_keys("lab", "bd", [2, 22], eq_cols=["id"])[
-            "rows_deleted"
-        ] == 2
-    out = wh.delete_by_keys(
-        "lab", "bd", spark.createDataFrame([(3,), (23,), (500,)], "id int")
-    )
-    assert (out["keys"], out["rows_deleted"]) == (3, 2)
-    assert seen[-1] is None
+        assert _delete_keys(wh, "bd", "id", [2, 22])["rows_deleted"] == 2
+        assert seen[-1] is None
+        out = _delete_keys(wh, "bd", "id", [3, 23, 500])
+        assert (out["deletes"], out["rows_deleted"]) == (3, 2)
+        assert seen[-1] is None
     got = {r["id"]: r["k"] for r in wh.read("lab", "bd").collect()}
     assert sorted(got) == sorted(
         set(range(40)) - {1, 21, 2, 22, 3, 23} | {77}

@@ -1073,21 +1073,6 @@ def test_age_based_snapshot_expiry(spark, tmp_path):
     assert removed == 0  # v3, v4 recent, v5 is the kept head
     assert wh._snapshot_versions(cfg.schema, table) == [3, 4, 5]
 
-    # TIMESTAMP AS OF: newest snapshot committed at or before the instant;
-    # a future-dated v5 is not yet visible
-    import datetime as dt
-
-    set_ts(5, time.time() + 10_000)
-    assert wh.read_snapshot_as_of(cfg.schema, table, time.time()).count() == 4
-    aware = dt.datetime.now(dt.timezone.utc)
-    assert wh.read_snapshot_as_of(cfg.schema, table, aware).count() == 4
-    assert (
-        wh.read_snapshot_as_of(cfg.schema, table, time.time() + 20_000).count()
-        == 5
-    )
-    with pytest.raises(ValueError, match="at or before"):
-        wh.read_snapshot_as_of(cfg.schema, table, old - 10_000)
-
 
 def test_orphaned_segment_files_age_gated_sweep(spark, tmp_path):
     """A segment written by a crashed/aborted commit is an orphan: the

@@ -135,13 +135,13 @@ def test_merge_adopts_branch_drop_of_a_pending_delete_key(md_table, spark):
         spark.createDataFrame([(100,)], "id int"),
         batch_id="s0", branch="dk",
     )
-    # main data moves AND commits a key delete on the dropped column
+    # main data moves AND commits a MoR delete on the dropped column
     wh.append(
         "lab", "mdt",
         spark.createDataFrame([(900, "mainline")], "id int, src string"),
         batch_id="m0",
     )
-    wh.delete_by_keys("lab", "mdt", [("b0",)], ["src"])
+    wh.delete_where("lab", "mdt", "src = 'b0'", mode="merge-on-read")
     out = wh.merge_branch("lab", "mdt", "dk")
     assert out["schema_adopted"] is not None
     got = wh.read("lab", "mdt")

@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from hands_on_iceberg_compression_spark.operators.dedup import keep_latest
 from hands_on_iceberg_compression_spark.pipeline.dag import (
@@ -313,8 +314,10 @@ def test_dag_audit_publish_stage(spark, tmp_path):
         for r in wh.read("lab", "m", "stage").collect()
     )
     # fix the branch, re-drain: cdc-apply is idle, the gate publishes
-    wh.update_where(
-        "lab", "m", "k = 9", {"a": "7"}, branch="stage",
+    fix = wh.read("lab", "m", "stage").filter("k = 9")
+    wh.merge_upsert(
+        "lab", "m", fix.withColumn("a", F.lit(7).cast("int")), ["k"],
+        branch="stage",
     )
     out = drain_pipeline(wh, stages)
     assert out[1]["audit"]["passed"]

@@ -1,26 +1,24 @@
-"""Key deletes: ``delete_by_keys`` and ``merge_upsert(mode=
-'merge-on-read')`` find the live rows a batch of keys names with the
-key-victim scan and commit ONE position-delete file of them — the shape
-of Spark's Iceberg ``MERGE INTO`` in merge-on-read mode.  Equality
-deletes are gone: position deletes are the only row-level delete.
+"""Position deletes: a merge-on-read ``delete_where`` or a merge-on-read
+``merge_upsert`` (tombstones through ``delete_col``, or replaced keys)
+finds the live rows it names and commits ONE position-delete file of
+them — the shape of Spark's Iceberg ``MERGE INTO`` in merge-on-read mode.
+Position deletes are the only row-level delete.
 
 Contracts pinned here:
 
-- ``delete_by_keys`` rewrites no data file, records exact
+- a key delete rewrites no data file, records exact
   ``rows_deleted``/``target_counts``, and reads exclude exactly the keyed
   rows (DuckDB-checked); ``count_rows`` stays metadata-only;
-- rows APPENDED AFTER a key delete survive even under the same key;
+- rows APPENDED AFTER a delete survive even under the same key;
 - stacked MoR upsert batches linearize against a plain dict model and
   ``optimize()`` folds every delete away;
 - the keys prune the victim scan through manifest bounds (keys in one
   file's range scan one file); keys provably absent from every bound
   commit NOTHING;
 - deletes survive renames, drops and widenings of the key column;
-- local keys cast to the recorded type with pyarrow's safe cast:
-  values the type cannot hold exactly raise;
 - a commit landing between a MoR upsert's head capture and its publish
   makes the upsert raise, and a retry applies the batch exactly once; a
-  key delete that loses to a rewrite of its targets rescans.
+  position delete whose targets a concurrent commit rewrote raises.
 """
 
 from __future__ import annotations
@@ -48,6 +46,18 @@ def eq_table(spark, tmp_path):
     return wh
 
 
+def _delete_ids(spark, wh, ids, table="eqt"):
+    """Merge-on-read delete by key: an upsert batch of tombstones only."""
+    return wh.merge_upsert(
+        "lab", table,
+        spark.createDataFrame(
+            [(i, None, None, True) for i in ids],
+            "id int, k int, u string, dead boolean",
+        ),
+        ["id"], delete_col="dead", mode="merge-on-read",
+    )
+
+
 def _file_state(wh, schema, table):
     head = wh.head_snapshot(schema, table)
     tdir = wh._tdir(schema, table)
@@ -57,14 +67,15 @@ def _file_state(wh, schema, table):
     }
 
 
-def test_delete_by_keys_writes_one_position_delete(eq_table):
+def test_key_delete_writes_one_position_delete(spark, eq_table):
     wh = eq_table
     before = _file_state(wh, "lab", "eqt")
     assert len(before) == 6
-    out = wh.delete_by_keys("lab", "eqt", [7, 31, 55], eq_cols=["id"])
+    out = _delete_ids(spark, wh, [7, 31, 55])
     # the victim scan counted the rows, and no data file was rewritten
     assert out["rows_deleted"] == 3
-    assert out["keys"] == 3
+    assert out["deletes"] == 3
+    assert out["files_added"] == 0
     assert out["delete_files_added"] == 1
     assert out["delete_bytes"] < 16 * 1024
     assert _file_state(wh, "lab", "eqt") == before
@@ -79,11 +90,18 @@ def test_delete_by_keys_writes_one_position_delete(eq_table):
     assert wh.count_rows("lab", "eqt", fallback=False) == 57
 
 
-def test_delete_by_keys_matches_duckdb(eq_table):
+def test_key_deletes_match_duckdb(spark, eq_table):
     wh = eq_table
     files = wh._data_files("lab", "eqt")
-    wh.delete_by_keys("lab", "eqt", [(1, 1), (22, 2)], eq_cols=["id", "k"])
-    wh.delete_by_keys("lab", "eqt", [{"u": "u3"}])
+    wh.merge_upsert(
+        "lab", "eqt",
+        spark.createDataFrame(
+            [(1, 1, None, True), (22, 2, None, True)],
+            "id int, k int, u string, dead boolean",
+        ),
+        ["id", "k"], delete_col="dead", mode="merge-on-read",
+    )
+    wh.delete_where("lab", "eqt", "u = 'u3'", mode="merge-on-read")
     con = duckdb.connect()
     expected = con.execute(
         "SELECT id, k, u FROM read_parquet($files) "
@@ -99,7 +117,7 @@ def test_later_appends_survive_the_delete(spark, eq_table):
     """A key delete names the rows live when it scanned — a re-append of
     the same key afterwards survives."""
     wh = eq_table
-    wh.delete_by_keys("lab", "eqt", [10], eq_cols=["id"])
+    _delete_ids(spark, wh, [10])
     assert wh.read("lab", "eqt").filter(F.col("id") == 10).count() == 0
     wh.append(
         "lab", "eqt",
@@ -156,21 +174,19 @@ def test_mor_upsert_batches_linearize(spark, tmp_path):
     assert snapshot() == model
 
 
-def test_key_ranges_narrow_by_bounds(eq_table):
+def test_key_ranges_narrow_by_bounds(spark, eq_table):
     """The keys prune the victim scan through manifest bounds: the one
     position-delete entry targets only the file holding the key, and
     keys provably absent from every bound commit NOTHING."""
     wh = eq_table
     v0 = wh._latest_version("lab", "eqt")
-    out = wh.delete_by_keys("lab", "eqt", [0], eq_cols=["id"])
+    out = _delete_ids(spark, wh, [0])
     (entry,) = wh.delete_files_report("lab", "eqt")
     assert entry["kind"] == "pos"
     assert entry["seq"] == out["version"]
     # id=0 lives in batch b0 (ids 0..19, two files) — bounds prune the
     # other two batches' files before any footer is opened
-    assert out["targets"] < 6
-    assert out["files_pruned"] >= 4
-    assert out["files_pruned"] + out["targets"] == 6
+    assert out["targets"] <= 2
     tdir = wh._tdir("lab", "eqt")
     (target,) = entry["targets"]
     assert entry["target_counts"] == {target: 1}
@@ -180,7 +196,7 @@ def test_key_ranges_narrow_by_bounds(eq_table):
     }
     assert wh.read("lab", "eqt").count() == 59
     # keys provably absent: the manifest proof means NO commit
-    out2 = wh.delete_by_keys("lab", "eqt", [10_000], eq_cols=["id"])
+    out2 = _delete_ids(spark, wh, [10_000])
     assert out2["delete_files_added"] == 0
     assert wh._latest_version("lab", "eqt") == out["version"]
     assert out["version"] == v0 + 1
@@ -188,13 +204,13 @@ def test_key_ranges_narrow_by_bounds(eq_table):
 
 def test_rename_resolves_by_field_id(eq_table):
     wh = eq_table
-    wh.delete_by_keys("lab", "eqt", [4, 44], eq_cols=["id"])
+    wh.delete_where("lab", "eqt", "id IN (4, 44)", mode="merge-on-read")
     wh.rename_column("lab", "eqt", "id", "doc_id")
     got = wh.read("lab", "eqt")
     assert got.count() == 58
     assert got.filter(F.col("doc_id").isin(4, 44)).count() == 0
     # and a NEW delete under the new name works against old files
-    wh.delete_by_keys("lab", "eqt", [17], eq_cols=["doc_id"])
+    wh.delete_where("lab", "eqt", "doc_id = 17", mode="merge-on-read")
     assert wh.read("lab", "eqt").count() == 57
 
 
@@ -203,7 +219,7 @@ def test_drop_key_column_with_pending_key_delete(eq_table):
     column of a pending key delete is allowed and the delete keeps
     applying."""
     wh = eq_table
-    wh.delete_by_keys("lab", "eqt", ["u2"], eq_cols=["u"])
+    wh.delete_where("lab", "eqt", "u = 'u2'", mode="merge-on-read")
     wh.drop_column("lab", "eqt", "k")
     wh.drop_column("lab", "eqt", "u")
     assert wh.read("lab", "eqt").columns == ["id"]
@@ -214,10 +230,10 @@ def test_drop_key_column_with_pending_key_delete(eq_table):
     assert wh.read("lab", "eqt").count() == 48
 
 
-def test_key_and_condition_deletes_stack(eq_table):
+def test_key_and_condition_deletes_stack(spark, eq_table):
     wh = eq_table
     wh.delete_where("lab", "eqt", "id = 8", mode="merge-on-read")
-    wh.delete_by_keys("lab", "eqt", [9, 8], eq_cols=["id"])
+    _delete_ids(spark, wh, [9, 8])
     wh.delete_where("lab", "eqt", "id = 10", mode="merge-on-read")
     got = wh.read("lab", "eqt")
     assert got.count() == 57
@@ -232,14 +248,14 @@ def test_key_and_condition_deletes_stack(eq_table):
 def test_time_travel_sees_own_delete_set(eq_table):
     wh = eq_table
     v0 = wh._latest_version("lab", "eqt")
-    wh.delete_by_keys("lab", "eqt", [0, 1, 2], eq_cols=["id"])
+    wh.delete_where("lab", "eqt", "id IN (0, 1, 2)", mode="merge-on-read")
     assert wh.read_snapshot("lab", "eqt", v0).count() == 60
     assert wh.read("lab", "eqt").count() == 57
 
 
 def test_expiry_gcs_folded_delete_files(eq_table):
     wh = eq_table
-    out = wh.delete_by_keys("lab", "eqt", [13], eq_cols=["id"])
+    out = wh.delete_where("lab", "eqt", "id = 13", mode="merge-on-read")
     (entry,) = wh.delete_files_report("lab", "eqt")
     del_abs = os.path.join(wh._tdir("lab", "eqt"), entry["path"])
     assert os.path.exists(del_abs)
@@ -248,80 +264,6 @@ def test_expiry_gcs_folded_delete_files(eq_table):
     assert not os.path.exists(del_abs)
     assert wh.read("lab", "eqt").count() == 59
     assert out["version"] is not None
-
-
-def test_null_and_empty_keys(eq_table):
-    wh = eq_table
-    v = wh._latest_version("lab", "eqt")
-    with pytest.raises(ValueError, match="NULL key"):
-        wh.delete_by_keys("lab", "eqt", [3, None], eq_cols=["id"])
-    assert wh.delete_by_keys("lab", "eqt", [], eq_cols=["id"])[
-        "delete_files_added"
-    ] == 0
-    with pytest.raises(ValueError, match="no column"):
-        wh.delete_by_keys("lab", "eqt", [1], eq_cols=["nope"])
-    assert wh._latest_version("lab", "eqt") == v
-
-
-def test_dataframe_keys(spark, eq_table):
-    wh = eq_table
-    keys = spark.createDataFrame([(2,), (2,), (41,)], "id int")
-    out = wh.delete_by_keys("lab", "eqt", keys)
-    assert out["keys"] == 2  # deduped
-    assert wh.read("lab", "eqt").count() == 58
-    with pytest.raises(ValueError, match="NULL key"):
-        wh.delete_by_keys(
-            "lab", "eqt", spark.createDataFrame([(None,)], "id int")
-        )
-
-
-def test_local_float_keys_cast_to_recorded_type(eq_table, spark):
-    """LOCAL key lists cast to the recorded types BEFORE building prune
-    ranges, by Spark's cast rule.  Raw 19.5 for the int column falls
-    BETWEEN every file's [lo, hi] bounds (one file ends at 19, the next
-    starts at 20), so pruning on the raw value would 'prove' no file can
-    match and no-op — yet Spark's cast (19) matches a live row.  A list
-    and a DataFrame of the same keys delete the same rows."""
-    wh = eq_table
-    out = wh.delete_by_keys("lab", "eqt", [19.5], eq_cols=["id"])
-    assert out["delete_files_added"] == 1  # NOT pruned to a no-op
-    got = wh.read("lab", "eqt")
-    assert got.count() == 59
-    assert got.filter(F.col("id") == 19).count() == 0
-    # cast collisions dedup: 10 and 10.5 are ONE key after truncation
-    out = wh.delete_by_keys("lab", "eqt", [10, 10.5], eq_cols=["id"])
-    assert out["keys"] == 1
-    assert wh.read("lab", "eqt").count() == 58
-    # the same float keys as a DataFrame truncate the same way
-    kdf = spark.createDataFrame([(30.5,), (30.9,), (41.2,)], "id double")
-    out = wh.delete_by_keys("lab", "eqt", kdf)
-    assert (out["keys"], out["rows_deleted"]) == (2, 2)
-    got = wh.read("lab", "eqt")
-    assert got.count() == 56
-    assert got.filter(F.col("id").isin(30, 41)).count() == 0
-    # unrepresentable values raise on both paths — never silently
-    # mis-prune; nothing is committed
-    v = wh._latest_version("lab", "eqt")
-    for bad in (float("nan"), float("inf"), "abc"):
-        with pytest.raises(ValueError, match="not representable"):
-            wh.delete_by_keys("lab", "eqt", [bad], eq_cols=["id"])
-    with pytest.raises(ValueError, match="overflows"):
-        wh.delete_by_keys("lab", "eqt", [2**40], eq_cols=["id"])
-    with pytest.raises(ValueError, match="NULL"):
-        wh.delete_by_keys(
-            "lab", "eqt", spark.createDataFrame([(2**40,)], "id bigint")
-        )
-    assert wh._latest_version("lab", "eqt") == v
-    # string columns: ints render as Spark cast would; floats are refused
-    # (Python renders 1.0 and 1e20 unlike Spark's "1.0" and "1.0E20")
-    out = wh.delete_by_keys("lab", "eqt", ["u1"], eq_cols=["u"])
-    assert wh.read("lab", "eqt").filter(F.col("u") == "u1").count() == 0
-    assert wh.delete_by_keys("lab", "eqt", [1], eq_cols=["u"])[
-        "delete_files_added"
-    ] == 0
-    for bad in (1.5, 1.0, 1e20):
-        with pytest.raises(ValueError, match="not representable"):
-            wh.delete_by_keys("lab", "eqt", [bad], eq_cols=["u"])
 
 
 def test_concurrent_commit_fails_mor_upsert_then_retry_applies_once(
@@ -379,33 +321,6 @@ def test_concurrent_commit_fails_mor_upsert_then_retry_applies_once(
     assert wh.count_rows("lab", "eqt", fallback=False) == 61
 
 
-def test_key_delete_rescans_after_concurrent_rewrite(eq_table, monkeypatch):
-    """A key delete that loses its commit race to a rewrite of its target
-    files (the ``deletes_read_version`` fence) rescans from the new head
-    and commits there; nothing of the first attempt is left behind."""
-    wh = eq_table
-    real = ParquetWarehouse._key_victims
-    calls = []
-
-    def racing(self, *a, **k):
-        out = real(self, *a, **k)
-        calls.append(1)
-        if len(calls) == 1:
-            wh.optimize("lab", "eqt")  # rewrites every target file
-        return out
-
-    monkeypatch.setattr(ParquetWarehouse, "_key_victims", racing)
-    out = wh.delete_by_keys("lab", "eqt", [7, 31], eq_cols=["id"])
-    assert len(calls) == 2
-    assert out["rows_deleted"] == 2
-    got = wh.read("lab", "eqt")
-    assert got.count() == 58
-    assert got.filter(F.col("id").isin(7, 31)).count() == 0
-    (entry,) = wh.delete_files_report("lab", "eqt")
-    deletes_dir = os.path.join(wh._tdir("lab", "eqt"), "deletes")
-    assert os.listdir(deletes_dir) == [os.path.dirname(entry["path"]).split(os.sep)[-1]]
-
-
 def test_concurrent_rewrite_of_pos_targets_still_raises(eq_table):
     """Position deletes keep the conflicting-rewrite validation: their
     tuples name (file, ordinal) of specific paths, so a concurrent
@@ -442,7 +357,7 @@ def test_widen_after_pending_delete_and_legacy_entries_still_apply(
     still stored at the narrow type (the driver-side scan casts them up)
     as well as rows written at the wide type."""
     wh = eq_table
-    wh.delete_by_keys("lab", "eqt", [3, 41], eq_cols=["id"])
+    _delete_ids(spark, wh, [3, 41])
     wh.update_column_type("lab", "eqt", "id", "bigint")
     got = {r["id"] for r in wh.read("lab", "eqt").collect()}
     assert 3 not in got and 41 not in got and len(got) == 58
@@ -451,7 +366,14 @@ def test_widen_after_pending_delete_and_legacy_entries_still_apply(
         spark.createDataFrame([(2**40, 0, "wide")], "id bigint, k int, u string"),
         batch_id="wide",
     )
-    out = wh.delete_by_keys("lab", "eqt", [5, 2**40], eq_cols=["id"])
+    out = wh.merge_upsert(
+        "lab", "eqt",
+        spark.createDataFrame(
+            [(5, None, None, True), (2**40, None, None, True)],
+            "id bigint, k int, u string, dead boolean",
+        ),
+        ["id"], delete_col="dead", mode="merge-on-read",
+    )
     assert out["rows_deleted"] == 2
     got = {r["id"] for r in wh.read("lab", "eqt").collect()}
     assert got == set(range(60)) - {3, 5, 41}

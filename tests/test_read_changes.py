@@ -1,14 +1,13 @@
 """CDC changelog scan (r11): ``read_changes`` — the Iceberg
-``create_changelog_view`` analogue.  ``read_incremental`` REFUSES
-windows containing deletes/rewrites; this emits them with
-``_change_type`` / ``_commit_version`` / ``_change_ordinal``.
+``create_changelog_view`` analogue: it emits the window's deletes and
+rewrites as well as its appends, with ``_change_type`` /
+``_commit_version`` / ``_change_ordinal``.
 
 The gold contract (pinned here AND appended to the randomized DML
 model): read_snapshot(from) + window inserts − window deletes ==
 read_snapshot(to), as a MULTISET under the window-end schema —
 whatever mix of appends, replays, CoW rewrites, MoR position deletes,
-key deletes, MoR updates, CDC upserts, compactions, and DDL the
-window contains.
+key deletes, CDC upserts, compactions, and DDL the window contains.
 """
 
 from __future__ import annotations
@@ -70,9 +69,13 @@ def test_changelog_invariant_across_all_dml_kinds(ch_table, spark):
         batch_id="b1",
     )
     wh.delete_where("lab", "cht", "k = 2", mode="merge-on-read")  # MoR pos
-    wh.delete_by_keys("lab", "cht", [(7,)], ["id"])  # equality delete
-    wh.update_where(  # MoR update: delete old images + insert new
-        "lab", "cht", "id = 100", {"v": "v + 10"}, mode="merge-on-read"
+    wh.merge_upsert(  # MoR key delete (tombstone) + update of id 100
+        "lab", "cht",
+        spark.createDataFrame(
+            [(7, None, None, True), (100, 0, 11, False)],
+            "id int, k int, v int, dead boolean",
+        ),
+        ["id"], delete_col="dead", mode="merge-on-read",
     )
     wh.optimize("lab", "cht")  # compaction: must emit NOTHING
     wh.delete_where("lab", "cht", "k = 1")  # CoW rewrite: file-level
@@ -358,7 +361,7 @@ def test_consume_changes_checkpointed_at_least_once(ch_table, spark, tmp_path):
     # idle pull: no delivery, checkpoint stable
     assert wh.consume_changes("lab", "cht", ckpt, sink)["delivered"] is False
     # crash inside process: checkpoint NOT advanced -> re-delivery
-    wh.delete_by_keys("lab", "cht", [(950,)], ["id"])
+    wh.delete_where("lab", "cht", "id = 950", mode="merge-on-read")
 
     def boom(df):
         raise RuntimeError("consumer crashed")
@@ -552,7 +555,7 @@ def test_consume_probe_skip_keeps_netting_semantics(ch_table, spark):
         spark.createDataFrame([(100, 1, 1)], "id int, k int, v int"),
         batch_id="nz",
     )
-    wh.delete_by_keys("lab", "cht", [100], eq_cols=["id"])
+    wh.delete_where("lab", "cht", "id = 100", mode="merge-on-read")
     called = []
     out = wh.consume_changes(
         "lab", "cht", ck_net, lambda ch: called.append(ch.count()), net=True

@@ -87,12 +87,6 @@ OPS = st.lists(
                 # adoption + picks after main moved, BOTH-sides DDL
                 # refusal — against the same models
                 "branch_ddl", "merge",
-                # r12 partition-spec evolution: identity add/drop as
-                # metadata-only commits — EVERY head writer must carry
-                # specs/spec_id (the same carry class that bit
-                # rewrite_manifests for schemas in r07), and rename/drop
-                # of a spec source column (any spec ever) must refuse
-                "spec_ddl",
             ]
         ),
         st.integers(0, 10),
@@ -119,8 +113,6 @@ def test_random_op_sequences_match_model(ops):
         batches: list[str] = []
         counter = 0
         ddl_epoch = 0  # bumps on every MAIN DDL (both-sides detection)
-        spec_model: list[str] | None = None  # current spec (None: never evolved)
-        spec_guard: set[str] = set()  # spec source columns, any spec ever
 
         def prune_dels(gone: set[str]) -> None:
             # mirror of commit_snapshot's delete-carry: dropped files
@@ -160,12 +152,6 @@ def test_random_op_sequences_match_model(ops):
                 # every tagged snapshot must stay materializable (its head
                 # AND all its segments survived whatever expiry ran)
                 wh._load_snapshot("lab", "t", v)
-            if spec_model is not None:
-                # the spec carry discipline: EVERY head writer (appends,
-                # drops, DDL, rewrites, rollbacks, deletes) must keep the
-                # specs dict + current spec_id
-                assert head is not None and "specs" in head
-                assert head["specs"][str(head["spec_id"])] == spec_model
             assert set(wh.branches("lab", "t")) == set(branches_model)
             for b, bm in branches_model.items():
                 bh = wh.head_snapshot("lab", "t", branch=b)
@@ -218,32 +204,14 @@ def test_random_op_sequences_match_model(ops):
                 elif op == "rename_col":
                     f = schema_model[pick % len(schema_model)]
                     new = f"r{counter:03d}"
-                    if f["name"] in spec_guard:
-                        import pytest as _pytest
-
-                        with _pytest.raises(ValueError, match="partitioning"):
-                            wh.rename_column("lab", "t", f["name"], new)
-                        ddl_epoch -= 1  # nothing committed
-                        continue  # refused: the +1 version assertion
-                        # below is for committed DDL only (latent
-                        # fall-through surfaced by the r13 model edit)
-                    else:
-                        wh.rename_column("lab", "t", f["name"], new)
-                        f["name"] = new
+                    wh.rename_column("lab", "t", f["name"], new)
+                    f["name"] = new
                 elif op == "drop_col":
                     if len(schema_model) < 2:
                         continue
                     f = schema_model[pick % len(schema_model)]
-                    if f["name"] in spec_guard:
-                        import pytest as _pytest
-
-                        with _pytest.raises(ValueError, match="partitioning"):
-                            wh.drop_column("lab", "t", f["name"])
-                        ddl_epoch -= 1  # nothing committed
-                        continue  # refused: no commit to assert on
-                    else:
-                        wh.drop_column("lab", "t", f["name"])
-                        schema_model.remove(f)
+                    wh.drop_column("lab", "t", f["name"])
+                    schema_model.remove(f)
                 else:  # widen_col
                     cands = [
                         f for f in schema_model
@@ -317,10 +285,6 @@ def test_random_op_sequences_match_model(ops):
                     "staged": [],  # (branch version, rel path) per commit
                     "picked": set(),  # branch versions already picked
                     "ddl_cols": [],  # columns added by branch-side DDL
-                    "spec_added": None,  # branch-side spec DDL transform
-                    "fork_spec": (
-                        list(spec_model) if spec_model is not None else None
-                    ),
                     "fork_ddl_epoch": ddl_epoch,
                 }
             elif op == "branch_commit" and branches_model:
@@ -340,32 +304,13 @@ def test_random_op_sequences_match_model(ops):
                 if "schemas" not in bh:
                     continue  # branch forked before any recorded schema
                 bm = branches_model[name]
-                bspec = (
-                    bm["fork_spec"] if bm["fork_spec"] is not None else []
-                ) + ([bm["spec_added"]] if bm["spec_added"] else [])
-                cands = [
-                    f["name"] for f in wh.table_schema("lab", "t", branch=name)
-                    if f["name"] not in bspec
-                ] if pick % 3 == 0 and bm["spec_added"] is None else []
-                if cands:
-                    # branch-side SPEC DDL (identity): invisible on main
-                    # until published — fast_forward must carry
-                    # specs/spec_id verbatim (review r12 pass 3: its key
-                    # list silently dropped them)
-                    col = cands[pick % len(cands)]
-                    wh.add_partition_field("lab", "t", col, branch=name)
-                    bm["spec_added"] = col
-                    assert wh.partition_spec("lab", "t")["transforms"] == (
-                        spec_model if spec_model is not None else []
-                    )
-                else:
-                    col = f"bd{counter:03d}"
-                    wh.add_column("lab", "t", col, "int", branch=name)
-                    bm["ddl_cols"].append(col)
-                    # branch DDL is invisible on main until merged
-                    assert not any(
-                        f["name"] == col for f in wh.table_schema("lab", "t")
-                    ) if schema_model else True
+                col = f"bd{counter:03d}"
+                wh.add_column("lab", "t", col, "int", branch=name)
+                bm["ddl_cols"].append(col)
+                # branch DDL is invisible on main until merged
+                assert not any(
+                    f["name"] == col for f in wh.table_schema("lab", "t")
+                ) if schema_model else True
             elif op == "merge" and branches_model:
                 # constrained to branches with NO prior partial picks and
                 # no staged file already on main — keeps the model
@@ -389,29 +334,16 @@ def test_random_op_sequences_match_model(ops):
                     model |= bm["files"]
                     for c in bm["ddl_cols"]:
                         schema_model.append({"name": c, "type": "int"})
-                    if bm["spec_added"]:
-                        spec_model = (
-                            bm["fork_spec"] if bm["fork_spec"] is not None
-                            else []
-                        ) + [bm["spec_added"]]
-                        for tfm in spec_model:
-                            spec_guard.add(tfm)
                 else:
-                    # dispatch prediction from the HEAD DDL states (the
-                    # ddl_epoch heuristic flaked two ways — review r12
-                    # pass 4: identical identity spec adds on both sides
-                    # make the states EQUAL and the merge legitimately
-                    # proceeds; and publishing branch A's DDL moves
-                    # main's state without bumping any epoch, so a later
-                    # branch-B merge refuses where the heuristic expected
-                    # success).  Only the CONTROL path is predicted from
-                    # heads; every post-merge EFFECT is still asserted
-                    # against the pure-Python models.
+                    # dispatch prediction from the HEAD DDL states (an
+                    # epoch heuristic misses that publishing branch A's
+                    # DDL moves main's state without bumping any epoch,
+                    # so a later branch-B merge refuses).  Only the
+                    # CONTROL path is predicted from heads; every
+                    # post-merge EFFECT is still asserted against the
+                    # pure-Python models.
                     def dstate(h):
-                        return (
-                            h.get("schemas"), h.get("schema_id"),
-                            h.get("specs"), h.get("spec_id"),
-                        )
+                        return h.get("schemas"), h.get("schema_id")
 
                     mstate = dstate(wh._head_light("lab", "t"))
                     bstate = dstate(wh._head_light("lab", "t", name))
@@ -457,14 +389,6 @@ def test_random_op_sequences_match_model(ops):
                             schema_model.append(
                                 {"name": c, "type": "int"}
                             )
-                        if bm["spec_added"]:
-                            spec_model = (
-                                bm["fork_spec"]
-                                if bm["fork_spec"] is not None
-                                else []
-                            ) + [bm["spec_added"]]
-                            for tfm in spec_model:
-                                spec_guard.add(tfm)
                     else:
                         assert not bm["ddl_cols"] or mstate == bstate
                     model |= {rel for _, rel in bm["staged"]}
@@ -473,10 +397,9 @@ def test_random_op_sequences_match_model(ops):
             elif op == "cherry_pick" and branches_model:
                 name = sorted(branches_model)[pick % len(branches_model)]
                 bm = branches_model[name]
-                if bm["ddl_cols"] or bm["spec_added"]:
+                if bm["ddl_cols"]:
                     # staged-under-branch-DDL commits need the merge path
-                    # (adoption); a lone pick refuses at the schema/pid
-                    # fence
+                    # (adoption); a lone pick refuses at the schema fence
                     continue
                 cands = [
                     (v, rel)
@@ -505,13 +428,6 @@ def test_random_op_sequences_match_model(ops):
                     model |= bm["files"]
                     for c in bm["ddl_cols"]:  # branch DDL publishes too
                         schema_model.append({"name": c, "type": "int"})
-                    if bm["spec_added"]:  # branch spec DDL publishes too
-                        spec_model = (
-                            bm["fork_spec"] if bm["fork_spec"] is not None
-                            else []
-                        ) + [bm["spec_added"]]
-                        for tfm in spec_model:
-                            spec_guard.add(tfm)
                 else:
                     import pytest as _pytest
 
@@ -526,32 +442,6 @@ def test_random_op_sequences_match_model(ops):
                 name = sorted(branches_model)[pick % len(branches_model)]
                 wh.drop_branch("lab", "t", name)
                 del branches_model[name]
-            elif op == "spec_ddl":
-                if not wh._snapshot_versions("lab", "t") or not schema_model:
-                    continue  # needs a recorded schema
-                ddl_epoch += 1
-                cur = spec_model if spec_model is not None else []
-                names = [f["name"] for f in schema_model]
-                addable = [n for n in names if n not in cur]
-                head_before = wh._head_light("lab", "t")
-                if cur and (pick % 2 or not addable):
-                    victim = cur[pick % len(cur)]
-                    wh.drop_partition_field("lab", "t", victim)
-                    spec_model = [t for t in cur if t != victim]
-                elif addable:
-                    col = addable[pick % len(addable)]
-                    wh.add_partition_field("lab", "t", col)
-                    spec_model = cur + [col]
-                    spec_guard.add(col)
-                else:
-                    ddl_epoch -= 1
-                    continue
-                head_after = wh._head_light("lab", "t")
-                # metadata-only: segment refs carried over VERBATIM
-                assert head_after["segments"] == head_before.get(
-                    "segments", head_after["segments"]
-                )
-                assert head_after["version"] == head_before["version"] + 1
             elif op == "tag" and wh._snapshot_versions("lab", "t"):
                 name = f"t{counter:03d}"
                 wh.create_tag("lab", "t", name)
@@ -676,16 +566,12 @@ DML_OPS = st.lists(
             [
                 "append",
                 "cow_delete", "mor_delete",
-                "cow_update", "mor_update",
-                "key_delete", "mor_upsert",
+                # merge-on-read upsert: replaced keys, inserts and
+                # tombstones (a merge-on-read delete by key)
+                "mor_upsert",
                 # r12 conditional MERGE: freshness-guarded update +
                 # tombstone delete clauses resolved against the model
                 "merge_into",
-                # r12 partition-spec evolution interleaved with row-level
-                # DML: every read after a toggle crosses MIXED layouts
-                # (per-(sid,pid) groups), metadata-only deletes fire per
-                # spec, rollback keeps the spec, the changelog skips it
-                "spec_ddl",
                 "rename", "expire", "tag",
                 # r13 per-file key blooms: a membership prune mid-history
                 # must consult the sidecars and stay EXACT whatever mix
@@ -711,8 +597,8 @@ DML_OPS = st.lists(
 @settings(max_examples=10, deadline=None)
 @given(ops=DML_OPS)
 def test_random_dml_sequences_match_row_model(spark, ops):
-    """Copy-on-write AND merge-on-read delete/update interleaved with
-    appends, column renames, expiry, and tags — the read must equal a
+    """Copy-on-write AND merge-on-read deletes, upserts and MERGEs
+    interleaved with appends, column renames, expiry, and tags — the read must equal a
     plain Python row model after every operation, whatever the history.
     This is the net that caught the rewrite_manifests schema-carry bug,
     pointed at the newest head-writing paths (VERDICT r7 #2/#4)."""
@@ -720,7 +606,6 @@ def test_random_dml_sequences_match_row_model(spark, ops):
         wh.spark = spark
         rows: dict[int, dict] = {}  # id -> {vcol: int, k: int}
         vcol = "v"  # current name of the renamed column
-        spec_on = False  # identity partition field on k currently active
         next_id = 0
         tagged: list[tuple[int, dict]] = []  # (version, rows snapshot)
         states: dict[int, dict] = {}  # main version -> rows snapshot
@@ -757,35 +642,21 @@ def test_random_dml_sequences_match_row_model(spark, ops):
                     mode="merge-on-read" if op == "mor_delete" else "copy-on-write",
                 )
                 rows = {i: r for i, r in rows.items() if r["k"] != k}
-            elif op in ("cow_update", "mor_update") and rows:
-                k = pick % 3
-                wh.update_where(
-                    "lab", "t", f"k = {k}", {vcol: f"{vcol} + 100"},
-                    mode="merge-on-read" if op == "mor_update" else "copy-on-write",
-                )
-                for r in rows.values():
-                    if r["k"] == k:
-                        r["v"] += 100
-            elif op == "key_delete" and rows:
-                victims = sorted(rows)[pick % len(rows):][:2]
-                wh.delete_by_keys("lab", "t", victims, eq_cols=["id"])
-                for i in victims:
-                    rows.pop(i, None)
             elif op == "mor_upsert" and rows:
-                # one update of an existing key + one insert + maybe one
-                # tombstone — the streaming-CDC batch shape
+                # one update of an existing key + one insert + on odd
+                # picks up to two tombstones — the streaming-CDC batch
+                # shape
                 upd_id = sorted(rows)[pick % len(rows)]
                 batch = [
                     (upd_id, rows[upd_id]["k"], pick + 200, False),
                     (next_id, next_id % 3, pick, False),
                 ]
-                dead_id = None
-                if len(rows) > 1 and pick % 2:
-                    dead_id = sorted(rows)[(pick + 1) % len(rows)]
-                    if dead_id != upd_id:
-                        batch.append((dead_id, 0, 0, True))
-                    else:
-                        dead_id = None
+                if pick % 2:
+                    batch += [
+                        (i, 0, 0, True)
+                        for i in sorted(rows)[(pick + 1) % len(rows):][:2]
+                        if i != upd_id
+                    ]
                 next_id += 1
                 df = spark.createDataFrame(
                     batch, f"id int, k int, {vcol} int, dead boolean"
@@ -843,17 +714,6 @@ def test_random_dml_sequences_match_row_model(spark, ops):
                 }
                 assert got == {i}
                 assert wh._bloom_loads > loads0
-            elif op == "spec_ddl":
-                if not wh._snapshot_versions("lab", "t"):
-                    continue
-                if spec_on:
-                    wh.drop_partition_field("lab", "t", "k")
-                else:
-                    wh.add_partition_field("lab", "t", "k")
-                spec_on = not spec_on
-                assert wh.partition_spec("lab", "t")["transforms"] == (
-                    ["k"] if spec_on else []
-                )
             elif op == "rollback":
                 vs = wh._snapshot_versions("lab", "t")
                 cands = [v for v in vs[:-1] if v in states]
@@ -942,7 +802,7 @@ def test_random_dml_sequences_match_row_model(spark, ops):
                     # r15 (VERDICT r14 #3): the keys-only changelog must
                     # be a SUPERSET of the row-exact changelog's keys
                     # over the same window — including renamed key
-                    # columns, spec DDL, and every DML mix the ops drew
+                    # columns and every DML mix the ops drew
                     # (key on (id, vcol): a rename-in-window forces the
                     # field-id resolution path)
                     tk = wh.touched_keys("lab", "t", fv, key_cols=["id", vcol])

@@ -1,7 +1,5 @@
 """Snapshot refs and consumers (round-7 Iceberg-parity closers): TAGS
-(named immutable refs that pin snapshots through expiry), INCREMENTAL
-append scans (the CDC consumer pattern: read only the files added
-between two snapshots, refuse non-append history), and the
+(named immutable refs that pin snapshots through expiry) and the
 ``$partitions`` metadata table (per-partition stats from the manifest,
 zero data IO).
 """
@@ -9,7 +7,6 @@ zero data IO).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from hands_on_iceberg_compression_spark.sources.warehouse import ParquetWarehouse
 
@@ -52,58 +49,6 @@ def test_tags_pin_read_and_survive_expiry(seq_table):
     assert wh.expire_snapshots("lab", "sq", keep_last=1) == 1
     assert wh._snapshot_versions("lab", "sq") == [3]
     assert wh.read("lab", "sq").count() == 30
-
-
-def test_incremental_reads_only_new_files(seq_table):
-    wh = seq_table
-    inc = wh.read_incremental("lab", "sq", 1)  # v1 -> head
-    assert sorted(r.id for r in inc.collect()) == list(range(10, 30))
-    inc12 = wh.read_incremental("lab", "sq", 1, 2)
-    assert sorted(r.id for r in inc12.collect()) == list(range(10, 20))
-    # same-version window: schema-stable empty
-    assert wh.read_incremental("lab", "sq", 3, 3).count() == 0
-    # tags address windows too
-    wh.create_tag("lab", "sq", "ckpt", version=2)
-    assert wh.read_incremental("lab", "sq", "ckpt").count() == 10
-    with pytest.raises(ValueError, match="precedes"):
-        wh.read_incremental("lab", "sq", 3, 1)
-
-
-def test_incremental_refuses_rewritten_history(seq_table):
-    wh = seq_table
-    wh.optimize("lab", "sq")  # v4 rewrites everything
-    with pytest.raises(ValueError, match="non-append history"):
-        wh.read_incremental("lab", "sq", 1)
-    # a fresh checkpoint AFTER the rewrite works again
-    v4 = wh.head_snapshot("lab", "sq")["version"]
-    wh.append(
-        "lab", "sq",
-        wh.spark.createDataFrame([(99,)], "id int").coalesce(1),
-        batch_id="b9",
-    )
-    assert [r.id for r in wh.read_incremental("lab", "sq", v4).collect()] == [99]
-
-
-def test_incremental_across_schema_evolution(spark, tmp_path):
-    """DDL between the endpoints is metadata-only and passes; the delta
-    presents under the NEWER snapshot's schema."""
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-    wh.create_table("lab", "ie", "zstd", 1, properties={"snapshots": "true"})
-    wh.append(
-        "lab", "ie",
-        spark.createDataFrame([(1, "a")], "id int, name string"), batch_id="g1",
-    )  # v1
-    wh.rename_column("lab", "ie", "name", "label")  # v2
-    wh.append(
-        "lab", "ie",
-        spark.createDataFrame([(2, "b")], "id int, label string"), batch_id="g2",
-    )  # v3
-    inc = wh.read_incremental("lab", "ie", 1)
-    assert inc.columns == ["id", "label"]
-    assert [(r.id, r.label) for r in inc.collect()] == [(2, "b")]
-    # DDL-only window: empty, under the evolved schema
-    empty = wh.read_incremental("lab", "ie", 1, 2)
-    assert empty.count() == 0 and empty.columns == ["id", "label"]
 
 
 def test_partitions_report(spark, tmp_path):

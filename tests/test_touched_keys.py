@@ -70,9 +70,9 @@ def test_superset_tightness_and_window_contracts(spark, tmp_path):
     )
     assert got == want == [1, 100, 101]
 
-    # NON-covering eq delete (keys on event_id, consumer keys on k):
+    # NON-covering MoR delete (on event_id, consumer keys on k):
     # victim-file fallback — superset, must still contain the true key
-    wh.delete_by_keys("lab", "t", [5], eq_cols=["event_id"])
+    wh.delete_where("lab", "t", "event_id = 5", mode="merge-on-read")
     # CoW delete: file rewrite (dropped + added files)
     wh.delete_where("lab", "t", "k = 2")
     v1 = wh._latest_version("lab", "t")
@@ -125,8 +125,8 @@ def test_rename_of_key_column_in_window(spark, tmp_path):
         spark.createDataFrame([(300, 1, 910, 1)], SCHEMA),
         batch_id="pre_rename",
     )
-    # covering eq delete BEFORE the rename (delete keys stored as "k")
-    wh.delete_by_keys("lab", "t", [4], eq_cols=["k"])
+    # MoR delete BEFORE the rename (its condition names "k")
+    wh.delete_where("lab", "t", "k = 4", mode="merge-on-read")
     wh.rename_column("lab", "t", "k", "kk")
     wh.append(
         "lab", "t",
@@ -151,41 +151,6 @@ def test_rename_of_key_column_in_window(spark, tmp_path):
     # asking for the OLD name must refuse (window-end schema rules)
     with pytest.raises(ValueError, match="no key column"):
         wh.touched_keys("lab", "t", v0, v1, ["k"])
-
-
-def test_spec_ddl_in_window(spark, tmp_path):
-    """Partition-spec DDL INSIDE the window: files appended under
-    different specs (unpartitioned, then identity on k) must both
-    contribute their keys — the raw read crosses mixed hive layouts."""
-    wh = _mk(spark, tmp_path)
-    v0 = wh._latest_version("lab", "t")
-    wh.append(
-        "lab", "t",
-        spark.createDataFrame([(400, 1, 920, 1)], SCHEMA),
-        batch_id="pre_spec",
-    )
-    wh.add_partition_field("lab", "t", "k")
-    wh.append(
-        "lab", "t",
-        spark.createDataFrame([(401, 2, 921, 1), (402, 2, 922, 1)], SCHEMA),
-        batch_id="post_spec",
-    )
-    # MoR delete under the new spec: victim fallback crosses specs too
-    wh.delete_by_keys("lab", "t", [921], eq_cols=["event_id"])
-    v1 = wh._latest_version("lab", "t")
-    touched = set(r["k"] for r in wh.touched_keys(
-        "lab", "t", v0, v1, ["k"]
-    ).collect())
-    true_changed = {
-        r["k"]
-        for r in wh.read_changes("lab", "t", v0, v1).select("k").collect()
-    }
-    assert true_changed <= touched
-    assert {400, 401, 402} <= touched
-    # spec DDL itself contributes nothing: empty tail window
-    wh.drop_partition_field("lab", "t", "k")
-    v2 = wh._latest_version("lab", "t")
-    assert _keys(wh.touched_keys("lab", "t", v1, v2, ["k"])) == []
 
 
 def test_changelog_fn_failure_leaves_checkpoint_untouched(spark, tmp_path):
